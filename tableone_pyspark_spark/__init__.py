@@ -13,12 +13,16 @@ Public API:
         in O(1) passes over the data instead of O(16·V).
 
 Design (vs. reference):
-  * Sufficient statistics only: the engine runs 2-3 single-pass
-    aggregation jobs (strat counts; one ``rollup`` over every continuous
-    variable; one melted count over every categorical variable) and
-    collects k·V scalars — never raw rows (reference pulls full columns
-    via toPandas at :453/:500 and scans the input 16× per continuous
-    variable at :325-437).
+  * Sufficient statistics only: the engine runs two phases of
+    concurrent bounded aggregations (strat counts; one ``rollup`` over
+    every continuous variable; one melted count over every categorical
+    variable; a cardinality probe; then the quartiles) and collects k·V
+    scalars — never raw rows. The ``perfbench`` ``cohort_wide`` call
+    runs 13 Spark jobs with 6 input-scanning stages (reference pulls
+    full columns via toPandas at :453/:500 and scans the input 16× per
+    continuous variable at :325-437).
+  * The returned table is built on the driver as an Arrow table: a
+    ``LocalTableScan`` whose ``collect()`` runs no Spark job.
   * Hypothesis tests (t / ANOVA / chi-square) are computed from those
     same collected aggregates; scipy is used only for tail
     probabilities of driver-side scalars.

@@ -16,26 +16,30 @@ where the ``Index`` double encodes row order (total=0; continuous stats
 one anchor row per variable (reference :193,:210,:483,:522).
 
 Execution model (the Spark-first rewrite): ``collect_sufficient`` runs
-two phases of concurrent bounded single-pass jobs (≤6 total, critical
-path 2: counts ∥ moments ∥ categorical melt ∥ cardinality probe, then
-quartiles split by cardinality — exact disc for low-cardinality vars ∥
-capped sketch for near-unique ones) and ships only O(V·k) aggregated
-scalars to the driver; the output table itself (a few hundred rows at
-most) is then assembled locally and returned as a DataFrame. At 100 TB
-the heavy lifting is exactly those bounded shuffles — nothing else
-scales with data size. Contrast: the reference scans the input ~16×
-per continuous variable (:325-437) and pulls whole columns to the
-driver for p-values (:453, :500).
+two phases of concurrent bounded single-scan actions (counts ∥ moments
+∥ categorical melt ∥ cardinality probe, then quartiles split by
+cardinality — exact disc for low-cardinality vars ∥ capped sketch for
+near-unique ones; 13 Spark jobs and 6 input-scanning stages per
+``perfbench`` ``cohort_wide`` call, see core/sufficient.py) and ships
+only O(V·k) aggregated scalars to the driver. The output table (a few
+hundred rows at most) is then built on the driver as one Arrow table
+and returned as a ``LocalTableScan`` DataFrame: collecting it runs no
+Spark job. At 100 TB the heavy lifting is exactly those bounded
+shuffles — nothing else scales with data size. Contrast: the reference
+scans the input ~16× per continuous variable (:325-437) and pulls
+whole columns to the driver for p-values (:453, :500).
 """
 
 from __future__ import annotations
 
-import math
 import warnings
+from collections import Counter
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tableone_pyspark_spark.core.hypothesis import (
     GroupMoments,
@@ -138,7 +142,10 @@ def tableone(
     the documented fixes: unsupported dtypes warn-and-skip instead of
     NameError (:216, Q1), empty column list raises instead of
     IndexError (:76, Q2), numeric strat columns are cast to string so
-    null→MISSING applies (Q11), unions are by-name (Q13).
+    null→MISSING applies (Q11), unions are by-name (Q13), and strat
+    values that would name two output columns alike (``x`` and ``x_%``,
+    or a value such as ``Index``) raise ValueError instead of one
+    column silently overwriting the other.
 
     Scale note: above ``config.exact_percentile_cap`` rows (default
     100k) the default ``quantile_mode="data"`` quartiles become
@@ -182,7 +189,10 @@ def tableone(
 
     if col_to_strat == "" and p_values:
         p_values = False
-        print("p_values indicator overridden to False because no stratification variable")
+        warnings.warn(
+            "p_values indicator overridden to False because no stratification variable",
+            stacklevel=2,
+        )
 
     # ---- dtype dispatch (reference :164-217) ----------------------------
     cat_vars: list[str] = []
@@ -260,10 +270,13 @@ def _assemble(
     count_type = T.DoubleType() if (has_cont or weighted) else T.LongType()
     cast_count = _num if (has_cont or weighted) else (lambda x: x)
 
+    schema = _schema(count_cols, count_type, p_values)
+    _check_unique_columns(schema, strat_vals, col_to_strat)
+
     rows: list[dict] = []
 
     def blank_row() -> dict:
-        r = {c: None for c in _field_names(count_cols, p_values)}
+        r = dict.fromkeys(schema.names)
         r["Pivoted_column"] = col_to_strat
         return r
 
@@ -291,21 +304,13 @@ def _assemble(
                 _cont_rows(col_i, idx, suff, strat_vals, col_to_strat, p_values)
             )
 
-    schema = _schema(count_cols, count_type, p_values)
-    out = spark.createDataFrame([_tuple(r, schema) for r in rows], schema)
-
     if beautify:
-        out = _beautify(spark, rows, schema)
-    return out
-
-
-def _field_names(count_cols: list[str], p_values: bool) -> list[str]:
-    names = ["Pivoted_column", "Index", "Characteristics", "Variable_type", "Values"]
-    for c in count_cols:
-        names += [c, c + "_%"]
-    if p_values:
-        names += ["p_value", "test_value", "test_name"]
-    return names
+        rows, schema = _beautify(rows, schema)
+    # an Arrow table makes the plan a LocalTableScan: collecting it runs
+    # no Spark job and starts no Python worker (a list of rows would be
+    # an RDD-backed Scan ExistingRDD). No Arrow session config is needed.
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def _schema(count_cols: list[str], count_type, p_values: bool) -> T.StructType:
@@ -328,8 +333,20 @@ def _schema(count_cols: list[str], count_type, p_values: bool) -> T.StructType:
     return T.StructType(fields)
 
 
-def _tuple(row: dict, schema: T.StructType) -> tuple:
-    return tuple(row[f.name] for f in schema.fields)
+def _check_unique_columns(
+    schema: T.StructType, strat_vals: list[str], col_to_strat: str
+) -> None:
+    """Sanitized strat values become column names (``v`` and ``v_%``),
+    so ``x`` next to ``x_%``, or a value equal to a fixed column such as
+    ``Index``, would name two columns alike and one would silently
+    overwrite the other."""
+    dup = sorted(n for n, k in Counter(schema.names).items() if k > 1)
+    if dup:
+        clashing = sorted(s for s in strat_vals if s in dup or s + "_%" in dup)
+        raise ValueError(
+            f"stratification values {clashing} of {col_to_strat!r} produce "
+            f"duplicate output columns {dup}; recode them before calling tableone"
+        )
 
 
 def _cat_rows(
@@ -445,7 +462,7 @@ def _cont_rows(
     return out
 
 
-def _beautify(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+def _beautify(rows: list[dict], schema: T.StructType) -> tuple[list[dict], T.StructType]:
     """Reference :245-257: drop Pivoted_column/Variable_type, blank
     repeated Characteristics, "_"→" " on each group's first row."""
     first_of_group: dict[str, tuple] = {}
@@ -455,20 +472,15 @@ def _beautify(spark: SparkSession, rows: list[dict], schema: T.StructType) -> Da
         if key not in first_of_group or rank_key < first_of_group[key]:
             first_of_group[key] = rank_key
 
-    keep = [
-        f for f in schema.fields if f.name not in ("Pivoted_column", "Variable_type")
-    ]
-    out_schema = T.StructType(keep)
+    out_schema = T.StructType(
+        [f for f in schema.fields if f.name not in ("Pivoted_column", "Variable_type")]
+    )
     out_rows = []
     for r in rows:
-        rr = dict(r)
+        rr = {name: r[name] for name in out_schema.names}
         if first_of_group[r["Characteristics"]] == (r["Index"], r["Values"] or ""):
             rr["Characteristics"] = (r["Characteristics"] or "").replace("_", " ")
         else:
             rr["Characteristics"] = None
-        out_rows.append(tuple(rr[f.name] for f in keep))
-    return spark.createDataFrame(out_rows, out_schema)
-
-
-def _isnan(x) -> bool:
-    return isinstance(x, float) and math.isnan(x)
+        out_rows.append(rr)
+    return out_rows, out_schema

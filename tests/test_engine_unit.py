@@ -224,7 +224,8 @@ def test_chi_square_not_done_gate(spark):
 
 
 def test_p_values_forced_off_unstratified(patients):
-    out = tableone(patients, cols_to_analyze=["age"], p_values=True)
+    with pytest.warns(UserWarning, match="p_values indicator overridden to False"):
+        out = tableone(patients, cols_to_analyze=["age"], p_values=True)
     assert "p_value" not in out.columns
 
 
@@ -329,6 +330,28 @@ def test_sanitization_collision_warns(spark):
     assert any("merged" in str(x.message) for x in w)
     total = [r for r in out if r["Characteristics"] == "Total"][0]
     assert total["a_b"] == 2.0  # the two raw values merged into one pivot
+
+
+def test_strat_values_naming_duplicate_columns_raise(spark):
+    """A strat value becomes two columns, ``v`` and ``v_%``; values that
+    would name the same column twice fail fast instead of silently
+    overwriting one column with the other."""
+    df = spark.createDataFrame(
+        [("x", 1.0), ("x_%", 2.0), ("y", 3.0)], "g string, v double"
+    )
+    with pytest.raises(ValueError, match=r"\['x', 'x_%'\].*\['x_%'\]"):
+        tableone(df, col_to_strat="g", cols_to_analyze=["v"])
+
+    for clash in ["Index", "Values", "All_Patients"]:
+        df = spark.createDataFrame([(clash, 1.0), ("ok", 2.0)], "g string, v double")
+        with pytest.raises(ValueError, match=rf"\['{clash}'\] of 'g'.*\['{clash}'"):
+            tableone(df, col_to_strat="g", cols_to_analyze=["v"])
+
+    # p_value is an output column only when p-values are requested
+    df = spark.createDataFrame([("p_value", 1.0), ("ok", 2.0)], "g string, v double")
+    assert "p_value" in tableone(df, col_to_strat="g", cols_to_analyze=["v"]).columns
+    with pytest.raises(ValueError, match=r"\['p_value'\].*\['p_value'\]"):
+        tableone(df, col_to_strat="g", cols_to_analyze=["v"], p_values=True)
 
 
 def test_index_collision_warns(spark):
@@ -524,3 +547,126 @@ def test_weighted_tableone_rejects_bad_weight_col(spark):
         tableone(df, cols_to_analyze=["g"], weight_col="w")
     with pytest.raises(ValueError, match="not in DataFrame"):
         tableone(df, cols_to_analyze=["g"], weight_col="nope")
+
+
+# ---------------------------------------------------------------------------
+# output relation: exact Python types of the collected rows
+# ---------------------------------------------------------------------------
+
+NAN = float("nan")
+
+
+def _assert_rows(out, dtypes, expected):
+    """Collected rows equal ``expected`` cell by cell with the same Python
+    type: ints stay int, floats stay float, None and NaN are distinct."""
+    assert out.dtypes == dtypes
+    got = [tuple(r) for r in out.collect()]
+    assert len(got) == len(expected)
+    for g, e in zip(got, expected):
+        assert len(g) == len(e), (g, e)
+        for a, b in zip(g, e):
+            if isinstance(b, float) and math.isnan(b):
+                ok = isinstance(a, float) and math.isnan(a)
+            elif isinstance(b, float):
+                ok = type(a) is float and math.isclose(a, b, rel_tol=1e-12)
+            else:
+                ok = type(a) is type(b) and a == b
+            assert ok, (g, e)
+
+
+def _dtypes(count_type, strat_vals, p_values=False):
+    out = [
+        ("Pivoted_column", "string"), ("Index", "double"),
+        ("Characteristics", "string"), ("Variable_type", "string"),
+        ("Values", "string"),
+    ]
+    for c in ["All_Patients"] + strat_vals:
+        out += [(c, count_type), (c + "_%", "double")]
+    if p_values:
+        out += [("p_value", "double"), ("test_value", "double"), ("test_name", "string")]
+    return out
+
+
+def test_output_types_categorical_only_long_counts_nan_anchor(spark):
+    # 4 rows < 5: chi-square is NOT DONE, so the anchor row carries NaN
+    # while every other row carries None in the p-value triple
+    df = spark.createDataFrame(
+        [("u", "a"), ("v", "a"), ("u", "b"), ("u", "b")], "c string, g string"
+    )
+    out = tableone(df, col_to_strat="g", cols_to_analyze=["c"], p_values=True)
+    _assert_rows(out, _dtypes("bigint", ["a", "b"], p_values=True), [
+        ("g", 0.0, "Total", None, "ALL", 4, 1.0, 2, 1.0, 2, 1.0, None, None, None),
+        ("g", 1.01, "c", "category", "u", 3, 0.75, 1, 0.5, 2, 1.0, NAN, NAN, "NOT DONE"),
+        ("g", 1.02, "c", "category", "v", 1, 0.25, 1, 0.5, 0, 0.0, None, None, None),
+    ])
+
+
+def test_output_types_weighted_categorical_double_counts(spark):
+    df = spark.createDataFrame([("u", 2), ("v", 1)], "c string, w int")
+    out = tableone(df, cols_to_analyze=["c"], weight_col="w")
+    _assert_rows(out, _dtypes("double", []), [
+        ("", 0.0, "Total", None, "ALL", 3.0, 1.0),
+        ("", 1.01, "c", "category", "u", 2.0, 2 / 3),
+        ("", 1.02, "c", "category", "v", 1.0, 1 / 3),
+    ])
+
+
+def test_output_types_decimal_column_double_counts(spark):
+    """Decimal input: every statistic comes back as a float. Stratum b
+    is all-null (n 0.0, the rest None); MISSING holds one value, so its
+    stddev is None. Spark's decimal avg keeps 6 fractional digits."""
+    from decimal import Decimal as D
+
+    df = spark.createDataFrame(
+        [(D("1.50"), "a"), (D("2.50"), "a"), (D("4.00"), "a"), (None, "b"),
+         (D("3.25"), None)],
+        "x decimal(10,2), g string",
+    )
+    out = tableone(df, col_to_strat="g", cols_to_analyze=["x"])
+    sd_all = math.sqrt((1.3125**2 + 0.3125**2 + 1.1875**2 + 0.4375**2) / 3)
+    sd_a = math.sqrt(((1.5 - 8 / 3) ** 2 + (2.5 - 8 / 3) ** 2 + (4 - 8 / 3) ** 2) / 2)
+    cont = [
+        ("n", 4.0, 3.0, 0.0, 1.0),
+        ("min", 1.5, 1.5, None, 3.25),
+        ("max", 4.0, 4.0, None, 3.25),
+        ("mean", 2.8125, 2.666667, None, 3.25),
+        ("stddev", sd_all, sd_a, None, None),
+        ("25th percentile", 1.5, 1.5, None, 3.25),
+        ("50th percentile", 2.5, 2.5, None, 3.25),
+        ("75th percentile", 3.25, 4.0, None, 3.25),
+    ]
+    expected = [("g", 0.0, "Total", None, "ALL", 5.0, 1.0, 3.0, 1.0, 1.0, 1.0, 1.0, 1.0)]
+    for i, (label, all_v, a, b, m) in enumerate(cont, start=1):
+        expected.append(
+            ("g", 1 + i / 10, "x", "continuous", label, all_v, None, a, None, b, None, m, None)
+        )
+    _assert_rows(out, _dtypes("double", ["a", "b", "MISSING"]), expected)
+
+
+def test_output_types_beautify_layout(spark):
+    """beautify drops Pivoted_column/Variable_type and names each block
+    on its first row only ("_" -> " "). A NaN value is a value: it is
+    counted, and it is the max, mean and stddev, sorted after 3.0."""
+    df = spark.createDataFrame(
+        [("A", 1.0), ("B", 2.0), ("A", NAN), (None, 3.0)],
+        "blood_type string, x_val double",
+    )
+    out = tableone(df, cols_to_analyze=["blood_type", "x_val"], beautify=True)
+    dtypes = [
+        ("Index", "double"), ("Characteristics", "string"), ("Values", "string"),
+        ("All_Patients", "double"), ("All_Patients_%", "double"),
+    ]
+    _assert_rows(out, dtypes, [
+        (0.0, "Total", "ALL", 4.0, 1.0),
+        (1.01, "blood type", "A", 2.0, 0.5),
+        (1.02, None, "B", 1.0, 0.25),
+        (1.03, None, "MISSING", 1.0, 0.25),
+        (2.1, "x val", "n", 4.0, None),
+        (2.2, None, "min", 1.0, None),
+        (2.3, None, "max", NAN, None),
+        (2.4, None, "mean", NAN, None),
+        (2.5, None, "stddev", NAN, None),
+        (2.6, None, "25th percentile", 1.0, None),
+        (2.7, None, "50th percentile", 2.0, None),
+        (2.8, None, "75th percentile", 3.0, None),
+    ])

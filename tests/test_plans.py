@@ -6,6 +6,8 @@ test stays green."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -82,11 +84,44 @@ def test_topk_single_shuffle(spark):
 
 def test_tableone_has_no_repartition_one(lineitem):
     # the reference serializes through repartition(1) at 13 sites; the
-    # engine's output is a tiny local relation — no exchanges at all
+    # engine's output is a tiny local relation — no exchanges at all,
+    # and no RDD behind it
     from tableone_pyspark_spark import tableone
 
     out = tableone(lineitem, col_to_strat="l_returnflag", cols_to_analyze=["l_quantity"])
-    assert "Exchange" not in inspect.executed_plan(out)
+    plan = inspect.executed_plan(out)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert "Exchange" not in plan
+
+
+def test_tableone_collect_runs_no_spark_job(spark, lineitem):
+    """Once the statistics are in, the output is driver-held data:
+    collecting it submits no Spark job. A job run afterwards under a
+    second group is the control that the tracker sees jobs at all."""
+    from tableone_pyspark_spark import tableone
+
+    out = tableone(
+        lineitem, col_to_strat="l_returnflag",
+        cols_to_analyze=["l_linestatus", "l_quantity"], p_values=True, beautify=True,
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("tableone-output-collect", "collect a tableone result")
+        assert len(out.collect()) == 1 + 2 + 8
+        sc.setJobGroup("tableone-output-control", "a job that must show up")
+        spark.range(10).selectExpr("sum(id)").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the tracker through the listener bus, in order:
+    # once the control job is visible, any earlier job would be too
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("tableone-output-control"):
+        assert time.monotonic() < deadline, "control job never reached the tracker"
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup("tableone-output-collect") == []
 
 
 def test_profile_approx_distinct_drops_expand(lineitem):
