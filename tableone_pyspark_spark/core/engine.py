@@ -18,12 +18,13 @@ one anchor row per variable (reference :193,:210,:483,:522).
 Execution model (the Spark-first rewrite): ``collect_sufficient`` runs
 two phases of concurrent bounded single-scan actions (counts ∥ moments
 ∥ categorical melt ∥ cardinality probe, then quartiles split by
-cardinality — exact disc for low-cardinality vars ∥ capped sketch for
-near-unique ones; 13 Spark jobs and 6 input-scanning stages per
-``perfbench`` ``cohort_wide`` call, see core/sufficient.py) and ships
-only O(V·k) aggregated scalars to the driver. The output table (a few
-hundred rows at most) is then built on the driver as one Arrow table
-and returned as a ``LocalTableScan`` DataFrame: collecting it runs no
+cardinality — exact quartiles from distinct-value cells for
+low-cardinality vars ∥ capped sketch for near-unique ones; 13 Spark
+jobs and 6 input-scanning stages per ``perfbench`` ``cohort_wide``
+call, see core/sufficient.py) and ships only O(V·k) aggregated scalars
+and bounded cell frames to the driver. The output table (a few hundred
+rows at most) is then built on the driver as one Arrow table and
+returned as a ``LocalTableScan`` DataFrame: collecting it runs no
 Spark job. At 100 TB the heavy lifting is exactly those bounded
 shuffles — nothing else scales with data size. Contrast: the reference
 scans the input ~16× per continuous variable (:325-437) and pulls
@@ -90,34 +91,39 @@ class TableOneConfig:
     #: have ≤1/cap relative rank error (documented deviation). Measured
     #: at 6M rows × 3 columns (local[32]): cap 1M → 46 s, cap 100k →
     #: 14.7 s, identical results to 1e-5 rank — hence the 100k default.
-    #: For low-cardinality numerics, quantile_mode="interpolated"
-    #: (exact `percentile`, cost ∝ distinct values per group) is both
-    #: exact AND faster (5.2 s on the same data); choose it when
-    #: distinct counts are known to be bounded.
+    #: Variables with few distinct values skip the sketch (see
+    #: lowcard_quartile_max), and quantile_mode="interpolated" is exact
+    #: for every variable (cost ∝ distinct values per group).
     exact_percentile_cap: int = 100_000
-    #: driver-collect guard: Σ (category cardinality × strat values)
-    #: across all categorical variables must stay under this
+    #: driver-collect guard on the two cell frames: Σ (category
+    #: cardinality × strat values) across all categorical variables
+    #: must stay under this (else ValueError), and so must the distinct
+    #: (value × strat) cells of the exact-quartile variables — past it
+    #: their quartiles are ranked distributed instead of on the driver
+    #: (same results, more Spark jobs).
     cat_cells_limit: int = 1_000_000
     #: output schema grows 2 columns per distinct strat value; fail fast
     #: beyond this rather than building a 100k-column table.
     strat_cardinality_limit: int = 1_000
     #: warn when a variable has ≥100 categories (Index collision, Q10)
     index_collision_warn: int = 100
-    #: quartile semantics: "data" = an actual data value via exact-tuned
-    #: percentile_approx (reference :384-388 parity; bounded-memory scale
-    #: path); "interpolated" = exact linear interpolation (R type-7 /
-    #: duckdb quantile_cont — well-defined, oracle-checkable, but
-    #: O(distinct-per-group) memory)
+    #: quartile semantics: "data" = an actual data value (exact
+    #: quantile_disc, or the exact-tuned percentile_approx for
+    #: high-cardinality variables — reference :384-388 parity;
+    #: bounded-memory scale path); "interpolated" = exact linear
+    #: interpolation (R type-7 / duckdb quantile_cont) for every
+    #: variable, from the distinct-value cells — O(distinct-per-group)
+    #: memory. Weighted tables (weight_col) use the cells in both modes.
     quantile_mode: str = "data"
-    #: data-mode quartile STRATEGY split (r6): variables whose global
+    #: unweighted data-mode quartile route (r6): variables whose global
     #: approximate distinct count (HLL, deterministic) is at or below
     #: this threshold skip the sketch entirely and get EXACT
-    #: quantile_disc from distinct-value running counts — bounded
-    #: per-group windows, ~3× cheaper than the exactness-tuned sketch,
-    #: and immune to the sketch's accuracy==n+1 one-below-rank quirk.
-    #: High-cardinality variables keep the capped sketch (the bounded-
-    #: memory path a near-unique column needs at 100 TB). Set to 0 to
-    #: force the sketch for everything (pre-r6 behavior).
+    #: quantile_disc, ranked from their distinct-value cells — ~3×
+    #: cheaper than the exactness-tuned sketch, and immune to the
+    #: sketch's accuracy==n+1 one-below-rank quirk. High-cardinality
+    #: variables keep the capped sketch (the bounded-memory path a
+    #: near-unique column needs at 100 TB). Set to 0 to force the
+    #: sketch for everything (pre-r6 behavior).
     lowcard_quartile_max: int = 2_048
 
 
@@ -148,8 +154,9 @@ def tableone(
     column silently overwriting the other.
 
     Scale note: above ``config.exact_percentile_cap`` rows (default
-    100k) the default ``quantile_mode="data"`` quartiles become
-    approximate (a warning is emitted); use
+    100k) the default ``quantile_mode="data"`` quartiles of variables
+    with more than ``config.lowcard_quartile_max`` distinct values
+    become approximate (a warning is emitted); use
     ``quantile_mode="interpolated"`` or raise the cap when exact
     quartiles are required on larger inputs.
 
@@ -157,11 +164,13 @@ def tableone(
     an extension; the reference has no weights). Weights are FREQUENCY
     weights: every count becomes Σw, means/stddevs use Σwx/Σwx² with
     the frequency-weight sample variance, category percents are
-    Σw-fractions, quartiles honor ``quantile_mode`` (an extra bounded
-    job either way — see core/sufficient.py): the default ``"data"``
-    is exact weighted ``quantile_disc`` (min x with cumΣw ≥ p·Σw);
-    ``"interpolated"`` blends at continuous index p·(Σw−1) of the
-    weight-expanded multiset. Hypothesis tests consume the weighted
+    Σw-fractions, quartiles honor ``quantile_mode`` and come from the
+    distinct-value cells with their Σw, for every variable (the
+    exact-quartile kernel of core/sufficient.py): the default
+    ``"data"`` is exact weighted ``quantile_disc`` (min x with
+    cumΣw ≥ p·Σw); ``"interpolated"`` blends at continuous index
+    p·(Σw−1) of the weight-expanded multiset, exactly as the
+    unweighted mode does. Hypothesis tests consume the weighted
     moments/counts (valid for frequency weights; probability-survey
     designs need design-effect corrections that are out of scope).
     Defined behavior: integer weights reproduce the unweighted table

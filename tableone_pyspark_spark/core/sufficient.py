@@ -23,35 +23,42 @@ near-unique): 13 jobs and 6 input-scanning stages per call.
              partial aggregation collapses the melt immediately, so
              the shuffle carries only Σ cardinality × strat rows.
     probe    one global HLL pass: approximate distinct count per
-             continuous var — the quartile-strategy selector.
-  phase 2 (data mode, quartiles only, both concurrent)
+             continuous var — the quartile-route selector. Unweighted
+             "data" mode only; otherwise every variable goes straight
+             to ``exact`` in this phase.
+  phase 2 (unweighted "data" mode, routed by the probe, concurrent)
     sketch   vars with distinct > lowcard_quartile_max: the
              exactness-tuned capped ``percentile_approx`` aggregate
              (one global and, when stratified, one per-strat action) —
              the bounded-memory path near-unique columns need.
-    disc     vars with distinct ≤ lowcard_quartile_max: EXACT
-             ``quantile_disc`` from distinct-value running counts
-             (bounded per-group windows; no sketch cost, no
-             accuracy==n+1 rank quirk).
-  (interpolated mode replaces phase 2 with exact ``percentile`` inside
-  the moments rollup — one pass, O(distinct-per-group) memory.)
+    exact    vars with distinct ≤ lowcard_quartile_max: exact
+             ``quantile_disc`` from distinct-value cells (below).
 
-Only aggregated scalars ever reach the driver. The collected sizes are
-O(V·k) and O(Σ cardinalities · k) — independent of row count, so the
-same plan runs at 100 TB. Independent jobs are submitted
-concurrently (threads; Spark schedules them into the shared cluster).
+Exact quartiles have ONE implementation. Melt the variables and
+compress to the distinct (var, value[, strat]) cells with their Σw (a
+count when unweighted) — one shuffle, map-side combined, carrying
+distinct values, not rows. The cells (at most ``cat_cells_limit``) are
+collected as Arrow and ranked on the driver by :func:`_quartiles`:
+``quantile_disc`` in "data" mode, the DuckDB ``quantile_cont`` blend in
+"interpolated" mode. A stratified run's global group is the
+concatenation of its per-strat cells, so nothing is rescanned. Past
+``cat_cells_limit`` the same selection runs distributed (``run_wq``:
+range-bucketed window running sums). Memory is O(distinct values per
+group).
+
+Only aggregated scalars and bounded cell frames reach the driver. The
+collected sizes are O(V·k) and O(Σ cardinalities · k) — independent of
+row count, so the same plan runs at 100 TB. Independent jobs are
+submitted concurrently (threads; Spark schedules them into the shared
+cluster).
 
 Weighted mode (``weight_col``): weights are FREQUENCY weights — the
 results are defined to equal the unweighted results on a row-replicated
 frame (exactly true for integer weights; pinned by test). Rows with
 null/non-positive weight are excluded everywhere. The same bounded
-jobs collect Σw / Σwx / Σwx² instead of counts, plus ONE extra job
-for weighted quartiles: melt the continuous vars, compress to distinct
-(var, value[, strat]) with their Σw (map-side combined — the shuffle
-carries distinct values, not rows), one running-sum window per
-(var, strat) partition, then ``min(x WHERE cumΣw >= p·Σw)`` — the
+jobs collect Σw / Σwx / Σwx² instead of counts, and the exact-quartile
+cells carry Σw: "data" mode is ``min(x WHERE cumΣw >= p·Σw)`` — the
 weighted generalization of ``quantile_disc`` (reduces to it at w=1).
-Memory is O(distinct values per group), the interpolated-mode regime.
 """
 
 from __future__ import annotations
@@ -60,6 +67,8 @@ import math
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from tableone_pyspark_spark.core.sanitize import MISSING, clean_strat_col
@@ -68,9 +77,10 @@ from tableone_pyspark_spark.core.sanitize import MISSING, clean_strat_col
 STRAT = "__t1_strat__"
 #: internal weight column name (weighted mode only)
 WEIGHT = "__t1_w__"
-#: global-cell marker in melted quantile frames (joins drop NULL keys;
-#: windows don't — run_wq and run_lowcard_disc share this)
+#: global-cell marker in run_wq's cell frame (joins drop NULL keys;
+#: windows don't)
 SENTINEL = "\x00__t1_all__"
+QUARTILES = (0.25, 0.5, 0.75)
 
 
 @dataclass(frozen=True)
@@ -109,44 +119,7 @@ def _sql_str(name: str) -> str:
     return "'" + name.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _cont_aggs(cont_vars: list[str], accuracy: int, quantile_mode: str) -> list:
-    aggs = []
-    for i, v in enumerate(cont_vars):
-        c = F.col(v)
-        if quantile_mode == "interpolated":
-            # exact linear-interpolated quartiles (R type-7, same rule as
-            # duckdb quantile_cont / numpy percentile). Memory is
-            # O(distinct values per group) — prefer "data" at extreme
-            # scale.
-            q = F.expr(f"percentile({_quote(v)}, array(0.25D, 0.5D, 0.75D))")
-        else:
-            # "data": accuracy-tuned percentile_approx (reference
-            # :384-388): returns an actual data value; one call returns
-            # all three quartiles from one sketch. Measured boundary
-            # semantics: while the 10k accuracy floor dominates
-            # (n < 10000) the result matches DuckDB quantile_disc
-            # rank-for-rank; at accuracy == n+1 the sketch's error
-            # budget n/(n+1) lets the returned rank sit exactly one
-            # below quantile_disc (deterministic, partitioning-
-            # independent — oracle-pinned in tableone_strat_dataq).
-            q = F.percentile_approx(c, [0.25, 0.5, 0.75], F.lit(accuracy))
-        aggs += [
-            F.count(c).alias(f"n__{i}"),
-            F.min(c).alias(f"mn__{i}"),
-            F.max(c).alias(f"mx__{i}"),
-            F.avg(c).alias(f"av__{i}"),
-            F.stddev_samp(c).alias(f"sd__{i}"),
-            F.var_samp(c).alias(f"vr__{i}"),
-            q.alias(f"q__{i}"),
-        ]
-    return aggs
-
-
-def _row_to_stats(row, i: int, q_override: tuple | None = None) -> ContStat:
-    if q_override is not None:
-        q = list(q_override)
-    else:
-        q = row[f"q__{i}"] or [None, None, None]
+def _row_to_stats(row, i: int, q: tuple) -> ContStat:
     return ContStat(
         n=row[f"n__{i}"] or 0,
         min=row[f"mn__{i}"],
@@ -161,8 +134,9 @@ def _row_to_stats(row, i: int, q_override: tuple | None = None) -> ContStat:
 
 
 def _moment_aggs(cont_vars: list[str]) -> list:
-    """Data-mode phase 1: moments only — NO quartile sketch (quartiles
-    come from phase 2, routed by the concurrent cardinality probe)."""
+    """Unweighted moments per variable: count, min, max, avg,
+    stddev_samp, var_samp. Quartiles come from the separate quartile
+    jobs (sketch or exact cells)."""
     aggs = []
     for i, v in enumerate(cont_vars):
         c = F.col(v)
@@ -236,6 +210,91 @@ def _row_to_stats_weighted(row, i: int, quarts: tuple) -> ContStat:
     )
 
 
+def _quartiles(x: np.ndarray, w: np.ndarray, interpolated: bool) -> tuple:
+    """The exact-quartile kernel: quartiles of one group of cells, the
+    distinct values ``x`` with their Σw ``w`` (a count when unweighted).
+    A value may appear in several cells — a global group is just the
+    concatenation of its per-strat cells.
+
+    A stable ascending sort (NaN last, as Spark orders doubles), then
+    ``cum = cumsum(w)`` in that order:
+
+      "data"          min x with cum ≥ p·Σw — weighted ``quantile_disc``
+                      (min{k: k ≥ p·n} at w ≡ 1).
+      "interpolated"  t = p·(Σw−1); value_at(j) = min x with cum > j;
+                      lo, hi = value_at(⌊t⌋), value_at(⌊t⌋+1) and, with
+                      f = t − ⌊t⌋, the DuckDB ``quantile_cont`` blend
+                      (1−f)·lo + f·hi — or lo itself when f = 0 or
+                      lo == hi (as Spark ``percentile``), so [1, inf, inf]
+                      keeps inf. Integral weights equal numpy's linear
+                      percentile on the row-replicated values.
+
+    With integral weights every partial sum is exact in double, so the
+    result does not depend on how the cells were split or ordered."""
+    order = np.argsort(x, kind="stable")
+    x = x[order]
+    cum = np.cumsum(w[order])
+    # Python floats from here on: the same IEEE arithmetic, without
+    # numpy's warnings for inf - inf
+    total = float(cum[-1])
+    last = len(x) - 1
+    out = []
+    for p in QUARTILES:
+        if interpolated:
+            t = p * (total - 1.0)
+            j = float(np.floor(t))
+            f = t - j
+            k = np.searchsorted(cum, j, side="right")
+            if k > last:
+                out.append(None)
+                continue
+            lo = float(x[k])
+            hi = float(x[min(np.searchsorted(cum, j + 1.0, side="right"), last)])
+            out.append(lo if f == 0 or lo == hi else (1.0 - f) * lo + f * hi)
+        else:
+            k = np.searchsorted(cum, p * total, side="left")
+            out.append(float(x[k]) if k <= last else None)
+    return tuple(out)
+
+
+def _codes(col: pa.ChunkedArray) -> tuple[np.ndarray, list]:
+    d = col.combine_chunks().dictionary_encode()
+    return d.indices.to_numpy().astype(np.int64), d.dictionary.to_pylist()
+
+
+def _cell_quartiles(
+    cells: pa.Table, stratified: bool, interpolated: bool
+) -> dict[tuple[str, str | None], tuple]:
+    """Run :func:`_quartiles` on every (var[, strat]) group of the
+    collected cells and, when stratified, on every var's global
+    (var, None) group — the concatenation of its per-strat cells."""
+    n = cells.num_rows
+    if n == 0:
+        return {}
+    vi, vnames = _codes(cells["t1_var"])
+    si, snames = (
+        _codes(cells[STRAT]) if stratified else (np.zeros(n, np.int64), [None])
+    )
+    order = np.lexsort((si, vi))  # stable: groups become contiguous runs
+    x = cells["t1_x"].to_numpy()[order]
+    w = cells["sw"].to_numpy()[order]
+    vi, si = vi[order], si[order]
+
+    def runs(ids):
+        cuts = np.flatnonzero(np.diff(ids)) + 1
+        return zip(np.r_[0, cuts], np.r_[cuts, n])
+
+    out = {}
+    for a, b in runs(vi * len(snames) + si):
+        out[(vnames[vi[a]], snames[si[a]])] = _quartiles(
+            x[a:b], w[a:b], interpolated
+        )
+    if stratified:
+        for a, b in runs(vi):
+            out[(vnames[vi[a]], None)] = _quartiles(x[a:b], w[a:b], interpolated)
+    return out
+
+
 def collect_sufficient(
     df: DataFrame,
     col_to_strat: str,
@@ -248,11 +307,11 @@ def collect_sufficient(
     weight_col: str | None = None,
     lowcard_quartile_max: int = 2_048,
 ) -> Sufficient:
-    """Run the bounded job set (two concurrent phases in data mode;
-    +1 weighted-quantile job in weighted mode) and return every
-    statistic TableOne needs."""
+    """Run the bounded job set of the module docstring and return
+    every statistic TableOne needs."""
     stratified = col_to_strat != ""
     weighted = weight_col is not None
+    interpolated = quantile_mode == "interpolated"
     base = df
     if weighted:
         wc = F.col(_quote(weight_col)).cast("double")
@@ -331,24 +390,12 @@ def collect_sufficient(
             return {}, row["t"] or 0.0
         return {}, work.count()
 
-    def run_cont(total: int):
-        # weighted / interpolated modes: one pass, unchanged shape.
-        aggs = (
-            _cont_aggs_weighted(cont_vars)
-            if weighted
-            else _cont_aggs(cont_vars, 0, quantile_mode)
-        )
+    def run_moments():
+        aggs = _cont_aggs_weighted(cont_vars) if weighted else _moment_aggs(cont_vars)
         if stratified:
             # rollup == grouping sets {(strat), ()}: per-strat cells AND
             # the grand total in ONE pass. Cleaned strat is never null,
             # so the null-strat row is unambiguously the total.
-            return work.rollup(STRAT).agg(*aggs).collect()
-        return work.groupBy().agg(*aggs).collect()
-
-    def run_cont_moments():
-        # data-mode phase 1: moments; quartiles come from phase 2.
-        aggs = _moment_aggs(cont_vars)
-        if stratified:
             return work.rollup(STRAT).agg(*aggs).collect()
         return work.groupBy().agg(*aggs).collect()
 
@@ -404,143 +451,60 @@ def collect_sufficient(
             ]
         return [(None, r) for r in work.groupBy().agg(*aggs).collect()]
 
-    def run_lowcard_disc(pairs: list[tuple[int, str]]):
-        # data-mode phase 2b: EXACT quantile_disc for low-cardinality
-        # vars via distinct-value running counts. Each (var, strat)
-        # group holds <= lowcard_quartile_max distinct values (that is
-        # what classified it low), so the distinct-cell frame is
-        # BOUNDED BY CONSTRUCTION — independent of row count. r17
-        # (guide §1.2/§5): the previous shape ran FOUR sequential
-        # shuffle stages (melt-groupBy, global-cell union, window
-        # sort, final agg) of which only the first touches data; the
-        # rank selection over the tiny cell frame now happens on the
-        # driver (one shuffle + one bounded collect — the same class
-        # of driver work as the categorical-counts collect), with the
-        # float running sum accumulated in the SAME ascending-x order
-        # the window used (counts are integers-in-double, and NaN
-        # sorts last, Spark's ordering), so the selected data values
-        # are identical. Guarded by cat_cells_limit: a frame larger
-        # than the guard falls back to the distributed window path.
-        vars_ = [v for _i, v in pairs]
-        g, part = melt_distinct_counts(
-            vars_, use_weight=False, with_global=False
-        )
-        cells = g.limit(cat_cells_limit + 1).collect()
-        if len(cells) > cat_cells_limit:
-            return _run_lowcard_disc_windowed(vars_)
-        import math
-
-        per_group: dict[tuple, dict] = {}
-        for r in cells:
-            key = (r["t1_var"], r[STRAT] if stratified else None)
-            per_group.setdefault(key, {})[r["t1_x"]] = r["sw"]
-        if stratified:
-            # global cells derive from the per-strat ones without
-            # rescanning — integer counts, exact in any order
-            for (v, _s), d in list(per_group.items()):
-                glob = per_group.setdefault((v, None), {})
-                if _s is not None:
-                    for x, w in d.items():
-                        glob[x] = glob.get(x, 0.0) + w
-        out_rows = []
-        for (v, s), d in per_group.items():
-            xs = sorted(d, key=lambda x: (math.isnan(x), x))
-            tw = 0.0
-            for x in xs:
-                tw += d[x]
-            qs = []
-            for p in (0.25, 0.5, 0.75):
-                thr = p * tw
-                cum = 0.0
-                pick = None
-                for x in xs:
-                    cum += d[x]
-                    if cum >= thr:
-                        pick = x
-                        break
-                qs.append(pick)
-            row = {"t1_var": v, "wq_25": qs[0], "wq_50": qs[1],
-                   "wq_75": qs[2]}
-            if stratified:
-                row[STRAT] = s
-            out_rows.append(row)
-        return out_rows
-
-    def _run_lowcard_disc_windowed(vars_: list[str]):
-        # the distributed fallback (pre-r17 shape) for a cell frame
-        # past the driver guard: per-group windows, still bounded
-        from pyspark.sql import Window
-
-        g, part = melt_distinct_counts(vars_, use_weight=False)
-        cum = F.sum("sw").over(Window.partitionBy(*part).orderBy("t1_x"))
-        tw = F.sum("sw").over(Window.partitionBy(*part))
-        ranked = g.select(*part, "t1_x", cum.alias("cum"), tw.alias("tw"))
-        qaggs = [
-            F.min(
-                F.when(F.col("cum") >= F.lit(p) * F.col("tw"), F.col("t1_x"))
-            ).alias(f"wq_{int(p * 100)}")
-            for p in (0.25, 0.5, 0.75)
-        ]
-        rows = ranked.groupBy(*part).agg(*qaggs).collect()
-        out_rows = []
-        for row in rows:
-            d = row.asDict()
-            if stratified and d[STRAT] == SENTINEL:
-                d[STRAT] = None
-            out_rows.append(d)
-        return out_rows
-
-    def melt_distinct_counts(vars_, use_weight: bool, with_global=True):
-        """Shared by run_wq / run_lowcard_disc: melt ``vars_`` and
-        compress to distinct (var, value[, strat]) cells carrying the
-        Σweight (weighted) or count (w≡1) — ONE shuffle, map-side
-        combined, carrying distinct values, not rows — then (unless
-        ``with_global=False``: the disc path derives them driver-side)
-        derive the global cells from the per-strat ones WITHOUT
-        rescanning (SENTINEL-marked). Returns (g, part)."""
+    def run_exact(vars_: list[str]):
+        # every exact quartile. Melt ``vars_`` and compress to the
+        # distinct (var, value[, strat]) cells with their Σw (a count
+        # when unweighted) — ONE shuffle, map-side combined, carrying
+        # distinct values, not rows. The cells are bounded by the
+        # distinct values per group, so they are collected (as Arrow,
+        # under the cat_cells_limit guard the categorical counts use)
+        # and ranked on the driver by _quartiles; past the guard they
+        # stay distributed (run_wq).
         casts = ", ".join(
             f"{_sql_str(v)}, CAST({_quote(v)} AS DOUBLE)" for v in vars_
         )
         stack = F.expr(f"stack({len(vars_)}, {casts}) as (t1_var, t1_x)")
         melted = work.select(
             *([STRAT] if stratified else []),
-            *([F.col(WEIGHT)] if use_weight else []),
+            *([F.col(WEIGHT)] if weighted else []),
             stack,
         ).where(F.col("t1_x").isNotNull())
         keys = ["t1_var", "t1_x"] + ([STRAT] if stratified else [])
-        agg = F.sum(WEIGHT) if use_weight else F.count(F.lit(1)).cast("double")
+        agg = F.sum(WEIGHT) if weighted else F.count(F.lit(1)).cast("double")
         g = melted.groupBy(*keys).agg(agg.alias("sw"))
-        if stratified and with_global:
+        cells = g.limit(cat_cells_limit + 1).toArrow()
+        if cells.num_rows > cat_cells_limit:
+            return run_wq(g)
+        return _cell_quartiles(cells, stratified, interpolated)
+
+    def run_wq(g: DataFrame):
+        # the distributed path for a cell frame past cat_cells_limit:
+        # derive the global cells from the per-strat ones WITHOUT
+        # rescanning (SENTINEL-marked), then the same selection as
+        # _quartiles with window running sums.
+        #
+        # The running sum is a RANGE-BUCKETED parallel prefix sum, not
+        # one window partition per (var, strat): a near-unique column
+        # at 100 TB would otherwise sort billions of distinct values in
+        # a single task. Instead: bucket x into B range cells
+        # (monotonic in x), cumsum WITHIN (var, strat, bucket) — 256×
+        # the parallelism — and add per-bucket offsets from a tiny
+        # (V·k·B)-row window. Float note: cum = local + offset groups
+        # the additions differently than a flat scan; with
+        # integral-valued weights (the graded contract) every partial
+        # sum is exact in double, so results are bit-identical to the
+        # driver kernel.
+        from pyspark.sql import Window
+
+        B = 256
+        part = ["t1_var"] + ([STRAT] if stratified else [])
+        if stratified:
             g_all = (
                 g.groupBy("t1_var", "t1_x")
                 .agg(F.sum("sw").alias("sw"))
                 .withColumn(STRAT, F.lit(SENTINEL))
             )
             g = g.unionByName(g_all)
-        return g, ["t1_var"] + ([STRAT] if stratified else [])
-
-    def run_wq():
-        # weighted quartiles: compress to distinct (var, value[, strat])
-        # with Σw (ONE shuffle, map-side combined — carries distinct
-        # values, not rows), derive the global cells from the per-strat
-        # ones WITHOUT rescanning, then pick min(x | cumΣw >= p·Σw) —
-        # weighted quantile_disc (== quantile_disc at w=1:
-        # min{k: k >= p·n} is ceil(p·n)).
-        #
-        # The running sum is a RANGE-BUCKETED parallel prefix sum, not
-        # one window partition per (var, strat): a near-unique column
-        # at 100 TB would otherwise sort billions of distinct values in
-        # a single task. Instead: bucket x into _WQ_BUCKETS range cells
-        # (monotonic in x), cumsum WITHIN (var, strat, bucket) — 256×
-        # the parallelism — and add per-bucket offsets from a tiny
-        # (V·k·B)-row window. Float note: cum = local + offset groups
-        # the additions differently than a flat scan; with
-        # integral-valued weights (the graded contract) every partial
-        # sum is exact in double, so results are bit-identical.
-        from pyspark.sql import Window
-
-        B = 256
-        g, part = melt_distinct_counts(cont_vars, use_weight=True)
 
         # per-group span + total (tiny; broadcast back onto g)
         stats = g.groupBy(*part).agg(
@@ -580,50 +544,30 @@ def collect_sufficient(
             F.broadcast(off), part + ["__bk"]
         )
         cum = F.col("__loc") + F.col("__off")
-        if quantile_mode == "interpolated":
-            # expanded-index interpolation: with W = Σw, the quantile
-            # sits at continuous index t = p·(W−1) of the
-            # weight-expanded sorted multiset; value_at(j) =
-            # min{x : cum > j} (inclusive cumΣw), linearly blended
-            # between floor(t) and floor(t)+1. Integral weights
-            # reproduce numpy.percentile(linear) on the row-replicated
-            # array exactly (pinned by test + row-expansion oracle);
-            # fractional weights generalize by treating cumΣw as the
-            # continuous index. t/frac are group constants (tw is), so
-            # F.min just extracts them alongside the conditional mins.
-            qaggs = []
-            for p in (0.25, 0.5, 0.75):
+        x = F.col("t1_x")
+        qaggs = []
+        for p in QUARTILES:
+            if interpolated:
+                # t/frac are group constants (tw is), so F.min just
+                # extracts them alongside the conditional mins
                 t = F.lit(p) * (F.col("tw") - F.lit(1.0))
                 j0 = F.floor(t).cast("double")
-                lo = F.min(F.when(cum > j0, F.col("t1_x")))
-                hi = F.coalesce(
-                    F.min(F.when(cum > j0 + 1, F.col("t1_x"))),
-                    F.max("t1_x"),
-                )
+                lo = F.min(F.when(cum > j0, x))
+                hi = F.coalesce(F.min(F.when(cum > j0 + 1, x)), F.max(x))
                 frac = F.min(t - j0)
-                qaggs.append(
-                    (lo + frac * (hi - lo)).alias(f"wq_{int(p * 100)}")
+                q = F.when((frac == 0) | (lo == hi), lo).otherwise(
+                    (F.lit(1.0) - frac) * lo + frac * hi
                 )
-        else:
-            # "data" mode: weighted quantile_disc — min x with
-            # cumΣw ≥ p·Σw (== quantile_disc at w=1: min{k: k ≥ p·n}
-            # is ceil(p·n))
-            qaggs = [
-                F.min(
-                    F.when(cum >= F.lit(p) * F.col("tw"), F.col("t1_x"))
-                ).alias(f"wq_{int(p * 100)}")
-                for p in (0.25, 0.5, 0.75)
-            ]
-        rows = ranked.groupBy(*part).agg(*qaggs).collect()
-        if stratified:
-            remap = []
-            for row in rows:
-                d = row.asDict()
-                if d[STRAT] == SENTINEL:
-                    d[STRAT] = None
-                remap.append(d)
-            return remap
-        return [r.asDict() for r in rows]
+            else:
+                q = F.min(F.when(cum >= F.lit(p) * F.col("tw"), x))
+            qaggs.append(q.alias(f"wq_{int(p * 100)}"))
+        out = {}
+        for r in ranked.groupBy(*part).agg(*qaggs).collect():
+            key = r[STRAT] if stratified else None
+            out[(r["t1_var"], None if key == SENTINEL else key)] = (
+                r["wq_25"], r["wq_50"], r["wq_75"],
+            )
+        return out
 
     def run_cat():
         pairs = ", ".join(f"{_sql_str(v)}, {_quote(v)}" for v in cat_vars)
@@ -652,111 +596,64 @@ def collect_sufficient(
         return rows
 
     # ---- schedule the jobs with maximal overlap -------------------------
-    # The categorical melt never depends on anything else. In "data"
-    # mode the flow is two phases: {counts ∥ moments+HLL ∥ melt}, then
-    # the HLL estimates split the quartile work into {sketch for
-    # high-cardinality vars ∥ exact disc for low-cardinality vars} —
-    # both bounded, both concurrent. Weighted/interpolated keep their
-    # one-pass shapes. Spark's scheduler interleaves the concurrent
-    # jobs across the cluster.
-    cont_rows: list = []
-    cat_rows: list = []
-    wq_rows: list = []
-    sketch_rows: list = []
-    lowcard_vars: set[str] = set()
-    data_mode = (not weighted) and quantile_mode != "interpolated" and cont_vars
+    # One schedule for every mode: counts ∥ moments ∥ cat ∥ exact
+    # quartiles. In unweighted "data" mode the HLL probe first splits
+    # the variables: high-cardinality ones go to the capped sketch
+    # (which waits for the row count, its accuracy), the rest to the
+    # exact cells. Spark's scheduler interleaves the concurrent jobs.
+    sketched: list[tuple[int, str]] = []
+    exact = list(cont_vars)
     with ThreadPoolExecutor(max_workers=8) as pool:
         # 8 workers = the worst-case concurrent job set (counts ∥
         # moments ∥ melt ∥ probe, then sketch-global ∥ sketch-strat ∥
-        # disc while the melt may still be running) — a smaller pool
-        # would serialize phase 2 behind whichever phase-1 job is the
-        # long pole
+        # exact while the melt may still be running) — a smaller pool
+        # would serialize the sketches behind whichever earlier job is
+        # the long pole
         f_cat = pool.submit(run_cat) if cat_vars else None
-        if weighted and cont_vars:
-            # weighted moments need no accuracy tuning -> all 4 jobs
-            # are independent; run everything concurrently
-            f_counts = pool.submit(run_counts)
-            f_cont = pool.submit(run_cont, 0)
-            f_wq = pool.submit(run_wq)
-            out.strat_counts, out.total = f_counts.result()
-            cont_rows = f_cont.result()
-            wq_rows = f_wq.result()
-        elif cont_vars and quantile_mode == "interpolated":
-            f_counts = pool.submit(run_counts)
-            f_cont = pool.submit(run_cont, 0)
-            out.strat_counts, out.total = f_counts.result()
-            cont_rows = f_cont.result()
-        elif cont_vars:
-            f_counts = pool.submit(run_counts)
-            f_cont = pool.submit(run_cont_moments)
+        f_counts = pool.submit(run_counts)
+        f_moments = pool.submit(run_moments) if cont_vars else None
+        if cont_vars and not (weighted or interpolated):
             if lowcard_quartile_max > 0:
-                f_card = pool.submit(run_cardinality)
-                cards = f_card.result()
+                cards = pool.submit(run_cardinality).result()
             else:
                 # sketch-for-everything pin: the probe could not route
-                # anything to the disc path — skip its full scan
+                # anything to the exact path — skip its full scan
                 cards = [lowcard_quartile_max + 1] * len(cont_vars)
-            out.strat_counts, out.total = f_counts.result()
-            high = []
-            low = []
-            for i, v in enumerate(cont_vars):
-                (low if cards[i] <= lowcard_quartile_max else high).append(
-                    (i, v)
-                )
-            lowcard_vars = {v for _i, v in low}
-            f_sketches = []
-            if high:
-                f_sketches.append(
-                    pool.submit(run_cont_sketch, high, out.total, "global")
-                )
-                if stratified:
-                    f_sketches.append(
-                        pool.submit(
-                            run_cont_sketch, high, out.total, "strat"
-                        )
-                    )
-            f_low = pool.submit(run_lowcard_disc, low) if low else None
-            cont_rows = f_cont.result()
-            sketch_rows = [kr for f in f_sketches for kr in f.result()]
-            wq_rows = f_low.result() if f_low is not None else []
-        else:
-            out.strat_counts, out.total = run_counts()
-        if f_cat is not None:
-            cat_rows = f_cat.result()
+            sketched = [
+                (i, v)
+                for i, v in enumerate(cont_vars)
+                if cards[i] > lowcard_quartile_max
+            ]
+            exact = [
+                v for i, v in enumerate(cont_vars) if cards[i] <= lowcard_quartile_max
+            ]
+        f_exact = pool.submit(run_exact, exact) if exact else None
+        out.strat_counts, out.total = f_counts.result()
+        scopes = ("global", "strat") if stratified else ("global",)
+        f_sketches = [
+            pool.submit(run_cont_sketch, sketched, out.total, scope)
+            for scope in scopes
+        ] if sketched else []
+        cont_rows = f_moments.result() if f_moments is not None else []
+        quarts = f_exact.result() if f_exact is not None else {}
+        sketch_by_key = {key: row for f in f_sketches for key, row in f.result()}
+        cat_rows = f_cat.result() if f_cat is not None else []
 
     # ---- unpack ---------------------------------------------------------
-    quarts: dict[tuple[str, str | None], tuple] = {}
-    for row in wq_rows:  # dict rows from run_wq / run_lowcard_disc
-        key = row[STRAT] if stratified else None
-        quarts[(row["t1_var"], key)] = (
-            row["wq_25"], row["wq_50"], row["wq_75"],
-        )
-    sketch_by_key: dict[str | None, object] = {}
-    for key, row in sketch_rows:  # (strat_key, Row) pairs; None = global
-        sketch_by_key[key] = row
-    for i, v in enumerate(cont_vars):
+    high = {v for _i, v in sketched}
+    to_stats = _row_to_stats_weighted if weighted else _row_to_stats
+    for v in cont_vars:
         out.cont[v] = {}
     for row in cont_rows:
         key = row[STRAT] if stratified else None
+        srow = sketch_by_key.get(key)
         for i, v in enumerate(cont_vars):
-            if weighted:
-                q = quarts.get((v, key), (None, None, None))
-                out.cont[v][key] = _row_to_stats_weighted(row, i, q)
-            elif data_mode:
-                if v in lowcard_vars:
-                    # an all-NULL (var, strat) cell has no disc row —
-                    # its quartiles are None, never a sketch lookup
-                    # (the sketch rows only alias high-card vars)
-                    q = quarts.get((v, key), (None, None, None))
-                else:
-                    srow = sketch_by_key.get(key)
-                    qv = (srow[f"q__{i}"] if srow is not None else None) or [
-                        None, None, None,
-                    ]
-                    q = (qv[0], qv[1], qv[2])
-                out.cont[v][key] = _row_to_stats(row, i, q_override=q)
+            if v in high:
+                q = (srow[f"q__{i}"] if srow is not None else None) or [None] * 3
             else:
-                out.cont[v][key] = _row_to_stats(row, i)
+                # an all-NULL (var, strat) group has no cells: None
+                q = quarts.get((v, key), (None, None, None))
+            out.cont[v][key] = to_stats(row, i, q)
     if stratified and cont_vars and None not in out.cont[cont_vars[0]]:
         # defensive: rollup always emits the grand-total row
         raise RuntimeError("rollup produced no grand-total row")

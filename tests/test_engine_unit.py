@@ -541,6 +541,94 @@ def test_weighted_quantile_interpolated_fractional_weights(spark):
     assert out[(1.8, "75th percentile")]["All_Patients"] == 1.5
 
 
+def test_weighted_interpolated_matches_row_replication_at_inf_and_blend(spark):
+    """Weighted interpolated quartiles at w == 1 equal the unweighted
+    ones (and DuckDB quantile_cont): with lo == hi == inf the quartile
+    is inf, not inf + 0*(inf - inf) = NaN, and the blend is
+    (1-f)*lo + f*hi, so [26965.01, 26965.05] gives q25 = 26965.02."""
+    from tableone_pyspark_spark import TableOneConfig
+
+    inf = float("inf")
+    rows = [("a", 1.0), ("a", 2.0), ("a", inf), ("a", inf), ("a", inf),
+            ("b", 26965.01), ("b", 26965.05)]
+    df = spark.createDataFrame(
+        [(s, x, 1.0) for s, x in rows], "s string, x double, w double"
+    )
+    cfg = TableOneConfig(quantile_mode="interpolated")
+    weighted = rows_by_index(
+        tableone(df, col_to_strat="s", cols_to_analyze=["x"], weight_col="w",
+                 config=cfg)
+    )
+    plain = rows_by_index(
+        tableone(df, col_to_strat="s", cols_to_analyze=["x"], config=cfg)
+    )
+    q25, q50, q75 = (1.6, "25th percentile"), (1.7, "50th percentile"), (1.8, "75th percentile")
+    assert [weighted[q]["a"] for q in (q25, q50, q75)] == [2.0, inf, inf]
+    assert [weighted[q]["b"] for q in (q25, q50, q75)] == [
+        26965.02, 26965.03, 26965.039999999997,
+    ]
+    for q in (q25, q50, q75):
+        for col in ("All_Patients", "a", "b"):
+            assert repr(weighted[q][col]) == repr(plain[q][col]), (q, col)
+
+
+def _cell_x(i: int):
+    # tie-prone values plus null, NaN and inf
+    if i % 19 == 0:
+        return None
+    if i % 23 == 0:
+        return float("nan")
+    if i % 29 == 0:
+        return float("inf")
+    return float(i % 17) - 4.5
+
+
+#: (strat, x, integral weight): ~17 distinct x per stratum, so the
+#: quartile cells exceed a cat_cells_limit of 10
+_CELL_ROWS = [
+    ("abc"[i % 3] if i % 11 else None, _cell_x(i), float(i % 3 + 1))
+    for i in range(60)
+]
+
+
+@pytest.mark.parametrize("stratified", [True, False], ids=["strat", "nostrat"])
+@pytest.mark.parametrize(
+    "mode,weighted",
+    [("data", False), ("interpolated", False), ("data", True), ("interpolated", True)],
+    ids=["data", "interpolated", "weighted-data", "weighted-interpolated"],
+)
+def test_distributed_quartiles_equal_driver_kernel(spark, mode, weighted, stratified):
+    """Past cat_cells_limit the exact quartiles run distributed
+    (run_wq) instead of on the driver (_quartiles); both give the same
+    table, bit for bit."""
+    from tableone_pyspark_spark import TableOneConfig
+
+    df = spark.createDataFrame(_CELL_ROWS, "s string, x double, w double")
+    kw = dict(
+        col_to_strat="s" if stratified else "",
+        cols_to_analyze=["x"],
+        weight_col="w" if weighted else None,
+    )
+    driver = tableone(df, config=TableOneConfig(quantile_mode=mode), **kw)
+    spread = tableone(
+        df, config=TableOneConfig(quantile_mode=mode, cat_cells_limit=10), **kw
+    )
+    a = sorted(repr(r) for r in driver.collect())
+    b = sorted(repr(r) for r in spread.collect())
+    assert len(a) == 9 and a == b
+
+
+def test_cat_cells_limit_raises_for_categorical_cells(spark):
+    df = spark.createDataFrame(
+        [(f"id{i}", float(i)) for i in range(20)], "c string, x double"
+    )
+    from tableone_pyspark_spark import TableOneConfig
+
+    with pytest.raises(ValueError, match="cat_cells_limit"):
+        tableone(df, cols_to_analyze=["c", "x"],
+                 config=TableOneConfig(cat_cells_limit=10))
+
+
 def test_weighted_tableone_rejects_bad_weight_col(spark):
     df = spark.createDataFrame([("a", "x")], "g string, w string")
     with pytest.raises(ValueError, match="must be numeric"):

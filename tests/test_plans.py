@@ -28,12 +28,12 @@ def lineitem(spark):
 def test_sufficient_stats_scan_pruning(lineitem):
     # the rollup job must read ONLY the analyzed + strat columns
     from tableone_pyspark_spark.core.sanitize import clean_strat_col
-    from tableone_pyspark_spark.core.sufficient import STRAT, _cont_aggs
+    from tableone_pyspark_spark.core.sufficient import STRAT, _moment_aggs
 
     work = lineitem.select(
         F.col("l_quantity"), clean_strat_col("l_returnflag").alias(STRAT)
     )
-    plan = work.rollup(STRAT).agg(*_cont_aggs(["l_quantity"], 10_000, "data"))
+    plan = work.rollup(STRAT).agg(*_moment_aggs(["l_quantity"]))
     inspect.assert_scan_pruned(plan, {"l_quantity", "l_returnflag"})
     facts = inspect.plan_facts(plan)
     assert facts.n_exchanges == 1  # exactly one shuffle: partial → final agg
@@ -600,8 +600,9 @@ def test_jpeg_pipeline_is_shuffle_free(spark):
 
 
 def test_weighted_quantile_job_never_global_window(spark):
-    """The weighted-quartile pass (core/sufficient.py run_wq) must plan
-    its running-sum windows partitioned by (var[, strat]) — a global
+    """The distributed exact-quartile path (core/sufficient.py run_wq,
+    taken when the distinct-value cells exceed cat_cells_limit) must
+    plan its running-sum windows partitioned by (var[, strat]) — a global
     (empty-partition) window would serialize the whole corpus through
     one task. Pin: no 'Window' operator without a partition spec, and
     the melt compresses through a partial aggregate before the window

@@ -197,11 +197,12 @@ wq_rows = st.lists(
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=wq_rows)
 def test_weighted_quantiles_match_numpy_reference(spark, rows):
-    """The bucketed parallel prefix-sum quantile (core/sufficient.py
-    run_wq) must equal the direct definition min{x : cumΣw >= p·Σw}
-    computed by numpy over the same weighted multiset — per strat AND
-    globally. Weights are integral or dyadic so every partial sum is
-    exact in double (no rounding-boundary flakes)."""
+    """The weighted exact quartile (core/sufficient.py _quartiles on
+    the distinct-value cells) must equal the direct definition
+    min{x : cumΣw >= p·Σw} computed by numpy over the same weighted
+    multiset — per strat AND globally. Weights are integral or dyadic
+    so every partial sum is exact in double (no rounding-boundary
+    flakes)."""
     import numpy as np
 
     df = spark.createDataFrame(rows, "strat string, x double, w double")
@@ -234,6 +235,68 @@ def test_weighted_quantiles_match_numpy_reference(spark, rows):
             assert row[s] == ref(sub)[k], (s, p)
 
 
+def _loop_quartiles(cells, interpolated):
+    """Reference for the exact-quartile kernel: the pure-Python rank
+    loop it replaced — cells (x, w) sorted ascending with NaN last,
+    running sums accumulated in that order."""
+    cells = sorted(cells, key=lambda c: (math.isnan(c[0]), c[0]))
+    total = 0.0
+    for _x, w in cells:
+        total += w
+
+    def first(pred):  # min x whose running sum satisfies pred
+        cum = 0.0
+        for x, w in cells:
+            cum += w
+            if pred(cum):
+                return x
+        return None
+
+    out = []
+    for p in (0.25, 0.5, 0.75):
+        if interpolated:
+            t = p * (total - 1.0)
+            j = math.floor(t)
+            f = t - j
+            lo = first(lambda c: c > j)
+            hi = first(lambda c: c > j + 1)
+            hi = cells[-1][0] if hi is None else hi
+            out.append(lo if f == 0 or lo == hi else (1.0 - f) * lo + f * hi)
+        else:
+            out.append(first(lambda c: c >= p * total))
+    return tuple(out)
+
+
+kernel_cells = st.lists(
+    st.tuples(
+        st.one_of(
+            st.integers(-20, 20).map(float),
+            st.sampled_from([math.inf, -math.inf, math.nan]),
+        ),
+        st.one_of(st.integers(1, 5).map(float), st.floats(0.01, 4.0)),
+    ),
+    min_size=1,
+    max_size=40,
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(cells=kernel_cells, interpolated=st.booleans())
+def test_quartile_kernel_matches_loop_reference(cells, interpolated):
+    """_quartiles (numpy sort + cumsum + searchsorted) returns exactly
+    what the rank loop returns on the same cells — same sort order and
+    the same running-sum order, so even fractional weights agree bit
+    for bit."""
+    import numpy as np
+
+    from tableone_pyspark_spark.core.sufficient import _quartiles
+
+    x = np.array([c[0] for c in cells])
+    w = np.array([c[1] for c in cells])
+    got = _quartiles(x, w, interpolated)
+    assert repr(got) == repr(_loop_quartiles(cells, interpolated))
+
+
 # ---- INTERPOLATED weighted quantiles vs numpy repeat+linear ---------------
 
 wqi_rows = st.lists(
@@ -255,11 +318,14 @@ def test_interpolated_weighted_quantiles_match_numpy_repeat(spark, rows):
     p*(SUMw-1) must equal numpy.percentile(method="linear") on the
     weight-REPLICATED array — per strat AND globally. Every operand
     (data values, cumSUMw, p*(W-1) for integral W) is exact in double,
-    so the comparison is near-exact (1e-9 slack for the final blend)."""
+    so the comparison is near-exact (1e-9 slack for the final blend).
+    The unweighted interpolated table of the replicated rows must equal
+    the weighted one exactly: both modes share one blend."""
     import numpy as np
 
     from tableone_pyspark_spark import TableOneConfig
 
+    cfg = TableOneConfig(quantile_mode="interpolated")
     df = spark.createDataFrame(rows, "strat string, x double, w double")
     got = {
         (r["Index"], r["Values"]): r
@@ -268,7 +334,17 @@ def test_interpolated_weighted_quantiles_match_numpy_repeat(spark, rows):
             col_to_strat="strat",
             cols_to_analyze=["x"],
             weight_col="w",
-            config=TableOneConfig(quantile_mode="interpolated"),
+            config=cfg,
+        ).collect()
+    }
+    replicated = spark.createDataFrame(
+        [(s, x) for s, x, w in rows for _ in range(int(w))],
+        "strat string, x double",
+    )
+    plain = {
+        (r["Index"], r["Values"]): r
+        for r in tableone(
+            replicated, col_to_strat="strat", cols_to_analyze=["x"], config=cfg
         ).collect()
     }
 
@@ -286,6 +362,9 @@ def test_interpolated_weighted_quantiles_match_numpy_repeat(spark, rows):
         for s in strat_names:
             sub = [r for r in rows if r[0] == s]
             assert abs(row[s] - ref(sub, p)) < 1e-9, (s, p)
+        unweighted = plain[(round(1 + (6 + k) / 10, 10), label[p])]
+        for col in ["All_Patients"] + strat_names:
+            assert repr(row[col]) == repr(unweighted[col]), (col, p)
 
 
 # ---- weighted partition invariance under FRACTIONAL weights ---------------
