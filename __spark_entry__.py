@@ -7,10 +7,9 @@ gives the DuckDB-equivalent SQL the driver hash-matches at sf0.01.
 Conventions for oracle comparability:
   * every float aggregate is ROUND(x, 6) on BOTH sides (Spark and
     DuckDB agree to ~1e-12; rounding removes last-ulp noise);
-  * quartiles use interpolated semantics (Spark exact ``percentile``
-    == DuckDB ``quantile_cont``); the engine's default reference-parity
-    mode ("data", tuned percentile_approx) is covered by unit tests
-    instead because its boundary rank rule is implementation-defined;
+  * quartiles use interpolated semantics (DuckDB ``quantile_cont``);
+    the engine's default mode ("data", exact ``quantile_disc``) is
+    graded by ``tableone_strat_dataq``;
   * Index literals match bit-for-bit (engine rounds to 10 decimals,
     DuckDB casts exact decimals to double).
 """
@@ -226,11 +225,10 @@ def tableone_oracle_sql(
     already-clean values (true for the TPC-H-ish testdata).
 
     ``quantile_fn="quantile_disc"`` pins the engine's DEFAULT
-    ``quantile_mode="data"`` semantics instead (reference
-    tableone_pyspark.py:384-388): exact-tuned ``percentile_approx``
-    returns an actual data value, and its boundary-rank rule matches
-    DuckDB's ``quantile_disc`` exactly (verified rank-by-rank for
-    n=1..12 at every quartile) whenever n+1 <= the accuracy cap.
+    ``quantile_mode="data"`` semantics instead: an actual data value,
+    DuckDB's ``quantile_disc`` exactly (what the reference's
+    exactness-tuned ``percentile_approx`` returns, tableone_pyspark.py
+    :384-388).
 
     ``cols`` = [(name, 'cat'|'cont'), ...] in call order. ``pv`` maps a
     column to its precomputed (p_value, test_value, test_name) fixture
@@ -494,7 +492,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # as a frequency weight — integral-valued, so every Σw is exact in
     # double and the oracle replays the weighted counts bit-for-bit;
     # weighted quartiles are exact weighted quantile_disc (see
-    # core/sufficient.py run_wq). quantile_mode="data" is now passed
+    # core/sufficient.py _quartiles). quantile_mode="data" is now passed
     # EXPLICITLY: weighted mode honors quantile_mode since r6 (it was
     # ignored before), so this pin keeps the query's r5-green disc
     # semantics bit-identical; the interpolated weighted path is graded
@@ -537,25 +535,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["weighted_quantiles_cont"] = weighted_quantiles_cont
-    # the engine DEFAULT quartile path (quantile_mode="data",
-    # reference :384-388): accuracy-tuned percentile_approx returns a
-    # data value. Graded on customer (1500 rows at sf0.01) because the
-    # sketch matches quantile_disc EXACTLY only while the accuracy
-    # floor dominates (n < 10000): at accuracy == n+1 the error budget
-    # n/(n+1) lets the returned rank sit one below quantile_disc
-    # (measured, deterministic across partitionings) — a documented
-    # property of the reference's own accuracy formula, not a bug here.
-    # lowcard_quartile_max=0 pins this query to the SKETCH path (its
-    # whole purpose is grading the accuracy-tuned percentile_approx
-    # semantics); since r6 the default hybrid would route these
-    # low-cardinality columns to the exact disc path, which the same
-    # oracle also grades — via every other data-mode query — because
-    # sketch == disc while the accuracy floor dominates (n < 10000)
+    # the engine DEFAULT quartile mode, graded as exact quantile_disc
     q["tableone_strat_dataq"] = _tableone_q(
         "customer",
         "c_mktsegment",
         ["c_nationkey", "c_acctbal"],
-        config=TableOneConfig(lowcard_quartile_max=0),
+        config=TableOneConfig(),
     )
     # p-value path: tail probabilities are not expressible in DuckDB SQL
     # → rows-only check (statistics themselves are oracle-checked by

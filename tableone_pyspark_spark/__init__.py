@@ -13,12 +13,13 @@ Public API:
         in O(1) passes over the data instead of O(16·V).
 
 Design (vs. reference):
-  * Sufficient statistics only: the engine runs two phases of
-    concurrent bounded aggregations (strat counts; one ``rollup`` over
-    every continuous variable; one melted count over every categorical
-    variable; a cardinality probe; then the quartiles) and collects k·V
-    scalars — never raw rows. The ``perfbench`` ``cohort_wide`` call
-    runs 13 Spark jobs with 6 input-scanning stages (reference pulls
+  * Sufficient statistics only: the engine runs one set of concurrent
+    bounded aggregations (strat counts; one ``rollup`` over every
+    continuous variable; one melted count over every categorical
+    variable; one melted count of distinct values that yields every
+    quartile, exactly) and collects k·V scalars and bounded cell frames
+    — never raw rows. The ``perfbench`` ``cohort_wide`` call runs 7
+    Spark jobs with 3 input-scanning stages (reference pulls
     full columns via toPandas at :453/:500 and scans the input 16× per
     continuous variable at :325-437).
   * The returned table is built on the driver as an Arrow table: a

@@ -16,12 +16,10 @@ where the ``Index`` double encodes row order (total=0; continuous stats
 one anchor row per variable (reference :193,:210,:483,:522).
 
 Execution model (the Spark-first rewrite): ``collect_sufficient`` runs
-two phases of concurrent bounded single-scan actions (counts ∥ moments
-∥ categorical melt ∥ cardinality probe, then quartiles split by
-cardinality — exact quartiles from distinct-value cells for
-low-cardinality vars ∥ capped sketch for near-unique ones; 13 Spark
-jobs and 6 input-scanning stages per ``perfbench`` ``cohort_wide``
-call, see core/sufficient.py) and ships only O(V·k) aggregated scalars
+one set of concurrent bounded single-scan actions (counts ∥ moments ∥
+categorical melt ∥ exact-quartile cells; 7 Spark jobs and 3
+input-scanning stages per ``perfbench`` ``cohort_wide`` call, see
+core/sufficient.py) and ships only O(V·k) aggregated scalars
 and bounded cell frames to the driver. The output table (a few hundred
 rows at most) is then built on the driver as one Arrow table and
 returned as a ``LocalTableScan`` DataFrame: collecting it runs no
@@ -52,7 +50,7 @@ from tableone_pyspark_spark.core.sanitize import (
     category_order_key,
     order_strat_values,
 )
-from tableone_pyspark_spark.core.sufficient import Sufficient, collect_sufficient
+from tableone_pyspark_spark.core.sufficient import Sufficient, _num, collect_sufficient
 
 #: continuous stat rows: (Values label, Index offset, ContStat attribute)
 #: order/offsets per reference :325-434
@@ -80,57 +78,27 @@ _NUMERIC = (
 
 @dataclass(frozen=True)
 class TableOneConfig:
-    """Engine knobs (all scale guards, none change small-data results)."""
+    """Engine knobs: the quartile semantics, two scale guards and a
+    warning threshold."""
 
-    #: percentile_approx accuracy is max(n+1, 10000) (reference
-    #: :384-388 parity; quantile_disc-exact for n < 10000, one rank
-    #: below quantile_disc at accuracy == n+1 — see core/sufficient.py)
-    #: but never above this cap — the sketch holds
-    #: O(accuracy·log(n/accuracy)) samples PER (group × column), so an
-    #: unbounded n+1 is not viable at 100 TB. Above the cap quartiles
-    #: have ≤1/cap relative rank error (documented deviation). Measured
-    #: at 6M rows × 3 columns (local[32]): cap 1M → 46 s, cap 100k →
-    #: 14.7 s, identical results to 1e-5 rank — hence the 100k default.
-    #: Variables with few distinct values skip the sketch (see
-    #: lowcard_quartile_max), and quantile_mode="interpolated" is exact
-    #: for every variable (cost ∝ distinct values per group).
-    exact_percentile_cap: int = 100_000
-    #: driver-collect guard on the two cell frames: Σ (category
+    #: driver-collect guard on the two cell frames. Σ (category
     #: cardinality × strat values) across all categorical variables
-    #: must stay under this (else ValueError), and so must the distinct
-    #: (value × strat) cells of the exact-quartile variables — past it
-    #: their quartiles are ranked distributed instead of on the driver
-    #: (same results, more Spark jobs).
+    #: must stay under this (else ValueError). The distinct (value ×
+    #: strat) quartile cells of the continuous variables switch at it
+    #: from the driver kernel to the distributed one (same results, a
+    #: range shuffle and more Spark jobs).
     cat_cells_limit: int = 1_000_000
     #: output schema grows 2 columns per distinct strat value; fail fast
     #: beyond this rather than building a 100k-column table.
     strat_cardinality_limit: int = 1_000
     #: warn when a variable has ≥100 categories (Index collision, Q10)
     index_collision_warn: int = 100
-    #: quartile semantics: "data" = an actual data value (exact
-    #: quantile_disc, or the exact-tuned percentile_approx for
-    #: high-cardinality variables — reference :384-388 parity;
-    #: bounded-memory scale path); "interpolated" = exact linear
-    #: interpolation (R type-7 / duckdb quantile_cont) for every
-    #: variable, from the distinct-value cells — O(distinct-per-group)
-    #: memory. Weighted tables (weight_col) use the cells in both modes.
+    #: quartile semantics, exact in both modes and for every variable,
+    #: from the distinct-value cells: "data" = an actual data value
+    #: (quantile_disc — what the reference's exactness-tuned quantile
+    #: sketch returns, :384-388); "interpolated" = linear
+    #: interpolation (R type-7 / duckdb quantile_cont).
     quantile_mode: str = "data"
-    #: unweighted data-mode quartile route (r6): variables whose global
-    #: approximate distinct count (HLL, deterministic) is at or below
-    #: this threshold skip the sketch entirely and get EXACT
-    #: quantile_disc, ranked from their distinct-value cells — ~3×
-    #: cheaper than the exactness-tuned sketch, and immune to the
-    #: sketch's accuracy==n+1 one-below-rank quirk. High-cardinality
-    #: variables keep the capped sketch (the bounded-memory path a
-    #: near-unique column needs at 100 TB). Set to 0 to force the
-    #: sketch for everything (pre-r6 behavior).
-    lowcard_quartile_max: int = 2_048
-
-
-def _num(x) -> float | None:
-    if x is None:
-        return None
-    return float(x)
 
 
 def tableone(
@@ -153,12 +121,12 @@ def tableone(
     or a value such as ``Index``) raise ValueError instead of one
     column silently overwriting the other.
 
-    Scale note: above ``config.exact_percentile_cap`` rows (default
-    100k) the default ``quantile_mode="data"`` quartiles of variables
-    with more than ``config.lowcard_quartile_max`` distinct values
-    become approximate (a warning is emitted); use
-    ``quantile_mode="interpolated"`` or raise the cap when exact
-    quartiles are required on larger inputs.
+    Scale note: quartiles are exact at any input size. Their cost
+    grows with the distinct values per group; past
+    ``config.cat_cells_limit`` distinct (value × strat) cells they are
+    ranked distributed instead of on the driver, by Python code on the
+    executors (``mapInArrow``), which must be able to import this
+    package.
 
     ``weight_col``: sample-weighted Table 1 (survey-weighted cohorts —
     an extension; the reference has no weights). Weights are FREQUENCY
@@ -229,12 +197,10 @@ def tableone(
         col_to_strat,
         cat_vars,
         cont_vars,
-        exact_percentile_cap=cfg.exact_percentile_cap,
         strat_cardinality_limit=cfg.strat_cardinality_limit,
         quantile_mode=cfg.quantile_mode,
         cat_cells_limit=cfg.cat_cells_limit,
         weight_col=weight_col,
-        lowcard_quartile_max=cfg.lowcard_quartile_max,
     )
 
     return _assemble(

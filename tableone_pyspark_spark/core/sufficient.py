@@ -1,16 +1,15 @@
 """Single-pass sufficient-statistics collection for TableOne.
 
-The whole engine runs two phases of CONCURRENT bounded Spark actions,
+The engine runs ONE set of four CONCURRENT bounded Spark actions,
 independent of the number of analyzed variables (the reference runs
 ~16 scans *per continuous variable*, tableone_pyspark.py:325-437, plus
-a full-column ``toPandas`` per p-value, :453/:500). Each action below
-scans the input once; under AQE every shuffle map stage runs as a job
-of its own, so an action is one Spark job per shuffle plus one for its
+a full-column ``toPandas`` per p-value, :453/:500). Each action scans
+the input once; under AQE every shuffle map stage runs as a job of its
+own, so an action is one Spark job per shuffle plus one for its
 result. Measured from the Spark event log on the ``perfbench``
 ``cohort_wide`` call (stratified, 6-8 variables, three of them
-near-unique): 13 jobs and 6 input-scanning stages per call.
+near-unique): 7 jobs and 3 input-scanning stages per call.
 
-  phase 1 (all concurrent)
     counts   strat-group row counts (or plain ``count()``) — scans
              only the strat column (parquet column pruning).
     moments  ONE ``rollup(strat)`` computing, for EVERY continuous
@@ -22,29 +21,23 @@ near-unique): 13 jobs and 6 input-scanning stages per call.
              ``groupBy(var, value[, strat]).count()``. Map-side
              partial aggregation collapses the melt immediately, so
              the shuffle carries only Σ cardinality × strat rows.
-    probe    one global HLL pass: approximate distinct count per
-             continuous var — the quartile-route selector. Unweighted
-             "data" mode only; otherwise every variable goes straight
-             to ``exact`` in this phase.
-  phase 2 (unweighted "data" mode, routed by the probe, concurrent)
-    sketch   vars with distinct > lowcard_quartile_max: the
-             exactness-tuned capped ``percentile_approx`` aggregate
-             (one global and, when stratified, one per-strat action) —
-             the bounded-memory path near-unique columns need.
-    exact    vars with distinct ≤ lowcard_quartile_max: exact
-             ``quantile_disc`` from distinct-value cells (below).
+    cells    every quartile, exact, from distinct-value cells (below).
 
-Exact quartiles have ONE implementation. Melt the variables and
-compress to the distinct (var, value[, strat]) cells with their Σw (a
-count when unweighted) — one shuffle, map-side combined, carrying
-distinct values, not rows. The cells (at most ``cat_cells_limit``) are
-collected as Arrow and ranked on the driver by :func:`_quartiles`:
-``quantile_disc`` in "data" mode, the DuckDB ``quantile_cont`` blend in
-"interpolated" mode. A stratified run's global group is the
-concatenation of its per-strat cells, so nothing is rescanned. Past
-``cat_cells_limit`` the same selection runs distributed (``run_wq``:
-range-bucketed window running sums). Memory is O(distinct values per
-group).
+Quartiles have ONE implementation. Melt the continuous variables (by
+position) and compress to the distinct (var, value[, strat]) cells
+with their Σw (a count when unweighted) — one shuffle, map-side
+combined, carrying distinct values, not rows. Up to ``cat_cells_limit``
+cells are collected as Arrow and ranked on the driver by
+:func:`_quartiles`: ``quantile_disc`` in "data" mode, the DuckDB
+``quantile_cont`` blend in "interpolated" mode. A stratified run's
+global group is the concatenation of its per-strat cells, so nothing
+is rescanned. Past ``cat_cells_limit`` the same kernel runs
+distributed (``run_spread``): the cells are range-partitioned by
+(var, value), one tiny collect of Σw per partition places each
+quartile target in one partition, and one ``mapInArrow`` pass picks it
+there with the driver kernel's target, pick and blend helpers. Memory
+is O(distinct values per group) on the driver, O(distinct values per
+partition) on an executor.
 
 Only aggregated scalars and bounded cell frames reach the driver. The
 collected sizes are O(V·k) and O(Σ cardinalities · k) — independent of
@@ -66,6 +59,7 @@ from __future__ import annotations
 import math
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
@@ -77,10 +71,11 @@ from tableone_pyspark_spark.core.sanitize import MISSING, clean_strat_col
 STRAT = "__t1_strat__"
 #: internal weight column name (weighted mode only)
 WEIGHT = "__t1_w__"
-#: global-cell marker in run_wq's cell frame (joins drop NULL keys;
-#: windows don't)
-SENTINEL = "\x00__t1_all__"
 QUARTILES = (0.25, 0.5, 0.75)
+_MOVED = (
+    "the range partitions of the quartile cells changed between two passes "
+    "over them; retry the call"
+)
 
 
 @dataclass(frozen=True)
@@ -100,8 +95,8 @@ class ContStat:
 
 @dataclass
 class Sufficient:
-    """Everything TableOne needs, collected by the two phases of
-    bounded actions described in the module docstring."""
+    """Everything TableOne needs, collected by the concurrent bounded
+    actions described in the module docstring."""
 
     total: int
     strat_counts: dict[str, int] = field(default_factory=dict)  # cleaned value -> rows
@@ -119,14 +114,20 @@ def _sql_str(name: str) -> str:
     return "'" + name.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _num(x) -> float | None:
+    return None if x is None else float(x)
+
+
 def _row_to_stats(row, i: int, q: tuple) -> ContStat:
+    # a decimal column's avg is a Decimal: moments are floats from here
+    # on, so the t-test and ANOVA can mix them with float arithmetic
     return ContStat(
         n=row[f"n__{i}"] or 0,
         min=row[f"mn__{i}"],
         max=row[f"mx__{i}"],
-        mean=row[f"av__{i}"],
-        stddev=row[f"sd__{i}"],
-        var=row[f"vr__{i}"],
+        mean=_num(row[f"av__{i}"]),
+        stddev=_num(row[f"sd__{i}"]),
+        var=_num(row[f"vr__{i}"]),
         q25=q[0],
         q50=q[1],
         q75=q[2],
@@ -136,7 +137,7 @@ def _row_to_stats(row, i: int, q: tuple) -> ContStat:
 def _moment_aggs(cont_vars: list[str]) -> list:
     """Unweighted moments per variable: count, min, max, avg,
     stddev_samp, var_samp. Quartiles come from the separate quartile
-    jobs (sketch or exact cells)."""
+    cells job."""
     aggs = []
     for i, v in enumerate(cont_vars):
         c = F.col(v)
@@ -151,21 +152,10 @@ def _moment_aggs(cont_vars: list[str]) -> list:
     return aggs
 
 
-def _sketch_aggs(pairs: list[tuple[int, str]], accuracy: int) -> list:
-    """Data-mode phase 2a: the accuracy-tuned sketch, only for the
-    high-cardinality vars (original indices preserved in aliases)."""
-    return [
-        F.percentile_approx(F.col(v), [0.25, 0.5, 0.75], F.lit(accuracy)).alias(
-            f"q__{i}"
-        )
-        for i, v in pairs
-    ]
-
-
 def _cont_aggs_weighted(cont_vars: list[str]) -> list:
     """Weighted sufficient sums per variable: Σw (over non-null x),
     min, max, Σwx, Σwx² — moments derive driver-side. Quartiles come
-    from the separate weighted-quantile job."""
+    from the separate quartile cells job."""
     aggs = []
     w = F.col(WEIGHT)
     for i, v in enumerate(cont_vars):
@@ -210,71 +200,78 @@ def _row_to_stats_weighted(row, i: int, quarts: tuple) -> ContStat:
     )
 
 
+def _targets(total: float, interpolated: bool) -> list[tuple[tuple, float]]:
+    """Per quartile, the cumulative-Σw targets to pick and the blend
+    fraction f, for a group of total weight ``total``:
+
+      "data"          (p·Σw,), f = 0 — weighted ``quantile_disc``
+                      (min{k: k ≥ p·n} at w ≡ 1).
+      "interpolated"  (⌊t⌋, ⌊t⌋+1) at t = p·(Σw−1), f = t − ⌊t⌋ — the
+                      DuckDB ``quantile_cont`` neighbours.
+    """
+    if not interpolated:
+        return [((p * total,), 0.0) for p in QUARTILES]
+    out = []
+    for p in QUARTILES:
+        t = p * (total - 1.0)
+        j = float(np.floor(t))
+        out.append(((j, j + 1.0), t - j))
+    return out
+
+
+def _pick(cum: np.ndarray, target: float, interpolated: bool) -> int:
+    """Index of the first cell whose running Σw reaches ``target``:
+    cum ≥ target ("data"), cum > target ("interpolated"); the last cell
+    when none does."""
+    side = "right" if interpolated else "left"
+    return min(int(np.searchsorted(cum, target, side=side)), len(cum) - 1)
+
+
+def _blend(vals: list, f: float):
+    """(1−f)·lo + f·hi — or lo itself when f = 0 or lo == hi (as Spark
+    ``percentile``), so [1, inf, inf] keeps inf. Python floats: the
+    same IEEE arithmetic, without numpy's warnings for inf - inf."""
+    lo, hi = vals[0], vals[-1]
+    return lo if f == 0 or lo == hi else (1.0 - f) * lo + f * hi
+
+
+def _sorted_cum(x: np.ndarray, w: np.ndarray, offset: float = 0.0):
+    """A stable ascending sort (NaN last, as Spark orders doubles) and
+    the running Σw in that order, starting from ``offset``."""
+    order = np.argsort(x, kind="stable")
+    return x[order], np.cumsum(np.r_[offset, w[order]])[1:]
+
+
 def _quartiles(x: np.ndarray, w: np.ndarray, interpolated: bool) -> tuple:
     """The exact-quartile kernel: quartiles of one group of cells, the
     distinct values ``x`` with their Σw ``w`` (a count when unweighted).
     A value may appear in several cells — a global group is just the
-    concatenation of its per-strat cells.
-
-    A stable ascending sort (NaN last, as Spark orders doubles), then
-    ``cum = cumsum(w)`` in that order:
-
-      "data"          min x with cum ≥ p·Σw — weighted ``quantile_disc``
-                      (min{k: k ≥ p·n} at w ≡ 1).
-      "interpolated"  t = p·(Σw−1); value_at(j) = min x with cum > j;
-                      lo, hi = value_at(⌊t⌋), value_at(⌊t⌋+1) and, with
-                      f = t − ⌊t⌋, the DuckDB ``quantile_cont`` blend
-                      (1−f)·lo + f·hi — or lo itself when f = 0 or
-                      lo == hi (as Spark ``percentile``), so [1, inf, inf]
-                      keeps inf. Integral weights equal numpy's linear
-                      percentile on the row-replicated values.
+    concatenation of its per-strat cells. Each quartile blends the
+    values picked at its :func:`_targets`; integral weights equal
+    numpy's linear percentile on the row-replicated values.
 
     With integral weights every partial sum is exact in double, so the
     result does not depend on how the cells were split or ordered."""
-    order = np.argsort(x, kind="stable")
-    x = x[order]
-    cum = np.cumsum(w[order])
-    # Python floats from here on: the same IEEE arithmetic, without
-    # numpy's warnings for inf - inf
-    total = float(cum[-1])
-    last = len(x) - 1
-    out = []
-    for p in QUARTILES:
-        if interpolated:
-            t = p * (total - 1.0)
-            j = float(np.floor(t))
-            f = t - j
-            k = np.searchsorted(cum, j, side="right")
-            if k > last:
-                out.append(None)
-                continue
-            lo = float(x[k])
-            hi = float(x[min(np.searchsorted(cum, j + 1.0, side="right"), last)])
-            out.append(lo if f == 0 or lo == hi else (1.0 - f) * lo + f * hi)
-        else:
-            k = np.searchsorted(cum, p * total, side="left")
-            out.append(float(x[k]) if k <= last else None)
-    return tuple(out)
+    xs, cum = _sorted_cum(x, w)
+    return tuple(
+        _blend([float(xs[_pick(cum, t, interpolated)]) for t in ts], f)
+        for ts, f in _targets(float(cum[-1]), interpolated)
+    )
 
 
-def _codes(col: pa.ChunkedArray) -> tuple[np.ndarray, list]:
-    d = col.combine_chunks().dictionary_encode()
-    return d.indices.to_numpy().astype(np.int64), d.dictionary.to_pylist()
-
-
-def _cell_quartiles(
-    cells: pa.Table, stratified: bool, interpolated: bool
-) -> dict[tuple[str, str | None], tuple]:
-    """Run :func:`_quartiles` on every (var[, strat]) group of the
-    collected cells and, when stratified, on every var's global
-    (var, None) group — the concatenation of its per-strat cells."""
+def _groups(cells: pa.Table, stratified: bool):
+    """Yield ``((var position, strat), x, w)`` for every (var, strat)
+    group of ``cells`` and, when stratified, every var's global
+    ``(var, None)`` group — the concatenation of its per-strat cells."""
     n = cells.num_rows
     if n == 0:
-        return {}
-    vi, vnames = _codes(cells["t1_var"])
-    si, snames = (
-        _codes(cells[STRAT]) if stratified else (np.zeros(n, np.int64), [None])
-    )
+        return
+    vi = cells["t1_var"].to_numpy().astype(np.int64)
+    if stratified:
+        d = cells[STRAT].combine_chunks().dictionary_encode()
+        si, snames = d.indices.to_numpy().astype(np.int64), d.dictionary.to_pylist()
+    else:
+        si, snames = np.zeros(n, np.int64), [None]
     order = np.lexsort((si, vi))  # stable: groups become contiguous runs
     x = cells["t1_x"].to_numpy()[order]
     w = cells["sw"].to_numpy()[order]
@@ -284,15 +281,74 @@ def _cell_quartiles(
         cuts = np.flatnonzero(np.diff(ids)) + 1
         return zip(np.r_[0, cuts], np.r_[cuts, n])
 
-    out = {}
     for a, b in runs(vi * len(snames) + si):
-        out[(vnames[vi[a]], snames[si[a]])] = _quartiles(
-            x[a:b], w[a:b], interpolated
-        )
+        yield (int(vi[a]), snames[si[a]]), x[a:b], w[a:b]
     if stratified:
         for a, b in runs(vi):
-            out[(vnames[vi[a]], None)] = _quartiles(x[a:b], w[a:b], interpolated)
-    return out
+            yield (int(vi[a]), None), x[a:b], w[a:b]
+
+
+def _place_targets(part_sw: dict, interpolated: bool) -> tuple[dict, dict]:
+    """Driver half of the distributed kernel. ``part_sw[key][pid]`` is
+    the Σw of group ``key`` = (var, strat) in range partition ``pid``;
+    partitions ascend in x, so the running Σw over them locates every
+    :func:`_targets` target in one partition, by :func:`_pick`.
+
+    Returns ``requests[pid][key] = (Σw of key before pid, Σw of key in
+    pid, [(request id, target), ...])`` for :func:`_partition_picks`,
+    and ``blends[key] = [(request ids, f) per quartile]`` for
+    :func:`_blend`."""
+    requests: dict[int, dict] = {}
+    blends: dict[tuple, list] = {}
+    rid = 0
+    for key, by_pid in part_sw.items():
+        pids = sorted(by_pid)
+        pcum = np.cumsum([by_pid[p] for p in pids])
+        blends[key] = []
+        for ts, f in _targets(float(pcum[-1]), interpolated):
+            rids = []
+            for t in ts:
+                i = _pick(pcum, t, interpolated)
+                offset = float(pcum[i - 1]) if i else 0.0
+                group = requests.setdefault(pids[i], {}).setdefault(
+                    key, (offset, by_pid[pids[i]], [])
+                )
+                group[2].append((rid, t))
+                rids.append(rid)
+                rid += 1
+            blends[key].append((rids, f))
+    return requests, blends
+
+
+def _partition_picks(requests: dict, stratified: bool, interpolated: bool, batches):
+    """``mapInArrow`` body of the distributed kernel: the cells of one
+    range partition, ranked with the driver kernel's arithmetic.
+    ``requests[pid][(var, strat)]`` is the group's Σw before and in this
+    partition and its ``(request id, target)`` pairs; yields the picked
+    value of every request this partition holds.
+
+    The Σw in the partition is checked: the partitioning is fixed by
+    persist(), but a concurrent call that persisted the same plan can
+    unpersist it in between, and a recomputed range partitioning may
+    cut elsewhere."""
+    batches = [b for b in batches if b.num_rows]
+    wanted = requests.get(batches[0]["pid"][0].as_py()) if batches else None
+    if not wanted:
+        return
+    cells = pa.Table.from_batches(batches)
+    rids, vals = [], []
+    for key, x, w in _groups(cells, stratified):
+        if key in wanted:
+            offset, part_w, picks = wanted[key]
+            xs, cum = _sorted_cum(x, w, offset)
+            if not np.isclose(cum[-1] - offset, part_w, rtol=1e-9, equal_nan=True):
+                raise RuntimeError(_MOVED)
+            for rid, t in picks:
+                rids.append(rid)
+                vals.append(float(xs[_pick(cum, t, interpolated)]))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(rids, pa.int64()), pa.array(vals, pa.float64())], ["rid", "x"]
+    )
 
 
 def collect_sufficient(
@@ -300,12 +356,10 @@ def collect_sufficient(
     col_to_strat: str,
     cat_vars: list[str],
     cont_vars: list[str],
-    exact_percentile_cap: int = 1_000_000,
     strat_cardinality_limit: int = 1_000,
     quantile_mode: str = "data",
     cat_cells_limit: int = 1_000_000,
     weight_col: str | None = None,
-    lowcard_quartile_max: int = 2_048,
 ) -> Sufficient:
     """Run the bounded job set of the module docstring and return
     every statistic TableOne needs."""
@@ -399,71 +453,17 @@ def collect_sufficient(
             return work.rollup(STRAT).agg(*aggs).collect()
         return work.groupBy().agg(*aggs).collect()
 
-    def run_cardinality():
-        # the quartile-strategy selector: GLOBAL approximate distinct
-        # counts only (no rollup Expand — per-strat cardinality is
-        # irrelevant to the split), one cheap HLL pass concurrent with
-        # counts + moments. Deterministic (hash-based), so the routing
-        # is stable across runs and partitionings.
-        row = work.groupBy().agg(
-            *[
-                F.approx_count_distinct(F.col(v)).alias(f"cd__{i}")
-                for i, v in enumerate(cont_vars)
-            ]
-        ).collect()[0]
-        return [row[f"cd__{i}"] or 0 for i in range(len(cont_vars))]
-
-    def _sketch_accuracy(pairs: list[tuple[int, str]], total: int) -> int:
-        accuracy = min(max(total + 1, 10_000), exact_percentile_cap)
-        if total + 1 > exact_percentile_cap:
-            import warnings
-
-            warnings.warn(
-                f"{total} rows exceed exact_percentile_cap="
-                f"{exact_percentile_cap}: quartiles of high-cardinality "
-                f"variables {[v for _i, v in pairs]} are approximate "
-                f"(<=1/{exact_percentile_cap} relative rank error), not "
-                "the reference's exact data values. Raise the cap or use "
-                'quantile_mode="interpolated" for exact quartiles.',
-                stacklevel=7,
-            )
-        return accuracy
-
-    def run_cont_sketch(pairs, total: int, scope: str = "all"):
-        # data-mode phase 2a (high-cardinality vars only): the
-        # reference's accuracy = max(n+1, 10000) makes the sketch
-        # return exact data values; capped so it stays bounded at scale
-        # (documented deviation above the cap). r17 (guide §2.6): the
-        # stratified case runs as TWO CONCURRENT jobs — the global
-        # sketch ("global" scope) and the per-strat sketch ("strat"
-        # scope) — instead of one rollup whose Expand pushed every row
-        # through the sketch twice serially. Results are data values
-        # selected by rank, so each cell's value depends only on the
-        # multiset of rows it aggregates — identical either way (and
-        # exact whenever accuracy >= n+1, the graded regime). Returns
-        # (strat_key, row) pairs.
-        accuracy = _sketch_accuracy(pairs, total)
-        aggs = _sketch_aggs(pairs, accuracy)
-        if scope == "strat":
-            return [
-                (r[STRAT], r)
-                for r in work.groupBy(STRAT).agg(*aggs).collect()
-            ]
-        return [(None, r) for r in work.groupBy().agg(*aggs).collect()]
-
-    def run_exact(vars_: list[str]):
-        # every exact quartile. Melt ``vars_`` and compress to the
-        # distinct (var, value[, strat]) cells with their Σw (a count
+    def run_exact():
+        # every quartile. Melt the variables by position and compress to
+        # the distinct (var, value[, strat]) cells with their Σw (a count
         # when unweighted) — ONE shuffle, map-side combined, carrying
-        # distinct values, not rows. The cells are bounded by the
-        # distinct values per group, so they are collected (as Arrow,
-        # under the cat_cells_limit guard the categorical counts use)
-        # and ranked on the driver by _quartiles; past the guard they
-        # stay distributed (run_wq).
+        # distinct values, not rows. Up to cat_cells_limit cells are
+        # collected as Arrow and ranked on the driver; past it they stay
+        # distributed (run_spread). Var positions map back to names last.
         casts = ", ".join(
-            f"{_sql_str(v)}, CAST({_quote(v)} AS DOUBLE)" for v in vars_
+            f"{i}, CAST({_quote(v)} AS DOUBLE)" for i, v in enumerate(cont_vars)
         )
-        stack = F.expr(f"stack({len(vars_)}, {casts}) as (t1_var, t1_x)")
+        stack = F.expr(f"stack({len(cont_vars)}, {casts}) as (t1_var, t1_x)")
         melted = work.select(
             *([STRAT] if stratified else []),
             *([F.col(WEIGHT)] if weighted else []),
@@ -474,100 +474,53 @@ def collect_sufficient(
         g = melted.groupBy(*keys).agg(agg.alias("sw"))
         cells = g.limit(cat_cells_limit + 1).toArrow()
         if cells.num_rows > cat_cells_limit:
-            return run_wq(g)
-        return _cell_quartiles(cells, stratified, interpolated)
+            quarts = run_spread(g)
+        else:
+            quarts = {
+                key: _quartiles(x, w, interpolated)
+                for key, x, w in _groups(cells, stratified)
+            }
+        return {(cont_vars[v], s): q for (v, s), q in quarts.items()}
 
-    def run_wq(g: DataFrame):
-        # the distributed path for a cell frame past cat_cells_limit:
-        # derive the global cells from the per-strat ones WITHOUT
-        # rescanning (SENTINEL-marked), then the same selection as
-        # _quartiles with window running sums.
-        #
-        # The running sum is a RANGE-BUCKETED parallel prefix sum, not
-        # one window partition per (var, strat): a near-unique column
-        # at 100 TB would otherwise sort billions of distinct values in
-        # a single task. Instead: bucket x into B range cells
-        # (monotonic in x), cumsum WITHIN (var, strat, bucket) — 256×
-        # the parallelism — and add per-bucket offsets from a tiny
-        # (V·k·B)-row window. Float note: cum = local + offset groups
-        # the additions differently than a flat scan; with
-        # integral-valued weights (the graded contract) every partial
-        # sum is exact in double, so results are bit-identical to the
-        # driver kernel.
-        from pyspark.sql import Window
-
-        B = 256
-        part = ["t1_var"] + ([STRAT] if stratified else [])
-        if stratified:
-            g_all = (
-                g.groupBy("t1_var", "t1_x")
+    def run_spread(g: DataFrame):
+        # the distributed form of the same kernel. Range-partition the
+        # cells by (var, x), so each partition holds a contiguous x range
+        # of its vars, every stratum included; persist() freezes that
+        # partitioning across the two actions below (a lost block is
+        # recomputed from the range shuffle's files, unlike a
+        # localCheckpoint). One tiny collect of Σw per (partition,
+        # var[, strat]) places every quartile target in one partition,
+        # with the group's Σw before it; one mapInArrow pass then picks
+        # the targets inside those partitions (_partition_picks), and
+        # the driver blends them as _quartiles does.
+        ranged = g.repartitionByRange("t1_var", "t1_x").persist()
+        try:
+            cells = ranged.withColumn("pid", F.spark_partition_id())
+            part_sw: dict[tuple, dict[int, float]] = {}
+            for r in (
+                cells.groupBy("pid", "t1_var", *([STRAT] if stratified else []))
                 .agg(F.sum("sw").alias("sw"))
-                .withColumn(STRAT, F.lit(SENTINEL))
+                .collect()
+            ):
+                strata = (r[STRAT], None) if stratified else (None,)
+                for s in strata:
+                    by_pid = part_sw.setdefault((r["t1_var"], s), {})
+                    by_pid[r["pid"]] = by_pid.get(r["pid"], 0.0) + r["sw"]
+            requests, blends = _place_targets(part_sw, interpolated)
+            picked = dict(
+                cells.mapInArrow(
+                    partial(_partition_picks, requests, stratified, interpolated),
+                    "rid long, x double",
+                ).collect()
             )
-            g = g.unionByName(g_all)
-
-        # per-group span + total (tiny; broadcast back onto g)
-        stats = g.groupBy(*part).agg(
-            F.min("t1_x").alias("__mn"),
-            F.max("t1_x").alias("__mx"),
-            F.sum("sw").alias("tw"),
-        )
-        j = g.join(F.broadcast(stats), part)
-        width = (F.col("__mx") - F.col("__mn")) / F.lit(float(B))
-        bucket = F.when(
-            F.col("__mx") > F.col("__mn"),
-            F.least(
-                F.lit(B - 1),
-                F.floor((F.col("t1_x") - F.col("__mn")) / width),
-            ),
-        ).otherwise(F.lit(0)).cast("int")
-        jb = j.select(*part, "t1_x", "sw", "tw", bucket.alias("__bk"))
-
-        # local cumsum inside each (group × bucket) cell
-        loc = F.sum("sw").over(
-            Window.partitionBy(*part, "__bk").orderBy("t1_x")
-        )
-        # bucket offsets: exclusive prefix over the tiny bucket-total
-        # frame (V·k·B rows), broadcast back
-        btot = jb.groupBy(*part, "__bk").agg(F.sum("sw").alias("__bsum"))
-        woff = (
-            Window.partitionBy(*part)
-            .orderBy("__bk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        off = btot.select(
-            *part,
-            "__bk",
-            F.coalesce(F.sum("__bsum").over(woff), F.lit(0.0)).alias("__off"),
-        )
-        ranked = jb.withColumn("__loc", loc).join(
-            F.broadcast(off), part + ["__bk"]
-        )
-        cum = F.col("__loc") + F.col("__off")
-        x = F.col("t1_x")
-        qaggs = []
-        for p in QUARTILES:
-            if interpolated:
-                # t/frac are group constants (tw is), so F.min just
-                # extracts them alongside the conditional mins
-                t = F.lit(p) * (F.col("tw") - F.lit(1.0))
-                j0 = F.floor(t).cast("double")
-                lo = F.min(F.when(cum > j0, x))
-                hi = F.coalesce(F.min(F.when(cum > j0 + 1, x)), F.max(x))
-                frac = F.min(t - j0)
-                q = F.when((frac == 0) | (lo == hi), lo).otherwise(
-                    (F.lit(1.0) - frac) * lo + frac * hi
-                )
-            else:
-                q = F.min(F.when(cum >= F.lit(p) * F.col("tw"), x))
-            qaggs.append(q.alias(f"wq_{int(p * 100)}"))
-        out = {}
-        for r in ranked.groupBy(*part).agg(*qaggs).collect():
-            key = r[STRAT] if stratified else None
-            out[(r["t1_var"], None if key == SENTINEL else key)] = (
-                r["wq_25"], r["wq_50"], r["wq_75"],
-            )
-        return out
+        finally:
+            ranged.unpersist()
+        if len(picked) != sum(len(rids) for qs in blends.values() for rids, _f in qs):
+            raise RuntimeError(_MOVED)
+        return {
+            key: tuple(_blend([picked[r] for r in rids], f) for rids, f in qs)
+            for key, qs in blends.items()
+        }
 
     def run_cat():
         pairs = ", ".join(f"{_sql_str(v)}, {_quote(v)}" for v in cat_vars)
@@ -596,63 +549,28 @@ def collect_sufficient(
         return rows
 
     # ---- schedule the jobs with maximal overlap -------------------------
-    # One schedule for every mode: counts ∥ moments ∥ cat ∥ exact
-    # quartiles. In unweighted "data" mode the HLL probe first splits
-    # the variables: high-cardinality ones go to the capped sketch
-    # (which waits for the row count, its accuracy), the rest to the
-    # exact cells. Spark's scheduler interleaves the concurrent jobs.
-    sketched: list[tuple[int, str]] = []
-    exact = list(cont_vars)
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        # 8 workers = the worst-case concurrent job set (counts ∥
-        # moments ∥ melt ∥ probe, then sketch-global ∥ sketch-strat ∥
-        # exact while the melt may still be running) — a smaller pool
-        # would serialize the sketches behind whichever earlier job is
-        # the long pole
+    # One schedule for every mode: counts ∥ moments ∥ cat ∥ quartile
+    # cells; Spark's scheduler interleaves the concurrent jobs.
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        # 4 workers = the whole job set, so none waits behind another
         f_cat = pool.submit(run_cat) if cat_vars else None
         f_counts = pool.submit(run_counts)
         f_moments = pool.submit(run_moments) if cont_vars else None
-        if cont_vars and not (weighted or interpolated):
-            if lowcard_quartile_max > 0:
-                cards = pool.submit(run_cardinality).result()
-            else:
-                # sketch-for-everything pin: the probe could not route
-                # anything to the exact path — skip its full scan
-                cards = [lowcard_quartile_max + 1] * len(cont_vars)
-            sketched = [
-                (i, v)
-                for i, v in enumerate(cont_vars)
-                if cards[i] > lowcard_quartile_max
-            ]
-            exact = [
-                v for i, v in enumerate(cont_vars) if cards[i] <= lowcard_quartile_max
-            ]
-        f_exact = pool.submit(run_exact, exact) if exact else None
+        f_exact = pool.submit(run_exact) if cont_vars else None
         out.strat_counts, out.total = f_counts.result()
-        scopes = ("global", "strat") if stratified else ("global",)
-        f_sketches = [
-            pool.submit(run_cont_sketch, sketched, out.total, scope)
-            for scope in scopes
-        ] if sketched else []
         cont_rows = f_moments.result() if f_moments is not None else []
         quarts = f_exact.result() if f_exact is not None else {}
-        sketch_by_key = {key: row for f in f_sketches for key, row in f.result()}
         cat_rows = f_cat.result() if f_cat is not None else []
 
     # ---- unpack ---------------------------------------------------------
-    high = {v for _i, v in sketched}
     to_stats = _row_to_stats_weighted if weighted else _row_to_stats
     for v in cont_vars:
         out.cont[v] = {}
     for row in cont_rows:
         key = row[STRAT] if stratified else None
-        srow = sketch_by_key.get(key)
         for i, v in enumerate(cont_vars):
-            if v in high:
-                q = (srow[f"q__{i}"] if srow is not None else None) or [None] * 3
-            else:
-                # an all-NULL (var, strat) group has no cells: None
-                q = quarts.get((v, key), (None, None, None))
+            # an all-NULL (var, strat) group has no cells: None
+            q = quarts.get((v, key), (None, None, None))
             out.cont[v][key] = to_stats(row, i, q)
     if stratified and cont_vars and None not in out.cont[cont_vars[0]]:
         # defensive: rollup always emits the grand-total row

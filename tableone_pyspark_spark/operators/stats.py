@@ -516,8 +516,7 @@ def exact_percentiles_dist(
 ) -> list[float] | None:
     """Distributed exact interpolated percentiles of ``col`` (cast to
     double) — bit-identical to ``F.percentile(col, probs)`` WITHOUT its
-    single-reducer merge (r18, guide §2.6; the run_wq range-bucketed
-    parallel-prefix-sum shape from core/sufficient.py).
+    single-reducer merge: a range-bucketed parallel prefix sum.
 
     Spark's sort-based ``percentile`` aggregate ships every distinct
     value of the whole column into ONE final merge task that sorts

@@ -366,45 +366,37 @@ def test_index_collision_warns(spark):
     assert any("categories" in str(x.message) for x in w)
 
 
-def test_percentile_cap_truncation_warns(spark):
-    """When n+1 exceeds exact_percentile_cap in the default "data" mode
-    AND a high-cardinality variable actually takes the sketch path, the
-    engine must say those quartiles are no longer reference-exact.
-    Low-cardinality variables (r6 hybrid) take the exact disc path and
-    must NOT warn — their quartiles stay exact regardless of the cap."""
-    from tableone_pyspark_spark import TableOneConfig
+def test_near_unique_quartiles_exact_past_100k_rows(spark, tmp_path):
+    """Quartiles are exact at any size: ~120k near-unique doubles in 3
+    strata give DuckDB's quantile_disc in every cell, with no warning
+    (a quantile sketch of 100k accuracy would not be exact here)."""
+    import duckdb
+    from pyspark.sql import functions as F
 
-    df = spark.range(500).selectExpr("CAST(id AS DOUBLE) AS x")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        # lowcard_quartile_max=0 forces the sketch (pre-r6 behavior)
-        tableone(
-            df,
-            cols_to_analyze=["x"],
-            config=TableOneConfig(exact_percentile_cap=100, lowcard_quartile_max=0),
-        ).collect()
-    assert any("exact_percentile_cap" in str(w.message) for w in caught)
+    path = str(tmp_path / "near_unique.parquet")
+    spark.range(120_000).select(
+        F.element_at(F.array(F.lit("a"), F.lit("b"), F.lit("c")),
+                     (F.col("id") % 3 + 1).cast("int")).alias("g"),
+        # near-unique, unsorted relative to id, with a few duplicates
+        ((F.col("id") * 7919 % 120_001) / 8.0).alias("x"),
+    ).write.parquet(path)
 
-    # hybrid default: 500 distinct <= 2048 -> exact disc path, no
-    # sketch, no warning — and the median is exactly the disc value
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         out = rows_by_index(
-            tableone(df, cols_to_analyze=["x"],
-                     config=TableOneConfig(exact_percentile_cap=100))
+            tableone(spark.read.parquet(path), col_to_strat="g", cols_to_analyze=["x"])
         )
-    assert not any("exact_percentile_cap" in str(w.message) for w in caught)
-    assert out[(1.7, "50th percentile")]["All_Patients"] == 249.0
+    engine_warnings = [w for w in caught if issubclass(w.category, UserWarning)]
+    assert not engine_warnings, [str(w.message) for w in engine_warnings]
 
-    # interpolated mode never warns (the knob is unused)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        tableone(
-            df,
-            cols_to_analyze=["x"],
-            config=TableOneConfig(exact_percentile_cap=100, quantile_mode="interpolated"),
-        ).collect()
-    assert not any("exact_percentile_cap" in str(w.message) for w in caught)
+    con = duckdb.connect()
+    for k, p in enumerate((0.25, 0.5, 0.75)):
+        row = out[(round(1.6 + k / 10, 10), ("25th", "50th", "75th")[k] + " percentile")]
+        want = dict(con.execute(
+            f"SELECT coalesce(g, 'All_Patients'), quantile_disc(x, {p}) "
+            f"FROM '{path}/*.parquet' GROUP BY ROLLUP (g)"
+        ).fetchall())
+        assert {c: row[c] for c in want} == want
 
 
 # ---------------------------------------------------------------------------
@@ -415,13 +407,10 @@ def test_percentile_cap_truncation_warns(spark):
 
 
 def test_hybrid_mixed_cardinality_with_all_null_strat_cell(spark):
-    """r6 hybrid regression: a LOW-cardinality variable whose values
-    are all NULL within one stratum, alongside a HIGH-cardinality
-    variable (so sketch rows exist), must yield None quartiles for
-    that cell — not a missing-field crash on the sketch row."""
+    """A low-cardinality variable whose values are all NULL within one
+    stratum, alongside a near-unique variable, yields None quartiles
+    for that cell and exact medians everywhere else."""
     from pyspark.sql import functions as F
-
-    from tableone_pyspark_spark import TableOneConfig
 
     n = 400
     df = (
@@ -437,19 +426,16 @@ def test_hybrid_mixed_cardinality_with_all_null_strat_cell(spark):
         )
     )
     out = rows_by_index(
-        tableone(
-            df, col_to_strat="g", cols_to_analyze=["hx", "lx"],
-            config=TableOneConfig(lowcard_quartile_max=10),
-        )
+        tableone(df, col_to_strat="g", cols_to_analyze=["hx", "lx"])
     )
     # lx in stratum b: no values -> n=0, quartiles None
     assert out[(2.1, "n")]["b"] == 0.0
     assert out[(2.7, "50th percentile")]["b"] is None
     # lx in stratum a: exact disc over {0,1,2} with 67/67/66 counts
     assert out[(2.7, "50th percentile")]["a"] == 1.0
-    # hx (sketch path) still produces per-strat and global medians
-    assert out[(1.7, "50th percentile")]["All_Patients"] is not None
-    assert out[(1.7, "50th percentile")]["a"] is not None
+    # hx: quantile_disc over 0.5..399.5 (a: even ids, b: odd ids)
+    hx = out[(1.7, "50th percentile")]
+    assert (hx["All_Patients"], hx["a"], hx["b"]) == (199.5, 198.5, 199.5)
 
 
 
@@ -591,28 +577,67 @@ _CELL_ROWS = [
 ]
 
 
+def _spread_x(i: int):
+    # a few thousand rows over ~400 distinct values per stratum, plus
+    # null, NaN, ±inf and -0.0 (which the cell grouping reads as 0.0)
+    for k, v in ((31, None), (37, float("nan")), (41, float("inf")),
+                 (43, float("-inf")), (47, -0.0)):
+        if i % k == 0:
+            return v
+    return float(i * 7 % 401) / 4.0 - 50.0
+
+
+#: (strat, x, integral weight) spread over many range partitions
+_SPREAD_ROWS = [
+    ("abc"[i % 3] if i % 13 else None, _spread_x(i), float(i % 4 + 1))
+    for i in range(3000)
+]
+
+
 @pytest.mark.parametrize("stratified", [True, False], ids=["strat", "nostrat"])
 @pytest.mark.parametrize(
-    "mode,weighted",
-    [("data", False), ("interpolated", False), ("data", True), ("interpolated", True)],
-    ids=["data", "interpolated", "weighted-data", "weighted-interpolated"],
+    "mode,weighted,rows",
+    [
+        ("data", False, _CELL_ROWS),
+        ("interpolated", False, _CELL_ROWS),
+        ("data", True, _CELL_ROWS),
+        ("interpolated", True, _CELL_ROWS),
+        ("data", False, _SPREAD_ROWS),
+        ("interpolated", False, _SPREAD_ROWS),
+        ("data", True, _SPREAD_ROWS),
+        ("interpolated", True, _SPREAD_ROWS),
+    ],
+    ids=["data", "interpolated", "weighted-data", "weighted-interpolated",
+         "data-spread", "interpolated-spread", "weighted-data-spread",
+         "weighted-interpolated-spread"],
 )
-def test_distributed_quartiles_equal_driver_kernel(spark, mode, weighted, stratified):
+def test_distributed_quartiles_equal_driver_kernel(
+    spark, mode, weighted, rows, stratified
+):
     """Past cat_cells_limit the exact quartiles run distributed
-    (run_wq) instead of on the driver (_quartiles); both give the same
-    table, bit for bit."""
+    (range partitions ranked by mapInArrow) instead of on the driver;
+    both give the same table, bit for bit. With AQE's partition
+    coalescing off, the spread rows land in several range partitions,
+    so targets fall past the first partition and the per-partition
+    offsets matter."""
     from tableone_pyspark_spark import TableOneConfig
 
-    df = spark.createDataFrame(_CELL_ROWS, "s string, x double, w double")
+    df = spark.createDataFrame(rows, "s string, x double, w double")
     kw = dict(
         col_to_strat="s" if stratified else "",
         cols_to_analyze=["x"],
         weight_col="w" if weighted else None,
     )
-    driver = tableone(df, config=TableOneConfig(quantile_mode=mode), **kw)
-    spread = tableone(
-        df, config=TableOneConfig(quantile_mode=mode, cat_cells_limit=10), **kw
-    )
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        driver = tableone(df, config=TableOneConfig(quantile_mode=mode), **kw)
+        spread = tableone(
+            df, config=TableOneConfig(quantile_mode=mode, cat_cells_limit=10), **kw
+        )
+    finally:
+        spark.conf.set(key, old)
     a = sorted(repr(r) for r in driver.collect())
     b = sorted(repr(r) for r in spread.collect())
     assert len(a) == 9 and a == b
@@ -729,6 +754,31 @@ def test_output_types_decimal_column_double_counts(spark):
             ("g", 1 + i / 10, "x", "continuous", label, all_v, None, a, None, b, None, m, None)
         )
     _assert_rows(out, _dtypes("double", ["a", "b", "MISSING"]), expected)
+
+
+@pytest.mark.parametrize("n_strata", [2, 3], ids=["t-test", "anova"])
+def test_decimal_column_p_values(spark, n_strata):
+    """p-values on a decimal column equal those of the same column cast
+    to double, up to the 6 fractional digits Spark's decimal avg keeps
+    (the t-test for 2 strata, the ANOVA for 3)."""
+    from decimal import Decimal as D
+
+    from pyspark.sql import functions as F
+
+    rows = [
+        (D(f"{i * 37 % 101 + 10 * (i % n_strata)}.{i * 13 % 100:02d}"), "abc"[i % n_strata])
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "x decimal(10,2), g string")
+    kw = dict(col_to_strat="g", cols_to_analyze=["x"], p_values=True)
+    got = rows_by_index(tableone(df, **kw))[(1.1, "n")]
+    want = rows_by_index(
+        tableone(df.withColumn("x", F.col("x").cast("double")), **kw)
+    )[(1.1, "n")]
+    assert got["test_name"] == want["test_name"] == ("t-test", "ANOVA")[n_strata - 2]
+    assert 0.0 < got["p_value"] < 1.0
+    assert got["p_value"] == pytest.approx(want["p_value"], rel=1e-5)
+    assert got["test_value"] == pytest.approx(want["test_value"], rel=1e-5)
 
 
 def test_output_types_beautify_layout(spark):

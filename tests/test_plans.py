@@ -599,49 +599,45 @@ def test_jpeg_pipeline_is_shuffle_free(spark):
     inspect.assert_scan_pruned(meta, {"doc_id", "text"})
 
 
-def test_weighted_quantile_job_never_global_window(spark):
-    """The distributed exact-quartile path (core/sufficient.py run_wq,
-    taken when the distinct-value cells exceed cat_cells_limit) must
-    plan its running-sum windows partitioned by (var[, strat]) — a global
-    (empty-partition) window would serialize the whole corpus through
-    one task. Pin: no 'Window' operator without a partition spec, and
-    the melt compresses through a partial aggregate before the window
-    shuffle."""
-    from tableone_pyspark_spark import tableone
+def test_distributed_quartiles_range_partition_cells(spark, monkeypatch):
+    """The distributed exact-quartile path (taken when the distinct-value
+    cells exceed cat_cells_limit) range-partitions the cells by
+    (t1_var, t1_x): no (var, strat) group is ever gathered into one
+    task, and nothing funnels through a SinglePartition exchange. The
+    melt compresses through a partial aggregate before any exchange.
+    The engine persists the range-partitioned frame it ranks, so the
+    test captures that frame's plan."""
+    from tableone_pyspark_spark import TableOneConfig, tableone
 
     li = (
         spark.read.parquet(f"{SF}/lineitem.parquet")
         .select("l_returnflag", "l_quantity", "l_extendedprice")
         .withColumn("w", F.col("l_quantity"))
     )
+    persisted = []
+    persist = type(li).persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(inspect.executed_plan(self))
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(li), "persist", spy)
     out = tableone(
         li, col_to_strat="l_returnflag",
         cols_to_analyze=["l_quantity", "l_extendedprice"], weight_col="w",
+        config=TableOneConfig(cat_cells_limit=100),
     )
-    assert out.count() > 0  # runs end-to-end (collect-side assembly)
-    # reconstruct the wq plan shape directly (the engine collects it
-    # eagerly, so pin the same construction)
-    from pyspark.sql import Window
-
-    g = (
-        li.select("l_returnflag", F.col("l_quantity").cast("double").alias("x"),
-                  F.col("w").cast("double").alias("wt"))
-        .groupBy("l_returnflag", "x").agg(F.sum("wt").alias("sw"))
-    )
-    cum = F.sum("sw").over(Window.partitionBy("l_returnflag").orderBy("x"))
-    plan = inspect.executed_plan(
-        g.select("l_returnflag", "x", cum.alias("cw"))
-    )
-    # window must carry a partition spec (no global sort-everything)
+    assert out.count() > 0
+    assert len(persisted) == 1
+    plan = persisted[0]
     import re
 
-    for m in re.finditer(r"Window \[", plan):
-        seg = plan[m.start(): m.start() + 400]
-        assert "windowspecdefinition(" in seg and not re.search(
-            r"windowspecdefinition\(x#", seg
-        ), seg
-    # partial_sum before the exchange: melt compressed map-side
-    assert "partial_sum" in plan
+    ranged = re.search(r"Exchange rangepartitioning\(t1_var#\d+ ASC[^,]*, t1_x#\d+ ASC", plan)
+    assert ranged, plan
+    assert "SinglePartition" not in plan
+    # partial_sum sits below (after, in the tree string) the first exchange
+    first_exchange = plan.index("Exchange ")
+    assert "partial_sum" in plan[first_exchange:], plan
 
 
 def test_span_dedup_shuffles_hashes_never_text(spark):

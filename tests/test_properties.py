@@ -297,6 +297,87 @@ def test_quartile_kernel_matches_loop_reference(cells, interpolated):
     assert repr(got) == repr(_loop_quartiles(cells, interpolated))
 
 
+@settings(max_examples=200, deadline=None)
+@given(
+    cells=st.lists(
+        st.tuples(
+            st.one_of(
+                st.integers(-20, 20).map(float),
+                st.sampled_from([math.inf, -math.inf, math.nan]),
+            ),
+            st.integers(1, 5).map(float),
+            st.sampled_from(["a", "b"]),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+    cuts=st.lists(st.integers(0, 45), max_size=6),
+    interpolated=st.booleans(),
+)
+def test_partitioned_kernel_matches_driver_kernel(cells, cuts, interpolated):
+    """The distributed kernel without Spark: cells split into range
+    partitions at arbitrary distinct-value ranks (a range partitioner
+    never splits one value), targets placed by _place_targets, picked
+    per partition by _partition_picks and blended, equal the driver
+    kernel bit for bit, per stratum and globally (integral weights)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from tableone_pyspark_spark.core import sufficient as S
+
+    x = np.array([c[0] for c in cells])
+    rank = np.unique(x, return_inverse=True)[1].ravel()
+    pid = np.searchsorted(np.sort(cuts), rank, side="right")
+    table = pa.table({
+        "t1_var": pa.array([0] * len(cells), pa.int32()),
+        "t1_x": x,
+        "sw": [c[1] for c in cells],
+        S.STRAT: [c[2] for c in cells],
+        "pid": pa.array(pid, pa.int32()),
+    })
+    part_sw = {}
+    for p, w, s in zip(pid.tolist(), table["sw"].to_pylist(), table[S.STRAT].to_pylist()):
+        for key in ((0, s), (0, None)):
+            part_sw.setdefault(key, {}).setdefault(p, 0.0)
+            part_sw[key][p] += w
+    requests, blends = S._place_targets(part_sw, interpolated)
+    picked = {}
+    for p in set(pid.tolist()):
+        part = table.filter(pa.compute.equal(table["pid"], p)).to_batches()
+        for out in S._partition_picks(requests, True, interpolated, iter(part)):
+            picked.update(zip(out["rid"].to_pylist(), out["x"].to_pylist()))
+    got = {
+        key: tuple(S._blend([picked[r] for r in rids], f) for rids, f in qs)
+        for key, qs in blends.items()
+    }
+    want = {key: S._quartiles(xg, wg, interpolated) for key, xg, wg in S._groups(table, True)}
+    assert repr(sorted(got.items(), key=str)) == repr(sorted(want.items(), key=str))
+
+
+def test_partition_picks_refuse_a_moved_partition():
+    """A range partition whose Σw is not the one the targets were
+    placed with (its partitioning was recomputed and cut elsewhere)
+    raises instead of picking from the wrong cells."""
+    import pyarrow as pa
+    import pytest
+
+    from tableone_pyspark_spark.core import sufficient as S
+
+    table = pa.table({
+        "t1_var": pa.array([0, 0, 0], pa.int32()), "t1_x": [1.0, 2.0, 3.0],
+        "sw": [1.0, 1.0, 1.0], S.STRAT: ["a", "a", "a"], "pid": pa.array([0, 0, 0], pa.int32()),
+    })
+    picks = S._partition_picks(
+        {0: {(0, "a"): (0.0, 3.0, [(0, 2.0)])}}, True, False, iter(table.to_batches())
+    )
+    assert next(picks).to_pydict() == {"rid": [0], "x": [2.0]}
+    moved = S._partition_picks(
+        {0: {(0, "a"): (0.0, 5.0, [(0, 2.0)])}}, True, False, iter(table.to_batches())
+    )
+    with pytest.raises(RuntimeError, match="range partitions"):
+        next(moved)
+
+
 # ---- INTERPOLATED weighted quantiles vs numpy repeat+linear ---------------
 
 wqi_rows = st.lists(
