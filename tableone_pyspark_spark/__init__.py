@@ -13,15 +13,14 @@ Public API:
         in O(1) passes over the data instead of O(16·V).
 
 Design (vs. reference):
-  * Sufficient statistics only: the engine runs one set of concurrent
-    bounded aggregations (strat counts; one ``rollup`` over every
-    continuous variable; one melted count over every categorical
-    variable; one melted count of distinct values that yields every
-    quartile, exactly) and collects k·V scalars and bounded cell frames
-    — never raw rows. The ``perfbench`` ``cohort_wide`` call runs 7
-    Spark jobs with 3 input-scanning stages (reference pulls
-    full columns via toPandas at :453/:500 and scans the input 16× per
-    continuous variable at :325-437).
+  * Sufficient statistics only: the engine runs one Spark aggregation
+    (one melt of every analyzed variable and the strat counts,
+    compressed to distinct-value cells by one shuffle), collects the
+    bounded cell frame — never raw rows — and computes every count,
+    moment and exact quartile from it on the driver. The ``perfbench``
+    ``cohort_wide`` call runs 2 Spark jobs with 1 input-scanning stage
+    (reference pulls full columns via toPandas at :453/:500 and scans
+    the input 16× per continuous variable at :325-437).
   * The returned table is built on the driver as an Arrow table: a
     ``LocalTableScan`` whose ``collect()`` runs no Spark job.
   * Hypothesis tests (t / ANOVA / chi-square) are computed from those

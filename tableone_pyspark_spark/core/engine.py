@@ -16,15 +16,16 @@ where the ``Index`` double encodes row order (total=0; continuous stats
 one anchor row per variable (reference :193,:210,:483,:522).
 
 Execution model (the Spark-first rewrite): ``collect_sufficient`` runs
-one set of concurrent bounded single-scan actions (counts ∥ moments ∥
-categorical melt ∥ exact-quartile cells; 7 Spark jobs and 3
-input-scanning stages per ``perfbench`` ``cohort_wide`` call, see
-core/sufficient.py) and ships only O(V·k) aggregated scalars
-and bounded cell frames to the driver. The output table (a few hundred
-rows at most) is then built on the driver as one Arrow table and
-returned as a ``LocalTableScan`` DataFrame: collecting it runs no
-Spark job. At 100 TB the heavy lifting is exactly those bounded
-shuffles — nothing else scales with data size. Contrast: the reference
+ONE Spark aggregation — one melt of every analyzed variable plus the
+strat counts into distinct-value cells, one map-side-combined shuffle —
+and collects the bounded cell frame once as Arrow: 2 Spark jobs and 1
+input-scanning stage per ``perfbench`` ``cohort_wide`` call (see
+core/sufficient.py). Every count, moment and quartile is computed from
+those cells on the driver. The output table (a few hundred rows at
+most) is then built on the driver as one Arrow table and returned as a
+``LocalTableScan`` DataFrame: collecting it runs no Spark job. At
+100 TB the heavy lifting is exactly that one bounded shuffle — nothing
+else scales with data size. Contrast: the reference
 scans the input ~16× per continuous variable (:325-437) and pulls
 whole columns to the driver for p-values (:453, :500).
 """
@@ -81,12 +82,13 @@ class TableOneConfig:
     """Engine knobs: the quartile semantics, two scale guards and a
     warning threshold."""
 
-    #: driver-collect guard on the two cell frames. Σ (category
-    #: cardinality × strat values) across all categorical variables
-    #: must stay under this (else ValueError). The distinct (value ×
-    #: strat) quartile cells of the continuous variables switch at it
-    #: from the driver kernel to the distributed one (same results, a
-    #: range shuffle and more Spark jobs).
+    #: driver-collect guard on the one cell frame. Past it, the
+    #: categorical and strat-count cells — Σ (category cardinality ×
+    #: strat values) — must still stay under it (else ValueError), and
+    #: the distinct (value × strat) cells of the continuous variables
+    #: are summarized and ranked distributed instead of on the driver
+    #: (the same counts and quartiles, moments to ~1e-12, a range
+    #: shuffle and more Spark jobs).
     cat_cells_limit: int = 1_000_000
     #: output schema grows 2 columns per distinct strat value; fail fast
     #: beyond this rather than building a 100k-column table.
@@ -130,8 +132,10 @@ def tableone(
 
     ``weight_col``: sample-weighted Table 1 (survey-weighted cohorts —
     an extension; the reference has no weights). Weights are FREQUENCY
-    weights: every count becomes Σw, means/stddevs use Σwx/Σwx² with
-    the frequency-weight sample variance, category percents are
+    weights: every count becomes Σw, means/stddevs are the
+    frequency-weight mean and sample variance Σw(x − mean)²/(Σw − 1),
+    computed from the same distinct-value cells by the same code as the
+    unweighted ones, category percents are
     Σw-fractions, quartiles honor ``quantile_mode`` and come from the
     distinct-value cells with their Σw, for every variable (the
     exact-quartile kernel of core/sufficient.py): the default

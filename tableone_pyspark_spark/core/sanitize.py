@@ -8,35 +8,20 @@ Semantics from the reference (tableone_pyspark.py):
     second, "MISSING" last                          (:100-115)
 
 Deviation (SURVEY Appendix Q11): the reference's string-fillna on a
-*numeric* strat column silently no-ops; we cast the strat column to
-string first so null handling is defined for every input type.
+*numeric* strat column silently no-ops; the engine casts the strat
+column to string first (in Spark) so null handling is defined for every
+input type, and cleans each distinct cast value on the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 MISSING = "MISSING"
-
-#: regex for runs of non-ASCII characters (reference :92)
-_NON_ASCII = r"[^\x00-\x7F]+"
-
-
-def clean_strat_col(name: str) -> Column:
-    """Sanitized strat column expression (values become column names).
-
-    Reference tableone_pyspark.py:89-92 — fillna("MISSING"),
-    spaces -> "_", non-ASCII runs -> "?"; plus the Q11 string cast.
-    """
-    c = F.coalesce(F.col(name).cast("string"), F.lit(MISSING))
-    c = F.regexp_replace(c, " ", "_")
-    c = F.regexp_replace(c, _NON_ASCII, "?")
-    return c
 
 
 def sanitize_value(v) -> str:
-    """Driver-side equivalent of :func:`clean_strat_col` for one value."""
+    """A strat value as an output column name (values become column
+    names): None -> "MISSING", spaces -> "_", each run of non-ASCII
+    characters -> "?" (reference tableone_pyspark.py:89-92)."""
     if v is None:
         return MISSING
     s = str(v).replace(" ", "_")

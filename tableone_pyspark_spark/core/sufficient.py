@@ -1,71 +1,73 @@
 """Single-pass sufficient-statistics collection for TableOne.
 
-The engine runs ONE set of four CONCURRENT bounded Spark actions,
-independent of the number of analyzed variables (the reference runs
-~16 scans *per continuous variable*, tableone_pyspark.py:325-437, plus
-a full-column ``toPandas`` per p-value, :453/:500). Each action scans
-the input once; under AQE every shuffle map stage runs as a job of its
-own, so an action is one Spark job per shuffle plus one for its
-result. Measured from the Spark event log on the ``perfbench``
-``cohort_wide`` call (stratified, 6-8 variables, three of them
-near-unique): 7 jobs and 3 input-scanning stages per call.
+The engine runs ONE Spark aggregation per call, independent of the
+number of analyzed variables (the reference runs ~16 scans *per
+continuous variable*, tableone_pyspark.py:325-437, plus a full-column
+``toPandas`` per p-value, :453/:500). One ``stack`` melts every input
+row into one row per analyzed variable plus one for the strat counts,
+and one ``groupBy(var, x, s[, raw strat])`` with Σw (a count when
+unweighted) compresses the melt to its distinct-value cells — map-side
+combined, so the one shuffle carries distinct values, not rows:
 
-    counts   strat-group row counts (or plain ``count()``) — scans
-             only the strat column (parquet column pruning).
-    moments  ONE ``rollup(strat)`` computing, for EVERY continuous
-             variable at once: count, min, max, avg, stddev_samp,
-             var_samp. The rollup's grand-total row is the
-             "All_Patients" column; per-strat rows are the pivot.
-    cats     ONE melted count for EVERY categorical variable at once:
-             ``stack`` into (var, value) pairs, then
-             ``groupBy(var, value[, strat]).count()``. Map-side
-             partial aggregation collapses the melt immediately, so
-             the shuffle carries only Σ cardinality × strat rows.
-    cells    every quartile, exact, from distinct-value cells (below).
+    continuous   (var, x = CAST(value AS DOUBLE)), null values dropped
+    categorical  (var, s = value), nulls mapped to MISSING
+    strat count  one pseudo-variable: its cells give the strat row
+                 counts, the total, and the sanitization-collision check
+                 (a cleaned strat value with more than one raw value)
 
-Quartiles have ONE implementation. Melt the continuous variables (by
-position) and compress to the distinct (var, value[, strat]) cells
-with their Σw (a count when unweighted) — one shuffle, map-side
-combined, carrying distinct values, not rows. Up to ``cat_cells_limit``
-cells are collected as Arrow and ranked on the driver by
-:func:`_quartiles`: ``quantile_disc`` in "data" mode, the DuckDB
-``quantile_cont`` blend in "interpolated" mode. A stratified run's
-global group is the concatenation of its per-strat cells, so nothing
-is rescanned. Past ``cat_cells_limit`` the same kernel runs
-distributed (``run_spread``): the cells are range-partitioned by
-(var, value), one tiny collect of Σw per partition places each
-quartile target in one partition, and one ``mapInArrow`` pass picks it
-there with the driver kernel's target, pick and blend helpers. Memory
-is O(distinct values per group) on the driver, O(distinct values per
-partition) on an executor.
+The strat value enters raw (cast to string) and is cleaned on the
+driver, once per distinct value (:func:`sanitize_value`). Under AQE the
+shuffle's map stage runs as a Spark job of its own, so a call is 2 jobs
+and 1 input scan. The cells come back once as Arrow, guarded by
+``cat_cells_limit``.
 
-Only aggregated scalars and bounded cell frames reach the driver. The
-collected sizes are O(V·k) and O(Σ cardinalities · k) — independent of
-row count, so the same plan runs at 100 TB. Independent jobs are
-submitted concurrently (threads; Spark schedules them into the shared
-cluster).
+Every continuous statistic comes from one numpy pass over the cells on
+the driver, weighted and unweighted alike (:func:`_groups`): sort once
+by (var, x, strat), NaN last as Spark orders doubles; a var's run is its
+global group and each stratum's cells are a stable subsequence of that
+run. Per group, n = Σw, min and max are the run's ends, the mean is
+Σwx/Σw, the variance is Σw(x − mean)²/(Σw − 1) by the corrected
+two-pass sum (:func:`_summary`), so a large common offset does not
+cancel it away, and the quartiles are picked from the running Σw (:func:`_ranked`):
+``quantile_disc`` in "data" mode, the DuckDB ``quantile_cont`` blend in
+"interpolated" mode. Global order statistics are not mergeable from
+per-group results, which is why the global group is ranked from the
+concatenation of its per-strat cells.
+
+Past ``cat_cells_limit`` the categorical and count cells are still
+collected under the guard (a ValueError when they exceed it), and the
+continuous cells stay distributed (``run_spread``): they are
+range-partitioned by (var, x); one ``mapInArrow`` pass summarizes every
+(partition, var, strat) with the same numpy function (Σw, min, max,
+mean, M2), the driver merges the partitions with Chan et al.'s pairwise
+update and places each quartile target in one partition; a second
+``mapInArrow`` pass picks the targets there with the driver kernel's
+target, pick and blend helpers. Memory is O(distinct values per group)
+on the driver, O(distinct values per partition) on an executor.
 
 Weighted mode (``weight_col``): weights are FREQUENCY weights — the
 results are defined to equal the unweighted results on a row-replicated
 frame (exactly true for integer weights; pinned by test). Rows with
-null/non-positive weight are excluded everywhere. The same bounded
-jobs collect Σw / Σwx / Σwx² instead of counts, and the exact-quartile
-cells carry Σw: "data" mode is ``min(x WHERE cumΣw >= p·Σw)`` — the
-weighted generalization of ``quantile_disc`` (reduces to it at w=1).
+null/non-positive weight are excluded everywhere. The cells carry Σw
+instead of a count, and every statistic above reads Σw where the
+unweighted one reads the count: "data" mode is
+``min(x WHERE cumΣw >= p·Σw)`` — the weighted generalization of
+``quantile_disc`` (reduces to it at w=1).
 """
 
 from __future__ import annotations
 
 import math
-from concurrent.futures import ThreadPoolExecutor
+import warnings
 from dataclasses import dataclass, field
-from functools import partial
+from functools import partial, reduce
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
-from tableone_pyspark_spark.core.sanitize import MISSING, clean_strat_col
+from tableone_pyspark_spark.core.sanitize import MISSING, sanitize_value
 
 #: internal strat column name — namespaced to avoid user-column clashes
 STRAT = "__t1_strat__"
@@ -76,6 +78,9 @@ _MOVED = (
     "the range partitions of the quartile cells changed between two passes "
     "over them; retry the call"
 )
+#: one row per (range partition, var, strat) of the distributed path;
+#: s is null for a var's global group
+_SUMMARY = "pid int, t1_var int, s string, n double, mn double, mx double, mean double, m2 double"
 
 
 @dataclass(frozen=True)
@@ -93,10 +98,13 @@ class ContStat:
     q75: object
 
 
+_EMPTY = ContStat(0, None, None, None, None, None, None, None, None)
+
+
 @dataclass
 class Sufficient:
-    """Everything TableOne needs, collected by the concurrent bounded
-    actions described in the module docstring."""
+    """Everything TableOne needs, collected by the one aggregation
+    described in the module docstring."""
 
     total: int
     strat_counts: dict[str, int] = field(default_factory=dict)  # cleaned value -> rows
@@ -116,88 +124,6 @@ def _sql_str(name: str) -> str:
 
 def _num(x) -> float | None:
     return None if x is None else float(x)
-
-
-def _row_to_stats(row, i: int, q: tuple) -> ContStat:
-    # a decimal column's avg is a Decimal: moments are floats from here
-    # on, so the t-test and ANOVA can mix them with float arithmetic
-    return ContStat(
-        n=row[f"n__{i}"] or 0,
-        min=row[f"mn__{i}"],
-        max=row[f"mx__{i}"],
-        mean=_num(row[f"av__{i}"]),
-        stddev=_num(row[f"sd__{i}"]),
-        var=_num(row[f"vr__{i}"]),
-        q25=q[0],
-        q50=q[1],
-        q75=q[2],
-    )
-
-
-def _moment_aggs(cont_vars: list[str]) -> list:
-    """Unweighted moments per variable: count, min, max, avg,
-    stddev_samp, var_samp. Quartiles come from the separate quartile
-    cells job."""
-    aggs = []
-    for i, v in enumerate(cont_vars):
-        c = F.col(v)
-        aggs += [
-            F.count(c).alias(f"n__{i}"),
-            F.min(c).alias(f"mn__{i}"),
-            F.max(c).alias(f"mx__{i}"),
-            F.avg(c).alias(f"av__{i}"),
-            F.stddev_samp(c).alias(f"sd__{i}"),
-            F.var_samp(c).alias(f"vr__{i}"),
-        ]
-    return aggs
-
-
-def _cont_aggs_weighted(cont_vars: list[str]) -> list:
-    """Weighted sufficient sums per variable: Σw (over non-null x),
-    min, max, Σwx, Σwx² — moments derive driver-side. Quartiles come
-    from the separate quartile cells job."""
-    aggs = []
-    w = F.col(WEIGHT)
-    for i, v in enumerate(cont_vars):
-        c = F.col(v).cast("double")
-        aggs += [
-            F.sum(F.when(c.isNotNull(), w)).alias(f"sw__{i}"),
-            F.min(c).alias(f"mn__{i}"),
-            F.max(c).alias(f"mx__{i}"),
-            F.sum(w * c).alias(f"swx__{i}"),
-            F.sum(w * c * c).alias(f"swxx__{i}"),
-        ]
-    return aggs
-
-
-def _row_to_stats_weighted(row, i: int, quarts: tuple) -> ContStat:
-    """Frequency-weight moments from (Σw, Σwx, Σwx²): mean = Σwx/Σw,
-    sample variance = (Σwx² − (Σwx)²/Σw)/(Σw − 1) — identical to the
-    unweighted formulas on a row-replicated frame."""
-    sw = row[f"sw__{i}"]
-    mean = var = stddev = None
-    if sw is not None and sw > 0:
-        swx, swxx = row[f"swx__{i}"], row[f"swxx__{i}"]
-        mean = swx / sw
-        if sw > 1:
-            var = (swxx - swx * swx / sw) / (sw - 1.0)
-            # NaN propagates (NaN-poisoned columns match scipy, Q6);
-            # clamp only the float-cancellation sliver below zero
-            stddev = math.sqrt(var) if var >= 0 else (var if var != var else 0.0)
-            if var < 0 and var == var:
-                var = 0.0
-                stddev = 0.0
-    return ContStat(
-        n=sw or 0,
-        min=row[f"mn__{i}"],
-        max=row[f"mx__{i}"],
-        mean=mean,
-        stddev=stddev,
-        var=var,
-        q25=quarts[0],
-        q50=quarts[1],
-        q75=quarts[2],
-    )
 
 
 def _targets(total: float, interpolated: bool) -> list[tuple[tuple, float]]:
@@ -235,57 +161,142 @@ def _blend(vals: list, f: float):
     return lo if f == 0 or lo == hi else (1.0 - f) * lo + f * hi
 
 
-def _sorted_cum(x: np.ndarray, w: np.ndarray, offset: float = 0.0):
-    """A stable ascending sort (NaN last, as Spark orders doubles) and
-    the running Σw in that order, starting from ``offset``."""
-    order = np.argsort(x, kind="stable")
-    return x[order], np.cumsum(np.r_[offset, w[order]])[1:]
+def _cum(w: np.ndarray, offset: float = 0.0) -> np.ndarray:
+    """The running Σw of x-sorted cells, starting from ``offset``."""
+    return np.cumsum(np.r_[offset, w])[1:]
 
 
-def _quartiles(x: np.ndarray, w: np.ndarray, interpolated: bool) -> tuple:
-    """The exact-quartile kernel: quartiles of one group of cells, the
-    distinct values ``x`` with their Σw ``w`` (a count when unweighted).
-    A value may appear in several cells — a global group is just the
-    concatenation of its per-strat cells. Each quartile blends the
-    values picked at its :func:`_targets`; integral weights equal
-    numpy's linear percentile on the row-replicated values.
-
-    With integral weights every partial sum is exact in double, so the
-    result does not depend on how the cells were split or ordered."""
-    xs, cum = _sorted_cum(x, w)
+def _ranked(xs: np.ndarray, cum: np.ndarray, interpolated: bool) -> tuple:
+    """The quartiles of one group of x-sorted cells with running Σw
+    ``cum``: each blends the values picked at its :func:`_targets`."""
     return tuple(
         _blend([float(xs[_pick(cum, t, interpolated)]) for t in ts], f)
         for ts, f in _targets(float(cum[-1]), interpolated)
     )
 
 
+def _quartiles(x: np.ndarray, w: np.ndarray, interpolated: bool) -> tuple:
+    """The exact-quartile kernel: quartiles of one group of cells, the
+    distinct values ``x`` with their Σw ``w`` (a count when unweighted),
+    in any order. Integral weights equal numpy's linear percentile on the
+    row-replicated values.
+
+    With integral weights every partial sum is exact in double, so the
+    result does not depend on how the cells were split or ordered."""
+    order = np.argsort(x, kind="stable")
+    return _ranked(x[order], _cum(w[order]), interpolated)
+
+
+def _summary(xs: np.ndarray, w: np.ndarray) -> tuple:
+    """(Σw, min, max, mean, M2) of one group of x-sorted cells. NaN sorts
+    last, so it is the max, as in Spark. The mean is Σwx/Σw, summed as
+    offsets from the (finite) min, so a constant group's mean is its
+    value. M2 = Σw(x − mean)² is the corrected two-pass sum (Chan,
+    Golub and LeVeque): minus (Σw(x − mean))²/Σw, which takes back the
+    rounding of the mean, so a large common offset does not cancel the
+    spread away. Any NaN or ±inf value makes M2 NaN, as Spark's
+    ``stddev_samp``."""
+    lo = float(xs[0])
+    shift = lo if math.isfinite(lo) else 0.0
+    with np.errstate(all="ignore"):
+        n = float(w.sum())
+        mean = shift + float((w * (xs - shift)).sum()) / n
+        d = w * (xs - mean)
+        sd = float(d.sum())
+        m2 = float((d * (xs - mean)).sum()) - sd * sd / n
+    return n, lo, float(xs[-1]), mean, 0.0 if m2 < 0 else m2
+
+
+def _merge(a: tuple, b: tuple) -> tuple:
+    """Chan et al.'s pairwise update of two :func:`_summary` tuples whose
+    cells are disjoint, ``b``'s all above ``a``'s (a later range
+    partition). The mean is the Σw-weighted mean of the two, so a ±inf
+    one stays ±inf."""
+    na, mn, _mx, ma, m2a = a
+    nb, _mn, mx, mb, m2b = b
+    n = na + nb
+    d = mb - ma
+    return n, mn, mx, (na * ma + nb * mb) / n, m2a + m2b + d * d * na * nb / n
+
+
+def _cont_stat(summary: tuple, quarts: tuple, weighted: bool) -> ContStat:
+    n, mn, mx, mean, m2 = summary
+    var = m2 / (n - 1.0) if n > 1 else None
+    return ContStat(
+        n=n if weighted else int(n),
+        min=mn,
+        max=mx,
+        mean=mean,
+        stddev=None if var is None else math.sqrt(var),
+        var=var,
+        q25=quarts[0],
+        q50=quarts[1],
+        q75=quarts[2],
+    )
+
+
 def _groups(cells: pa.Table, stratified: bool):
     """Yield ``((var position, strat), x, w)`` for every (var, strat)
     group of ``cells`` and, when stratified, every var's global
-    ``(var, None)`` group — the concatenation of its per-strat cells."""
+    ``(var, None)`` group — the concatenation of its per-strat cells.
+    ``x`` ascends (NaN last) and ``w`` is float. ``cells[STRAT]`` holds
+    raw strat values; a stratum is their cleaned value
+    (:func:`sanitize_value`).
+
+    One sort by (var, x, strat) orders everything: a var's run is its
+    global group, and a stable sort by (var, strat) on top keeps each
+    stratum's cells in x order. The key is unique per cell (unless two
+    raw values clean alike), so the order, and every sum over it, does
+    not depend on the order the cells arrived in."""
     n = cells.num_rows
     if n == 0:
         return
     vi = cells["t1_var"].to_numpy().astype(np.int64)
+    x = cells["t1_x"].to_numpy()
+    w = cells["sw"].to_numpy().astype(np.float64)
     if stratified:
-        d = cells[STRAT].combine_chunks().dictionary_encode()
-        si, snames = d.indices.to_numpy().astype(np.int64), d.dictionary.to_pylist()
+        # the strata are the cleaned raw values, in name order
+        d = pc.dictionary_encode(cells[STRAT].combine_chunks(), null_encoding="encode")
+        names = [sanitize_value(r) for r in d.dictionary.to_pylist()]
+        snames = sorted(set(names))
+        rank = {s: i for i, s in enumerate(snames)}
+        si = np.array([rank[s] for s in names], np.int64)[d.indices.to_numpy()]
+        order = np.lexsort((si, x, vi))
     else:
         si, snames = np.zeros(n, np.int64), [None]
-    order = np.lexsort((si, vi))  # stable: groups become contiguous runs
-    x = cells["t1_x"].to_numpy()[order]
-    w = cells["sw"].to_numpy()[order]
-    vi, si = vi[order], si[order]
+        order = np.lexsort((x, vi))
+    x, w, vi, si = x[order], w[order], vi[order], si[order]
 
     def runs(ids):
         cuts = np.flatnonzero(np.diff(ids)) + 1
         return zip(np.r_[0, cuts], np.r_[cuts, n])
 
-    for a, b in runs(vi * len(snames) + si):
-        yield (int(vi[a]), snames[si[a]]), x[a:b], w[a:b]
     if stratified:
-        for a, b in runs(vi):
-            yield (int(vi[a]), None), x[a:b], w[a:b]
+        gid = vi * len(snames) + si
+        sub = np.argsort(gid, kind="stable")
+        xg, wg, gid = x[sub], w[sub], gid[sub]
+        for a, b in runs(gid):
+            v, s = divmod(int(gid[a]), len(snames))
+            yield (v, snames[s]), xg[a:b], wg[a:b]
+    for a, b in runs(vi):
+        yield (int(vi[a]), None), x[a:b], w[a:b]
+
+
+def _partition_summaries(stratified: bool, batches):
+    """``mapInArrow`` body of the distributed path: the :func:`_summary`
+    of every (var, strat) group in one range partition, and of every
+    var's global group there."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    cells = pa.Table.from_batches(batches)
+    pid = cells["pid"][0].as_py()
+    rows = [(pid, v, s, *_summary(x, w)) for (v, s), x, w in _groups(cells, stratified)]
+    types = [pa.int32(), pa.int32(), pa.string()] + [pa.float64()] * 5
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(col, t) for col, t in zip(zip(*rows), types)],
+        ["pid", "t1_var", "s", "n", "mn", "mx", "mean", "m2"],
+    )
 
 
 def _place_targets(part_sw: dict, interpolated: bool) -> tuple[dict, dict]:
@@ -337,10 +348,10 @@ def _partition_picks(requests: dict, stratified: bool, interpolated: bool, batch
         return
     cells = pa.Table.from_batches(batches)
     rids, vals = [], []
-    for key, x, w in _groups(cells, stratified):
+    for key, xs, w in _groups(cells, stratified):
         if key in wanted:
             offset, part_w, picks = wanted[key]
-            xs, cum = _sorted_cum(x, w, offset)
+            cum = _cum(w, offset)
             if not np.isclose(cum[-1] - offset, part_w, rtol=1e-9, equal_nan=True):
                 raise RuntimeError(_MOVED)
             for rid, t in picks:
@@ -349,6 +360,50 @@ def _partition_picks(requests: dict, stratified: bool, interpolated: bool, batch
     yield pa.RecordBatch.from_arrays(
         [pa.array(rids, pa.int64()), pa.array(vals, pa.float64())], ["rid", "x"]
     )
+
+
+def run_spread(g: DataFrame, stratified: bool, interpolated: bool, weighted: bool) -> dict:
+    """Every continuous statistic from the cell frame ``g``, without
+    collecting it. Range-partition the cells by (var, x), so each
+    partition holds a contiguous x range of its vars, every stratum
+    included; persist() freezes that partitioning across the two passes
+    below (a lost block is recomputed from the range shuffle's files,
+    unlike a localCheckpoint). One ``mapInArrow`` pass returns the
+    :func:`_summary` of every (partition, var, strat); the driver merges
+    them in partition order and places every quartile target in one
+    partition, with the group's Σw before it; a second pass picks the
+    targets inside those partitions (:func:`_partition_picks`), and the
+    driver blends them as :func:`_ranked` does."""
+    ranged = g.repartitionByRange("t1_var", "t1_x").persist()
+    try:
+        cells = ranged.withColumn("pid", F.spark_partition_id())
+        parts: dict[tuple, dict[int, tuple]] = {}
+        for r in cells.mapInArrow(partial(_partition_summaries, stratified), _SUMMARY).collect():
+            parts.setdefault((r["t1_var"], r["s"]), {})[r["pid"]] = (
+                r["n"], r["mn"], r["mx"], r["mean"], r["m2"]
+            )
+        requests, blends = _place_targets(
+            {key: {p: s[0] for p, s in by_pid.items()} for key, by_pid in parts.items()},
+            interpolated,
+        )
+        picked = dict(
+            cells.mapInArrow(
+                partial(_partition_picks, requests, stratified, interpolated),
+                "rid long, x double",
+            ).collect()
+        )
+    finally:
+        ranged.unpersist()
+    if len(picked) != sum(len(rids) for qs in blends.values() for rids, _f in qs):
+        raise RuntimeError(_MOVED)
+    return {
+        key: _cont_stat(
+            reduce(_merge, (by_pid[p] for p in sorted(by_pid))),
+            tuple(_blend([picked[r] for r in rids], f) for rids, f in blends[key]),
+            weighted,
+        )
+        for key, by_pid in parts.items()
+    }
 
 
 def collect_sufficient(
@@ -361,225 +416,120 @@ def collect_sufficient(
     cat_cells_limit: int = 1_000_000,
     weight_col: str | None = None,
 ) -> Sufficient:
-    """Run the bounded job set of the module docstring and return
-    every statistic TableOne needs."""
+    """Run the one aggregation of the module docstring and return every
+    statistic TableOne needs."""
     stratified = col_to_strat != ""
     weighted = weight_col is not None
     interpolated = quantile_mode == "interpolated"
+    cont_vars, cat_vars = list(dict.fromkeys(cont_vars)), list(dict.fromkeys(cat_vars))
+    n_cont = len(cont_vars)
+    counts_var = n_cont + len(cat_vars)
+
+    # ---- the melt: (var position, x, s) per analyzed variable ----------
+    melt = [f"{i}, CAST({_quote(v)} AS DOUBLE), CAST(NULL AS STRING)"
+            for i, v in enumerate(cont_vars)]
+    melt += [f"{n_cont + j}, CAST(NULL AS DOUBLE), COALESCE({_quote(v)}, {_sql_str(MISSING)})"
+             for j, v in enumerate(cat_vars)]
+    melt.append(f"{counts_var}, CAST(NULL AS DOUBLE), CAST(NULL AS STRING)")
+    cols = [F.expr(f"stack({len(melt)}, {', '.join(melt)}) AS (t1_var, t1_x, t1_s)")]
     base = df
     if weighted:
         wc = F.col(_quote(weight_col)).cast("double")
         base = df.where(wc.isNotNull() & (wc > 0))
-    select_cols = [F.col(_quote(v)) for v in dict.fromkeys(cat_vars + cont_vars)]
+        cols.append(wc.alias(WEIGHT))
     if stratified:
-        select_cols.append(clean_strat_col(col_to_strat).alias(STRAT))
-    if weighted:
-        select_cols.append(F.col(_quote(weight_col)).cast("double").alias(WEIGHT))
-    work = base.select(*select_cols)
-
-    out = Sufficient(total=0)
-    count_agg = (
-        F.sum(F.col(_quote(weight_col)).cast("double"))
-        if weighted
-        else F.count(F.lit(1))
+        # the raw value: it is cleaned on the driver, once per distinct
+        # value, instead of by two regexes on every melted row
+        cols.append(F.col(_quote(col_to_strat)).cast("string").alias(STRAT))
+    keys = ["t1_var", "t1_x", "t1_s"] + ([STRAT] if stratified else [])
+    sw = F.sum(WEIGHT) if weighted else F.count(F.lit(1))
+    g = (
+        base.select(*cols)
+        .where((F.col("t1_var") >= n_cont) | F.col("t1_x").isNotNull())
+        .groupBy(*keys)
+        .agg(sw.alias("sw"))
     )
 
-    # ---- job 1: strat group counts / total ------------------------------
-    def run_counts():
-        if stratified:
-            rows = (
-                base.select(
-                    F.col(_quote(col_to_strat)).alias("__raw"),
-                    clean_strat_col(col_to_strat).alias(STRAT),
-                    *([F.col(_quote(weight_col))] if weighted else []),
-                )
-                # two-level aggregation instead of count_distinct (r17):
-                # a count_distinct alongside another agg plans an
-                # Expand-based two-phase distinct that ships every raw
-                # value through the expand; grouping by (cleaned, raw)
-                # first map-side-combines to the tiny distinct-pair set,
-                # and the second-level agg then derives BOTH the group
-                # count (sum of per-raw counts — exact: integer counts,
-                # and weighted Σw is exact for the integral-weight
-                # contract) and the collision signal (__nraw = rows per
-                # cleaned value). Same results, ~25% cheaper job.
-                .groupBy(STRAT, "__raw")
-                .agg(count_agg.alias("__c"))
-                .groupBy(STRAT)
-                .agg(
-                    F.sum("__c").alias("count"),
-                    # sanitization-collision detection (SURVEY Q9): >1
-                    # distinct raw value mapping onto one cleaned value
-                    # means categories silently merged ("a b" ≡ "a_b";
-                    # distinct non-ASCII runs ≡ "?"). count over the
-                    # per-raw groups' __raw (not count(1)) so the NULL
-                    # raw group is excluded — byte-identical to the old
-                    # count_distinct semantics
-                    F.count(F.col("__raw")).alias("__nraw"),
-                )
-                .collect()
-            )
-            collided = sorted(r[STRAT] for r in rows if r["__nraw"] > 1)
-            if collided:
-                import warnings
+    # ---- the one collect, guarded by cat_cells_limit --------------------
+    cells = g.limit(cat_cells_limit + 1).toArrow()
+    spread = cells.num_rows > cat_cells_limit
+    if spread:
+        side = g.where(F.col("t1_var") >= n_cont).limit(cat_cells_limit + 1).toArrow()
+        cont = None
+    else:
+        is_cont = pc.less(cells["t1_var"], n_cont)
+        side, cont = cells.filter(pc.invert(is_cont)), cells.filter(is_cont)
 
-                warnings.warn(
-                    f"strat sanitization merged distinct raw values into "
-                    f"{collided} (spaces→'_', non-ASCII→'?'; reference "
-                    ":89-92 semantics, SURVEY Q9)",
-                    stacklevel=4,
-                )
-            counts = {r[STRAT]: r["count"] for r in rows}
-            if len(counts) > strat_cardinality_limit:
-                raise ValueError(
-                    f"stratification column {col_to_strat!r} has "
-                    f"{len(counts)} distinct values "
-                    f"(> limit {strat_cardinality_limit}); the output schema grows "
-                    "with strat cardinality — raise strat_cardinality_limit "
-                    "explicitly if this is intended"
-                )
-            return counts, sum(counts.values())
-        if weighted:
-            row = work.agg(F.sum(WEIGHT).alias("t")).collect()[0]
-            return {}, row["t"] or 0.0
-        return {}, work.count()
-
-    def run_moments():
-        aggs = _cont_aggs_weighted(cont_vars) if weighted else _moment_aggs(cont_vars)
-        if stratified:
-            # rollup == grouping sets {(strat), ()}: per-strat cells AND
-            # the grand total in ONE pass. Cleaned strat is never null,
-            # so the null-strat row is unambiguously the total.
-            return work.rollup(STRAT).agg(*aggs).collect()
-        return work.groupBy().agg(*aggs).collect()
-
-    def run_exact():
-        # every quartile. Melt the variables by position and compress to
-        # the distinct (var, value[, strat]) cells with their Σw (a count
-        # when unweighted) — ONE shuffle, map-side combined, carrying
-        # distinct values, not rows. Up to cat_cells_limit cells are
-        # collected as Arrow and ranked on the driver; past it they stay
-        # distributed (run_spread). Var positions map back to names last.
-        casts = ", ".join(
-            f"{i}, CAST({_quote(v)} AS DOUBLE)" for i, v in enumerate(cont_vars)
-        )
-        stack = F.expr(f"stack({len(cont_vars)}, {casts}) as (t1_var, t1_x)")
-        melted = work.select(
-            *([STRAT] if stratified else []),
-            *([F.col(WEIGHT)] if weighted else []),
-            stack,
-        ).where(F.col("t1_x").isNotNull())
-        keys = ["t1_var", "t1_x"] + ([STRAT] if stratified else [])
-        agg = F.sum(WEIGHT) if weighted else F.count(F.lit(1)).cast("double")
-        g = melted.groupBy(*keys).agg(agg.alias("sw"))
-        cells = g.limit(cat_cells_limit + 1).toArrow()
-        if cells.num_rows > cat_cells_limit:
-            quarts = run_spread(g)
-        else:
-            quarts = {
-                key: _quartiles(x, w, interpolated)
-                for key, x, w in _groups(cells, stratified)
-            }
-        return {(cont_vars[v], s): q for (v, s), q in quarts.items()}
-
-    def run_spread(g: DataFrame):
-        # the distributed form of the same kernel. Range-partition the
-        # cells by (var, x), so each partition holds a contiguous x range
-        # of its vars, every stratum included; persist() freezes that
-        # partitioning across the two actions below (a lost block is
-        # recomputed from the range shuffle's files, unlike a
-        # localCheckpoint). One tiny collect of Σw per (partition,
-        # var[, strat]) places every quartile target in one partition,
-        # with the group's Σw before it; one mapInArrow pass then picks
-        # the targets inside those partitions (_partition_picks), and
-        # the driver blends them as _quartiles does.
-        ranged = g.repartitionByRange("t1_var", "t1_x").persist()
-        try:
-            cells = ranged.withColumn("pid", F.spark_partition_id())
-            part_sw: dict[tuple, dict[int, float]] = {}
-            for r in (
-                cells.groupBy("pid", "t1_var", *([STRAT] if stratified else []))
-                .agg(F.sum("sw").alias("sw"))
-                .collect()
-            ):
-                strata = (r[STRAT], None) if stratified else (None,)
-                for s in strata:
-                    by_pid = part_sw.setdefault((r["t1_var"], s), {})
-                    by_pid[r["pid"]] = by_pid.get(r["pid"], 0.0) + r["sw"]
-            requests, blends = _place_targets(part_sw, interpolated)
-            picked = dict(
-                cells.mapInArrow(
-                    partial(_partition_picks, requests, stratified, interpolated),
-                    "rid long, x double",
-                ).collect()
-            )
-        finally:
-            ranged.unpersist()
-        if len(picked) != sum(len(rids) for qs in blends.values() for rids, _f in qs):
-            raise RuntimeError(_MOVED)
-        return {
-            key: tuple(_blend([picked[r] for r in rids], f) for rids, f in qs)
-            for key, qs in blends.items()
-        }
-
-    def run_cat():
-        pairs = ", ".join(f"{_sql_str(v)}, {_quote(v)}" for v in cat_vars)
-        stack = F.expr(f"stack({len(cat_vars)}, {pairs}) as (t1_var, t1_val)")
-        melted = work.select(
-            *([STRAT] if stratified else []),
-            *([WEIGHT] if weighted else []),
-            stack,
-        )
-        melted = melted.withColumn("t1_val", F.coalesce(F.col("t1_val"), F.lit(MISSING)))
-        keys = ["t1_var", "t1_val"] + ([STRAT] if stratified else [])
-        agg = melted.groupBy(*keys).agg(
-            (F.sum(WEIGHT) if weighted else F.count(F.lit(1))).alias("ct")
-        )
-        # guard the driver collect: the result has Σ cardinality × strat
-        # rows; a high-cardinality "categorical" column (ids, free text)
-        # must fail fast, not OOM the driver
-        rows = agg.limit(cat_cells_limit + 1).collect()
-        if len(rows) > cat_cells_limit:
-            raise ValueError(
-                f"categorical variables {cat_vars} produce more than "
-                f"{cat_cells_limit} (value × strat) cells — a column is "
-                "not actually categorical (ids? free text?); drop it or "
-                "raise cat_cells_limit explicitly"
-            )
-        return rows
-
-    # ---- schedule the jobs with maximal overlap -------------------------
-    # One schedule for every mode: counts ∥ moments ∥ cat ∥ quartile
-    # cells; Spark's scheduler interleaves the concurrent jobs.
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        # 4 workers = the whole job set, so none waits behind another
-        f_cat = pool.submit(run_cat) if cat_vars else None
-        f_counts = pool.submit(run_counts)
-        f_moments = pool.submit(run_moments) if cont_vars else None
-        f_exact = pool.submit(run_exact) if cont_vars else None
-        out.strat_counts, out.total = f_counts.result()
-        cont_rows = f_moments.result() if f_moments is not None else []
-        quarts = f_exact.result() if f_exact is not None else {}
-        cat_rows = f_cat.result() if f_cat is not None else []
-
-    # ---- unpack ---------------------------------------------------------
-    to_stats = _row_to_stats_weighted if weighted else _row_to_stats
-    for v in cont_vars:
-        out.cont[v] = {}
-    for row in cont_rows:
-        key = row[STRAT] if stratified else None
-        for i, v in enumerate(cont_vars):
-            # an all-NULL (var, strat) group has no cells: None
-            q = quarts.get((v, key), (None, None, None))
-            out.cont[v][key] = to_stats(row, i, q)
-    if stratified and cont_vars and None not in out.cont[cont_vars[0]]:
-        # defensive: rollup always emits the grand-total row
-        raise RuntimeError("rollup produced no grand-total row")
-
+    # ---- strat counts, total, collision check, categorical counts ------
+    out = Sufficient(total=0)
+    nraw: dict[str, int] = {}
     for v in cat_vars:
         out.cat[v] = {}
-    for row in cat_rows:
-        key = row[STRAT] if stratified else None
-        out.cat[row["t1_var"]][(row["t1_val"], key)] = row["ct"]
+    raws = side[STRAT].to_pylist() if stratified else [None] * side.num_rows
+    clean = {r: sanitize_value(r) for r in set(raws)} if stratified else {None: None}
+    for var, s, raw, c in zip(
+        side["t1_var"].to_pylist(), side["t1_s"].to_pylist(), raws, side["sw"].to_pylist()
+    ):
+        strat = clean[raw]
+        if var == counts_var:
+            out.total += c
+            if stratified:
+                out.strat_counts[strat] = out.strat_counts.get(strat, 0) + c
+                nraw[strat] = nraw.get(strat, 0) + (raw is not None)
+        else:
+            counts = out.cat[cat_vars[var - n_cont]]
+            counts[(s, strat)] = counts.get((s, strat), 0) + c
+    strata = set(out.strat_counts)
+    if side.num_rows > cat_cells_limit and stratified:
+        # an overflowing side may miss strata: read them from the
+        # strat-count cells alone, so that too many strata still raise
+        # the strat guard rather than the categorical one
+        cap = max(cat_cells_limit, strat_cardinality_limit) + 1
+        raw = g.where(F.col("t1_var") == counts_var).select(STRAT).limit(cap)
+        strata = {sanitize_value(r) for r in raw.toArrow()[STRAT].to_pylist()}
+    if len(strata) > strat_cardinality_limit:
+        raise ValueError(
+            f"stratification column {col_to_strat!r} has "
+            f"{len(strata)} distinct values "
+            f"(> limit {strat_cardinality_limit}); the output schema grows "
+            "with strat cardinality — raise strat_cardinality_limit "
+            "explicitly if this is intended"
+        )
+    if side.num_rows > cat_cells_limit:
+        # a high-cardinality "categorical" column (ids, free text) must
+        # fail fast, not OOM the driver
+        raise ValueError(
+            f"categorical variables {cat_vars} produce more than "
+            f"{cat_cells_limit} (value × strat) cells — a column is "
+            "not actually categorical (ids? free text?); drop it or "
+            "raise cat_cells_limit explicitly"
+        )
+    # sanitization-collision detection (SURVEY Q9): more than one raw
+    # value mapping onto one cleaned value means categories silently
+    # merged ("a b" ≡ "a_b"; distinct non-ASCII runs ≡ "?"); the null raw
+    # value is not counted
+    collided = sorted(s for s, k in nraw.items() if k > 1)
+    if collided:
+        warnings.warn(
+            f"strat sanitization merged distinct raw values into "
+            f"{collided} (spaces→'_', non-ASCII→'?'; reference "
+            ":89-92 semantics, SURVEY Q9)",
+            stacklevel=3,
+        )
 
+    # ---- every continuous statistic -------------------------------------
+    if not cont_vars:
+        stats = {}
+    elif spread:
+        cont_cells = g.where(F.col("t1_var") < n_cont).drop("t1_s")
+        stats = run_spread(cont_cells, stratified, interpolated, weighted)
+    else:
+        stats = {
+            key: _cont_stat(_summary(xs, w), _ranked(xs, _cum(w), interpolated), weighted)
+            for key, xs, w in _groups(cont, stratified)
+        }
+    # an all-NULL (var, strat) group has no cells
+    groups = [None, *out.strat_counts]
+    for i, v in enumerate(cont_vars):
+        out.cont[v] = {s: stats.get((i, s), _EMPTY) for s in groups}
     return out

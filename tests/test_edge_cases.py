@@ -96,6 +96,16 @@ def test_duplicate_analyze_columns(spark):
     assert rows[(2.1, "n")]["All_Patients"] == 2.0
 
 
+def test_duplicate_categorical_columns_count_once(spark):
+    # the same categorical column twice: two blocks, each counting every
+    # row once (not twice)
+    df = spark.createDataFrame([("a",), ("a",), ("b",)], "c string")
+    rows = rows_by_index(tableone(df, cols_to_analyze=["c", "c"]))
+    assert rows[(1.01, "a")]["All_Patients"] == 2
+    assert rows[(2.01, "a")]["All_Patients"] == 2
+    assert rows[(2.02, "b")]["All_Patients"] == 1
+
+
 def test_weighted_all_rows_excluded_degenerates_gracefully(spark):
     """Every weight null/non-positive: total row 0.0, continuous n=0,
     no category rows (nothing observed), no crash — same shape as an

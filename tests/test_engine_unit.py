@@ -614,12 +614,15 @@ _SPREAD_ROWS = [
 def test_distributed_quartiles_equal_driver_kernel(
     spark, mode, weighted, rows, stratified
 ):
-    """Past cat_cells_limit the exact quartiles run distributed
-    (range partitions ranked by mapInArrow) instead of on the driver;
-    both give the same table, bit for bit. With AQE's partition
-    coalescing off, the spread rows land in several range partitions,
-    so targets fall past the first partition and the per-partition
-    offsets matter."""
+    """Past cat_cells_limit the continuous statistics run distributed
+    (range partitions summarized and ranked by mapInArrow) instead of on
+    the driver. Both give the same counts, n, min, max and quartiles,
+    bit for bit; the mean and stddev, merged over partitions by Chan et
+    al.'s update instead of summed in one pass, agree to 1e-12 relative.
+    With AQE's partition coalescing off, the spread rows land in several
+    range partitions, so targets fall past the first partition, the
+    per-partition offsets matter and the moments merge across
+    partitions."""
     from tableone_pyspark_spark import TableOneConfig
 
     df = spark.createDataFrame(rows, "s string, x double, w double")
@@ -638,9 +641,19 @@ def test_distributed_quartiles_equal_driver_kernel(
         )
     finally:
         spark.conf.set(key, old)
-    a = sorted(repr(r) for r in driver.collect())
-    b = sorted(repr(r) for r in spread.collect())
-    assert len(a) == 9 and a == b
+    a, b = rows_by_index(driver), rows_by_index(spread)
+    assert len(a) == 9 and a.keys() == b.keys()
+    for key, row in a.items():
+        assert row.keys() == b[key].keys()
+        for col, got in b[key].items():
+            want = row[col]
+            if key[1] in ("mean", "stddev") and isinstance(want, float):
+                assert isinstance(got, float), (key, col, got, want)
+                assert (math.isnan(want) and math.isnan(got)) or math.isclose(
+                    got, want, rel_tol=1e-12, abs_tol=0.0
+                ), (key, col, got, want)
+            else:
+                assert repr(got) == repr(want), (key, col, got, want)
 
 
 def test_cat_cells_limit_raises_for_categorical_cells(spark):
@@ -652,6 +665,22 @@ def test_cat_cells_limit_raises_for_categorical_cells(spark):
     with pytest.raises(ValueError, match="cat_cells_limit"):
         tableone(df, cols_to_analyze=["c", "x"],
                  config=TableOneConfig(cat_cells_limit=10))
+
+
+def test_strat_cardinality_limit_raises(spark):
+    """The strat-count cells name every stratum: more than
+    strat_cardinality_limit raises, also when the cells overflow
+    cat_cells_limit (the strat error is the one that names the cause)."""
+    from tableone_pyspark_spark import TableOneConfig
+
+    df = spark.createDataFrame([(f"s{i}", float(i)) for i in range(5)], "g string, x double")
+    for cfg in (TableOneConfig(strat_cardinality_limit=4),
+                TableOneConfig(strat_cardinality_limit=4, cat_cells_limit=3)):
+        with pytest.raises(ValueError, match="strat_cardinality_limit"):
+            tableone(df, col_to_strat="g", cols_to_analyze=["x"], config=cfg)
+    out = tableone(df, col_to_strat="g", cols_to_analyze=["x"],
+                   config=TableOneConfig(strat_cardinality_limit=5))
+    assert "s4" in out.columns
 
 
 def test_weighted_tableone_rejects_bad_weight_col(spark):
@@ -727,7 +756,9 @@ def test_output_types_weighted_categorical_double_counts(spark):
 def test_output_types_decimal_column_double_counts(spark):
     """Decimal input: every statistic comes back as a float. Stratum b
     is all-null (n 0.0, the rest None); MISSING holds one value, so its
-    stddev is None. Spark's decimal avg keeps 6 fractional digits."""
+    stddev is None. The mean is the double mean of the values cast to
+    double, as DuckDB's avg of a decimal; Spark's decimal avg would keep
+    only 6 fractional digits (2.666667)."""
     from decimal import Decimal as D
 
     df = spark.createDataFrame(
@@ -742,7 +773,7 @@ def test_output_types_decimal_column_double_counts(spark):
         ("n", 4.0, 3.0, 0.0, 1.0),
         ("min", 1.5, 1.5, None, 3.25),
         ("max", 4.0, 4.0, None, 3.25),
-        ("mean", 2.8125, 2.666667, None, 3.25),
+        ("mean", 2.8125, 8 / 3, None, 3.25),
         ("stddev", sd_all, sd_a, None, None),
         ("25th percentile", 1.5, 1.5, None, 3.25),
         ("50th percentile", 2.5, 2.5, None, 3.25),
@@ -759,8 +790,8 @@ def test_output_types_decimal_column_double_counts(spark):
 @pytest.mark.parametrize("n_strata", [2, 3], ids=["t-test", "anova"])
 def test_decimal_column_p_values(spark, n_strata):
     """p-values on a decimal column equal those of the same column cast
-    to double, up to the 6 fractional digits Spark's decimal avg keeps
-    (the t-test for 2 strata, the ANOVA for 3)."""
+    to double, exactly: every moment comes from the values cast to
+    double (the t-test for 2 strata, the ANOVA for 3)."""
     from decimal import Decimal as D
 
     from pyspark.sql import functions as F
@@ -777,8 +808,8 @@ def test_decimal_column_p_values(spark, n_strata):
     )[(1.1, "n")]
     assert got["test_name"] == want["test_name"] == ("t-test", "ANOVA")[n_strata - 2]
     assert 0.0 < got["p_value"] < 1.0
-    assert got["p_value"] == pytest.approx(want["p_value"], rel=1e-5)
-    assert got["test_value"] == pytest.approx(want["test_value"], rel=1e-5)
+    assert got["p_value"] == want["p_value"]
+    assert got["test_value"] == want["test_value"]
 
 
 def test_output_types_beautify_layout(spark):

@@ -25,18 +25,71 @@ def lineitem(spark):
     return spark.read.parquet(f"{SF}/lineitem.parquet")
 
 
-def test_sufficient_stats_scan_pruning(lineitem):
-    # the rollup job must read ONLY the analyzed + strat columns
-    from tableone_pyspark_spark.core.sanitize import clean_strat_col
-    from tableone_pyspark_spark.core.sufficient import STRAT, _moment_aggs
+def test_sufficient_stats_scan_pruning(lineitem, monkeypatch):
+    """The engine's one cell aggregation: the frame it collects reads
+    ONE parquet scan, pruned to the analyzed + strat columns, and
+    shuffles once, by hash, with the partial aggregate below that
+    exchange (the melt compresses map-side before anything moves)."""
+    import re
 
-    work = lineitem.select(
-        F.col("l_quantity"), clean_strat_col("l_returnflag").alias(STRAT)
+    from tableone_pyspark_spark import tableone
+
+    collected = []
+    to_arrow = type(lineitem).toArrow
+
+    def spy(self, *args, **kwargs):
+        collected.append(self)
+        return to_arrow(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(lineitem), "toArrow", spy)
+    tableone(
+        lineitem, col_to_strat="l_returnflag",
+        cols_to_analyze=["l_linestatus", "l_quantity", "l_discount"],
     )
-    plan = work.rollup(STRAT).agg(*_moment_aggs(["l_quantity"]))
-    inspect.assert_scan_pruned(plan, {"l_quantity", "l_returnflag"})
-    facts = inspect.plan_facts(plan)
-    assert facts.n_exchanges == 1  # exactly one shuffle: partial → final agg
+    assert len(collected) == 1
+    cells = collected[0]
+    assert inspect.scan_columns(cells) == [
+        {"l_linestatus", "l_quantity", "l_discount", "l_returnflag"}
+    ]
+    # an executed adaptive plan prints its final and initial plans
+    plan = inspect.executed_plan(cells).split("== Initial Plan ==")[-1]
+    assert plan.count("FileScan") == 1, plan
+    exchanges = re.findall(r"Exchange (\w+)", plan)
+    assert exchanges == ["hashpartitioning"], plan
+    # the tree string lists parents first: the partial aggregate follows
+    # (sits below) the exchange
+    exchange = plan.index("Exchange hashpartitioning")
+    assert "partial_count" in plan[exchange:], plan
+    assert "partial_count" not in plan[:exchange], plan
+
+
+def test_tableone_call_runs_at_most_three_spark_jobs(spark, lineitem):
+    """A stratified call over continuous and categorical variables runs
+    one aggregation: its shuffle map stage and its collect, at most 3
+    Spark jobs. The jobs run in the caller's thread, so the caller's
+    job group attributes them; a job run afterwards under a second
+    group is the control that the tracker has seen them all."""
+    from tableone_pyspark_spark import tableone
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("tableone-call", "one stratified tableone call")
+        tableone(
+            lineitem, col_to_strat="l_returnflag",
+            cols_to_analyze=["l_linestatus", "l_quantity", "l_extendedprice"],
+            p_values=True,
+        )
+        sc.setJobGroup("tableone-call-control", "a job that must show up")
+        spark.range(10).selectExpr("sum(id)").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("tableone-call-control"):
+        assert time.monotonic() < deadline, "control job never reached the tracker"
+        time.sleep(0.05)
+    assert 1 <= len(tracker.getJobIdsForGroup("tableone-call")) <= 3
 
 
 def test_categorical_melt_single_shuffle(lineitem):
