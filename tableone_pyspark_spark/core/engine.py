@@ -76,11 +76,14 @@ _NUMERIC = (
     T.DecimalType,  # deviation: reference dtype-string match misses decimal
 )
 
+#: category rows sit at Index idx + rank·0.01, so a variable's 100th
+#: category reaches the next variable's Index; warn from there (Q10)
+INDEX_COLLISION_CATEGORIES = 100
+
 
 @dataclass(frozen=True)
 class TableOneConfig:
-    """Engine knobs: the quartile semantics, two scale guards and a
-    warning threshold."""
+    """Engine knobs: the quartile semantics and two scale guards."""
 
     #: driver-collect guard on the one cell frame. Past it, the
     #: categorical and strat-count cells — Σ (category cardinality ×
@@ -93,8 +96,6 @@ class TableOneConfig:
     #: output schema grows 2 columns per distinct strat value; fail fast
     #: beyond this rather than building a 100k-column table.
     strat_cardinality_limit: int = 1_000
-    #: warn when a variable has ≥100 categories (Index collision, Q10)
-    index_collision_warn: int = 100
     #: quartile semantics, exact in both modes and for every variable,
     #: from the distinct-value cells: "data" = an actual data value
     #: (quantile_disc — what the reference's exactness-tuned quantile
@@ -214,7 +215,6 @@ def tableone(
         analyzed,
         beautify=beautify,
         p_values=p_values,
-        cfg=cfg,
         weighted=weight_col is not None,
     )
 
@@ -231,7 +231,6 @@ def _assemble(
     analyzed: list[tuple[str, str]],
     beautify: bool,
     p_values: bool,
-    cfg: TableOneConfig,
     weighted: bool = False,
 ) -> DataFrame:
     stratified = col_to_strat != ""
@@ -275,7 +274,7 @@ def _assemble(
             rows.extend(
                 _cat_rows(
                     col_i, idx, suff, strat_vals, denom, col_to_strat,
-                    p_values, cast_count, cfg,
+                    p_values, cast_count,
                 )
             )
         else:
@@ -337,16 +336,16 @@ def _cat_rows(
     col_to_strat: str,
     p_values: bool,
     cast_count,
-    cfg: TableOneConfig,
 ) -> list[dict]:
     counts = suff.cat[col_i]  # (value, strat|None) -> count
     values = sorted(
         {v for (v, _s) in counts}, key=lambda v: (category_order_key(v), v)
     )
-    if len(values) >= cfg.index_collision_warn:
+    if len(values) >= INDEX_COLLISION_CATEGORIES:
         warnings.warn(
             f"{col_i!r} has {len(values)} categories; Index encoding "
-            "collides with the next variable at ≥100 (reference :300)",
+            f"collides with the next variable at ≥{INDEX_COLLISION_CATEGORIES} "
+            "(reference :300)",
             stacklevel=3,
         )
 

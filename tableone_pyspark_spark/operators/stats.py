@@ -2,8 +2,7 @@
 
 These are the engine's operator inventory re-expressed Spark-first
 (reference sites in each docstring). Each returns a DataFrame whose
-column names are stable so the driver's DuckDB oracle can hash-match
-(see ``__spark_entry__.py``). All heavy computation happens in one
+column names are stable. All heavy computation happens in one
 aggregation pass; post-aggregation shaping operates on k-row frames.
 """
 
@@ -504,13 +503,6 @@ def correlation_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-#: evidence hook: when set to a callable, exact_percentiles_dist passes
-#: it the final rank-extraction frame right before collecting it, so
-#: scripts/ can dump the distributed plan (the eager fit never appears
-#: in the returned query's explain). No effect when None (production).
-_RANK_PLAN_HOOK = None
-
-
 def exact_percentiles_dist(
     df: DataFrame, col: str, probs: list[float], buckets: int = 256
 ) -> list[float] | None:
@@ -619,10 +611,7 @@ def exact_percentiles_dist(
         F.min(F.when(cum >= F.lit(k), F.col("__x"))).alias(f"__k_{k}")
         for k in sorted(ks)
     ]
-    final = ranked.agg(*aggs)
-    if _RANK_PLAN_HOOK is not None:
-        _RANK_PLAN_HOOK(final)
-    row = final.collect()[0]
+    row = ranked.agg(*aggs).collect()[0]
 
     out: list[float] = []
     for pos, lo_k, hi_k in pos_lh:

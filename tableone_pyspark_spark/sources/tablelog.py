@@ -2919,7 +2919,7 @@ def clone(
 #: Hadoop loop — at 100 TB a compaction-churned table reclaims
 #: millions of files per vacuum, and one driver RPC per file is
 #: hours on an object store (10-100 ms per DELETE). Measured on
-#: LOCAL fs (scale_check_r15b): 1500 deletes = 1.9 s driver-serial
+#: LOCAL fs (a one-off scale probe): 1500 deletes = 1.9 s driver-serial
 #: vs 5.8 s as a job — local unlink is ~1 ms, so the local crossover
 #: sits near ~10k files; object-store round-trips cross over far
 #: earlier. The default is sized for the local measurement (the
@@ -3931,7 +3931,7 @@ def last_committed_batch(
     # the checkpoint is consulted LAZILY only on a tail miss (the
     # sidecar-less cold start), where its watermark map answers in one
     # read instead of a walk to the log root (X139; the eager variant
-    # measurably REGRESSED the hot path in scale_check_r13)
+    # measurably REGRESSED the hot path in a scale probe)
     ck = max((n for n in cks if n <= cur), default=None)
     hi_floor = floor_version if ck is None else max(floor_version, ck)
     for v in range(cur, hi_floor, -1):

@@ -356,14 +356,19 @@ def test_strat_values_naming_duplicate_columns_raise(spark):
 
 def test_index_collision_warns(spark):
     """SURVEY Q10: >=100 categories in one variable warns (fractional
-    Index would collide with the next variable)."""
-    df = spark.createDataFrame(
-        [(f"cat_{i:03d}",) for i in range(105)], "c string"
-    )
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        tableone(df, cols_to_analyze=["c"]).collect()
-    assert any("categories" in str(x.message) for x in w)
+    Index would collide with the next variable): 105 and 100 warn, 99
+    (Index up to idx + 0.99) does not."""
+
+    def warns(n: int) -> bool:
+        df = spark.createDataFrame([(f"cat_{i:03d}",) for i in range(n)], "c string")
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            tableone(df, cols_to_analyze=["c"]).collect()
+        return any("categories" in str(x.message) for x in w)
+
+    assert warns(105)
+    assert warns(100)
+    assert not warns(99)
 
 
 def test_near_unique_quartiles_exact_past_100k_rows(spark, tmp_path):
