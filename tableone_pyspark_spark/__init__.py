@@ -24,8 +24,9 @@ Design (vs. reference):
   * The returned table is built on the driver as an Arrow table: a
     ``LocalTableScan`` whose ``collect()`` runs no Spark job.
   * Hypothesis tests (t / ANOVA / chi-square) are computed from those
-    same collected aggregates; scipy is used only for tail
-    probabilities of driver-side scalars.
+    same collected aggregates. Their tail probabilities come from the
+    engine's own incomplete beta / gamma functions (``core/special.py``);
+    scipy is not required, and is used instead only when importable.
   * No ``repartition(1)`` (13 sites in the reference), no pandas
     round-trips, no per-stat joins.
 """

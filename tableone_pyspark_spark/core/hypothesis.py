@@ -3,8 +3,10 @@
 The reference (tableone_pyspark.py:445-528) pulls entire analyzed
 columns to the driver via ``toPandas`` and runs scipy on raw data. At
 100 TB that is impossible; here every test consumes only the per-group
-aggregates the engine already collected (k scalar rows), and scipy is
-used solely for tail probabilities of driver-side scalars.
+aggregates the engine already collected (k scalar rows). The tail
+probabilities of those driver-side scalars come from ``core/special.py``
+(regularized incomplete beta / gamma); scipy is not required, and when
+it is importable ``scipy.stats`` replaces those functions.
 
 Semantics preserved (SURVEY §2.8, Appendix):
   * 2 strat groups  -> Student's t-test, equal variance (NOT Welch;

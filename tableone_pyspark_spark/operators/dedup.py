@@ -630,10 +630,10 @@ def select_representatives(
         # coalesce or cluster join) and row_number()==1 silently drops
         # all but one — and a duplicated CLUSTER-MAP id silently
         # duplicates its df row via join fanout. Both break the
-        # "exactly df's surviving rows" contract, so both raise (the
-        # snapshot_diff duplicate-key convention). The count window
-        # partitions on the already-gated output attribute and the
-        # gate rides the consumed id column — never optimizer-pruned.
+        # "exactly df's surviving rows" contract, so both raise. The
+        # count window
+        # partitions on the already-gated output attribute and the gate
+        # rides the consumed id column — never optimizer-pruned.
         dup = F.count(F.lit(1)).over(Window.partitionBy(col))
         return frame.withColumn(
             col,
@@ -642,7 +642,7 @@ def select_representatives(
                     # concat_ws, not concat: a duplicated NULL id in
                     # the (ungated) clusters map would turn a concat
                     # message into NULL and raise contentless
-                    # (self-review r12; the snapshot_diff convention)
+                    # (self-review r12)
                     F.concat_ws(
                         "",
                         F.lit(
@@ -665,9 +665,8 @@ def select_representatives(
     )
     # NULL ids RAISE mid-plan: the fallback cluster key below is the id
     # itself, so all NULL-id rows would silently collapse into ONE
-    # window partition and lose all but one row (self-review r11; the
-    # snapshot_diff NULL-key convention) — the gate rides the consumed
-    # id column and cannot be pruned
+    # window partition and lose all but one row (self-review r11) — the
+    # gate rides the consumed id column and cannot be pruned
     guarded = df.withColumn(
         id_col,
         F.when(F.col(id_col).isNotNull(), F.col(id_col)).otherwise(

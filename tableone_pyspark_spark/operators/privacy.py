@@ -23,7 +23,7 @@ distinct semantics): withholding the sensitive value contributes no
 diversity.
 
 No counterpart in the reference repo; extends the governance family
-(pii_profile / expect constraint suite / leakage-safe splits).
+(pii_profile / leakage-safe splits).
 """
 
 from __future__ import annotations

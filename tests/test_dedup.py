@@ -355,7 +355,7 @@ def test_select_representatives_duplicate_id_raises(spark):
     """ADVICE r11: duplicate df ids fell into one window partition and
     row_number()==1 silently dropped all but one (and a duplicated
     cluster-map id silently DUPLICATED its row via join fanout) — both
-    raise now, mirroring snapshot_diff's duplicate-key convention."""
+    raise now."""
     import pytest as _pytest
     from pyspark.errors import SparkRuntimeException
 
