@@ -18,9 +18,6 @@ travel, and an auditable history without a table-format dependency.
 
     append    : new version = previous files + this commit's files
     overwrite : new version = this commit's files only
-    apply     : overwrite with apply_cdc(current, changes) — the
-                upsert/delete path; composes with snapshot_diff for
-                incremental propagation between versioned tables
     optimize  : content-identical overwrite into ~target-sized files
                 (the small-files repair, r12); materializes deletion
                 vectors
@@ -32,15 +29,11 @@ travel, and an auditable history without a table-format dependency.
                 positions in a DELETION VECTOR instead of rewriting
                 files (r12 — Delta DVs / Iceberg positional deletes);
                 readers subtract them with one anti-join, appends
-                carry them forward, optimize folds them in, the
-                change feed emits them as D rows
+                carry them forward, optimize folds them in
     merge     : merge_rows(source, keys) — MERGE INTO with deletion
                 vectors (r14 — Delta's DV-backed MERGE): matched
                 target rows retracted by position, postimages/inserts
-                appended, ONE published version; the change feed
-                delivers the exact delete+insert pair, so keyed
-                upserts stream end-to-end (the overwrite refusal now
-                applies only to keyless rewrites)
+                appended, ONE published version
 
 Scale story: ALL bookkeeping is driver-side and metadata-sized (file
 path lists in JSON); data moves executor-side through ordinary
@@ -60,8 +53,8 @@ binding fall back to checked ``FileSystem.rename`` and object stores
 still need their conditional-put equivalent.
 
 No counterpart in the reference repo; completes the storage family
-(write_table / bucketing / z-order / compaction / CDC / snapshot
-diff) with the versioning glue.
+(write_table / bucketing / z-order / compaction) with the versioning
+glue.
 """
 
 from __future__ import annotations
@@ -76,13 +69,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tableone_pyspark_spark.sources.log_delta import version_delta
 
 _log = logging.getLogger(__name__)
 
 #: per-table auto-checkpoint failure counts (observability, ADVICE
 #: r13): a persistently failing advisory checkpoint silently degrades
-#: history()/stream planning back to O(versions) forever — the commit
+#: history() back to O(versions) forever — the commit
 #: stays non-failing, but each failure now logs a warning and bumps
 #: this counter so a permanently broken accelerator is visible.
 #: Guarded by a lock (multi-threaded drivers commit concurrently);
@@ -107,6 +99,21 @@ def _fs(spark: SparkSession, path: str):
 
 def _path(spark: SparkSession, path: str):
     return spark._jvm.org.apache.hadoop.fs.Path(path)
+
+
+def _pa_fs(path: str):
+    """A pyarrow filesystem and in-filesystem path for ``path``, for
+    executor-side code that has no JVM: ``file:`` URIs and plain paths
+    map to the local filesystem, other schemes go to ``from_uri``."""
+    from urllib.parse import unquote, urlparse
+
+    from pyarrow import fs as pafs
+
+    if path.startswith("file:"):
+        return pafs.LocalFileSystem(), unquote(urlparse(path).path)
+    if "://" in path:
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), path
 
 
 def _read_json(spark: SparkSession, path: str) -> dict:
@@ -197,8 +204,7 @@ WRITER_FEATURES = READER_FEATURES | frozenset(
 #: types that embed exactly in a double's 53-bit mantissa. bigint→
 #: double is NOT here (loses precision past 2^53); nothing ever
 #: narrows. Old files keep their narrow physical type — Spark 4's
-#: parquet reader promotes natively, the Python DataSource casts the
-#: arrow batches (stream_source._column_or_nulls).
+#: parquet reader promotes them natively.
 _WIDENINGS = {
     "tinyint": ("smallint", "int", "bigint", "double"),
     "smallint": ("int", "bigint", "double"),
@@ -490,8 +496,7 @@ def _publish(
     if widened:
         doc["widened"] = widened
     if schema_change:
-        # X157 — a rename/drop version announces itself so range
-        # readers (table_changes) can refuse spanning it loudly
+        # X157 — a rename/drop version announces itself in the log
         doc["schema_change"] = schema_change
     if identity:
         doc["identity"] = identity
@@ -556,8 +561,8 @@ def _publish(
         except Exception as e:  # noqa: BLE001
             # keep the commit non-failing, but make a permanently
             # broken accelerator OBSERVABLE (ADVICE r13): without a
-            # checkpoint, history()/last_committed_batch/fresh-stream
-            # planning silently degrade to O(versions) doc walks
+            # checkpoint, history()/last_committed_batch silently
+            # degrade to O(versions) doc walks
             with _ck_failures_lock:
                 checkpoint_failures[table] = (
                     checkpoint_failures.get(table, 0) + 1
@@ -673,8 +678,6 @@ def _widened_struct(schema_json: str):
             return ArrayType(widen(dt.elementType), True)
         if isinstance(dt, MapType):
             # keys widen too (nested struct-typed keys carry fields)
-            # — keep byte-parity with stream_source._widened so the
-            # two read paths can never disagree (review r15)
             return MapType(widen(dt.keyType), widen(dt.valueType), True)
         return dt
 
@@ -1436,7 +1439,6 @@ def commit(
     stats_cols: list[str] | None = None,
     merge_schema: bool = False,
     user_metadata: str | None = None,
-    _audit=None,
 ) -> dict:
     """Write ``df`` as the table's next version. ``append`` keeps the
     previous version's files live alongside the new ones;
@@ -1453,7 +1455,7 @@ def commit(
     derived from: the commit publishes to exactly ``expected_base+1``,
     so a concurrent commit in between raises :class:`CommitConflict`
     instead of silently clobbering it (read-modify-write callers MUST
-    pass it — :func:`apply_changes` does).
+    pass it).
 
     Concurrency (X148, Delta's conflict matrix): a BLIND append (no
     ``expected_base``) that loses the slot race REBASES automatically
@@ -1691,15 +1693,10 @@ def commit(
     )
     _to_physical(df, colmap).write.options(**bloom_opts).parquet(data_dir)
     new_files = _list_parquet(spark, data_dir)
-    if _audit is not None and new_files:
-        # write-audit-publish seam (commit_audited): raising here
-        # leaves the data dir unpublished — invisible to readers,
-        # vacuumed like any loser's dir. The audit sees LOGICAL names
-        # (X157 — audit expectations are user code)
-        _audit(_read_files(spark, new_files, schema_json, colmap))
-    # X149: persisted CHECK constraints gate every write path the same
-    # way the audit seam does — new rows only (restore/optimize never
-    # re-validate: their rows passed at write time, Delta's rule)
+    # X149: persisted CHECK constraints gate every write path — new
+    # rows only (restore/optimize never re-validate: their rows passed
+    # at write time, Delta's rule); a raise leaves the data dir
+    # unpublished, vacuumed like any loser's dir
     _enforce_constraints(
         spark, tbl_constraints, new_files, table, mode,
         schema_json=schema_json, colmap=colmap,
@@ -2288,21 +2285,8 @@ def merge_rows(
     non-deterministic — the Delta multiple-source-match error);
     NULL-keyed source rows follow SQL MERGE non-match semantics (NULL
     never equals anything): inserted under ``'insert'``, dropped under
-    ``'ignore'`` — documented, same as :func:`apply_changes`. The
-    source schema must match the table's (name/type shape, like
-    append — no silent evolution).
-
-    Downstream composition is the point: the CHANGE FEED delivers a
-    merge version as positional ``delete`` rows (exact preimages) plus
-    ``insert`` rows in one version — both the batch
-    :func:`table_changes` and the X140 streaming feed — so the X134
-    incremental MV and the X142 streaming MV absorb keyed upserts
-    WITHOUT key configuration (keyless overwrites also flow since
-    X146 — ``keys=`` is now purely the change-sized-diff upgrade for
-    overwrites). Streams reading the table itself refuse
-    a merge unless ``ignore_deletes`` (the retraction cannot be
-    expressed in an append stream; the new files then deliver
-    at-least-once like Delta's ignoreChanges).
+    ``'ignore'``. The source schema must match the table's (name/type
+    shape, like append — no silent evolution).
 
     Race safety (X162): the publish targets base+1 (CREATE-exclusive
     slot); a race lost to BLIND APPENDS rebases onto the new head
@@ -2413,9 +2397,8 @@ def merge_rows(
     else:
         live_keys = source.select(*keys).limit(0)
     # postimages and fresh inserts land in SEPARATE data dirs (r15):
-    # the version doc records which files are update postimages, so
-    # the change feed can label them update_postimage (Delta's CDF
-    # change types) instead of bare inserts. Both writes stay
+    # the version doc records which files are update postimages
+    # (Delta's CDF change types) rather than bare inserts. Both writes stay
     # change-sized; a side that contributes nothing writes nothing.
     cm = _colmap(doc)  # X157: appended files store physical names
     bloom_opts = _bloom_write_options(
@@ -2565,14 +2548,51 @@ CHECKPOINT_EVERY = 10
 #: embed (None) re-creates ADVICE r13's quadratic cumulative metadata
 #: growth once a table accumulates tens of thousands of versions.
 #: Consumers degrade transparently, never wrongly: :func:`history`
-#: doc-walks the versions below the retained window, and a fresh
-#: stream whose starting_version predates the window falls back to
-#: the doc walk (KeyError -> full walk in
-#: ``stream_source._version_rows``) — and a 1000-version-deep replay
-#: start is the rare path by construction. Watermarks are NOT bounded
-#: — the per-stream map is O(streams), already compact. Set to None
-#: for the old unbounded embed.
+#: doc-walks the versions below the retained window. Watermarks are
+#: NOT bounded — the per-stream map is O(streams), already compact.
+#: Set to None for the old unbounded embed.
 CHECKPOINT_HISTORY: int | None = 1000
+
+
+def _version_delta(
+    version: int,
+    mode: str,
+    files: list[str],
+    dv: list[str],
+    prev_files: set[str],
+    prev_dv: set[str],
+) -> tuple[list[str], list[str], list[str]]:
+    """(new_files, dv_new, snapshot_dv) for one committed version — the
+    per-version delta a checkpoint's history rows record.
+
+    ``new_files``: the data files the version added — for ``append``
+    and ``merge`` the files not in the previous version; for
+    ``overwrite`` the WHOLE list, never a prev-diff (``restore()``
+    re-publishes OLD paths, so a diff would be empty); for ``delete``
+    none (a deletion-vector version keeps the same live files).
+    ``dv_new``: the deletion-vector files first published at this
+    version (``delete`` and ``merge``). ``snapshot_dv``: the vectors a
+    snapshot of this version must mask — non-empty only for v0 or an
+    overwrite that carries vectors (clone()/restore() publishes).
+    """
+    if mode == "delete":
+        new_files: list[str] = []
+        dv_new = [f for f in dv if f not in prev_dv]
+    elif mode == "overwrite":
+        new_files = list(files)
+        dv_new = []
+    elif mode == "merge":
+        # both deltas: appended postimage/insert files AND the new
+        # vectors naming the matched preimages (matched against the
+        # pre-merge view, so the vectors never name this version's
+        # own new files)
+        new_files = [f for f in files if f not in prev_files]
+        dv_new = [f for f in dv if f not in prev_dv]
+    else:
+        new_files = [f for f in files if f not in prev_files]
+        dv_new = []
+    snapshot_dv = list(dv) if dv and (version == 0 or mode == "overwrite") else []
+    return new_files, dv_new, snapshot_dv
 
 
 def _checkpoint_path(table: str, version: int) -> str:
@@ -2583,8 +2603,7 @@ def _shape_rows(schema_json: str) -> list:
     """Per-field [name, simpleString-type] rows for checkpoint history
     — the SAME canonicalization as the writer's _schema_shape contract
     (nullability ignored at EVERY nesting level: a json-level type
-    compare embeds nested nullability that parquet read-back widens,
-    spuriously failing streams over logs the writer itself accepts —
+    compare embeds nested nullability that parquet read-back widens —
     review r13). pyspark.sql.types is pure Python, no JVM needed."""
     return [list(pair) for pair in _schema_shape(schema_json)]
 
@@ -2609,10 +2628,9 @@ def write_checkpoint(
     JSON snapshot carrying (a) the version's full state (files / dv /
     stats / schema / mode), (b) compact per-version history rows
     v0..V — mode, committed_at, n_files, batch/stream ids, the
-    pyspark-free schema shape, and the version's NEW-file delta (what
-    a streaming read of that version delivers), and (c) the
-    per-stream watermark map. Log-walking readers (:func:`history`, a
-    fresh stream's first batch in ``sources/stream_source.py``,
+    pyspark-free schema shape, and the version's NEW-file delta
+    (:func:`_version_delta`), and (c) the
+    per-stream watermark map. Log-walking readers (:func:`history`,
     :func:`last_committed_batch`'s fallback scan) start at the latest
     checkpoint and read only the tail — O(versions since checkpoint)
     doc reads instead of O(versions).
@@ -2668,11 +2686,7 @@ def write_checkpoint(
         doc = _version_doc(spark, table, vv)
         files = doc["files"]
         dv = doc.get("dv") or []
-        # the ONE derivation shared with the stream planner's doc walk
-        # (sources/log_delta.py — ADVICE r13); the stream's checkpoint
-        # head decode copies these fields verbatim, so checkpoint-
-        # planned and doc-walked streams can never desync
-        new_files, dv_new, snap_dv = version_delta(
+        new_files, dv_new, snap_dv = _version_delta(
             vv, doc["mode"], files, dv, prev_files, prev_dv
         )
         shape = _shape_rows(doc["schema"])
@@ -2693,8 +2707,7 @@ def write_checkpoint(
             # checkpoint compacts the version (review r15)
             row["user_metadata"] = doc["user_metadata"]
         if dv_new:
-            # a delete version's NEW vector files — the change feed's
-            # delete delivery (stream_source X140) plans from these
+            # a delete version's NEW vector files
             row["dv_new"] = dv_new
         if snap_dv:
             # a shallow CLONE's v0 — or a RESTORE-published overwrite —
@@ -2758,7 +2771,7 @@ def _load_ck_history(ckdoc: dict) -> tuple[list, list]:
     """(history rows, shapes table) from a checkpoint doc, normalized
     to the deduped ``shape_id`` form — old-format rows (inline
     ``shape``, pre-r14) are interned on load so the incremental
-    builder and the stream planner see ONE format. Handles MIXED docs
+    builder sees ONE format. Handles MIXED docs
     too (a pre-r14 writer extending a new-format doc appends inline
     rows after shape_id rows): the doc's ``shapes`` table seeds the
     intern map FIRST, so surviving shape_id rows keep resolving
@@ -2944,8 +2957,8 @@ def convert_parquet(
     parquet directory as version 0 of a NEW versioned table WITHOUT
     copying data — one metadata doc referencing the files in place,
     whatever the dataset size. The entry ramp: a 100 TB parquet lake
-    gains time travel, optimistic concurrency, deletion vectors,
-    MERGE, and the change feed with zero data movement; later commits
+    gains time travel, optimistic concurrency, deletion vectors and
+    MERGE with zero data movement; later commits
     write into the table's OWN data dirs and (the clone rule) the
     table's :func:`vacuum` can never delete the converted source
     files — its sweep walks only table-owned ``data/``/``dv/`` roots.
@@ -2977,8 +2990,6 @@ def convert_parquet(
         import json as _json
 
         import pyarrow.parquet as _pq
-
-        from tableone_pyspark_spark.sources.stream_source import _pa_fs
 
         fsys, pp = _pa_fs(p)
         with fsys.open_input_file(pp) as fh:
@@ -3049,7 +3060,7 @@ def set_constraint(
     future commit's failure message lie about whose rows are bad.
     Setting an existing ``name`` replaces its expression (after the
     same validation). The publish is a files-unchanged ``append``
-    version: streams deliver nothing for it, history shows the
+    version: it adds no data files, history shows the
     metadata commit, OCC applies (a racing writer raises
     :class:`CommitConflict`). Returns the published doc."""
     import re as _re
@@ -3513,10 +3524,7 @@ def rename_column(
     generated column's expression references ``old`` (the expression
     SQL pins the name — Delta's rule; drop the constraint/expression
     first). A generated column being renamed ITSELF just re-keys its
-    entry. Downstream boundaries, both Delta-parity: ``table_changes``
-    refuses a range SPANNING the rename version (split there — the
-    rename version changes no rows), and streams pinned before it
-    refuse at delivery (restart at/after the rename)."""
+    entry."""
     if not new or "`" in new:
         raise ValueError(f"invalid column name {new!r}")
     cur = current_version(spark, table)
@@ -3608,9 +3616,7 @@ def drop_column(spark: SparkSession, table: str, col: str) -> dict:
     column drops its expression with it (Delta's rule); a column
     referenced by a CHECK constraint or another generated expression
     refuses — drop those first. Old versions still time-travel with
-    the column (each doc pins its own schema). The same
-    ``table_changes``/stream boundaries as :func:`rename_column`
-    apply."""
+    the column (each doc pins its own schema)."""
     cur = current_version(spark, table)
     if cur is None:
         raise ValueError(f"no such versioned table: {table}")
@@ -4010,277 +4016,6 @@ def _exactly_once_sink(table: str, stream_id: str):
     return sink
 
 
-def _union_additive(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Union change-feed batches across versions whose schemas may
-    differ by an ADDITIVE evolution (X152): columns present on one
-    side only are NULL-filled, but a column whose TYPE differs across
-    the range raises — silently NULL-filling a retyped column would
-    mask a genuinely incompatible overwrite in the middle of the
-    range (the allowMissingColumns hazard) — and unionByName's own
-    implicit coercion (long->double) would widen a same-name retyping
-    just as silently, so types are checked even when the column sets
-    match. The one sanctioned exception (X163): a column whose types
-    differ by a LOSSLESS widening casts the narrow side up — a
-    change-feed range spanning a type-widening commit delivers at the
-    wide type, exactly what a consumer replaying onto the widened
-    table wants."""
-    ta = {f.name: f.dataType.simpleString() for f in a.schema.fields}
-    tb = {f.name: f.dataType.simpleString() for f in b.schema.fields}
-    diffs = sorted(
-        (c, ta[c], tb[c]) for c in set(ta) & set(tb) if ta[c] != tb[c]
-    )
-    conflicts = []
-    for c, t_a, t_b in diffs:
-        if _is_widening(t_a, t_b):
-            a = a.withColumn(c, F.col(f"`{c}`").cast(t_b))
-        elif _is_widening(t_b, t_a):
-            b = b.withColumn(c, F.col(f"`{c}`").cast(t_a))
-        else:
-            conflicts.append((c, t_a, t_b))
-    if conflicts:
-        raise ValueError(
-            f"table_changes range spans a column TYPE change "
-            f"{conflicts} — split the range at the retyping version"
-        )
-    if a.columns == b.columns:
-        return a.unionByName(b)
-    return a.unionByName(b, allowMissingColumns=True)
-
-
-def table_changes(
-    spark: SparkSession,
-    table: str,
-    from_version: int,
-    to_version: int | None = None,
-    keys: list[str] | None = None,
-    op_col: str = "op",
-    version_col: str = "commit_version",
-    include_preimage: bool = False,
-) -> DataFrame:
-    """Change data feed (Delta CDF's ``table_changes``): every row
-    change between ``from_version`` (exclusive) and ``to_version``
-    (inclusive, default latest) with an op and the commit version —
-    what an incremental downstream consumer reads instead of
-    re-scanning snapshots.
-
-        append commit    : its NEW files read directly, op 'I' — no
-                           diff computation at all (the common path)
-        overwrite commit : with ``keys`` — ``snapshot_diff`` of the
-                           two adjacent versions (row-identity
-                           updates, change-sized when few rows
-                           moved); WITHOUT keys (X146's batch half) —
-                           the previous live view as 'D' + the new
-                           one as 'I' (Delta's remove-all/add-all
-                           derivation; O(table) change volume,
-                           inherent to a blind overwrite)
-
-    Returns the union across the version range, ordered by nothing
-    (group by ``version_col`` downstream; the per-version chained
-    union collapses to one flat Union via CombineUnions — N footer
-    reads, not an N-deep plan). Vacuumed versions inside the range
-    fail on missing files — consume changes before reclaiming.
-    ``op_col``/``version_col`` must not collide with the table's own
-    columns (checked per version — an append-path withColumn would
-    otherwise silently overwrite real data). ``include_preimage=True``
-    (r12) makes overwrite-version updates arrive as ``U_pre``/
-    ``U_post`` row pairs (append commits emit 'I' either way) — the
-    retractable form :func:`~tableone_pyspark_spark.sources.mv.\
-refresh_aggregate` consumes."""
-    cur = current_version(spark, table)
-    if cur is None:
-        raise ValueError(f"no such versioned table: {table}")
-    hi = cur if to_version is None else to_version
-    if not 0 <= from_version <= hi <= cur:
-        raise ValueError(
-            f"version range [{from_version}, {hi}] not within [0, {cur}]"
-        )
-    out = None
-    prev_doc = None  # carried across iterations — one read per doc
-    for v in range(from_version + 1, hi + 1):
-        doc = _version_doc(spark, table, v)
-        if doc.get("schema_change"):
-            # X157: a rename/drop version inside the range — the
-            # union across it would silently NULL-fill the old name on
-            # one side and the new on the other (the same hazard the
-            # TYPE gate refuses). The rename/drop version itself
-            # changes no rows, so consumers read up to v-1, then
-            # resume from v (Delta blocks CDF over non-additive schema
-            # changes the same way).
-            sc = doc["schema_change"]
-            raise ValueError(
-                f"table_changes range spans a column {sc.get('op')} "
-                f"at version {v} ({sc}) — split the range there: read "
-                f"to_version={v - 1}, then resume from_version={v}"
-            )
-        clash = {op_col, version_col} & {
-            name for name, _ in _schema_shape(doc["schema"])
-        }
-        if clash:
-            raise ValueError(
-                f"version {v}'s columns collide with the feed's output "
-                f"columns {sorted(clash)} — pass different "
-                "op_col/version_col names"
-            )
-        if doc["mode"] == "append":
-            if prev_doc is None:
-                prev_doc = _version_doc(spark, table, v - 1)
-            prev_files = set(prev_doc["files"])
-            new_files = [f for f in doc["files"] if f not in prev_files]
-            if not new_files:
-                prev_doc = doc
-                continue
-            ch = _read_files(
-                spark, new_files, doc["schema"], _colmap(doc)
-            ).withColumn(
-                op_col, F.lit("I")
-            )
-        elif doc["mode"] in ("delete", "merge"):
-            # a deletion-vector version (r12): the change IS the new
-            # vector — D rows are the raw rows at exactly those
-            # (file, position) pairs, no row-identity keys needed.
-            # Positions were matched against the v-1 view, so they
-            # are live-at-v-1 by construction. A MERGE version (X144)
-            # additionally appends postimage/insert files — its feed
-            # is the D rows PLUS those files as I rows, the exact
-            # retract-then-assert pair the mv consumer folds. With
-            # ``include_preimage=True`` an UPDATE-merge whose doc
-            # recorded its postimage files (r15) upgrades the labels
-            # to Delta's CDF change types: retracted matches arrive
-            # as U_pre, their postimage files as U_post, fresh
-            # inserts stay I (pre-r15 merge docs keep D/I — the
-            # metadata is simply absent).
-            if prev_doc is None:
-                prev_doc = _version_doc(spark, table, v - 1)
-            prev_dv = set(prev_doc.get("dv") or [])
-            new_dv = [f for f in doc.get("dv") or [] if f not in prev_dv]
-            prev_files = set(prev_doc["files"])
-            new_files = [f for f in doc["files"] if f not in prev_files]
-            if not new_dv and not new_files:
-                prev_doc = doc
-                continue
-            mm = doc.get("merge") or {}
-            as_update = (
-                include_preimage
-                and mm.get("when_matched") == "update"
-                and "files_post" in mm
-            )
-            ch = None
-            if new_dv:
-                dvdf = _dv_frame(spark, new_dv)
-                # read ONLY the files the vector touches (the distinct
-                # path list is metadata-sized by construction) —
-                # scanning doc["files"] would make the feed O(table)
-                # per delete version and void the change-volume
-                # contract the mv consumer is built on (self-review
-                # r12)
-                touched = [
-                    r[0]
-                    for r in dvdf.select("__dv_fp").distinct().collect()
-                ]
-                # the vector's touched files were live at v-1 and may
-                # predate an additive evolution — the declared-schema
-                # read NULL-fills them (X152)
-                raw = _read_files(
-                    spark, touched, doc["schema"], _colmap(doc)
-                )
-                fp, ri = _dv_cols(raw)
-                ch = (
-                    raw.select("*", fp, ri)
-                    .join(dvdf, ["__dv_fp", "__dv_ri"], "left_semi")
-                    .drop("__dv_fp", "__dv_ri")
-                    .withColumn(
-                        op_col, F.lit("U_pre" if as_update else "D")
-                    )
-                )
-            if new_files:  # only a merge appends alongside vectors
-                if as_update:
-                    post_set = set(mm["files_post"])
-                    post = [f for f in new_files if f in post_set]
-                    rest = [f for f in new_files if f not in post_set]
-                    ins = None
-                    if post:
-                        ins = _read_files(
-                            spark, post, doc["schema"], _colmap(doc)
-                        ).withColumn(op_col, F.lit("U_post"))
-                    if rest:
-                        fresh = _read_files(
-                            spark, rest, doc["schema"], _colmap(doc)
-                        ).withColumn(op_col, F.lit("I"))
-                        ins = (
-                            fresh
-                            if ins is None
-                            else ins.unionByName(fresh)
-                        )
-                else:
-                    ins = _read_files(
-                        spark, new_files, doc["schema"], _colmap(doc)
-                    ).withColumn(op_col, F.lit("I"))
-                ch = ins if ch is None else ch.unionByName(ins)
-        elif not keys:
-            # X146's batch half: a KEYLESS overwrite delivers the
-            # previous live view as 'D' plus the new live view as 'I'
-            # (Delta's remove-all/add-all derivation — no row identity
-            # needed). Change volume is O(table) — inherent to a blind
-            # overwrite, the same contract as the streaming feed; pass
-            # ``keys=`` to upgrade to row-identity diffs (U_pre/U_post
-            # pairs, change-sized when few rows actually moved).
-            ch = _union_additive(
-                read_version(spark, table, v - 1).withColumn(
-                    op_col, F.lit("D")
-                ),
-                read_version(spark, table, v).withColumn(
-                    op_col, F.lit("I")
-                ),
-            )
-        else:
-            from tableone_pyspark_spark.operators.cdc import snapshot_diff
-
-            # the reserved internal ts name keeps tables that OWN a
-            # 'ts' column diffable (self-review r11); snapshot_diff
-            # still raises loudly on the astronomically-unlikely
-            # __cdf_ts collision
-            ch = snapshot_diff(
-                read_version(spark, table, v - 1),
-                read_version(spark, table, v),
-                keys,
-                ts=v,
-                ts_col="__cdf_ts",
-                op_col=op_col,
-                include_preimage=include_preimage,
-            ).drop("__cdf_ts")
-        prev_doc = doc
-        ch = ch.withColumn(version_col, F.lit(v))
-        out = ch if out is None else _union_additive(out, ch)
-    if out is None:
-        # an empty range (or all-empty appends): an empty frame with
-        # the range-end version's STORED schema — never a data-file
-        # read, so this works even after the range was vacuumed
-        # (self-review r11)
-        from pyspark.sql.types import StructType
-
-        doc_hi = _version_doc(spark, table, hi)
-        clash = {op_col, version_col} & {
-            name for name, _ in _schema_shape(doc_hi["schema"])
-        }
-        if clash:
-            # same contract as every non-empty range — a caught-up
-            # poller must not flip between silent-rewrite and raise
-            # depending on whether changes happened (cross-batch
-            # review r11)
-            raise ValueError(
-                f"version {hi}'s columns collide with the feed's output "
-                f"columns {sorted(clash)} — pass different "
-                "op_col/version_col names"
-            )
-        st = StructType.fromJson(json.loads(doc_hi["schema"]))
-        return (
-            spark.createDataFrame([], st)
-            .withColumn(op_col, F.lit("I"))
-            .withColumn(version_col, F.lit(0))
-        )
-    return out
-
-
 def vacuum(
     spark: SparkSession,
     table: str,
@@ -4404,10 +4139,6 @@ def vacuum(
             def _rm(batches):
                 import pandas as _pd
 
-                from tableone_pyspark_spark.sources.stream_source import (
-                    _pa_fs,
-                )
-
                 for pdf in batches:
                     n = 0
                     for p in pdf["path"]:
@@ -4453,72 +4184,6 @@ def vacuum(
         "n_kept": len(live),
         "kept_versions": kept,
     }
-
-
-class AuditFailed(Exception):
-    """A WAP audit rejected the written batch — nothing was published.
-    ``.report`` carries the full per-constraint rows."""
-
-    def __init__(self, msg: str, report):
-        super().__init__(msg)
-        self.report = report
-
-
-def commit_audited(
-    spark: SparkSession,
-    df: DataFrame,
-    table: str,
-    checks: list,
-    mode: str = "append",
-    expected_base: int | None = None,
-    stats_cols: list[str] | None = None,
-    merge_schema: bool = False,
-    user_metadata: str | None = None,
-) -> dict:
-    """Write-Audit-Publish (the Iceberg WAP pattern; Delta CHECK
-    constraints by composition): write ``df``'s data files FIRST,
-    audit the WRITTEN bytes with the X111 one-pass constraint suite
-    (``operators/expect.py`` — completeness/in_range/matches/isin/
-    satisfies/uniqueness...), and publish the version ONLY if every
-    check passes. A failing audit raises :class:`AuditFailed` (with
-    the full per-constraint ``.report`` rows) and publishes NOTHING —
-    the orphaned data dir is invisible to readers and reclaimed by
-    :func:`vacuum` like any loser's dir.
-
-    Auditing the written files (not the input frame) costs one read
-    of the NEW data but audits what readers will actually see — a
-    non-deterministic or flaky upstream cannot sneak different bytes
-    past a gate that ran before the write. Everything else matches
-    :func:`commit` (same modes, pinning, stats)."""
-    from tableone_pyspark_spark.operators.expect import validate
-
-    if not checks:
-        raise ValueError(
-            "commit_audited without checks is just commit() — "
-            "declare at least one constraint"
-        )
-
-    def audit(written: DataFrame) -> None:
-        report = validate(written, checks).collect()
-        failed = [r for r in report if not r["passed"]]
-        if failed:
-            raise AuditFailed(
-                "commit_audited: "
-                f"{len(failed)}/{len(report)} checks failed on the "
-                "written data — nothing was published: "
-                + "; ".join(
-                    f"{r['constraint']}({r['column']}) metric="
-                    f"{r['metric']:.6f} vs {r['threshold']}"
-                    for r in failed
-                ),
-                report,
-            )
-
-    return commit(
-        spark, df, table, mode=mode, expected_base=expected_base,
-        stats_cols=stats_cols, merge_schema=merge_schema,
-        user_metadata=user_metadata, _audit=audit,
-    )
 
 
 def _norm_file(p: str) -> str:
@@ -4967,27 +4632,3 @@ write_target_sized`'s sampled bytes-per-row estimate (one bounded
         f"optimize of {table} lost {APPEND_REBASE_RETRIES} consecutive "
         "slot races — pathological contention; retry with backoff"
     )
-
-
-def apply_changes(
-    spark: SparkSession,
-    table: str,
-    changes: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    op_col: str = "op",
-) -> dict:
-    """MERGE a change batch into the versioned table: the next version
-    is ``apply_cdc(current, changes)`` committed as an overwrite — the
-    upsert/delete path that composes with :func:`snapshot_diff` for
-    table-to-table incremental propagation. The merge is pinned to the
-    version it READ (``expected_base``): a concurrent commit between
-    the read and the publish raises :class:`CommitConflict` instead of
-    silently erasing it (the lost-update hole optimistic concurrency
-    exists to close; self-review r11) — re-run on the new version."""
-    from tableone_pyspark_spark.operators.cdc import apply_cdc
-
-    base = current_version(spark, table)
-    cur = read_version(spark, table, base)
-    nxt = apply_cdc(cur, changes, keys, ts_col=ts_col, op_col=op_col)
-    return commit(spark, nxt, table, mode="overwrite", expected_base=base)

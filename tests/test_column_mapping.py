@@ -9,10 +9,9 @@ RETIRED so a later re-add can never resurrect its data.
 
 Covers: read-back + physical stability across pre/post-rename files,
 stats re-keying (prune on the new name), DV/merge/optimize after a
-rename, time travel / clone / restore carrying per-version maps, the
-batch DataSource and both streaming readers, drop + re-add
-no-resurrection, the table_changes range gate, and the guard set
-(case-variant targets, constraint/generated references, last column).
+rename, time travel / clone / restore carrying per-version maps,
+drop + re-add no-resurrection, and the guard set (case-variant
+targets, constraint/generated references, last column).
 
 No counterpart in the reference repo (it has no table format); the
 public behavior contract is Delta Lake's column-mapping
@@ -131,61 +130,13 @@ def test_clone_restore_and_datasource_carry_mapping(spark, renamed_tbl, tmp_path
     assert _cost_by_k(tl.read_version(spark, c)) == {
         1: 10.0, 2: 20.0, 3: 30.0, 4: 40.0,
     }
-    from tableone_pyspark_spark.sources.stream_source import (
-        TablelogDataSource,
-    )
-
-    spark.dataSource.register(TablelogDataSource)
-    ds = spark.read.format("tablelog").load(t)
-    assert _cost_by_k(ds) == {1: 10.0, 2: 20.0, 3: 30.0, 4: 40.0}
-    # batch time travel through the DataSource: v0 = the OLD name
-    ds0 = spark.read.format("tablelog").option("version", 0).load(t)
-    assert "price" in ds0.columns and ds0.count() == 3
+    # batch time travel: v0 = the OLD name
+    v0 = tl.read_version(spark, t, 0)
+    assert "price" in v0.columns and v0.count() == 3
     # restore to v0 re-publishes the pre-rename mapping verbatim
     tl.restore(spark, t, 0)
     cur = tl.read_version(spark, t)
     assert "price" in cur.columns and cur.count() == 3
-
-
-def test_stream_after_rename_reads_physical(spark, renamed_tbl, tmp_path):
-    """A stream STARTED after the rename (starting_version at the
-    first post-rename version) delivers post-rename appends correctly
-    — their files carry the physical name, the output the logical."""
-    from tableone_pyspark_spark.sources.stream_source import (
-        TablelogDataSource,
-    )
-
-    spark.dataSource.register(TablelogDataSource)
-    t = renamed_tbl
-    got = (
-        spark.readStream.format("tablelog")
-        .option("starting_version", 2)
-        .load(t)
-        .writeStream.format("memory")
-        .queryName("cm_stream")
-        .option(
-            "checkpointLocation", str(tmp_path / "cm_ck")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    got.awaitTermination(120)
-    rows = spark.sql("select * from cm_stream").collect()
-    assert {r["k"]: r["cost"] for r in rows} == {4: 40.0}
-    # a stream resuming from BEFORE the rename refuses at the rename
-    # version with the restart instruction (Delta-parity boundary)
-    bad = (
-        spark.readStream.format("tablelog")
-        .option("starting_version", 0)
-        .load(t)
-        .writeStream.format("memory")
-        .queryName("cm_stream_bad")
-        .option("checkpointLocation", str(tmp_path / "cm_ck_bad"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(Exception, match="schema changed at version"):
-        bad.awaitTermination(120)
 
 
 def test_drop_then_readd_never_resurrects(spark, tmp_path):
@@ -211,14 +162,6 @@ def test_drop_then_readd_never_resurrects(spark, tmp_path):
     assert got == {1: None, 2: None, 3: "NEW"}, got
     doc = tl._version_doc(spark, t, tl.current_version(spark, t))
     assert doc["colmap"]["v"] != "v" and "v" in doc["retired"]
-    # the DataSource path must agree (arrow-side physical resolution)
-    from tableone_pyspark_spark.sources.stream_source import (
-        TablelogDataSource,
-    )
-
-    spark.dataSource.register(TablelogDataSource)
-    ds = spark.read.format("tablelog").load(t)
-    assert {r["k"]: r["v"] for r in ds.collect()} == got
     # pre-drop versions still time-travel with the column's data
     v0 = tl.read_version(spark, t, 0)
     assert {r["k"]: r["v"] for r in v0.collect()} == {1: "OLD1", 2: "OLD2"}
@@ -242,17 +185,6 @@ def test_overwrite_keeps_mapping_and_retires_dropped(spark, renamed_tbl):
     assert "v" in doc.get("retired", [])
     last = sorted(doc["files"])[0]
     assert "price" in pq.read_schema(last).names
-
-
-def test_changes_range_gate_and_split(spark, renamed_tbl):
-    t = renamed_tbl
-    with pytest.raises(ValueError, match="spans a column rename"):
-        tl.table_changes(spark, t, 0)
-    # split at the rename version: [0,0] and (1, hi] both read clean
-    pre = tl.table_changes(spark, t, 0, to_version=0)
-    assert pre.count() == 0  # from_version is exclusive; empty range
-    post = tl.table_changes(spark, t, 1)
-    assert {r["k"]: r["cost"] for r in post.collect()} == {4: 40.0}
 
 
 def test_rename_guards(spark, tmp_path):
@@ -507,13 +439,6 @@ def test_protocol_feature_gates(spark, tmp_path):
         _json.dump(forged, fh)
     with pytest.raises(ValueError, match="rowtracking_v9"):
         tl.read_version(spark, t)
-    from tableone_pyspark_spark.sources.stream_source import (
-        TablelogDataSource,
-    )
-
-    spark.dataSource.register(TablelogDataSource)
-    with pytest.raises(Exception, match="rowtracking_v9"):
-        spark.read.format("tablelog").load(t).collect()
     # a write on top refuses too (the doc read refuses first)
     with pytest.raises(ValueError, match="rowtracking_v9"):
         tl.commit(
@@ -623,16 +548,6 @@ def test_rename_drop_case_insensitive_old_name(spark, tmp_path):
     assert tl.read_version(spark, t).columns == ["k", "x"]
     with pytest.raises(ValueError, match="no such column"):
         tl.rename_column(spark, t, "nope", "y")
-
-
-def test_stream_source_reader_features_parity():
-    """ADVICE r16 (low): stream_source._READER_FEATURES is a local
-    copy of tablelog.READER_FEATURES (planning workers must stay
-    pyspark-free) — pin byte-parity so adding a reader feature to one
-    module can never silently split the gate."""
-    from tableone_pyspark_spark.sources import stream_source
-
-    assert stream_source._READER_FEATURES == tl.READER_FEATURES
 
 
 def test_rename_race_refuses_blind_append_rebase(spark, tmp_path, monkeypatch):

@@ -253,6 +253,38 @@ def test_zorder_string_and_date_columns(spark, tmp_path):
         )
 
 
+def test_optimize_zorder_string_column_prunes(spark, tmp_path):
+    """r15 — OPTIMIZE ... ZORDER BY a STRING column on a versioned
+    table: stats recorded on the rewrite actually skip files for an
+    equality prune on the string column."""
+    from pyspark.sql import functions as F
+
+    from tableone_pyspark_spark.sources import tablelog as tl
+
+    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    t = str(tmp_path / "z_tbl")
+    tl.commit(
+        spark,
+        orders.select("o_orderkey", "o_orderpriority").repartition(4),
+        t,
+        stats_cols=["o_orderpriority"],
+    )
+    opt = tl.optimize(
+        spark, t, target_bytes=4096, zorder_by=["o_orderpriority"]
+    )
+    assert opt["n_output_files"] >= 2, opt
+    pruned = tl.read_version(
+        spark, t, prune=[("o_orderpriority", "=", "1-URGENT")]
+    )
+    n_read = pruned.select(F.input_file_name()).distinct().count()
+    assert n_read < opt["n_output_files"], (n_read, opt)
+    # skipping lost nothing
+    assert (
+        pruned.where(F.col("o_orderpriority") == "1-URGENT").count()
+        == orders.where(F.col("o_orderpriority") == "1-URGENT").count()
+    )
+
+
 def _hilbert_twin(coords, bits):
     """Pure-python Skilling axes-to-transpose + MSB interleave — the
     published algorithm, used as the differential oracle."""

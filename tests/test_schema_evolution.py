@@ -3,8 +3,7 @@
 may ADD nullable columns; readers NULL-fill them into pre-evolution
 files by name; drops and retyping are always refused. Covers every
 read path that must NULL-fill: read_version, the live view behind
-DV/merge, batch table_changes, the batch DataSource, both streaming
-readers, and optimize/clone/restore carry-through.
+DV/merge, and optimize/clone/restore carry-through.
 
 No counterpart in the reference repo (it has no table format); the
 closest public behavior contract is Delta Lake's automatic schema
@@ -166,134 +165,6 @@ def test_dv_delete_and_merge_after_evolution(spark, base_tbl):
     }
     assert got[0] == ("upd", 9.9) and got[99] == ("new", 8.8)
     assert got[2] == ("r2", None)  # untouched pre-evolution row
-
-
-def test_table_changes_across_evolution_null_fills(spark, base_tbl):
-    tl.commit(
-        spark,
-        _mk(spark, [(10, "x", 1.5)], "k long, v string, w double"),
-        base_tbl,
-        merge_schema=True,
-    )
-    ch = tl.table_changes(spark, base_tbl, 0).orderBy("k").collect()
-    assert [r["k"] for r in ch] == [10]
-    assert ch[0]["w"] == 1.5
-    # range including v0's snapshot? from_version=0 excludes v0; a
-    # delete after evolution re-reads OLD files through the evolved
-    # schema — NULL-filled, not crashed
-    tl.delete_rows(spark, base_tbl, F.col("k") == 3)
-    ch2 = tl.table_changes(spark, base_tbl, 1).collect()
-    assert len(ch2) == 1 and ch2[0]["k"] == 3 and ch2[0]["w"] is None
-
-
-def test_table_changes_refuses_retyping_range(spark, tmp_path):
-    t = str(tmp_path / "retype_tbl")
-    tl.commit(spark, _mk(spark, [(1, "a")], "k long, v string"), t)
-    tl.commit(spark, _mk(spark, [(2, "b")], "k long, v string"), t)
-    # an overwrite may retype (it replaces the schema wholesale)
-    tl.commit(spark, _mk(spark, [(1.0, "a")], "k double, v string"), t,
-              mode="overwrite")
-    with pytest.raises(ValueError, match="TYPE change"):
-        tl.table_changes(spark, t, 0).collect()
-
-
-def test_batch_datasource_null_fills(spark, base_tbl):
-    from tableone_pyspark_spark.sources.stream_source import (
-        TablelogDataSource,
-    )
-
-    spark.dataSource.register(TablelogDataSource)
-    tl.commit(
-        spark,
-        _mk(spark, [(10, "x", 1.5)], "k long, v string, w double"),
-        base_tbl,
-        merge_schema=True,
-    )
-    cur = spark.read.format("tablelog").load(base_tbl)
-    assert cur.columns == ["k", "v", "w"]
-    got = {r["k"]: r["w"] for r in cur.collect()}
-    assert got[10] == 1.5 and got[0] is None and len(got) == 7
-    # time travel through the DataSource: v0 keeps the old schema
-    v0 = (
-        spark.read.format("tablelog")
-        .option("version", 0)
-        .load(base_tbl)
-    )
-    assert v0.columns == ["k", "v"] and v0.count() == 6
-
-
-def test_stream_from_start_null_fills_pre_evolution(spark, base_tbl, tmp_path):
-    from tableone_pyspark_spark.sources.stream_source import (
-        TablelogDataSource,
-    )
-
-    spark.dataSource.register(TablelogDataSource)
-    tl.commit(
-        spark,
-        _mk(spark, [(10, "x", 1.5)], "k long, v string, w double"),
-        base_tbl,
-        merge_schema=True,
-    )
-    q = (
-        spark.readStream.format("tablelog")
-        .load(base_tbl)
-        .writeStream.format("memory")
-        .queryName("evo_stream")
-        .option("checkpointLocation", str(tmp_path / "ck_evo"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r["k"]: r["w"]
-        for r in spark.sql("SELECT * FROM evo_stream").collect()
-    }
-    assert len(got) == 7 and got[10] == 1.5 and got[0] is None
-    # change-feed stream across the evolution, same NULL-fill rule
-    q2 = (
-        spark.readStream.format("tablelog")
-        .option("read_changes", "true")
-        .load(base_tbl)
-        .writeStream.format("memory")
-        .queryName("evo_cdf")
-        .option("checkpointLocation", str(tmp_path / "ck_evo_cdf"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    cdf = spark.sql("SELECT * FROM evo_cdf").collect()
-    assert {r["_change_type"] for r in cdf} == {"insert"}
-    assert {r["k"]: r["w"] for r in cdf}[10] == 1.5
-
-
-def test_stream_refuses_mid_stream_growth(spark, tmp_path):
-    """A stream pinned BEFORE the evolution cannot deliver the evolved
-    version (the output schema cannot grow mid-stream) — the reader
-    raises with the restart instruction. Exercised on the reader
-    object directly: the version range spans the evolution while the
-    pinned schema predates it (a memory-sink query cannot be
-    restarted against the same checkpoint to stage this end-to-end)."""
-    from tableone_pyspark_spark.sources.stream_source import (
-        _TablelogCdfStreamReader,
-        _TablelogStreamReader,
-    )
-
-    t = str(tmp_path / "grow_tbl")
-    tl.commit(spark, _mk(spark, [(1, "a")], "k long, v string"), t)
-    r = _TablelogStreamReader(t, False, False, None)  # pins (k, v)
-    rc = _TablelogCdfStreamReader(t, None)
-    tl.commit(
-        spark,
-        _mk(spark, [(2, "b", 7.0)], "k long, v string, w double"),
-        t,
-        merge_schema=True,
-    )
-    with pytest.raises(ValueError, match="schema changed at version 1"):
-        r.partitions({"version": -1}, {"version": 1})
-    with pytest.raises(ValueError, match="schema changed at version 1"):
-        rc.partitions({"version": -1}, {"version": 1})
-    # pre-evolution versions alone still deliver
-    assert r.partitions({"version": -1}, {"version": 0})
 
 
 def test_optimize_restore_clone_carry_evolution(spark, base_tbl, tmp_path):
@@ -518,31 +389,6 @@ def test_prop_evolve_refuses_retyping(tw):
     flipped[i] = (n, "double" if t != "double" else "bigint")
     with pytest.raises(ValueError, match="additive-only"):
         tl._evolve_schema(_schema_json(tbl), _schema_json(flipped))
-
-
-@given(_tbl_and_write())
-@settings(max_examples=200, deadline=None)
-def test_prop_shape_deliverable(tw):
-    """Every pre-evolution shape is deliverable in a stream pinned to
-    its evolved shape; the evolved shape is deliverable in a stream
-    pinned to itself but NOT in one pinned pre-evolution (unless the
-    write added nothing); retyping breaks deliverability."""
-    from tableone_pyspark_spark.sources.stream_source import (
-        _shape_deliverable,
-    )
-
-    tbl, new = tw
-    ev = tl._evolve_schema(_schema_json(tbl), _schema_json(new))
-    pinned = tl._schema_shape(ev)
-    old = list(tbl)
-    assert _shape_deliverable(old, pinned)
-    assert _shape_deliverable(pinned, pinned)
-    grew = len(pinned) > len(tbl)
-    assert _shape_deliverable(pinned, old) == (not grew)
-    if old:
-        n, t = old[0]
-        bad = [(n, "double" if t != "double" else "bigint")] + old[1:]
-        assert not _shape_deliverable(bad, pinned)
 
 
 @given(_tbl_and_write())

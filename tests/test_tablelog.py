@@ -1,7 +1,6 @@
 """Versioned parquet tables (sources/tablelog.py): commit/append/
-overwrite semantics, time travel, history, CDC apply composition,
-schema-evolution refusal, commit-conflict exclusivity, empty-version
-reads."""
+overwrite semantics, time travel, history, schema-evolution refusal,
+commit-conflict exclusivity, empty-version reads."""
 
 from __future__ import annotations
 
@@ -88,29 +87,6 @@ def test_empty_version_keeps_schema(spark, tmp_path):
     tl.commit(spark, empty, t, mode="overwrite")
     out = tl.read_version(spark, t)
     assert out.count() == 0 and out.columns == ["id"]
-
-
-def test_apply_changes_merges(spark, tmp_path):
-    from tableone_pyspark_spark.operators.cdc import snapshot_diff
-
-    t = str(tmp_path / "tbl5")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, s string"
-    )
-    tl.commit(spark, base, t)
-    target = spark.createDataFrame(
-        [(1, "a"), (2, "B"), (4, "d")], "k long, s string"
-    )
-    # snapshot_diff -> apply_changes: table-to-table incremental sync
-    tl.apply_changes(
-        spark, t, snapshot_diff(base, target, ["k"], ts=1), ["k"]
-    )
-    got = sorted(map(tuple, tl.read_version(spark, t).collect()))
-    assert got == [(1, "a"), (2, "B"), (4, "d")]
-    # and v0 is still the original (time travel across a merge)
-    assert sorted(map(tuple, tl.read_version(spark, t, 0).collect())) == [
-        (1, "a"), (2, "b"), (3, "c")
-    ]
 
 
 def test_validation(spark, tmp_path):
@@ -224,98 +200,6 @@ def test_streaming_commit_exactly_once(spark, tmp_path):
     )
     assert tl.last_committed_batch(spark, t, ck) == last + 1
     assert tl.read_version(spark, t).count() == n0 + 2
-
-
-def test_table_changes_cdf(spark, tmp_path):
-    """X130 change data feed: append versions stream their new files
-    as 'I' rows without any diff; overwrite versions diff by key
-    (U/D/I); ranges validate; empty ranges return an empty typed
-    frame."""
-    t = str(tmp_path / "cdf")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "k long, s string"
-    )
-    tl.commit(spark, base, t)                                   # v0
-    tl.commit(spark, spark.createDataFrame([(3, "c")], "k long, s string"),
-              t, mode="append")                                 # v1
-    target = spark.createDataFrame(
-        [(1, "a"), (2, "B"), (4, "d")], "k long, s string"
-    )
-    tl.commit(spark, target, t, mode="overwrite")               # v2
-
-    ch = tl.table_changes(spark, t, 0, keys=["k"])
-    got = sorted(
-        (r["commit_version"], r["op"], r["k"]) for r in ch.collect()
-    )
-    # v1: the appended row as I (read straight from its new files);
-    # v2: diff of v1 -> v2 = U(2), D(3), I(4)
-    assert got == [(1, "I", 3), (2, "D", 3), (2, "I", 4), (2, "U", 2)]
-    assert set(ch.columns) == {"k", "s", "op", "commit_version"}
-
-    # append-only ranges need no keys
-    only_append = tl.table_changes(spark, t, 0, to_version=1)
-    assert [(r["op"], r["k"]) for r in only_append.collect()] == [("I", 3)]
-    # an overwrite WITHOUT keys (X146's batch half): the previous
-    # live view retracts, the new one inserts — Delta's
-    # remove-all/add-all derivation, no row identity needed
-    keyless = sorted(
-        (r["commit_version"], r["op"], r["k"])
-        for r in tl.table_changes(spark, t, 0).collect()
-    )
-    assert keyless == [
-        (1, "I", 3),
-        (2, "D", 1), (2, "D", 2), (2, "D", 3),
-        (2, "I", 1), (2, "I", 2), (2, "I", 4),
-    ]
-    # empty range: typed empty frame
-    empty = tl.table_changes(spark, t, 2, keys=["k"])
-    assert empty.count() == 0
-    assert set(empty.columns) == {"k", "s", "op", "commit_version"}
-    with pytest.raises(ValueError, match="version range"):
-        tl.table_changes(spark, t, 5, keys=["k"])
-
-
-def test_table_changes_review_pins(spark, tmp_path):
-    """Self-review r11 pins: (a) tables OWNING a 'ts' column still
-    diff through the feed (internal reserved ts name); (b) op/version
-    column collisions raise instead of silently overwriting data;
-    (c) an empty range over a VACUUMED version builds its typed empty
-    frame from the stored schema, never a data-file read."""
-    t = str(tmp_path / "cdf2")
-    base = spark.createDataFrame([(1, 10, "x")], "k long, ts long, op string")
-    tl.commit(spark, base, t)                                    # v0
-    tl.commit(spark, spark.createDataFrame(
-        [(1, 11, "y")], "k long, ts long, op string"), t, mode="overwrite")
-
-    # (a) 'ts' data column survives the overwrite diff
-    ch = tl.table_changes(spark, t, 0, keys=["k"], op_col="change_op")
-    row = ch.first()
-    assert row["change_op"] == "U" and row["ts"] == 11
-    # (b) default op_col collides with the table's own 'op' column
-    with pytest.raises(ValueError, match="collide"):
-        tl.table_changes(spark, t, 0, keys=["k"])
-
-    # (c) vacuumed old version, empty range pinned to it
-    t2 = str(tmp_path / "cdf3")
-    tl.commit(spark, spark.range(3), t2)
-    tl.commit(spark, spark.range(5), t2, mode="overwrite")
-    tl.commit(spark, spark.range(7), t2, mode="overwrite")
-    tl.vacuum(spark, t2, keep_last=2, min_age_seconds=0)
-    empty = tl.table_changes(spark, t2, 0, to_version=0, keys=["id"])
-    assert empty.count() == 0
-    assert set(empty.columns) == {"id", "op", "commit_version"}
-
-
-def test_table_changes_empty_range_collision_raises(spark, tmp_path):
-    """Cross-batch review r11: the empty-range fallback enforces the
-    SAME op/version collision contract as non-empty ranges — a
-    caught-up poller must not silently get rewritten columns."""
-    t = str(tmp_path / "cdf4")
-    tl.commit(spark, spark.createDataFrame([(1, "x")], "k long, op string"), t)
-    with pytest.raises(ValueError, match="collide"):
-        tl.table_changes(spark, t, 0, keys=["k"])  # empty range, op clash
-    out = tl.table_changes(spark, t, 0, keys=["k"], op_col="change_op")
-    assert out.count() == 0 and "change_op" in out.columns
 
 
 def test_stream_watermark_sidecar_floor(spark, tmp_path, monkeypatch):
@@ -562,173 +446,6 @@ def test_optimize_rewrites_small_files(spark, tmp_path):
         tl._publish(spark, t, cur, [], "overwrite", schema)
 
 
-def test_snapshot_diff_preimage(spark):
-    """r12 (X134 prerequisite): include_preimage emits Delta-CDF-style
-    U_pre/U_post pairs — the retractable form — while I/D rows and the
-    default single-'U' output are unchanged."""
-    from tableone_pyspark_spark.operators.cdc import snapshot_diff
-
-    old = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k long, g string, v long"
-    )
-    new = spark.createDataFrame(
-        [(1, "a", 10), (2, "z", 25), (4, "d", 40)], "k long, g string, v long"
-    )
-    out = snapshot_diff(old, new, ["k"], ts=7, include_preimage=True)
-    rows = {(r["k"], r["op"]): (r["g"], r["v"], r["ts"]) for r in out.collect()}
-    assert rows == {
-        (2, "U_pre"): ("b", 20, 7),
-        (2, "U_post"): ("z", 25, 7),
-        (3, "D"): ("c", 30, 7),
-        (4, "I"): ("d", 40, 7),
-    }
-    # column order matches the default form: keys, attrs, op, ts
-    assert out.columns == ["k", "g", "v", "op", "ts"]
-    # default form unchanged
-    d = {(r["k"], r["op"]) for r in snapshot_diff(old, new, ["k"], ts=7).collect()}
-    assert d == {(2, "U"), (3, "D"), (4, "I")}
-    # reserved internal names now include the explode's
-    import pytest as _pytest
-
-    bad = old.withColumnRenamed("g", "__ch")
-    with _pytest.raises(ValueError, match="__ch"):
-        snapshot_diff(bad, bad, ["k"], ts=1)
-
-
-def test_refresh_aggregate_incremental(spark, tmp_path):
-    """X134: the CDF-maintained grouped aggregate equals a full
-    recompute after inserts, deletes, and a group-MOVING update
-    (which requires the U_pre retraction); re-refresh is a no-op;
-    emptied groups vanish; the watermark survives crash-replay."""
-    from tableone_pyspark_spark.sources import mv
-    from tableone_pyspark_spark.sources import tablelog as tl
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "agg")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "b", 40)],
-        "k long, g string, v long",
-    )
-    tl.commit(spark, base, src)  # v0
-
-    rep = mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    assert rep["mode"] == "full" and rep["src_version"] == 0
-
-    def mv_rows():
-        return {
-            r["g"]: (r["n"], r["sum_v"])
-            for r in tl.read_version(spark, dst).collect()
-        }
-
-    assert mv_rows() == {"a": (2, 30), "b": (2, 70)}
-
-    # append-only commit: 'I' path, no keys needed for the diff
-    tl.commit(spark, spark.createDataFrame([(5, "a", 5)], base.schema), src)
-    rep = mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    assert rep["mode"] == "incremental"
-    assert mv_rows() == {"a": (3, 35), "b": (2, 70)}
-
-    # overwrite commit: k=2 MOVES group a->b (U_pre/U_post), k=3
-    # deleted, k=6 inserted into a NEW group c, group b's k=4 value
-    # changes in place
-    nxt = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (4, "b", 45), (5, "a", 5), (6, "c", 1)],
-        base.schema,
-    )
-    tl.commit(spark, nxt, src, mode="overwrite")
-    rep = mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    assert rep["mode"] == "incremental"
-    want = {
-        r["g"]: (r["n"], r["sum_v"])
-        for r in nxt.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sum_v"))
-        .collect()
-    }
-    assert mv_rows() == want  # exact: integer sums
-
-    # no-op when already current (the crash-replay/exactly-once path)
-    v = tl.current_version(spark, dst)
-    assert mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])[
-        "mode"
-    ] == "noop"
-    assert tl.current_version(spark, dst) == v
-
-    # a group emptied entirely disappears
-    tl.commit(
-        spark,
-        spark.createDataFrame([(1, "a", 10)], base.schema),
-        src,
-        mode="overwrite",
-    )
-    mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    assert mv_rows() == {"a": (1, 10)}
-
-    # full_refresh re-baselines to the same values
-    mv.refresh_aggregate(
-        spark, src, dst, ["g"], ["v"], keys=["k"], full_refresh=True
-    )
-    assert mv_rows() == {"a": (1, 10)}
-
-    # KEYLESS incremental refresh across an overwrite (X146 batch
-    # half): the retract-all/insert-all feed folds to the exact
-    # post-overwrite aggregate — no key configuration needed
-    tl.commit(
-        spark,
-        spark.createDataFrame(
-            [(7, "c", 4), (8, "c", 6), (9, "d", 1)], base.schema
-        ),
-        src,
-        mode="overwrite",
-    )
-    rep = mv.refresh_aggregate(spark, src, dst, ["g"], ["v"])
-    assert rep["mode"] == "incremental"
-    assert mv_rows() == {"c": (2, 10), "d": (1, 1)}
-
-    # validation
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="group_cols"):
-        mv.refresh_aggregate(spark, src, dst, [], ["v"])
-    with _pytest.raises(ValueError, match="both roles"):
-        mv.refresh_aggregate(spark, src, dst, ["v"], ["v"])
-    with _pytest.raises(ValueError, match="collide"):
-        mv.refresh_aggregate(spark, src, dst, ["n"], ["v"])
-
-
-def test_refresh_aggregate_null_groups_and_null_sums(spark, tmp_path):
-    """NULL group keys are real groups (eqNullSafe merge); a group
-    whose every value is NULL keeps sum NULL through increments."""
-    from tableone_pyspark_spark.sources import mv
-    from tableone_pyspark_spark.sources import tablelog as tl
-
-    src = str(tmp_path / "srcn")
-    dst = str(tmp_path / "aggn")
-    base = spark.createDataFrame(
-        [(1, None, 10), (2, None, 20), (3, "x", None)],
-        "k long, g string, v long",
-    )
-    tl.commit(spark, base, src)
-    mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    got = {
-        r["g"]: (r["n"], r["sum_v"])
-        for r in tl.read_version(spark, dst).collect()
-    }
-    assert got == {None: (2, 30), "x": (1, None)}
-    # increment the NULL group and the all-null-sum group
-    tl.commit(
-        spark,
-        spark.createDataFrame([(4, None, 5), (5, "x", None)], base.schema),
-        src,
-    )
-    mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    got = {
-        r["g"]: (r["n"], r["sum_v"])
-        for r in tl.read_version(spark, dst).collect()
-    }
-    assert got == {None: (3, 35), "x": (2, None)}
-
-
 def test_optimize_zorder_monetizes_pruning(spark, tmp_path):
     """X135: OPTIMIZE ZORDER BY + per-file stats + prune compose —
     after a z-ordered rewrite each file spans a narrow rectangle in
@@ -764,37 +481,6 @@ def test_optimize_zorder_monetizes_pruning(spark, tmp_path):
     # content identical after the rewrite
     after = tl.read_version(spark, t)
     assert after.count() == 4000 and after.agg(F.sum("k")).first()[0] == keysum
-
-
-def test_refresh_aggregate_retracts_sum_to_null(spark, tmp_path):
-    """Self-review r12: deleting a group's LAST non-null value must
-    retract the sum to NULL (a full recompute's answer), not 0 — the
-    nn_<c> counter exists for exactly this."""
-    from tableone_pyspark_spark.sources import mv
-
-    src = str(tmp_path / "srcr")
-    dst = str(tmp_path / "aggr")
-    base = spark.createDataFrame(
-        [(1, "g", 5), (2, "g", None)], "k long, g string, v long"
-    )
-    tl.commit(spark, base, src)
-    mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    # delete the only non-null row
-    tl.commit(
-        spark,
-        spark.createDataFrame([(2, "g", None)], base.schema),
-        src,
-        mode="overwrite",
-    )
-    rep = mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    assert rep["mode"] == "incremental"
-    row = tl.read_version(spark, dst).first()
-    assert (row["n"], row["sum_v"], row["nn_v"]) == (1, None, 0)
-    # and gaining a value again leaves NULL-land exactly
-    tl.commit(spark, spark.createDataFrame([(3, "g", 7)], base.schema), src)
-    mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    row = tl.read_version(spark, dst).first()
-    assert (row["n"], row["sum_v"], row["nn_v"]) == (2, 7, 1)
 
 
 def test_stats_nan_and_interval_guards(spark, tmp_path):
@@ -880,45 +566,11 @@ def test_optimize_preserves_stats_by_default(spark, tmp_path):
     assert not tl._version_doc(spark, t2, rep3["version"]).get("stats")
 
 
-def test_commit_audited_wap(spark, tmp_path):
-    """X136: write-audit-publish — a failing constraint suite on the
-    WRITTEN data publishes nothing (the data dir is an invisible
-    orphan, vacuumable), a passing one commits normally, and the
-    audit report rides the exception."""
-    from tableone_pyspark_spark.operators import expect as ex
-
-    t = str(tmp_path / "wap_tbl")
-    good = spark.createDataFrame(
-        [(1, 50.0), (2, 60.0)], "k long, v double"
-    )
-    bad = spark.createDataFrame(
-        [(3, 50.0), (4, None)], "k long, v double"
-    )
-    checks = [ex.completeness("v"), ex.in_range("v", 0, 100)]
-
-    rep = tl.commit_audited(spark, good, t, checks, stats_cols=["v"])
-    assert rep["version"] == 0
-    assert tl.read_version(spark, t).count() == 2
-
-    with pytest.raises(tl.AuditFailed, match="completeness") as ei:
-        tl.commit_audited(spark, bad, t, checks)
-    assert any(not r["passed"] for r in ei.value.report)
-    # nothing published: version unchanged, read unchanged
-    assert tl.current_version(spark, t) == 0
-    assert tl.read_version(spark, t).count() == 2
-    # the orphaned dir is reclaimable (age-0 vacuum takes its files)
-    assert tl.vacuum(spark, t, keep_last=1, min_age_seconds=0)["n_deleted"] >= 1
-    assert tl.read_version(spark, t).count() == 2
-
-    with pytest.raises(ValueError, match="at least one constraint"):
-        tl.commit_audited(spark, good, t, [])
-
-
 def test_deletion_vectors(spark, tmp_path):
     """X137: row-level deletes without file rewrites — positions ride
     a deletion vector; readers subtract, time travel still sees them,
-    appends carry them forward, optimize materializes them, re-delete
-    is a no-op, and the change feed emits them as D rows."""
+    appends carry them forward, optimize materializes them, and
+    re-delete is a no-op."""
     t = str(tmp_path / "dv_tbl")
     df = spark.range(100).select(
         F.col("id").alias("k"), (F.col("id") % 10).alias("g")
@@ -953,12 +605,6 @@ def test_deletion_vectors(spark, tmp_path):
     assert tl.read_version(spark, t).count() == 85
     assert tl.read_version(spark, t).where(F.col("k") == 7).count() == 0
 
-    # the change feed emits the deletions as D rows, keyless
-    ch = tl.table_changes(spark, t, 0, to_version=1)
-    rows = ch.collect()
-    assert all(r["op"] == "D" for r in rows) and len(rows) == 15
-    assert sorted(r["k"] for r in rows) == list(range(0, 100, 7))
-
     # optimize MATERIALIZES the vectors: same visible rows, no dv
     rep = tl.optimize(spark, t, target_bytes=64 * 1024)          # v4
     assert tl.read_version(spark, t).count() == 85
@@ -988,49 +634,17 @@ def test_deletion_vectors(spark, tmp_path):
         tl.delete_rows(spark, t2, F.lit(True))
 
 
-def test_deletion_vectors_feed_the_incremental_mv(spark, tmp_path):
-    """X137 × X134: a deletion-vector version flows through the change
-    feed as D retractions, so the incrementally-maintained aggregate
-    tracks it without keys or rewrites."""
-    from tableone_pyspark_spark.sources import mv
-
-    src = str(tmp_path / "dv_src")
-    dst = str(tmp_path / "dv_agg")
-    df = spark.range(100).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 4).cast("string").alias("g"),
-        F.lit(1).cast("long").alias("v"),
-    )
-    tl.commit(spark, df, src)
-    mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    tl.delete_rows(spark, src, F.col("g") == "2")
-    rep = mv.refresh_aggregate(spark, src, dst, ["g"], ["v"], keys=["k"])
-    assert rep["mode"] == "incremental"
-    got = {
-        r["g"]: r["n"] for r in tl.read_version(spark, dst).collect()
-    }
-    assert got == {"0": 25, "1": 25, "3": 25}  # group '2' vanished
-
-
 def test_deletion_vector_review_fixes(spark, tmp_path):
     """Self-review r12: (a) optimize on a fully-DV-deleted table
     publishes an empty overwrite instead of crashing in the sizing
-    sampler; (b) the change feed for a delete version reads ONLY the
-    files the vector touches; (c) a data column named _metadata is
-    refused (it would shadow the pseudo-column and write garbage
-    positions)."""
+    sampler; (c) a data column named _metadata is refused (it would
+    shadow the pseudo-column and write garbage positions)."""
     t = str(tmp_path / "dvr_tbl")
     df = spark.range(100).select(F.col("id").alias("k"))
     tl.commit(spark, df.repartitionByRange(4, "k"), t)           # v0
 
-    # (b): delete touches only the lowest range-partitioned file
     tl.delete_rows(spark, t, F.col("k") < 10)                    # v1
-    ch = tl.table_changes(spark, t, 0, to_version=1)
-    data_inputs = [
-        f for f in ch.inputFiles() if "/data/" in f
-    ]
-    assert len(data_inputs) == 1, data_inputs
-    assert ch.count() == 10
+    assert tl.read_version(spark, t).count() == 90
 
     # (a): delete everything, then optimize -> empty overwrite
     tl.delete_rows(spark, t, F.lit(True))                        # v2
@@ -1196,88 +810,9 @@ def test_shallow_clone(spark, tmp_path):
         tl.clone(spark, str(tmp_path / "nope"), str(tmp_path / "clone_y"))
 
 
-def test_streaming_refresh_follows_the_feed(spark, tmp_path):
-    """X142: the continuously-maintained aggregate — the change-feed
-    stream drives the same signed-delta merge refresh_aggregate runs
-    in batch: appends flow in, DV deletes retract (incl. a group's
-    last non-null value returning sum to NULL and emptied groups
-    dropping), replays are no-ops, and the result always equals a
-    full recompute; a keyless source overwrite streams through as
-    retract-all + insert-all (X146) so the MV lands on the
-    post-overwrite aggregate with no keys configured."""
-    from tableone_pyspark_spark.sources import mv
-
-    src = str(tmp_path / "smv_src")
-    dst = str(tmp_path / "smv_dst")
-    ck = str(tmp_path / "smv_ck")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "a", None), (3, "b", 30)],
-        "k long, g string, v long",
-    )
-    tl.commit(spark, base, src)  # v0
-
-    def drain():
-        q = (
-            mv.streaming_refresh(spark, src, dst, ["g"], ["v"], ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {
-            r["g"]: (r["n"], r["sum_v"], r["nn_v"])
-            for r in tl.read_version(spark, dst).collect()
-        }
-
-    assert drain() == {"a": (2, 10, 1), "b": (1, 30, 1)}
-    tl.commit(
-        spark,
-        spark.createDataFrame([(4, "b", 5)], "k long, g string, v long"),
-        src,
-    )
-    assert drain() == {"a": (2, 10, 1), "b": (2, 35, 2)}
-    # retraction of group a's ONLY non-null value: sum -> NULL not 0
-    tl.delete_rows(spark, src, F.col("k") == 1)
-    assert drain() == {"a": (1, None, 0), "b": (2, 35, 2)}
-    # emptied group dropped
-    tl.delete_rows(spark, src, F.col("k") == 2)
-    assert drain() == {"b": (2, 35, 2)}
-    # nothing new: no zombie dst version is minted
-    cur = tl.current_version(spark, dst)
-    assert drain() == {"b": (2, 35, 2)}
-    assert tl.current_version(spark, dst) == cur
-    # incremental state == full recompute of the live source
-    full = {
-        r["g"]: (r["n"], r["sum_v"], r["nn_v"])
-        for r in mv._full_aggregate(
-            tl.read_version(spark, src), ["g"], ["v"]
-        ).collect()
-    }
-    assert drain() == full
-    # a keyless source overwrite streams through (X146): the feed
-    # retracts the pre-overwrite live view and inserts the new one,
-    # so the MV equals the full recompute of the overwritten state
-    tl.commit(spark, base, src, mode="overwrite")
-    assert drain() == {"a": (2, 10, 1), "b": (1, 30, 1)}
-    # and a second overwrite right after (shared-schema, value moves)
-    tl.commit(
-        spark,
-        spark.createDataFrame(
-            [(1, "a", 100), (5, "c", 7)], "k long, g string, v long"
-        ),
-        src,
-        mode="overwrite",
-    )
-    assert drain() == {"a": (1, 100, 1), "c": (1, 7, 1)}
-    # validation shared with the batch refresher
-    with pytest.raises(ValueError, match="both roles"):
-        mv.streaming_refresh(spark, src, dst, ["g"], ["g"], ck)
-
-
 def test_restore_metadata_rollback(spark, tmp_path):
     """X143: restore() republishes an old version's state as the NEXT
-    version — metadata-only rollback, history intact — and a restored
-    overwrite's deletion vectors are honored by the streams too (the
-    clone-resurrection class, review r13)."""
+    version — metadata-only rollback, history intact."""
     t = str(tmp_path / "restore_tbl")
     tl.commit(spark, spark.range(10).select(F.col("id").alias("k")), t)
     tl.delete_rows(spark, t, F.col("k") % 2 == 0)                 # v1
@@ -1302,62 +837,12 @@ def test_restore_metadata_rollback(spark, tmp_path):
     with pytest.raises(ValueError, match="not in"):
         tl.restore(spark, t, 9)
 
-    # stream with ignore_changes across the whole log: the restored
-    # overwrite's files deliver MASKED (5 rows, not 10)
-    from tableone_pyspark_spark.sources.stream_source import (
-        TablelogDataSource,
-    )
-
-    spark.dataSource.register(TablelogDataSource)
-    out = str(tmp_path / "restore_out")
-    q = (
-        spark.readStream.format("tablelog")
-        .option("ignore_changes", "true").load(t)
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", str(tmp_path / "restore_ck"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = sorted(r["k"] for r in spark.read.parquet(out).collect())
-    assert got == sorted(
-        list(range(10)) + [100, 101, 102] + [1, 3, 5, 7, 9]
-    )
-    # and the change feed starting AT the restore snapshots it masked
-    out2 = str(tmp_path / "restore_out2")
-    q = (
-        spark.readStream.format("tablelog")
-        .option("read_changes", "true")
-        .option("starting_version", "3")
-        .load(t)
-        .writeStream.format("parquet").option("path", out2)
-        .option("checkpointLocation", str(tmp_path / "restore_ck2"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    assert {
-        (r["k"], r["_change_type"], r["_commit_version"])
-        for r in spark.read.parquet(out2).collect()
-    } == {(k, "insert", 3) for k in (1, 3, 5, 7, 9)}
-
-    # cross-batch review r13: a restore whose PREDECESSOR shares its
-    # file list (v4 = restore-to-0 right after v3 = restore-to-1, both
-    # referencing v0's files) must still deliver the whole snapshot —
-    # the old prev-diff computed an EMPTY delta and silently dropped
-    # every restored row
+    # a restore whose PREDECESSOR shares its file list (v4 =
+    # restore-to-0 right after v3 = restore-to-1, both referencing v0's
+    # files) still publishes the whole snapshot
     tl.restore(spark, t, 0)  # v4: same files as v3, no vectors
-    out3 = str(tmp_path / "restore_out3")
-    q = (
-        spark.readStream.format("tablelog")
-        .option("read_changes", "true")
-        .option("starting_version", "4")
-        .load(t)
-        .writeStream.format("parquet").option("path", out3)
-        .option("checkpointLocation", str(tmp_path / "restore_ck3"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
     assert sorted(
-        r["k"] for r in spark.read.parquet(out3).collect()
+        r["k"] for r in tl.read_version(spark, t).collect()
     ) == list(range(10))
 
 
@@ -1366,11 +851,9 @@ def test_log_shape_property_checkpoint_equivalence(spark, tmp_path):
     append/delete/overwrite/restore/merge/constraint sequences
     crossing checkpoint boundaries — including X149's files-unchanged
     metadata publishes, the zero-delta append class — the
-    checkpoint-accelerated history() and the stream's _version_rows
-    plan are IDENTICAL to the full doc walk."""
+    checkpoint-accelerated history() is IDENTICAL to the full doc
+    walk."""
     import random
-
-    import tableone_pyspark_spark.sources.stream_source as ss
 
     for seed in (11, 23, 47):
         rng = random.Random(seed)
@@ -1385,8 +868,8 @@ def test_log_shape_property_checkpoint_equivalence(spark, tmp_path):
             if op == "constraint":
                 # X149: a files-unchanged metadata publish (set or
                 # drop) — the zero-delta append class the checkpoint
-                # writer and stream planner must both carry through
-                # without inventing or dropping deliveries
+                # writer must carry through without inventing or
+                # dropping deltas
                 cons = (
                     tl._version_doc(
                         spark, t, tl.current_version(spark, t)
@@ -1452,25 +935,6 @@ def test_log_shape_property_checkpoint_equivalence(spark, tmp_path):
             tl._log_maxima = orig
         assert fast == slow
 
-        # stream plan equivalence (paths AND masks)
-        def plan():
-            r = ss._TablelogStreamReader(t, True, True, None)
-            return sorted(
-                (p.path, tuple(p.deleted))
-                for p in r.partitions(
-                    {"version": -1}, {"version": cur}
-                )
-            )
-
-        with_ck = plan()
-        orig_l = ss._log_listing
-        try:
-            ss._log_listing = lambda tb: (orig_l(tb)[0], [])
-            without_ck = plan()
-        finally:
-            ss._log_listing = orig_l
-        assert with_ck == without_ck and with_ck
-
 
 def test_checkpoint_shape_dedup_bounds_and_failure_observability(
     spark, tmp_path, monkeypatch, caplog
@@ -1481,21 +945,16 @@ def test_checkpoint_shape_dedup_bounds_and_failure_observability(
         distinct shape, rows carry ``shape_id`` (doc size no longer
         O(versions x schema width));
     (b) ``CHECKPOINT_HISTORY`` bounds the embedded history depth, and
-        BOTH consumers degrade transparently: ``history()`` doc-walks
-        the versions below the retained window and stays identical to
-        the full walk, and the stream planner falls back to the doc
-        walk (identical plan);
+        ``history()`` degrades transparently: it doc-walks the versions
+        below the retained window and stays identical to the full walk;
     (c) pre-r14 checkpoints (per-row inline ``shape``) still load —
-        the incremental builder and the stream head decode intern
-        them on read;
+        the incremental builder interns them on read;
     (d) a failing auto-checkpoint no longer passes silently: the
         commit succeeds but logs a warning and bumps
         ``tl.checkpoint_failures`` (a permanently broken accelerator
         is observable)."""
     import json as _json
     import logging
-
-    import tableone_pyspark_spark.sources.stream_source as ss
 
     t = str(tmp_path / "ck_shape")
     for v in range(13):
@@ -1512,8 +971,8 @@ def test_checkpoint_shape_dedup_bounds_and_failure_observability(
     assert {r["shape_id"] for r in ck["history"]} == {0}
 
     # (c) old-format compat: rewrite the doc to the pre-r14 inline-
-    # shape form; history(), the stream head decode, and a later
-    # INCREMENTAL write_checkpoint must all still work
+    # shape form; history() and a later INCREMENTAL write_checkpoint
+    # must both still work
     ckp = tmp_path / "ck_shape" / "_log" / "_checkpoint_v10.json"
     old = dict(ck)
     old["history"] = [
@@ -1532,29 +991,13 @@ def test_checkpoint_shape_dedup_bounds_and_failure_observability(
         tl._log_maxima = orig
     assert fast == slow and len(fast) == 13
 
-    def plan():
-        r = ss._TablelogStreamReader(t, True, True, None)
-        return sorted(
-            (p.path, tuple(p.deleted))
-            for p in r.partitions({"version": -1}, {"version": 12})
-        )
-
-    with_ck = plan()
-    orig_l = ss._log_listing
-    try:
-        ss._log_listing = lambda tb: (orig_l(tb)[0], [])
-        without_ck = plan()
-    finally:
-        ss._log_listing = orig_l
-    assert with_ck == without_ck and with_ck
-
     rep = tl.write_checkpoint(spark, t, 12)  # incremental from old format
     assert [r["version"] for r in rep["history"]] == list(range(13))
     assert {r["shape_id"] for r in rep["history"]} == {0}
     assert rep["shapes"] == [[["k", "bigint"]]]
 
-    # (b) bounded history depth: retained window only, consumers
-    # degrade to doc walks below it — answers identical
+    # (b) bounded history depth: retained window only, history()
+    # degrades to doc walks below it — answers identical
     monkeypatch.setattr(tl, "CHECKPOINT_HISTORY", 4)
     t2 = str(tmp_path / "ck_bounded")
     for v in range(12):
@@ -1573,41 +1016,6 @@ def test_checkpoint_shape_dedup_bounds_and_failure_observability(
     finally:
         tl._log_maxima = orig
     assert fast2 == slow2 and [r["version"] for r in fast2] == list(range(12))
-
-    def plan2(start: int):
-        r = ss._TablelogStreamReader(t2, True, True, None)
-        return sorted(
-            (p.path, tuple(p.deleted))
-            for p in r.partitions({"version": start}, {"version": 11})
-        )
-
-    # lo=0 is BELOW the retained window [7..10]: hist[0] KeyErrors and
-    # the planner degrades to the full doc walk; lo=7 is INSIDE it, so
-    # the head decode actually consumes the bounded doc (review r14 —
-    # without this arm a bounded-window decode regression would pass)
-    for start in (-1, 6):
-        with_ck2 = plan2(start)
-        try:
-            ss._log_listing = lambda tb: (orig_l(tb)[0], [])
-            without_ck2 = plan2(start)
-        finally:
-            ss._log_listing = orig_l
-        assert with_ck2 == without_ck2 and with_ck2, start
-    # prove the lo=7 arm really used the checkpoint head (no doc read
-    # below the tail) while lo=0 really walked the docs
-    reads: list[int] = []
-    orig_doc = ss._doc
-    try:
-        ss._doc = lambda tb, v: (reads.append(v) or orig_doc(tb, v))
-        plan2(6)
-        in_window_reads = [v for v in reads if v <= 10]
-        reads.clear()
-        plan2(-1)
-        full_walk_reads = [v for v in reads if v <= 10]
-    finally:
-        ss._doc = orig_doc
-    assert in_window_reads == [], in_window_reads
-    assert full_walk_reads, full_walk_reads
 
     # (d) failing auto-checkpoint: commit succeeds, warning logged,
     # counter bumped
@@ -1667,11 +1075,7 @@ def test_merge_rows_clauses_and_guards(spark, tmp_path):
     """X144 MERGE with deletion vectors: clause semantics (Delta MERGE
     defaults), one published version, time travel intact, NULL-key
     non-match semantics, duplicate-source raise, DV-aware matching
-    (already-deleted rows are not re-matched), chained merges, and
-    the nullability-widened DataSource read (a merged NULL in a
-    column an early commit recorded non-nullable must not NPE the
-    Arrow reader — review r14, reproduced live)."""
-    import tableone_pyspark_spark.sources.stream_source as ss
+    (already-deleted rows are not re-matched) and chained merges."""
 
     def mk(name):
         t = str(tmp_path / name)
@@ -1701,17 +1105,6 @@ def test_merge_rows_clauses_and_guards(spark, tmp_path):
     assert got == exp
     assert tl.read_version(spark, t, 0).count() == 10  # travel intact
     assert tl.history(spark, t)[-1]["mode"] == "merge"
-
-    # widened-nullability read path: the merge landed a NULL k in a
-    # table whose v0 schema recorded k non-nullable (spark.range) —
-    # the DataSource batch read must deliver it, not NPE
-    spark.dataSource.register(ss.TablelogDataSource)
-    ds = sorted(
-        ((r.k, r.v) for r in
-         spark.read.format("tablelog").load(t).collect()),
-        key=key,
-    )
-    assert ds == exp
 
     # update + ignore: matched only; NULL-key source rows dropped
     t = mk("m_uig")
@@ -1803,94 +1196,6 @@ def test_merge_rows_clauses_and_guards(spark, tmp_path):
     assert [x for x in got if x[0] is None] == [(None, 7), (None, 8)]
 
 
-def test_merge_feeds_cdf_mv_and_streams(spark, tmp_path):
-    """X144 composition: a merge version flows through (a) batch
-    table_changes as exact D-preimage + I rows, (b) the X140 change
-    feed STREAM, (c) the X134 incremental MV WITHOUT keys= (the
-    overwrite path is the only one still needing keys), (d) the X142
-    streaming MV, and (e) the append stream refuses it unless
-    ignore_deletes (then delivers only the appended rows)."""
-    from tableone_pyspark_spark.sources import mv
-    import tableone_pyspark_spark.sources.stream_source as ss
-
-    key = lambda x: (x[0] is None, x[0])  # noqa: E731
-    t = str(tmp_path / "mf_src")
-    base = spark.range(12).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 3).cast("string").alias("g"),
-        (F.col("id") * 10).alias("v"),
-    )
-    tl.commit(spark, base.coalesce(2), t)                      # v0
-    dst = str(tmp_path / "mf_mv")
-    r1 = mv.refresh_aggregate(spark, t, dst, ["g"], ["v"])
-    assert r1["mode"] == "full"
-
-    # merge: move k=3 (g '0') value 30->3000, insert k=50 (g '2')
-    src = spark.createDataFrame(
-        [(3, "0", 3000), (50, "2", 500)], "k long, g string, v long"
-    )
-    tl.merge_rows(spark, t, src, ["k"])                        # v1
-
-    # (a) batch feed
-    ch = tl.table_changes(spark, t, 0)
-    d = [(r.k, r.g, r.v) for r in ch.where(F.col("op") == "D").collect()]
-    i = sorted(
-        ((r.k, r.g, r.v) for r in ch.where(F.col("op") == "I").collect()),
-        key=lambda x: x[0],
-    )
-    assert d == [(3, "0", 30)] and i == [(3, "0", 3000), (50, "2", 500)]
-
-    # (c) incremental MV over the merge, NO keys= needed
-    r2 = mv.refresh_aggregate(spark, t, dst, ["g"], ["v"])
-    assert r2["mode"] == "incremental", r2
-    got = {
-        r.g: (r.n, r.sum_v)
-        for r in tl.read_version(spark, dst).collect()
-    }
-    live = tl.read_version(spark, t)
-    exp = {
-        r.g: (r.n, r.sum_v)
-        for r in live.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sum_v"))
-        .collect()
-    }
-    assert got == exp, (got, exp)
-
-    # (b) + (d): change-feed stream and streaming MV across the merge
-    spark.dataSource.register(ss.TablelogDataSource)
-    dst2 = str(tmp_path / "mf_mv2")
-    q = (
-        mv.streaming_refresh(
-            spark, t, dst2, ["g"], ["v"], str(tmp_path / "mf_ck")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got2 = {
-        r.g: (r.n, r.sum_v)
-        for r in tl.read_version(spark, dst2).collect()
-    }
-    assert got2 == exp, (got2, exp)
-
-    # (e) append stream: refuse; ignore_deletes delivers appends only
-    with pytest.raises(Exception, match="is a merge"):
-        qq = (
-            spark.readStream.format("tablelog").load(t)
-            .writeStream.format("memory").queryName("mf_app")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        qq.awaitTermination()
-    q3 = (
-        spark.readStream.format("tablelog")
-        .option("ignore_deletes", "true").load(t)
-        .writeStream.format("memory").queryName("mf_app2")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q3.awaitTermination()
-    assert spark.table("mf_app2").count() == 14  # 12 snapshot + 2 appended
-
-
 def test_merge_duplicate_keyed_target_multiplicity(spark, tmp_path):
     """Delta MERGE multiplicity (review r14): a TARGET holding two
     rows with the same key gets EACH row updated — the merge retracts
@@ -1914,13 +1219,11 @@ def test_merge_duplicate_keyed_target_multiplicity(spark, tmp_path):
 def test_timestamp_time_travel(spark, tmp_path):
     """X145 — TIMESTAMP AS OF: version_at resolves an instant to the
     version current at that time (greatest committed_at <= ts);
-    read_version(as_of=) and the DataSource .option('timestamp')
-    read that version; before-first-commit raises, future resolves
-    to latest; datetime and ISO-string inputs accepted."""
+    read_version(as_of=) reads that version; before-first-commit
+    raises, future resolves to latest; datetime and ISO-string inputs
+    accepted."""
     import time as _time
     from datetime import datetime
-
-    import tableone_pyspark_spark.sources.stream_source as ss
 
     t = str(tmp_path / "ts_travel")
     marks = []
@@ -1951,23 +1254,6 @@ def test_timestamp_time_travel(spark, tmp_path):
     assert tl.read_version(spark, t, as_of=marks[1]).count() == 10
     with pytest.raises(ValueError, match="not both"):
         tl.read_version(spark, t, version=1, as_of=marks[1])
-
-    spark.dataSource.register(ss.TablelogDataSource)
-    assert (
-        spark.read.format("tablelog")
-        .option("timestamp", str(marks[1]))
-        .load(t)
-        .count()
-        == 10
-    )
-    iso = datetime.fromtimestamp(marks[0]).isoformat()
-    assert (
-        spark.read.format("tablelog").option("timestamp", iso)
-        .load(t).count() == 5
-    )
-    with pytest.raises(Exception, match="not both"):
-        spark.read.format("tablelog").option("timestamp", str(marks[1])) \
-            .option("version", 1).load(t).count()
 
 
 def test_convert_parquet_in_place(spark, tmp_path):
@@ -2386,59 +1672,6 @@ def test_in_commit_timestamps_monotone_and_restore_as_of(
         tl.restore(spark, t)
 
 
-def test_merge_cdf_update_labels(spark, tmp_path):
-    """r15 — Delta CDF change types for a merge: with
-    include_preimage=True an UPDATE-merge delivers its retracted
-    matches as U_pre and their postimage files as U_post while fresh
-    inserts stay I; a DELETE-merge keeps D; include_preimage=False
-    keeps the retract/assert D/I pair the mv consumer folds."""
-    t = str(tmp_path / "mlabels")
-    tl.commit(
-        spark,
-        spark.createDataFrame(
-            [(i, f"v{i}") for i in range(6)], "k long, s string"
-        ),
-        t,
-    )  # v0
-    src = spark.createDataFrame(
-        [(2, "upd2"), (4, "upd4"), (100, "new")], "k long, s string"
-    )
-    rep = tl.merge_rows(spark, t, src, ["k"])  # v1: 2 updates + 1 insert
-    assert rep["n_deleted"] == 2 and rep["n_inserted"] == 3
-
-    got = {
-        (r["k"], r["s"], r["op"])
-        for r in tl.table_changes(
-            spark, t, 0, include_preimage=True
-        ).collect()
-    }
-    assert got == {
-        (2, "v2", "U_pre"), (4, "v4", "U_pre"),
-        (2, "upd2", "U_post"), (4, "upd4", "U_post"),
-        (100, "new", "I"),
-    }
-    # the pair form is untouched by default
-    plain = {
-        (r["k"], r["op"]) for r in tl.table_changes(spark, t, 0).collect()
-    }
-    assert plain == {(2, "D"), (4, "D"), (2, "I"), (4, "I"), (100, "I")}
-
-    # a DELETE-merge stays D either way
-    rep2 = tl.merge_rows(
-        spark, t,
-        spark.createDataFrame([(0, "x")], "k long, s string"),
-        ["k"], when_matched="delete", when_not_matched="ignore",
-    )
-    assert rep2["n_deleted"] == 1
-    d = {
-        (r["k"], r["op"])
-        for r in tl.table_changes(
-            spark, t, 1, include_preimage=True
-        ).collect()
-    }
-    assert d == {(0, "D")}
-
-
 def test_user_metadata_stamped_and_surfaced(spark, tmp_path):
     """r15 — Delta's commitInfo userMetadata: a caller-supplied audit
     string on commit/merge versions, surfaced by describe_detail and
@@ -2736,12 +1969,10 @@ def test_log_shape_property_with_r15_publish_kinds(spark, tmp_path):
     X153 set/drop_generated and X155 set/unset_property (more
     files-unchanged metadata publishes), generated-column fills,
     appends/deletes/merges/overwrites — crossing checkpoint
-    boundaries — keep history() and the stream's _version_rows plan
-    IDENTICAL to the full doc walk, and the final read equal to a
-    python-side replay of the live row set."""
+    boundaries — keep history() IDENTICAL to the full doc walk, and
+    the final read equal to a python-side replay of the live row
+    set."""
     import random
-
-    import tableone_pyspark_spark.sources.stream_source as ss
 
     for seed in (5, 17):
         rng = random.Random(seed)
@@ -2837,22 +2068,6 @@ def test_log_shape_property_with_r15_publish_kinds(spark, tmp_path):
             tl._log_maxima = orig
         assert fast == slow
 
-        def plan():
-            r = ss._TablelogStreamReader(t, True, True, None)
-            return sorted(
-                (p.path, tuple(p.deleted))
-                for p in r.partitions({"version": -1}, {"version": cur})
-            )
-
-        with_ck = plan()
-        orig_l = ss._log_listing
-        try:
-            ss._log_listing = lambda tb: (orig_l(tb)[0], [])
-            without_ck = plan()
-        finally:
-            ss._log_listing = orig_l
-        assert with_ck == without_ck
-
         # generated invariant: wherever x1 exists and is non-null it
         # equals k * 2 (fills and gates agreed through every publish)
         out = tl.read_version(spark, t)
@@ -2901,14 +2116,6 @@ def test_optimize_rebase_across_evolved_append(spark, tmp_path, monkeypatch):
     got = {r["k"]: r["w"] for r in out.collect()}
     assert len(got) == 51 and got[100] == 7.5
     assert all(got[i] is None for i in range(50))  # NULL-filled rewrite
-    # the DataSource read agrees (Arrow-side NULL-fill)
-    from tableone_pyspark_spark.sources.stream_source import (
-        TablelogDataSource,
-    )
-
-    spark.dataSource.register(TablelogDataSource)
-    ds = spark.read.format("tablelog").load(t)
-    assert ds.count() == 51 and ds.where(F.col("w").isNull()).count() == 50
 
 
 def test_commit_rebase_reenforces_interleaved_generated(

@@ -3,8 +3,7 @@ type widening): ``commit(merge_schema=True)`` with a column WIDER
 along the _WIDENINGS chain (tinyint→smallint→int→bigint,
 float→double, {tinyint,smallint,int}→double) widens the DECLARED
 schema; old files keep their narrow physical type and every read
-path promotes — the batch reader via Spark 4's native parquet type
-promotion, the Python DataSource via an explicit arrow up-cast. A
+path promotes via Spark 4's native parquet type promotion. A
 write NARROWER than the declared type casts up at write time
 (store-assignment), so new files always store the declared width.
 Widened docs stamp the 'widen' reader feature (X160) — an older
@@ -22,13 +21,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tableone_pyspark_spark.sources import tablelog as tl
-from tableone_pyspark_spark.sources.stream_source import TablelogDataSource
-
-
-@pytest.fixture()
-def registered(spark):
-    spark.dataSource.register(TablelogDataSource)
-    return spark
 
 
 def _widen_table(spark, tmp_path, name="wid_tbl"):
@@ -147,79 +139,6 @@ def test_widen_dv_merge_and_optimize(spark, tmp_path):
     assert {r["k"]: r["v"] for r in tl.read_version(spark, t).collect()} == got
 
 
-def test_widen_cdf_spans_the_widening(spark, tmp_path):
-    """table_changes across the widening version delivers at the WIDE
-    type (the narrow side of the union casts up)."""
-    t = _widen_table(spark, tmp_path)
-    tl.delete_rows(spark, t, F.col("k") == 1)
-    ch = tl.table_changes(spark, t, 0)
-    assert dict(ch.dtypes)["k"] == "bigint"
-    by_type = {}
-    for r in ch.collect():
-        by_type.setdefault(r["op"], []).append(r["k"])
-    assert sorted(by_type.get("I", [])) == [2**40]
-    assert by_type.get("D") == [1]
-
-
-def test_widen_datasource_batch_and_stream(registered, tmp_path):
-    """The Python DataSource: batch reads promote narrow files via
-    the arrow up-cast; a RUNNING stream (reader pinned before the
-    widening) refuses the widening version mid-stream; a RESTARTED
-    stream re-pins to the wide schema and continues from its
-    checkpoint; a fresh stream reads everything — including the
-    narrow snapshot files — at the wide schema (Delta's restart
-    semantics)."""
-    spark = registered
-    t = str(tmp_path / "ds_widen")
-    tl.commit(
-        spark, spark.createDataFrame([(1, 1.5)], "k int, v float"), t
-    )
-
-    def drain(name, ck):
-        # file sink (memory sinks refuse checkpoint RECOVERY); read
-        # back under the WIDE schema — the sink dir legitimately
-        # holds int32 files from pre-widening batches next to int64
-        # ones, the same promotion the table itself relies on
-        out = str(tmp_path / f"out_{name}")
-        q = (
-            spark.readStream.format("tablelog").load(t)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / ck))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        return sorted(
-            r["k"]
-            for r in spark.read.schema("k bigint, v double")
-            .parquet(out).collect()
-        )
-
-    assert drain("w0", "ck0") == [1]  # pinned at the narrow schema
-    # a reader pinned NOW (narrow) must refuse the widening version
-    from tableone_pyspark_spark.sources.stream_source import (
-        _TablelogStreamReader,
-    )
-
-    running = _TablelogStreamReader(t, False, False, None)
-    tl.commit(
-        spark,
-        spark.createDataFrame([(2**40, 9.5)], "k bigint, v double"),
-        t, merge_schema=True,
-    )
-    with pytest.raises(ValueError, match="schema changed"):
-        running.partitions({"version": 0}, {"version": 1})
-    # batch read: arrow up-cast on the v0 narrow file
-    got = spark.read.format("tablelog").load(t)
-    assert dict(got.dtypes) == {"k": "bigint", "v": "double"}
-    assert sorted(r["k"] for r in got.collect()) == [1, 2**40]
-    # the RESTARTED stream re-pins wide and continues from offset v0
-    assert drain("w0", "ck0") == [1, 2**40]
-    # a fresh stream delivers the narrow v0 snapshot under the wide
-    # pin (the widened-subset deliverability rule + arrow up-cast)
-    assert drain("w1", "ck1") == [1, 2**40]
-
-
 def test_widen_rename_drop_restore_interplay(spark, tmp_path):
     t = _widen_table(spark, tmp_path)
     tl.rename_column(spark, t, "k", "kid")
@@ -238,24 +157,3 @@ def test_widen_rename_drop_restore_interplay(spark, tmp_path):
     df = tl.read_version(spark, t)
     assert dict(df.dtypes) == {"k": "bigint", "v": "double"}
     assert sorted(r["k"] for r in df.collect()) == [1, 2, 2**40]
-
-
-def test_widening_matrices_parity():
-    """The stream_source copy of the widening matrix (planning workers
-    stay pyspark-free) must be byte-equal to tablelog._WIDENINGS —
-    same rule as the reader-features parity pin."""
-    from tableone_pyspark_spark.sources import stream_source as ss
-
-    assert ss._TYPE_WIDENINGS == tl._WIDENINGS
-    # and the arrow spelling covers exactly the same pairs
-    _arrow = {"tinyint": "int8", "smallint": "int16", "int": "int32",
-              "bigint": "int64", "float": "float", "double": "double"}
-    got = {
-        (_arrow[f], _arrow[t])
-        for f, ts in tl._WIDENINGS.items()
-        for t in ts
-    }
-    want = {
-        (f, t) for f, ts in ss._ARROW_WIDENINGS.items() for t in ts
-    }
-    assert got == want
