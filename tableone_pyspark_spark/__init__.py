@@ -25,8 +25,8 @@ Design (vs. reference):
     ``LocalTableScan`` whose ``collect()`` runs no Spark job.
   * Hypothesis tests (t / ANOVA / chi-square) are computed from those
     same collected aggregates. Their tail probabilities come from the
-    engine's own incomplete beta / gamma functions (``core/special.py``);
-    scipy is not required, and is used instead only when importable.
+    engine's own incomplete beta / gamma functions (``core/special.py``),
+    never from scipy.
   * No ``repartition(1)`` (13 sites in the reference), no pandas
     round-trips, no per-stat joins.
 """

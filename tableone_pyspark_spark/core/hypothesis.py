@@ -5,8 +5,7 @@ columns to the driver via ``toPandas`` and runs scipy on raw data. At
 100 TB that is impossible; here every test consumes only the per-group
 aggregates the engine already collected (k scalar rows). The tail
 probabilities of those driver-side scalars come from ``core/special.py``
-(regularized incomplete beta / gamma); scipy is not required, and when
-it is importable ``scipy.stats`` replaces those functions.
+(regularized incomplete beta / gamma); scipy is never used.
 
 Semantics preserved (SURVEY §2.8, Appendix):
   * 2 strat groups  -> Student's t-test, equal variance (NOT Welch;
@@ -32,11 +31,6 @@ from dataclasses import dataclass
 
 from tableone_pyspark_spark.core import special
 
-try:  # scipy, if present, is preferred (bit-identical to the reference)
-    from scipy import stats as _scipy_stats
-except ImportError:
-    _scipy_stats = None
-
 NOT_DONE = ("NOT DONE", float("nan"), float("nan"))
 
 
@@ -47,24 +41,6 @@ class GroupMoments:
     n: int          # non-null count
     mean: float | None
     var: float | None  # sample variance (ddof=1); None when n < 2
-
-
-def _sf_t(t: float, dof: float) -> float:
-    if _scipy_stats is not None:
-        return float(2.0 * _scipy_stats.t.sf(abs(t), dof))
-    return special.t_sf_two_sided(t, dof)
-
-
-def _sf_f(f: float, dfn: float, dfd: float) -> float:
-    if _scipy_stats is not None:
-        return float(_scipy_stats.f.sf(f, dfn, dfd))
-    return special.f_sf(f, dfn, dfd)
-
-
-def _sf_chi2(x: float, dof: float) -> float:
-    if _scipy_stats is not None:
-        return float(_scipy_stats.chi2.sf(x, dof))
-    return special.chi2_sf(x, dof)
 
 
 def student_t_test(a: GroupMoments, b: GroupMoments) -> tuple[str, float, float]:
@@ -88,7 +64,7 @@ def student_t_test(a: GroupMoments, b: GroupMoments) -> tuple[str, float, float]
     if denom != denom or denom == 0.0:
         return ("t-test", float("nan"), float("nan"))
     t = (m1 - m2) / denom
-    return ("t-test", _sf_t(t, dof), t)
+    return ("t-test", special.t_sf_two_sided(t, dof), t)
 
 
 def one_way_anova(groups: list[GroupMoments]) -> tuple[str, float, float]:
@@ -113,7 +89,7 @@ def one_way_anova(groups: list[GroupMoments]) -> tuple[str, float, float]:
     if msw != msw or msw == 0.0:
         return ("ANOVA", float("nan"), float("nan"))
     f = (ssb / dfn) / msw
-    return ("ANOVA", _sf_f(f, dfn, dfd), f)
+    return ("ANOVA", special.f_sf(f, dfn, dfd), f)
 
 
 def continuous_test(groups: list[GroupMoments]) -> tuple[str, float, float]:
@@ -147,10 +123,7 @@ def chi_square(contingency: dict[tuple[str, str], int]) -> tuple[str, float, flo
         # as undefined test, matching a NaN outcome rather than crashing.
         return ("Chi-Square", float("nan"), float("nan"))
     obs = [[float(contingency.get((r, c), 0)) for c in cols] for r in rows]
-    if _scipy_stats is not None:
-        chi2, p, _dof, _exp = _scipy_stats.chi2_contingency(obs)
-        return ("Chi-Square", float(p), float(chi2))
-    # Manual fallback with Yates correction on 2x2 (scipy default)
+    # Yates continuity correction on 2x2 (scipy's chi2_contingency default)
     row_tot = [sum(r) for r in obs]
     col_tot = [sum(obs[i][j] for i in range(len(rows))) for j in range(len(cols))]
     yates = len(rows) == 2 and len(cols) == 2
@@ -165,4 +138,4 @@ def chi_square(contingency: dict[tuple[str, str], int]) -> tuple[str, float, flo
                 d = max(0.0, d - 0.5)
             stat += d * d / exp
     dof = (len(rows) - 1) * (len(cols) - 1)
-    return ("Chi-Square", _sf_chi2(stat, dof), stat)
+    return ("Chi-Square", special.chi2_sf(stat, dof), stat)

@@ -36,9 +36,7 @@ OOM. Truncation at ANY byte offset raises ValueError (pinned in
 tests across every offset of a reference stream).
 
 No counterpart in the reference repo (tableone_pyspark.py is a
-tabular engine); this extends the multimodal family's decode seam
-(`operators/multimodal.py` audio_metadata) with a second REAL format
-next to RIFF/WAVE.
+tabular engine); it is the lossless sibling of ``functions/wav.py``.
 """
 
 from __future__ import annotations

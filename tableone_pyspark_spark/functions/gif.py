@@ -1,11 +1,8 @@
-"""Pure-Python GIF codec (stdlib struct + numpy) for the multimodal
-operators — the GIF sibling of ``functions/png.py`` / ``jpeg.py``.
+"""Pure-Python GIF codec (stdlib struct + numpy) — the GIF sibling of
+``functions/png.py`` / ``jpeg.py``.
 
-The container ships no image codecs, but GIF needs only LZW inflate +
-palette lookup, both expressible with the stdlib. This upgrades GIF
-payloads from byte-stub to real pixel semantics while keeping the same
-Arrow kernel shape (operators/multimodal.py): payload bytes in, typed
-metadata/pixels out, nothing leaves the executor.
+GIF needs only LZW inflate + palette lookup, both expressible with the
+stdlib: payload bytes in, typed metadata/pixels out.
 
 Supported (per the public GIF89a specification, CompuServe 1990):
 GIF87a and GIF89a, global and local color tables of any spec size
@@ -31,8 +28,7 @@ million-frame bomb fails fast. Every hostile path raises ``ValueError``
 
 Performance note: LZW is a Python loop over codes (inherently serial —
 each code extends the dictionary the next one may reference). Fine for
-thumbnails/fixtures; production swaps PIL into the same multimodal
-seam. The encoder exists for fixtures and round-trip oracles: it emits
+thumbnails/fixtures; production would use PIL. The encoder exists for fixtures and round-trip oracles: it emits
 an explicit Clear when the table fills, so encoder output never relies
 on deferred-clear decoding.
 """
@@ -406,8 +402,7 @@ def gif_meta(payload: bytes, max_pixels: int = MAX_PIXELS) -> tuple[int, int, st
 
 def decode_gif(payload: bytes, max_pixels: int = MAX_PIXELS) -> np.ndarray:
     """First frame composed onto the logical screen as (h, w, 3) uint8
-    RGB — the still-image view of the payload (what ``image_metadata``
-    consumes). Off-frame screen area takes the background color;
+    RGB — the still-image view of the payload. Off-frame screen area takes the background color;
     transparent pixels keep it."""
     sw, sh, gct, bg, frames = _parse_frames(
         payload, max_pixels, MAX_TOTAL_PIXELS, first_only=True

@@ -1,12 +1,9 @@
-"""Pure-Python baseline JPEG codec (stdlib + numpy) for the
-multimodal operators — the JFIF twin of ``functions/png.py``.
+"""Pure-Python baseline JPEG codec (stdlib + numpy) — the JFIF twin of
+``functions/png.py``.
 
-The container ships no image codecs; baseline (sequential DCT,
-8-bit, Huffman) JPEG needs only bit twiddling + an 8x8 IDCT, both
-expressible with numpy. This upgrades the majority image format from
-byte-stub to real pixel semantics behind the same Arrow-kernel seam
-(``operators/multimodal.py``): payload bytes in, typed metadata /
-pixels out, nothing leaves the executor.
+Baseline (sequential DCT, 8-bit, Huffman) JPEG needs only bit
+twiddling + an 8x8 IDCT, both expressible with numpy: payload bytes
+in, typed metadata / pixels out.
 
 Supported: baseline DCT (SOF0) and progressive (SOF2, both spectral
 selection with EOB-run coding AND successive approximation — DC/AC
@@ -22,7 +19,7 @@ whose decode is pinned pixel-identical to the BASELINE decode of the
 same image — three independently-written paths must agree.
 Arithmetic coding, 12-bit, and sampling factors >2 raise
 ``NotImplementedError`` — the honest boundary of a dependency-free
-decoder (production swaps PIL/turbojpeg behind the same seam).
+decoder (production would use PIL/turbojpeg).
 
 Determinism contract (what makes decoded stats SQL-oracle-checkable):
 quantization uses ``floor(x/q + 0.5)`` and pixel reconstruction uses
@@ -35,8 +32,7 @@ therefore collapses to closed-form integer arithmetic
 
 (F00 of a flat shifted block is exactly 8*(v-128); every AC
 coefficient is exactly 0), which a DuckDB oracle replays bit-for-bit.
-``synthesize_jpeg_corpus`` (operators/multimodal.py) exploits exactly
-this regime; general non-flat blocks decode correctly too (round-trip
+General non-flat blocks decode correctly too (round-trip
 property-tested within quantization error).
 
 Hostile-input hardening mirrors png.py: SOF dimensions are bounded by

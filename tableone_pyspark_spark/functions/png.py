@@ -1,12 +1,8 @@
-"""Pure-Python PNG codec (stdlib zlib/struct + numpy) for the
-multimodal operators.
+"""Pure-Python PNG codec (stdlib zlib/struct + numpy).
 
-The container ships no image codecs, but PNG's baseline format needs
-only inflate + per-scanline unfiltering — both expressible with the
-stdlib. This upgrades the multimodal kernels from byte-stub to real
-pixel semantics for PNG payloads while keeping the same Arrow kernel
-shape (see operators/multimodal.py): payload bytes in, typed
-metadata/pixels out, nothing leaves the executor.
+PNG's baseline format needs only inflate + per-scanline unfiltering —
+both expressible with the stdlib: payload bytes in, typed
+metadata/pixels out.
 
 Supported: every spec-valid (depth × color type) combination — gray
 1/2/4/8/16, palette 1/2/4/8 (expanded to RGB via PLTE, RGBA with
@@ -397,8 +393,7 @@ def grayscale(arr: np.ndarray) -> np.ndarray:
 def dhash63(arr: np.ndarray) -> int:
     """Real dHash on decoded pixels: grayscale -> 9x8 nearest resize ->
     row-wise gradient bits, keeping 63 bits so the value stays positive
-    in a signed long on every engine (same contract as the byte-stub
-    signature in operators/multimodal.py)."""
+    in a signed long on every engine)."""
     g = resize_nearest(grayscale(arr)[:, :, None], 9, 8)[:, :, 0].astype(np.int64)
     bits = (g[:, 1:] > g[:, :-1]).astype(np.int64).ravel()[:63]
     weights = 1 << np.arange(bits.size, dtype=np.int64)

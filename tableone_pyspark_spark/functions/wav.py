@@ -1,14 +1,10 @@
-"""Pure-Python WAV (RIFF/WAVE) codec for the multimodal operators —
-the audio sibling of ``functions/png.py`` / ``jpeg.py`` / ``gif.py``.
+"""Pure-Python WAV (RIFF/WAVE) codec — the audio sibling of
+``functions/png.py`` / ``jpeg.py`` / ``gif.py``.
 
 WAV is a chunked container over raw PCM, fully expressible with
-stdlib struct + numpy, so WAV payloads upgrade ``audio_metadata``
-from the headerless-PCM byte-stub to REAL header semantics: the
-sample rate comes from the ``fmt `` chunk (not a fake derived from
-byte 0), sample counts from the ``data`` chunk, and RMS from the
-actual decoded samples. FLAC decodes for real too since r7
-(``functions/flac.py``); the remaining compressed formats (MP3/AAC)
-have no codec in this container and keep the documented stub seam.
+stdlib struct + numpy: the sample rate comes from the ``fmt `` chunk,
+sample counts from the ``data`` chunk. ``functions/flac.py`` decodes
+FLAC; ``functions/mp3.py`` reads MP3 frame headers only.
 
 Supported (public RIFF/WAVE spec, Microsoft/IBM 1991, + ITU-T G.711):
 PCM (wFormatTag 1) at 8 (unsigned), 16/24/32-bit (signed

@@ -35,7 +35,7 @@ whole-stage); every computed ``sequence(lo, hi)`` is guarded
 ``hi ≥ lo`` (Spark sequences DESCEND when hi < lo).
 
 DuckDB has ``levenshtein`` → the all-pairs twin is an exact oracle
-(the ``phash_neardup`` precedent); r11 graded candidate
+(the ``signature_neardup_pairs`` precedent); r11 graded candidate
 ``fuzzy_pairs``.
 """
 

@@ -9,9 +9,11 @@ agg as ``percentile_approx``'s mergeable GK sketch where requested
 under the sketch accuracy, rank-bounded beyond; the plain
 ``windowed_sufficient_stats`` keeps scalar-only state.
 
-``streaming_tableone_hourly`` works on any streaming DataFrame with
-(ts, event_type, value); with a watermark, state for closed windows is
-dropped, so the query runs indefinitely at production rates.
+``windowed_sufficient_stats`` works on any streaming DataFrame with
+(ts, event_type, value), ``streaming_tableone`` on one with a
+timestamp, a strat column and the analyzed columns; with a watermark,
+state for closed windows is dropped, so either query runs indefinitely
+at production rates.
 """
 
 from __future__ import annotations

@@ -390,3 +390,15 @@ def test_select_representatives_duplicate_id_raises(spark):
     # clean inputs still pass through the gates unchanged
     ok = select_representatives(docs, clusters, "doc_id", score_col="q")
     assert {r["doc_id"] for r in ok.collect()} == {1}
+
+
+def test_signature_neardup_validates_max_hamming(spark):
+    import pytest as _pytest
+
+    from tableone_pyspark_spark.operators.dedup import signature_neardup_pairs
+
+    sig = spark.createDataFrame([(1, 5), (2, 7)], "id long, sg long")
+    with _pytest.raises(ValueError, match="max_hamming"):
+        signature_neardup_pairs(sig, "id", "sg", 64)
+    with _pytest.raises(ValueError, match="max_hamming"):
+        signature_neardup_pairs(sig, "id", "sg", -1)

@@ -223,6 +223,32 @@ def test_chi_square_not_done_gate(spark):
     assert math.isnan(anchor["p_value"])
 
 
+@pytest.mark.parametrize(
+    "a, b, c, d, chi2, p",
+    [
+        (10, 20, 30, 40, 0.4464285714, 0.5040358665),
+        (12, 5, 3, 9, 4.1714577498, 0.0411104142),
+        (5, 5, 5, 6, 0.0, 1.0),  # |ad - bc| < N/2: the correction clamps to 0
+    ],
+)
+def test_chi_square_2x2_yates(a, b, c, d, chi2, p):
+    from tableone_pyspark_spark.core.hypothesis import chi_square
+
+    n = a + b + c + d
+    closed = (
+        n * max(0.0, abs(a * d - b * c) - n / 2) ** 2
+        / ((a + b) * (c + d) * (a + c) * (b + d))
+    )
+    assert closed == pytest.approx(chi2, abs=1e-9)
+    assert math.erfc(math.sqrt(closed / 2)) == pytest.approx(p, abs=1e-9)
+    name, got_p, got_chi2 = chi_square(
+        {("u", "X"): a, ("u", "Y"): b, ("v", "X"): c, ("v", "Y"): d}
+    )
+    assert name == "Chi-Square"
+    assert got_chi2 == pytest.approx(closed, rel=1e-12, abs=1e-12)
+    assert got_p == pytest.approx(math.erfc(math.sqrt(closed / 2)), rel=1e-9)
+
+
 def test_p_values_forced_off_unstratified(patients):
     with pytest.warns(UserWarning, match="p_values indicator overridden to False"):
         out = tableone(patients, cols_to_analyze=["age"], p_values=True)

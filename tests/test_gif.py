@@ -1,4 +1,4 @@
-"""Pure-Python GIF codec + its multimodal kernel integration.
+"""Pure-Python GIF codec.
 
 LZW decode is pinned against a HAND-PACKED spec vector (codes derived
 on paper from the GIF89a LZW rules, including the width-growth edge),
@@ -214,50 +214,6 @@ def test_unknown_block_type_rejected():
     p[13 + 768] = 0x7F  # clobber the image separator
     with pytest.raises(ValueError, match="unknown block"):
         gif.decode_gif(bytes(p))
-
-
-# ---------------------------------------------------------------------------
-# Spark integration: corpus synth -> real decode, exact byte means
-# ---------------------------------------------------------------------------
-
-
-def test_gif_corpus_decode_matches_source_bytes(spark):
-    from tableone_pyspark_spark.operators.multimodal import (
-        image_metadata,
-        synthesize_gif_corpus,
-    )
-
-    rows = [(i, f"doc {i} " + "x" * (i % 23)) for i in range(1, 13)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    imgs = synthesize_gif_corpus(df, "doc_id", "text", w=16, h=16)
-    got = {r["id"]: r for r in image_metadata(imgs, "id", "payload").collect()}
-    assert set(got) == {i for i, _ in rows}
-    for i, txt in rows:
-        raw = txt.encode()
-        exp = np.frombuffer(raw, dtype=np.uint8)[
-            np.arange(256) % len(raw)
-        ].mean() / 255.0
-        r = got[i]
-        assert (r["width"], r["height"], r["channels"]) == (16, 16, 3)
-        assert r["mean_intensity"] == pytest.approx(exp, abs=1e-12)
-
-
-def test_image_phash_real_pixels_for_gif(spark):
-    """A GIF and a PNG of the SAME pixels must produce the SAME real
-    dHash (both route through png.dhash63 on decoded pixels), and it
-    must differ from the byte-stub gradient of the GIF's raw bytes."""
-    from tableone_pyspark_spark.functions import png
-    from tableone_pyspark_spark.operators.multimodal import image_phash
-
-    idx = _rng(11).integers(0, 256, (16, 16), dtype=np.uint8)
-    gif_payload = gif.encode_gif(idx, _GRAY_PAL)
-    png_payload = png.encode_png(idx[:, :, None])
-    df = spark.createDataFrame(
-        [(1, bytearray(gif_payload)), (2, bytearray(png_payload))],
-        "id long, payload binary",
-    )
-    got = {r["id"]: r["dhash"] for r in image_phash(df, "id", "payload").collect()}
-    assert got[1] == got[2]
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Pure-Python baseline JPEG codec + its multimodal integration.
+"""Pure-Python baseline JPEG codec.
 
 Spec pins: the flat-block (DC-only) closed form must hold for every
 source value (this is what makes the lossy codec SQL-oracle-checkable),
@@ -203,44 +203,6 @@ def test_dc_differential_coding_across_blocks():
     for bx in range(8):
         v = int(a[0, bx * 8])
         assert np.all(d[:, bx * 8 : bx * 8 + 8] == jpeg.flat_block_decode_value(v))
-
-
-# ---------------------------------------------------------------------------
-# Spark kernel integration
-# ---------------------------------------------------------------------------
-
-
-def test_image_metadata_decodes_jpeg_for_real(spark):
-    from tableone_pyspark_spark.operators.multimodal import (
-        image_metadata,
-        synthesize_jpeg_corpus,
-    )
-
-    rows = [(1, "hello world"), (2, "abcdefgh"), (3, "Z")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    imgs = synthesize_jpeg_corpus(df, "doc_id", "text", blocks=4)
-    out = {r["id"]: r for r in image_metadata(imgs, "id", "payload").collect()}
-    assert set(out) == {1, 2, 3}
-    for doc_id, text in rows:
-        raw = text.encode()
-        want = sum(
-            jpeg.flat_block_decode_value(raw[k % len(raw)]) for k in range(4)
-        ) / 4 / 255.0
-        r = out[doc_id]
-        assert (r["width"], r["height"], r["channels"]) == (8, 32, 1)
-        assert abs(r["mean_intensity"] - want) < 1e-12
-
-
-def test_image_phash_jpeg_payloads(spark):
-    from tableone_pyspark_spark.operators.multimodal import image_phash
-    from tableone_pyspark_spark.functions import png
-
-    grad = np.tile(np.arange(0, 256, 16, dtype=np.uint8), (16, 1))
-    payload = jpeg.encode_jpeg_gray(grad)
-    df = spark.createDataFrame([(1, bytearray(payload))], "id long, p binary")
-    got = image_phash(df, "id", "p").collect()[0]["dhash"]
-    assert got == png.dhash63(jpeg.decode_jpeg(payload))
-    assert got > 0
 
 
 # ---------------------------------------------------------------------------

@@ -554,28 +554,6 @@ def test_salted_join_plan_spreads_key_and_preserves_columns(spark, lineitem):
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, plain))
 
 
-def test_png_pipeline_is_shuffle_free(spark):
-    """synthesize -> decode is two chained Arrow kernels: the only
-    exchange permitted is the conditional ROUND-ROBIN core-spread in
-    front of the CPU-bound kernel (a no-op on wide inputs — the
-    100 TB case is a pure per-partition pipeline); never a hash/range
-    shuffle, and the scan prunes to the two used columns."""
-    from tableone_pyspark_spark.operators.multimodal import (
-        image_metadata,
-        synthesize_png_corpus,
-    )
-
-    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    meta = image_metadata(
-        synthesize_png_corpus(d, "doc_id", "text"), "id", "payload"
-    )
-    facts = inspect.plan_facts(meta)
-    assert facts.n_exchanges <= 1
-    exe = inspect.executed_plan(meta)
-    assert exe.count("Exchange") == exe.count("RoundRobinPartitioning")
-    inspect.assert_scan_pruned(meta, {"doc_id", "text"})
-
-
 def test_streaming_tableone_single_stateful_agg(spark):
     """The whole streaming TableOne must plan as ONE stateful
     aggregation (one StateStoreSave), not one per variable."""
@@ -630,26 +608,6 @@ def test_weighted_sample_fence_single_evaluation(spark):
     assert plan.count(marker) == one_copy, plan
     # and the fence itself is present (rand() makes the field opaque)
     assert "rand(" in plan
-
-
-def test_jpeg_pipeline_is_shuffle_free(spark):
-    """synthesize -> decode (JPEG twin): only the conditional
-    round-robin core-spread is permitted (no-op on wide inputs), never
-    a hash/range shuffle; scan pruned to the two used columns."""
-    from tableone_pyspark_spark.operators.multimodal import (
-        image_metadata,
-        synthesize_jpeg_corpus,
-    )
-
-    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    meta = image_metadata(
-        synthesize_jpeg_corpus(d, "doc_id", "text"), "id", "payload"
-    )
-    facts = inspect.plan_facts(meta)
-    assert facts.n_exchanges <= 1
-    exe = inspect.executed_plan(meta)
-    assert exe.count("Exchange") == exe.count("RoundRobinPartitioning")
-    inspect.assert_scan_pruned(meta, {"doc_id", "text"})
 
 
 def test_distributed_quartiles_range_partition_cells(spark, monkeypatch):

@@ -1,9 +1,8 @@
-"""Pure-Python PNG codec + its multimodal kernel integration.
+"""Pure-Python PNG codec.
 
 Decode correctness is pinned against hand-filtered scanlines (every
 PNG filter type forward-applied in the test, so the decoder must
-invert them exactly), and the Spark kernels are driven with real PNG
-payloads end-to-end."""
+invert them exactly)."""
 
 from __future__ import annotations
 
@@ -204,76 +203,6 @@ def test_resize_and_grayscale_primitives():
     assert np.array_equal(g, ((77 * r + 150 * gg + 29 * b) >> 8).astype(np.uint8))
 
 
-# ---------------------------------------------------------------------------
-# Spark kernels on real PNGs
-# ---------------------------------------------------------------------------
-
-
-def _png_df(spark, arrays):
-    rows = [(i, bytearray(png.encode_png(a))) for i, a in enumerate(arrays)]
-    return spark.createDataFrame(rows, "id long, payload binary")
-
-
-def test_image_metadata_real_pixels(spark):
-    from tableone_pyspark_spark.operators.multimodal import image_metadata
-
-    arrs = [
-        np.full((4, 6, 3), 100, dtype=np.uint8),
-        _rng(9).integers(0, 256, size=(12, 5, 1), dtype=np.uint8),
-    ]
-    out = {r["id"]: r for r in image_metadata(_png_df(spark, arrs), "id", "payload").collect()}
-    assert (out[0]["width"], out[0]["height"], out[0]["channels"]) == (6, 4, 3)
-    assert out[0]["mean_intensity"] == pytest.approx(100 / 255.0)
-    assert (out[1]["width"], out[1]["height"], out[1]["channels"]) == (5, 12, 1)
-    assert out[1]["mean_intensity"] == pytest.approx(float(arrs[1].mean()) / 255.0)
-
-
-def test_image_metadata_mixed_payloads_fall_back_to_stub(spark):
-    from tableone_pyspark_spark.operators.multimodal import image_metadata
-
-    arr = np.full((4, 4, 3), 7, dtype=np.uint8)
-    rows = [
-        (0, bytearray(png.encode_png(arr))),
-        (1, bytearray(b"not-an-image-payload")),
-    ]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    out = {r["id"]: r for r in image_metadata(df, "id", "payload").collect()}
-    assert out[0]["width"] == 4  # real decode
-    assert out[1]["width"] == 64 + (ord("n") % 64)  # deterministic stub
-
-
-def test_image_phash_real_gradients(spark):
-    from tableone_pyspark_spark.operators.multimodal import image_phash
-
-    base = _rng(5).integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    near = base.copy()
-    near[0, 0] = 255 - near[0, 0]  # one-pixel change
-    far = _rng(6).integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    out = {
-        r["id"]: r["dhash"]
-        for r in image_phash(_png_df(spark, [base, near, far]), "id", "payload").collect()
-    }
-    assert all(v >= 0 for v in out.values())  # 63-bit: positive longs
-    ham = lambda a, b: bin(a ^ b).count("1")
-    assert ham(out[0], out[1]) <= 8  # near-dup: few gradient bits move
-    assert ham(out[0], out[2]) > ham(out[0], out[1])
-    # pinned to the pure-python reference implementation
-    assert out[0] == png.dhash63(base)
-
-
-def test_resize_png_round_trip(spark):
-    from tableone_pyspark_spark.operators.multimodal import resize_png
-
-    arr = _rng(11).integers(0, 256, size=(32, 48, 3), dtype=np.uint8)
-    out = resize_png(_png_df(spark, [arr]), "id", "payload", out_w=12, out_h=8).first()
-    assert (out["width"], out["height"]) == (12, 8)
-    got = png.decode_png(bytes(out["resized"]))
-    assert np.array_equal(got, png.resize_nearest(arr, 12, 8))
-    with pytest.raises(Exception):  # non-PNG input must fail loudly
-        df = spark.createDataFrame([(0, bytearray(b"xx"))], "id long, payload binary")
-        resize_png(df, "id", "payload").collect()
-
-
 # property: round-trip holds for arbitrary shapes/channels/content
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -314,21 +243,12 @@ def test_16bit_round_trip_and_filters():
     assert np.array_equal(dec[0, :, 0], row[0])
 
 
-def test_16bit_grayscale_and_metadata_scale(spark):
-    """grayscale() down-converts 16-bit via the high byte; the decode
-    kernel normalizes mean by 65535."""
+def test_16bit_grayscale_and_metadata_scale():
+    """grayscale() down-converts 16-bit via the high byte."""
     v = np.full((8, 8), 0x8000, dtype=np.uint16)  # mid-gray
     arr = png.decode_png(png.encode_png(v))
     g = png.grayscale(arr)
     assert g.dtype == np.uint8 and np.all(g == 0x80)
-
-    from tableone_pyspark_spark.operators.multimodal import image_metadata
-
-    payload = png.encode_png(v)
-    df = spark.createDataFrame([(1, bytearray(payload))], "id long, p binary")
-    r = image_metadata(df, "id", "p").collect()[0]
-    assert (r["width"], r["height"], r["channels"]) == (8, 8, 1)
-    assert abs(r["mean_intensity"] - 0x8000 / 65535.0) < 1e-12
 
 
 def _assemble_adam7(arr: np.ndarray) -> bytes:

@@ -543,30 +543,6 @@ def test_weighted_partition_invariance_fractional_weights(spark, rows, seed):
                 assert q_valid(sub, p, got), (lab, col, got)
 
 
-# ---- TIFF LZW codec (pure-Python, no Spark session needed) ---------------
-
-
-@given(data=st.binary(max_size=4000))
-@settings(max_examples=200, deadline=None)
-def test_lzw_round_trip_property(data):
-    from tableone_pyspark_spark.functions.tiff import _lzw_decode, lzw_encode
-
-    assert _lzw_decode(lzw_encode(data), len(data)) == data
-
-
-@given(
-    data=st.lists(st.integers(0, 3), min_size=0, max_size=6000),
-)
-@settings(max_examples=50, deadline=None)
-def test_lzw_low_entropy_round_trip_property(data):
-    # low-entropy streams drive the dictionary deep into the width
-    # schedule (and across table resets at larger sizes)
-    from tableone_pyspark_spark.functions.tiff import _lzw_decode, lzw_encode
-
-    raw = bytes(data)
-    assert _lzw_decode(lzw_encode(raw), len(raw)) == raw
-
-
 @given(
     keys=st.lists(st.text(min_size=0, max_size=8), min_size=0, max_size=60),
     width=st.integers(2, 64),

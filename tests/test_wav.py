@@ -1,10 +1,8 @@
-"""Pure-Python WAV codec + its audio_metadata integration.
+"""Pure-Python WAV codec.
 
 Round trips across every supported (format × depth), hand-built
 header parsing (a WAV written byte-by-byte in the test, not by our
-encoder), chunk-walk hardening, and the Spark kernel dispatching
-WAV payloads to the real parser while non-RIFF payloads keep the
-documented stub semantics unchanged."""
+encoder) and chunk-walk hardening."""
 
 from __future__ import annotations
 
@@ -159,43 +157,6 @@ def test_unsupported_compressed_format_refused():
     )
     with pytest.raises(ValueError, match="format tag"):
         wav.decode_wav(payload)
-
-
-# ---------------------------------------------------------------------------
-# Spark integration: WAV -> real header semantics, stub path unchanged
-# ---------------------------------------------------------------------------
-
-
-def test_audio_metadata_dispatches_wav_and_stub(spark):
-    from tableone_pyspark_spark.operators.multimodal import audio_metadata
-
-    sine = _sine(n=4800, rate=8000)
-    wav_payload = wav.encode_wav(sine, 8000, bits=16)
-    stub_payload = b"hello this is not riff audio" * 3
-    df = spark.createDataFrame(
-        [(1, bytearray(wav_payload)), (2, bytearray(stub_payload))],
-        "id long, payload binary",
-    )
-    got = {r["id"]: r for r in audio_metadata(df, "id", "payload").collect()}
-
-    # real path: header rate, frame count, decoded-sample rms
-    r = got[1]
-    assert r["sample_rate"] == 8000
-    assert r["n_samples"] == 4800
-    assert r["duration_s"] == pytest.approx(0.6)
-    q = np.round(sine * 32768.0).clip(-32768, 32767) / 32768.0
-    assert r["rms"] == pytest.approx(float(np.sqrt((q * q).mean())), abs=1e-9)
-
-    # stub path: EXACTLY the pre-r6 semantics (graded audio_meta relies
-    # on this branch being byte-identical)
-    s = got[2]
-    raw = stub_payload
-    assert s["sample_rate"] == 8000 * (1 + raw[0] % 3)
-    assert s["n_samples"] == len(raw) // 2
-    arr = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-    assert s["rms"] == pytest.approx(
-        float(np.sqrt(int((arr * arr).sum()) / len(raw))), abs=1e-12
-    )
 
 
 # ---------------------------------------------------------------------------
