@@ -15,17 +15,20 @@ where the ``Index`` double encodes row order (total=0; continuous stats
 (reference :80,:137,:187), and the p-value triple attaches to exactly
 one anchor row per variable (reference :193,:210,:483,:522).
 
-Execution model (the Spark-first rewrite): ``collect_sufficient`` runs
-ONE Spark aggregation — one melt of every analyzed variable plus the
-strat counts into distinct-value cells, one map-side-combined shuffle —
-and collects the bounded cell frame once as Arrow: 2 Spark jobs and 1
-input-scanning stage per ``perfbench`` ``cohort_wide`` call (see
-core/sufficient.py). Every count, moment and quartile is computed from
-those cells on the driver. The output table (a few hundred rows at
-most) is then built on the driver as one Arrow table and returned as a
-``LocalTableScan`` DataFrame: collecting it runs no Spark job. At
-100 TB the heavy lifting is exactly that one bounded shuffle — nothing
-else scales with data size. Contrast: the reference
+Execution model (the Spark-first rewrite): ``collect_sufficient`` makes
+one pass over a pruned projection of the input and reduces it to
+distinct-value cells (see core/sufficient.py). A projection that Spark
+would broadcast (its size estimate is at most
+``spark.sql.autoBroadcastJoinThreshold``) is collected once as Arrow rows
+and grouped on the driver: 1 Spark job, no shuffle — the ``perfbench``
+``cohort_wide`` call. A larger one is melted into cells by one
+map-side-combined shuffle and the cells are collected once as Arrow: 2
+Spark jobs and 1 input-scanning stage. Every count, moment and quartile
+is computed from those cells on the driver. The output table (a few
+hundred rows at most) is then built on the driver as one Arrow table and
+returned as a ``LocalTableScan`` DataFrame: collecting it runs no Spark
+job. At 100 TB the heavy lifting is exactly that one bounded shuffle —
+nothing else scales with data size. Contrast: the reference
 scans the input ~16× per continuous variable (:325-437) and pulls
 whole columns to the driver for p-values (:453, :500).
 """
@@ -85,7 +88,9 @@ INDEX_COLLISION_CATEGORIES = 100
 class TableOneConfig:
     """Engine knobs: the quartile semantics and two scale guards."""
 
-    #: driver-collect guard on the one cell frame. Past it, the
+    #: driver-collect guard on the one cell frame, and on the rows a
+    #: broadcast-sized input brings to the driver to build it (past it,
+    #: the cells are built by the Spark job instead). Past it, the
     #: categorical and strat-count cells — Σ (category cardinality ×
     #: strat values) — must still stay under it (else ValueError), and
     #: the distinct (value × strat) cells of the continuous variables

@@ -1,25 +1,44 @@
-"""Single-pass sufficient-statistics collection for TableOne.
+"""Sufficient-statistics collection for TableOne: one pass over the input.
 
-The engine runs ONE Spark aggregation per call, independent of the
-number of analyzed variables (the reference runs ~16 scans *per
-continuous variable*, tableone_pyspark.py:325-437, plus a full-column
-``toPandas`` per p-value, :453/:500). One ``stack`` melts every input
-row into one row per analyzed variable plus one for the strat counts,
-and one ``groupBy(var, x, s[, raw strat])`` with Σw (a count when
-unweighted) compresses the melt to its distinct-value cells — map-side
-combined, so the one shuffle carries distinct values, not rows:
+Every statistic comes from the distinct-value cells of one projection
+(the reference runs ~16 scans *per continuous variable*,
+tableone_pyspark.py:325-437, plus a full-column ``toPandas`` per
+p-value, :453/:500). The projection holds, per input row that survives
+the weight filter, ``CAST(v AS DOUBLE)`` of each continuous variable,
+``COALESCE(v, 'MISSING')`` of each categorical one, the raw strat value
+cast to string and the weight. Its cells are (var, x, s[, raw strat])
+with Σw (a count when unweighted):
 
-    continuous   (var, x = CAST(value AS DOUBLE)), null values dropped
-    categorical  (var, s = value), nulls mapped to MISSING
+    continuous   (var, x), null values dropped
+    categorical  (var, s)
     strat count  one pseudo-variable: its cells give the strat row
                  counts, the total, and the sanitization-collision check
                  (a cleaned strat value with more than one raw value)
 
-The strat value enters raw (cast to string) and is cleaned on the
-driver, once per distinct value (:func:`sanitize_value`). Under AQE the
-shuffle's map stage runs as a Spark job of its own, so a call is 2 jobs
-and 1 input scan. The cells come back once as Arrow, guarded by
-``cat_cells_limit``.
+Two routes build the same cells, chosen by Spark's own size estimate of
+the pruned, filtered projection (the optimized plan's ``sizeInBytes``):
+
+    rows   the estimate is at most ``spark.sql.autoBroadcastJoinThreshold``
+           (the rule ``JoinSelection`` uses to collect a relation to the
+           driver): the projection comes back once as Arrow, at most
+           ``cat_cells_limit`` + 1 rows, and the cells are grouped on the
+           driver (:func:`_driver_cells`) as Spark groups them — -0.0 is
+           0.0, every NaN is one value, a null strat value is a stratum.
+           One Spark job, no shuffle.
+    cells  otherwise (no estimate on Spark Connect, a threshold ≤ 0, an
+           RDD-backed input), or when the rows or their cells pass
+           ``cat_cells_limit``: one ``stack`` melts the projection into one
+           row per analyzed variable plus one for the strat counts, and one
+           ``groupBy`` compresses the melt map-side, so the one shuffle
+           carries distinct values, not rows. Under AQE the shuffle's map
+           stage runs as a Spark job of its own: 2 jobs, 1 input scan.
+           The cells come back once as Arrow, guarded by
+           ``cat_cells_limit``.
+
+The strat value enters raw and is cleaned on the driver, once per
+distinct value (:func:`sanitize_value`). Each call logs one DEBUG record
+naming its route (rows, cells or spread), the size estimate, the
+threshold and the rows or cells it collected.
 
 Every continuous statistic comes from one numpy pass over the cells on
 the driver, weighted and unweighted alike (:func:`_groups`): sort once
@@ -34,9 +53,10 @@ cancel it away, and the quartiles are picked from the running Σw (:func:`_ranke
 per-group results, which is why the global group is ranked from the
 concatenation of its per-strat cells.
 
-Past ``cat_cells_limit`` the categorical and count cells are still
-collected under the guard (a ValueError when they exceed it), and the
-continuous cells stay distributed (``run_spread``): they are
+Past ``cat_cells_limit`` (the spread route) the categorical and count
+cells are still collected under the guard (a ValueError when they
+exceed it), and the continuous cells stay distributed
+(:func:`run_spread`): they are
 range-partitioned by (var, x); one ``mapInArrow`` pass summarizes every
 (partition, var, strat) with the same numpy function (Σw, min, max,
 mean, M2), the driver merges the partitions with Chan et al.'s pairwise
@@ -57,6 +77,7 @@ unweighted one reads the count: "data" mode is
 
 from __future__ import annotations
 
+import logging
 import math
 import warnings
 from dataclasses import dataclass, field
@@ -74,6 +95,7 @@ STRAT = "__t1_strat__"
 #: internal weight column name (weighted mode only)
 WEIGHT = "__t1_w__"
 QUARTILES = (0.25, 0.5, 0.75)
+log = logging.getLogger(__name__)
 _MOVED = (
     "the range partitions of the quartile cells changed between two passes "
     "over them; retry the call"
@@ -103,8 +125,8 @@ _EMPTY = ContStat(0, None, None, None, None, None, None, None, None)
 
 @dataclass
 class Sufficient:
-    """Everything TableOne needs, collected by the one aggregation
-    described in the module docstring."""
+    """Everything TableOne needs, from the cells of the module
+    docstring."""
 
     total: int
     strat_counts: dict[str, int] = field(default_factory=dict)  # cleaned value -> rows
@@ -116,10 +138,6 @@ class Sufficient:
 
 def _quote(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_str(name: str) -> str:
-    return "'" + name.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _num(x) -> float | None:
@@ -406,6 +424,90 @@ def run_spread(g: DataFrame, stratified: bool, interpolated: bool, weighted: boo
     }
 
 
+def _size_estimate(proj: DataFrame) -> tuple[int | None, int | None]:
+    """Spark's own size estimate of ``proj``'s optimized plan, in bytes,
+    and the session's ``spark.sql.autoBroadcastJoinThreshold``: the
+    figures ``JoinSelection`` compares to decide whether to collect a
+    relation to the driver. Reading them plans ``proj`` but runs no job.
+    (None, None) where there is no JVM plan to read (Spark Connect)."""
+    try:
+        jdf = proj._jdf
+    except AttributeError:
+        return None, None
+    threshold = int(jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold())
+    if threshold <= 0:
+        return None, threshold
+    return int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes()), threshold
+
+
+def _tally(key: np.ndarray, w: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
+    """The distinct values of the integer ``key`` and, per value, its Σw
+    (a count when ``w`` is None)."""
+    uk, inv = np.unique(key, return_inverse=True)
+    return uk, np.bincount(inv) if w is None else np.bincount(inv, weights=w)
+
+
+def _x_cells(x: np.ndarray, si: np.ndarray, w: np.ndarray | None) -> tuple:
+    """The distinct (x, strat code) cells of one continuous variable and
+    their Σw, grouped as Spark groups doubles: -0.0 is 0.0 and every NaN
+    is one value."""
+    if not len(x):
+        return x, si, np.zeros(0, np.int64 if w is None else np.float64)
+    x = x + 0.0
+    order = np.lexsort((si, x))
+    x, si = x[order], si[order]
+    nan = np.isnan(x)
+    new = np.r_[True, (si[1:] != si[:-1]) | ((x[1:] != x[:-1]) & ~(nan[1:] & nan[:-1]))]
+    starts = np.flatnonzero(new)
+    sw = np.diff(np.r_[starts, len(x)]) if w is None else np.add.reduceat(w[order], starts)
+    return x[starts], si[starts], sw
+
+
+def _driver_cells(
+    rows: pa.Table, n_cont: int, n_cat: int, stratified: bool, weighted: bool
+) -> pa.Table:
+    """The cells the melt/``groupBy`` job returns, built on the driver
+    from the collected projection ``rows``: the same columns, types and
+    cells, in another order."""
+    n = rows.num_rows
+    if stratified:
+        d = pc.dictionary_encode(rows[STRAT].combine_chunks(), null_encoding="encode")
+        sdict, si = d.dictionary.cast(pa.string()), d.indices.to_numpy().astype(np.int64)
+        k = len(sdict)
+    else:
+        sdict, si, k = None, np.zeros(n, np.int64), 1
+    w = rows[WEIGHT].to_numpy() if weighted else None
+    cols: dict[str, list] = {"t1_var": [], "t1_x": [], "t1_s": [], STRAT: [], "sw": []}
+    if not stratified:
+        del cols[STRAT]
+
+    def add(var: int, x, s, strat: np.ndarray, sw: np.ndarray) -> None:
+        m = len(sw)
+        cols["t1_var"].append(pa.array(np.full(m, var, np.int32)))
+        cols["t1_x"].append(pa.nulls(m, pa.float64()) if x is None else pa.array(x, pa.float64()))
+        cols["t1_s"].append(pa.nulls(m, pa.string()) if s is None else s)
+        if stratified:
+            cols[STRAT].append(sdict.take(pa.array(strat)))
+        cols["sw"].append(pa.array(sw, pa.float64() if weighted else pa.int64()))
+
+    for i in range(n_cont):
+        col = rows[f"__t1_{i}"]
+        if col.null_count:
+            valid = pc.is_valid(col).to_numpy(zero_copy_only=False)
+            x, si_v, w_v = pc.drop_null(col).to_numpy(), si[valid], None if w is None else w[valid]
+        else:
+            x, si_v, w_v = col.to_numpy(), si, w
+        xs, ss, sw = _x_cells(x, si_v, w_v)
+        add(i, xs, None, ss, sw)
+    for j in range(n_cat):
+        d = pc.dictionary_encode(rows[f"__t1_{n_cont + j}"].combine_chunks())
+        uk, sw = _tally(d.indices.to_numpy().astype(np.int64) * k + si, w)
+        add(n_cont + j, None, d.dictionary.cast(pa.string()).take(pa.array(uk // k)), uk % k, sw)
+    uk, sw = _tally(si, w)
+    add(n_cont + n_cat, None, None, uk, sw)
+    return pa.table({name: pa.concat_arrays(arrays) for name, arrays in cols.items()})
+
+
 def collect_sufficient(
     df: DataFrame,
     col_to_strat: str,
@@ -416,8 +518,8 @@ def collect_sufficient(
     cat_cells_limit: int = 1_000_000,
     weight_col: str | None = None,
 ) -> Sufficient:
-    """Run the one aggregation of the module docstring and return every
-    statistic TableOne needs."""
+    """Collect the cells by the route the module docstring describes and
+    return every statistic TableOne needs."""
     stratified = col_to_strat != ""
     weighted = weight_col is not None
     interpolated = quantile_mode == "interpolated"
@@ -425,40 +527,67 @@ def collect_sufficient(
     n_cont = len(cont_vars)
     counts_var = n_cont + len(cat_vars)
 
-    # ---- the melt: (var position, x, s) per analyzed variable ----------
-    melt = [f"{i}, CAST({_quote(v)} AS DOUBLE), CAST(NULL AS STRING)"
-            for i, v in enumerate(cont_vars)]
-    melt += [f"{n_cont + j}, CAST(NULL AS DOUBLE), COALESCE({_quote(v)}, {_sql_str(MISSING)})"
-             for j, v in enumerate(cat_vars)]
-    melt.append(f"{counts_var}, CAST(NULL AS DOUBLE), CAST(NULL AS STRING)")
-    cols = [F.expr(f"stack({len(melt)}, {', '.join(melt)}) AS (t1_var, t1_x, t1_s)")]
+    # ---- the one projection both routes read ----------------------------
+    names = [f"__t1_{i}" for i in range(counts_var)]
+    proj_cols = [F.col(_quote(v)).cast("double").alias(names[i]) for i, v in enumerate(cont_vars)]
+    proj_cols += [F.coalesce(F.col(_quote(v)), F.lit(MISSING)).alias(names[n_cont + j])
+                  for j, v in enumerate(cat_vars)]
     base = df
     if weighted:
         wc = F.col(_quote(weight_col)).cast("double")
         base = df.where(wc.isNotNull() & (wc > 0))
-        cols.append(wc.alias(WEIGHT))
+        proj_cols.append(wc.alias(WEIGHT))
     if stratified:
         # the raw value: it is cleaned on the driver, once per distinct
-        # value, instead of by two regexes on every melted row
-        cols.append(F.col(_quote(col_to_strat)).cast("string").alias(STRAT))
+        # value, instead of by two regexes on every row
+        proj_cols.append(F.col(_quote(col_to_strat)).cast("string").alias(STRAT))
+    proj = base.select(*proj_cols)
+
+    # ---- the melt: (var position, x, s) per analyzed variable ----------
+    melt = [f"{i}, {c}, CAST(NULL AS STRING)" for i, c in enumerate(names[:n_cont])]
+    melt += [f"{n_cont + j}, CAST(NULL AS DOUBLE), {c}" for j, c in enumerate(names[n_cont:])]
+    melt.append(f"{counts_var}, CAST(NULL AS DOUBLE), CAST(NULL AS STRING)")
     keys = ["t1_var", "t1_x", "t1_s"] + ([STRAT] if stratified else [])
     sw = F.sum(WEIGHT) if weighted else F.count(F.lit(1))
     g = (
-        base.select(*cols)
+        proj.select(
+            F.expr(f"stack({len(melt)}, {', '.join(melt)}) AS (t1_var, t1_x, t1_s)"),
+            *([WEIGHT] if weighted else []),
+            *([STRAT] if stratified else []),
+        )
         .where((F.col("t1_var") >= n_cont) | F.col("t1_x").isNotNull())
         .groupBy(*keys)
         .agg(sw.alias("sw"))
     )
 
     # ---- the one collect, guarded by cat_cells_limit --------------------
-    cells = g.limit(cat_cells_limit + 1).toArrow()
+    # a projection Spark would broadcast comes to the driver as rows and
+    # is grouped there; anything else, or a rows probe that overflows
+    # the guard, is grouped by the job
+    estimate, threshold = _size_estimate(proj)
+    n_rows = cells = None
+    if estimate is not None and estimate <= threshold:
+        rows = proj.limit(cat_cells_limit + 1).toArrow()
+        n_rows = rows.num_rows
+        if n_rows <= cat_cells_limit:
+            cells = _driver_cells(rows, n_cont, len(cat_vars), stratified, weighted)
+    route = "rows"
+    if cells is None or cells.num_rows > cat_cells_limit:
+        route, cells = "cells", g.limit(cat_cells_limit + 1).toArrow()
     spread = cells.num_rows > cat_cells_limit
     if spread:
+        route = "spread"
         side = g.where(F.col("t1_var") >= n_cont).limit(cat_cells_limit + 1).toArrow()
         cont = None
     else:
         is_cont = pc.less(cells["t1_var"], n_cont)
         side, cont = cells.filter(pc.invert(is_cont)), cells.filter(is_cont)
+    record = {"route": route, "size_estimate": estimate, "threshold": threshold,
+              "rows": n_rows, "cells": side.num_rows if spread else cells.num_rows}
+    log.debug(
+        "collect_sufficient " + " ".join(f"{k}=%s" for k in record), *record.values(),
+        extra=record,
+    )
 
     # ---- strat counts, total, collision check, categorical counts ------
     out = Sufficient(total=0)

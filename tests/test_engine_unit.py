@@ -3,6 +3,8 @@ patients fixture (reference testing.py:18-29; contract SURVEY §1.2)."""
 
 from __future__ import annotations
 
+import contextlib
+import logging
 import math
 import warnings
 
@@ -870,3 +872,138 @@ def test_output_types_beautify_layout(spark):
         (2.7, None, "50th percentile", 2.0, None),
         (2.8, None, "75th percentile", 3.0, None),
     ])
+
+
+# ---------------------------------------------------------------------------
+# the two routes to the cells: rows grouped on the driver, or the job
+# ---------------------------------------------------------------------------
+
+_SUFFICIENT_LOG = "tableone_pyspark_spark.core.sufficient"
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _edge_x(i: int):
+    for k, v in ((7, None), (11, NAN), (13, float("inf")), (17, float("-inf")),
+                 (19, -0.0), (23, 0.0)):
+        if i % k == 0:
+            return v
+    return float(i % 9) - 3.5
+
+
+def _edge_table():
+    """200 rows of edge values: nulls, NaN, ±inf, -0.0 and 0.0 in one
+    double column (and -0.0 as the minimum of another), a decimal(10,2)
+    column, a 1e8 + {0.1…0.4} column, an all-null double column, a
+    categorical column with nulls, null strat values and frequency
+    weights that include 0."""
+    import pyarrow as pa
+    from decimal import Decimal
+
+    n = 200
+    return pa.table({
+        "s": pa.array([None if i % 10 == 0 else "ab c"[i % 4] for i in range(n)]),
+        "x": pa.array([_edge_x(i) for i in range(n)], pa.float64()),
+        "z": pa.array([(-0.0, 0.0, None, 2.5)[i % 4] for i in range(n)], pa.float64()),
+        "d": pa.array([None if i % 9 == 0 else Decimal(i % 37) / 4 for i in range(n)],
+                      pa.decimal128(10, 2)),
+        "big": pa.array([1e8 + (i % 4 + 1) / 10 for i in range(n)], pa.float64()),
+        "nul": pa.nulls(n, pa.float64()),
+        "c": pa.array([None if i % 6 == 0 else "uvw"[i % 3] for i in range(n)]),
+        "w": pa.array([float(i % 4) for i in range(n)], pa.float64()),
+    })
+
+
+@pytest.mark.parametrize("stratified", [True, False], ids=["strat", "nostrat"])
+@pytest.mark.parametrize("weighted", [False, True], ids=["unweighted", "weighted"])
+@pytest.mark.parametrize("mode", ["data", "interpolated"])
+def test_rows_route_equals_cells_route(spark, caplog, mode, weighted, stratified):
+    """A broadcast-sized input is collected as rows and grouped on the
+    driver; the same input above the threshold is grouped by the Spark
+    job. Both give the same table, repr for repr: -0.0 groups as 0.0,
+    every NaN is one value, a null strat value is a stratum of its own,
+    and Σw is a count unweighted and a double weighted. The empty frame
+    too."""
+    from tableone_pyspark_spark import TableOneConfig
+
+    caplog.set_level(logging.DEBUG, logger=_SUFFICIENT_LOG)
+    df = spark.createDataFrame(_edge_table())
+    kw = dict(
+        col_to_strat="s" if stratified else "",
+        cols_to_analyze=["x", "z", "d", "big", "nul", "c"],
+        p_values=stratified,
+        weight_col="w" if weighted else None,
+        config=TableOneConfig(quantile_mode=mode),
+    )
+
+    def table(frame):
+        return repr(sorted(map(tuple, tableone(frame, **kw).collect()),
+                           key=lambda r: (r[1], r[4])))
+
+    for frame in (df, df.limit(0)):
+        rows = table(frame)
+        with _broadcast_threshold(spark, "-1"):
+            cells = table(frame)
+        assert rows == cells
+    recs = [(r.route, r.cells) for r in caplog.records if r.name == _SUFFICIENT_LOG]
+    assert [route for route, _n in recs] == ["rows", "cells"] * 2
+    # as many cells on both routes: the NaNs, and -0.0 with 0.0, merge
+    # into one cell per group
+    assert recs[0][1] == recs[1][1] > 0 and recs[2][1] == recs[3][1] == 0
+
+
+def test_collect_sufficient_reports_its_route(spark, caplog, tmp_path):
+    """Every call logs one DEBUG record naming its route (rows, cells or
+    spread), Spark's size estimate of the projection, the broadcast
+    threshold and the rows or cells it collected. Broadcast-sized
+    parquet and local frames take rows; threshold -1 and an RDD-backed
+    frame (no size estimate) take cells; past cat_cells_limit the rows
+    probe overflows and the call takes spread, also when the rows fit
+    but their cells do not."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tableone_pyspark_spark import TableOneConfig
+
+    caplog.set_level(logging.DEBUG, logger=_SUFFICIENT_LOG)
+    path = str(tmp_path / "edge.parquet")
+    pq.write_table(_edge_table(), path)
+    kw = dict(col_to_strat="s", cols_to_analyze=["x", "c"])
+
+    def records(frame, **extra):
+        caplog.clear()
+        tableone(frame, **{**kw, **extra})
+        return [r for r in caplog.records if r.name == _SUFFICIENT_LOG]
+
+    threshold = 10 * 1024 * 1024
+    for frame in (spark.read.parquet(path), spark.createDataFrame(_edge_table())):
+        [rec] = records(frame)
+        assert (rec.route, rec.threshold, rec.rows) == ("rows", threshold, 200)
+        assert 0 < rec.size_estimate <= threshold and rec.cells > 0
+        assert "route=rows" in rec.getMessage()
+    with _broadcast_threshold(spark, "-1"):
+        [rec] = records(spark.read.parquet(path))
+    assert (rec.route, rec.size_estimate, rec.threshold, rec.rows) == ("cells", None, -1, None)
+    rdd = spark.createDataFrame(_edge_table().to_pylist(), "s string, x double, c string")
+    [rec] = records(rdd)
+    assert (rec.route, rec.rows) == ("cells", None)
+    assert rec.size_estimate > threshold
+    limit = TableOneConfig(cat_cells_limit=10)
+    spread = spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip("sxw", r)) for r in _SPREAD_ROWS]
+    ))
+    [rec] = records(spread, cols_to_analyze=["x"], config=limit)
+    assert (rec.route, rec.rows) == ("spread", 11)
+    few = pa.table({"a": [float(i) for i in range(8)], "b": [float(-i) for i in range(8)]})
+    [rec] = records(spark.createDataFrame(few), col_to_strat="",
+                    cols_to_analyze=["a", "b"], config=limit)
+    assert (rec.route, rec.rows) == ("spread", 8)

@@ -6,6 +6,7 @@ test stays green."""
 
 from __future__ import annotations
 
+import contextlib
 import time
 
 import pytest
@@ -25,11 +26,25 @@ def lineitem(spark):
     return spark.read.parquet(f"{SF}/lineitem.parquet")
 
 
-def test_sufficient_stats_scan_pruning(lineitem, monkeypatch):
-    """The engine's one cell aggregation: the frame it collects reads
-    ONE parquet scan, pruned to the analyzed + strat columns, and
-    shuffles once, by hash, with the partial aggregate below that
-    exchange (the melt compresses map-side before anything moves)."""
+@contextlib.contextmanager
+def _no_broadcast(spark):
+    """Inputs above the broadcast threshold take the cells route: a
+    threshold of -1 puts every input there."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_sufficient_stats_scan_pruning(spark, lineitem, monkeypatch):
+    """The engine's one cell aggregation, the route of inputs above the
+    broadcast threshold: the frame it collects reads ONE parquet scan,
+    pruned to the analyzed + strat columns, and shuffles once, by hash,
+    with the partial aggregate below that exchange (the melt compresses
+    map-side before anything moves)."""
     import re
 
     from tableone_pyspark_spark import tableone
@@ -42,10 +57,11 @@ def test_sufficient_stats_scan_pruning(lineitem, monkeypatch):
         return to_arrow(self, *args, **kwargs)
 
     monkeypatch.setattr(type(lineitem), "toArrow", spy)
-    tableone(
-        lineitem, col_to_strat="l_returnflag",
-        cols_to_analyze=["l_linestatus", "l_quantity", "l_discount"],
-    )
+    with _no_broadcast(spark):
+        tableone(
+            lineitem, col_to_strat="l_returnflag",
+            cols_to_analyze=["l_linestatus", "l_quantity", "l_discount"],
+        )
     assert len(collected) == 1
     cells = collected[0]
     assert inspect.scan_columns(cells) == [
@@ -61,6 +77,52 @@ def test_sufficient_stats_scan_pruning(lineitem, monkeypatch):
     exchange = plan.index("Exchange hashpartitioning")
     assert "partial_count" in plan[exchange:], plan
     assert "partial_count" not in plan[:exchange], plan
+
+
+def test_sufficient_stats_rows_route_one_job(spark, lineitem, monkeypatch):
+    """An input whose pruned projection is broadcast-sized comes to the
+    driver once as rows: one Arrow collect of ONE parquet scan, pruned
+    to the analyzed + strat columns, with no exchange, in exactly one
+    Spark job. The jobs run in the caller's thread, so the caller's job
+    group attributes them; a job run afterwards under a second group is
+    the control that the tracker has seen them all."""
+    from tableone_pyspark_spark import tableone
+
+    collected = []
+    to_arrow = type(lineitem).toArrow
+
+    def spy(self, *args, **kwargs):
+        collected.append(self)
+        return to_arrow(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(lineitem), "toArrow", spy)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("tableone-rows", "one broadcast-sized tableone call")
+        tableone(
+            lineitem, col_to_strat="l_returnflag",
+            cols_to_analyze=["l_linestatus", "l_quantity", "l_discount"],
+            p_values=True,
+        )
+        sc.setJobGroup("tableone-rows-control", "a job that must show up")
+        spark.range(10).selectExpr("sum(id)").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(collected) == 1
+    rows = collected[0]
+    assert inspect.scan_columns(rows) == [
+        {"l_linestatus", "l_quantity", "l_discount", "l_returnflag"}
+    ]
+    plan = inspect.executed_plan(rows)
+    assert plan.count("FileScan") == 1, plan
+    assert "Exchange" not in plan, plan
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("tableone-rows-control"):
+        assert time.monotonic() < deadline, "control job never reached the tracker"
+        time.sleep(0.05)
+    assert len(tracker.getJobIdsForGroup("tableone-rows")) == 1
 
 
 def test_tableone_call_runs_at_most_three_spark_jobs(spark, lineitem):
