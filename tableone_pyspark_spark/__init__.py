@@ -15,17 +15,16 @@ Public API:
 Design (vs. reference):
   * Sufficient statistics only: the engine reduces one pruned
     projection of the input to distinct-value cells and computes every
-    count, moment and exact quartile from them on the driver. A
-    projection Spark would broadcast (size estimate at most
-    ``spark.sql.autoBroadcastJoinThreshold``) comes to the driver once
-    as at most ``cat_cells_limit`` + 1 Arrow rows and is grouped there:
-    the ``perfbench`` ``cohort_wide`` call runs 1 Spark job and no
-    shuffle. A larger one runs one Spark aggregation (one melt of every
-    analyzed variable and the strat counts, compressed to cells by one
-    shuffle) and collects only the bounded cells: 2 Spark jobs with 1
-    input-scanning stage (reference pulls full columns via toPandas at
-    :453/:500 and scans the input 16× per continuous variable at
-    :325-437).
+    count, moment and exact quartile from them on the driver. A small
+    projection (size estimate at most ``core.sufficient.ROWS_ROUTE_BYTES``)
+    comes to the driver once as Arrow rows, read by one task, bounded
+    by ``cat_cells_limit``, and is grouped there: the ``perfbench``
+    ``cohort_wide`` call runs 1 Spark job and no shuffle. A larger one
+    runs one Spark aggregation (one melt of every analyzed variable and
+    the strat counts, compressed to cells by one shuffle) and collects
+    only the bounded cells: 2 Spark jobs with 1 input-scanning stage
+    (reference pulls full columns via toPandas at :453/:500 and scans
+    the input 16× per continuous variable at :325-437).
   * The returned table is built on the driver as an Arrow table: a
     ``LocalTableScan`` whose ``collect()`` runs no Spark job.
   * Hypothesis tests (t / ANOVA / chi-square) are computed from those

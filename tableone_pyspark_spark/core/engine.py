@@ -17,11 +17,11 @@ one anchor row per variable (reference :193,:210,:483,:522).
 
 Execution model (the Spark-first rewrite): ``collect_sufficient`` makes
 one pass over a pruned projection of the input and reduces it to
-distinct-value cells (see core/sufficient.py). A projection that Spark
-would broadcast (its size estimate is at most
-``spark.sql.autoBroadcastJoinThreshold``) is collected once as Arrow rows
-and grouped on the driver: 1 Spark job, no shuffle — the ``perfbench``
-``cohort_wide`` call. A larger one is melted into cells by one
+distinct-value cells (see core/sufficient.py). A small projection (Spark's
+size estimate of it is at most ``core.sufficient.ROWS_ROUTE_BYTES``) is
+collected once as Arrow rows, read by one task, and grouped on the
+driver: 1 Spark job, no shuffle — the ``perfbench`` ``cohort_wide``
+call. A larger one is melted into cells by one
 map-side-combined shuffle and the cells are collected once as Arrow: 2
 Spark jobs and 1 input-scanning stage. Every count, moment and quartile
 is computed from those cells on the driver. The output table (a few
@@ -89,8 +89,10 @@ class TableOneConfig:
     """Engine knobs: the quartile semantics and two scale guards."""
 
     #: driver-collect guard on the one cell frame, and on the rows a
-    #: broadcast-sized input brings to the driver to build it (past it,
-    #: the cells are built by the Spark job instead). Past it, the
+    #: small input brings to the driver to build it: at most this many
+    #: rows, holding at most as many values (rows × projected columns)
+    #: as this many 5-column cells (past either, the cells are built by
+    #: the Spark job instead). Past it, the
     #: categorical and strat-count cells — Σ (category cardinality ×
     #: strat values) — must still stay under it (else ValueError), and
     #: the distinct (value × strat) cells of the continuous variables

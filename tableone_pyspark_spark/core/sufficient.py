@@ -16,24 +16,28 @@ with Σw (a count when unweighted):
                  (a cleaned strat value with more than one raw value)
 
 Two routes build the same cells, chosen by Spark's own size estimate of
-the pruned, filtered projection (the optimized plan's ``sizeInBytes``):
+the pruned, filtered projection (the optimized plan's ``sizeInBytes``,
+read without running a job) against the engine's ``ROWS_ROUTE_BYTES``:
 
-    rows   the estimate is at most ``spark.sql.autoBroadcastJoinThreshold``
-           (the rule ``JoinSelection`` uses to collect a relation to the
-           driver): the projection comes back once as Arrow, at most
-           ``cat_cells_limit`` + 1 rows, and the cells are grouped on the
-           driver (:func:`_driver_cells`) as Spark groups them — -0.0 is
-           0.0, every NaN is one value, a null strat value is a stratum.
-           One Spark job, no shuffle.
-    cells  otherwise (no estimate on Spark Connect, a threshold ≤ 0, an
-           RDD-backed input), or when the rows or their cells pass
-           ``cat_cells_limit``: one ``stack`` melts the projection into one
-           row per analyzed variable plus one for the strat counts, and one
-           ``groupBy`` compresses the melt map-side, so the one shuffle
-           carries distinct values, not rows. Under AQE the shuffle's map
-           stage runs as a Spark job of its own: 2 jobs, 1 input scan.
-           The cells come back once as Arrow, guarded by
-           ``cat_cells_limit``.
+    rows   the estimate is at most ``ROWS_ROUTE_BYTES``: the projection
+           comes back once as Arrow, read by one task (``coalesce(1)``,
+           so no exchange however many partitions the input has), and
+           the cells are grouped on the driver (:func:`_driver_cells`) as
+           Spark groups them — -0.0 is 0.0, every NaN is one value, a
+           null strat value is a stratum. One Spark job, one task, no
+           shuffle. The rows it brings back are bounded twice: at most
+           ``cat_cells_limit`` of them, and at most as many values
+           (rows × projected columns) as ``cat_cells_limit`` cells of 5
+           columns hold.
+    cells  otherwise (no estimate on Spark Connect; an RDD-backed input,
+           whose estimate is ``Long.MaxValue``), or when the rows or
+           their cells pass those bounds: one ``stack`` melts the
+           projection into one row per analyzed variable plus one for
+           the strat counts, and one ``groupBy`` compresses the melt
+           map-side, so the one shuffle carries distinct values, not
+           rows. Under AQE the shuffle's map stage runs as a Spark job of
+           its own: 2 jobs, 1 input scan. The cells come back once as
+           Arrow, guarded by ``cat_cells_limit``.
 
 The strat value enters raw and is cleaned on the driver, once per
 distinct value (:func:`sanitize_value`). Each call logs one DEBUG record
@@ -95,6 +99,18 @@ STRAT = "__t1_strat__"
 #: internal weight column name (weighted mode only)
 WEIGHT = "__t1_w__"
 QUARTILES = (0.25, 0.5, 0.75)
+#: the rows route's gate: the largest projection, by Spark's size
+#: estimate of its optimized plan, that comes to the driver as rows.
+#: The rows route groups on one driver thread, the cells job in one
+#: task per input partition, so the gate is where the rows route stops
+#: winning on a parallel scan. Measured with ``scripts/route_crossover.py``
+#: (lineitem, 9 columns, local[4] on a 4-vCPU host): over 4 files it won
+#: up to 5.1 MB, tied at 6.1 MB and lost from 8.8 MB (by 17% at 17 MB);
+#: over one file (one scan task) it won by a third up to 16 MB.
+ROWS_ROUTE_BYTES = 6 * 1024 * 1024
+#: the columns of one cell (var, x, s, strat, Σw): the rows route
+#: brings back no more values than ``cat_cells_limit`` cells hold
+_CELL_COLUMNS = 5
 log = logging.getLogger(__name__)
 _MOVED = (
     "the range partitions of the quartile cells changed between two passes "
@@ -424,20 +440,16 @@ def run_spread(g: DataFrame, stratified: bool, interpolated: bool, weighted: boo
     }
 
 
-def _size_estimate(proj: DataFrame) -> tuple[int | None, int | None]:
-    """Spark's own size estimate of ``proj``'s optimized plan, in bytes,
-    and the session's ``spark.sql.autoBroadcastJoinThreshold``: the
-    figures ``JoinSelection`` compares to decide whether to collect a
-    relation to the driver. Reading them plans ``proj`` but runs no job.
-    (None, None) where there is no JVM plan to read (Spark Connect)."""
+def _size_estimate(proj: DataFrame) -> int | None:
+    """Spark's own size estimate of ``proj``'s optimized plan, in bytes
+    (the figure ``JoinSelection`` compares with the broadcast threshold).
+    Reading it plans ``proj`` but runs no job. None where there is no
+    JVM plan to read (Spark Connect)."""
     try:
         jdf = proj._jdf
     except AttributeError:
-        return None, None
-    threshold = int(jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold())
-    if threshold <= 0:
-        return None, threshold
-    return int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes()), threshold
+        return None
+    return int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _tally(key: np.ndarray, w: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
@@ -561,15 +573,16 @@ def collect_sufficient(
     )
 
     # ---- the one collect, guarded by cat_cells_limit --------------------
-    # a projection Spark would broadcast comes to the driver as rows and
-    # is grouped there; anything else, or a rows probe that overflows
-    # the guard, is grouped by the job
-    estimate, threshold = _size_estimate(proj)
+    # a small projection comes to the driver as rows, read by one task,
+    # and is grouped there; anything else, or a rows probe that
+    # overflows the guard, is grouped by the job
+    estimate = _size_estimate(proj)
+    row_cap = min(cat_cells_limit, _CELL_COLUMNS * cat_cells_limit // len(proj_cols))
     n_rows = cells = None
-    if estimate is not None and estimate <= threshold:
-        rows = proj.limit(cat_cells_limit + 1).toArrow()
+    if estimate is not None and estimate <= ROWS_ROUTE_BYTES:
+        rows = proj.coalesce(1).limit(row_cap + 1).toArrow()
         n_rows = rows.num_rows
-        if n_rows <= cat_cells_limit:
+        if n_rows <= row_cap:
             cells = _driver_cells(rows, n_cont, len(cat_vars), stratified, weighted)
     route = "rows"
     if cells is None or cells.num_rows > cat_cells_limit:
@@ -582,7 +595,7 @@ def collect_sufficient(
     else:
         is_cont = pc.less(cells["t1_var"], n_cont)
         side, cont = cells.filter(pc.invert(is_cont)), cells.filter(is_cont)
-    record = {"route": route, "size_estimate": estimate, "threshold": threshold,
+    record = {"route": route, "size_estimate": estimate, "threshold": ROWS_ROUTE_BYTES,
               "rows": n_rows, "cells": side.num_rows if spread else cells.num_rows}
     log.debug(
         "collect_sufficient " + " ".join(f"{k}=%s" for k in record), *record.values(),

@@ -6,6 +6,7 @@ The `patients` table mirrors the reference's own test data
 
 from __future__ import annotations
 
+import contextlib
 import math
 import sys
 from pathlib import Path
@@ -55,6 +56,18 @@ PATIENT_SCHEMA = (
 @pytest.fixture(scope="session")
 def patients(spark):
     return spark.createDataFrame(PATIENT_ROWS, PATIENT_SCHEMA)
+
+
+@contextlib.contextmanager
+def cells_route():
+    """Inside the block every input takes the cells route (the melt and
+    ``groupBy`` job), as inputs above the rows route's gate do: no size
+    estimate is at or under a gate of -1 bytes."""
+    from tableone_pyspark_spark.core import sufficient
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(sufficient, "ROWS_ROUTE_BYTES", -1)
+        yield
 
 
 def rows_by_index(df):

@@ -3,7 +3,6 @@ patients fixture (reference testing.py:18-29; contract SURVEY §1.2)."""
 
 from __future__ import annotations
 
-import contextlib
 import logging
 import math
 import warnings
@@ -12,7 +11,7 @@ import pytest
 
 from tableone_pyspark_spark import tableone
 
-from conftest import approx, rows_by_index
+from conftest import approx, cells_route, rows_by_index
 
 
 # ---------------------------------------------------------------------------
@@ -881,17 +880,6 @@ def test_output_types_beautify_layout(spark):
 _SUFFICIENT_LOG = "tableone_pyspark_spark.core.sufficient"
 
 
-@contextlib.contextmanager
-def _broadcast_threshold(spark, value: str):
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def _edge_x(i: int):
     for k, v in ((7, None), (11, NAN), (13, float("inf")), (17, float("-inf")),
                  (19, -0.0), (23, 0.0)):
@@ -927,9 +915,9 @@ def _edge_table():
 @pytest.mark.parametrize("weighted", [False, True], ids=["unweighted", "weighted"])
 @pytest.mark.parametrize("mode", ["data", "interpolated"])
 def test_rows_route_equals_cells_route(spark, caplog, mode, weighted, stratified):
-    """A broadcast-sized input is collected as rows and grouped on the
-    driver; the same input above the threshold is grouped by the Spark
-    job. Both give the same table, repr for repr: -0.0 groups as 0.0,
+    """An input under the rows route's gate is collected as rows and
+    grouped on the driver; the same input above it is grouped by the
+    Spark job. Both give the same table, repr for repr: -0.0 groups as 0.0,
     every NaN is one value, a null strat value is a stratum of its own,
     and Σw is a count unweighted and a double weighted. The empty frame
     too."""
@@ -946,12 +934,11 @@ def test_rows_route_equals_cells_route(spark, caplog, mode, weighted, stratified
     )
 
     def table(frame):
-        return repr(sorted(map(tuple, tableone(frame, **kw).collect()),
-                           key=lambda r: (r[1], r[4])))
+        return repr(tableone(frame, **kw).collect())
 
     for frame in (df, df.limit(0)):
         rows = table(frame)
-        with _broadcast_threshold(spark, "-1"):
+        with cells_route():
             cells = table(frame)
         assert rows == cells
     recs = [(r.route, r.cells) for r in caplog.records if r.name == _SUFFICIENT_LOG]
@@ -963,16 +950,18 @@ def test_rows_route_equals_cells_route(spark, caplog, mode, weighted, stratified
 
 def test_collect_sufficient_reports_its_route(spark, caplog, tmp_path):
     """Every call logs one DEBUG record naming its route (rows, cells or
-    spread), Spark's size estimate of the projection, the broadcast
-    threshold and the rows or cells it collected. Broadcast-sized
-    parquet and local frames take rows; threshold -1 and an RDD-backed
-    frame (no size estimate) take cells; past cat_cells_limit the rows
+    spread), Spark's size estimate of the projection, the rows route's
+    gate and the rows or cells it collected. Parquet and local frames
+    under the gate take rows; a gate of -1 and an RDD-backed frame (its
+    estimate is Long.MaxValue) take cells; past cat_cells_limit the rows
     probe overflows and the call takes spread, also when the rows fit
-    but their cells do not."""
+    but their cells do not; a wide input under the gate whose rows hold
+    more values than cat_cells_limit cells takes cells."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from tableone_pyspark_spark import TableOneConfig
+    from tableone_pyspark_spark.core.sufficient import ROWS_ROUTE_BYTES
 
     caplog.set_level(logging.DEBUG, logger=_SUFFICIENT_LOG)
     path = str(tmp_path / "edge.parquet")
@@ -984,19 +973,19 @@ def test_collect_sufficient_reports_its_route(spark, caplog, tmp_path):
         tableone(frame, **{**kw, **extra})
         return [r for r in caplog.records if r.name == _SUFFICIENT_LOG]
 
-    threshold = 10 * 1024 * 1024
     for frame in (spark.read.parquet(path), spark.createDataFrame(_edge_table())):
         [rec] = records(frame)
-        assert (rec.route, rec.threshold, rec.rows) == ("rows", threshold, 200)
-        assert 0 < rec.size_estimate <= threshold and rec.cells > 0
+        assert (rec.route, rec.threshold, rec.rows) == ("rows", ROWS_ROUTE_BYTES, 200)
+        assert 0 < rec.size_estimate <= ROWS_ROUTE_BYTES and rec.cells > 0
         assert "route=rows" in rec.getMessage()
-    with _broadcast_threshold(spark, "-1"):
+    with cells_route():
         [rec] = records(spark.read.parquet(path))
-    assert (rec.route, rec.size_estimate, rec.threshold, rec.rows) == ("cells", None, -1, None)
+    assert (rec.route, rec.threshold, rec.rows) == ("cells", -1, None)
+    assert rec.size_estimate > 0
     rdd = spark.createDataFrame(_edge_table().to_pylist(), "s string, x double, c string")
     [rec] = records(rdd)
     assert (rec.route, rec.rows) == ("cells", None)
-    assert rec.size_estimate > threshold
+    assert rec.size_estimate > ROWS_ROUTE_BYTES
     limit = TableOneConfig(cat_cells_limit=10)
     spread = spark.createDataFrame(pa.Table.from_pylist(
         [dict(zip("sxw", r)) for r in _SPREAD_ROWS]
@@ -1007,3 +996,16 @@ def test_collect_sufficient_reports_its_route(spark, caplog, tmp_path):
     [rec] = records(spark.createDataFrame(few), col_to_strat="",
                     cols_to_analyze=["a", "b"], config=limit)
     assert (rec.route, rec.rows) == ("spread", 8)
+    # a wide input of repeated values is small as parquet, yet its rows
+    # hold far more values than its cells: the probe stops at the rows
+    # that hold limit cells' worth of values (5 columns per cell), here
+    # 5 · 100 // 41 projected columns = 12, and the job builds the cells
+    names = [f"v{j}" for j in range(40)]
+    wide = {c: [float((i + j) % 2) for i in range(60)] for j, c in enumerate(names)}
+    wide_path = str(tmp_path / "wide.parquet")
+    pq.write_table(pa.table({**wide, "s": ["ab"[i % 2] for i in range(60)]}), wide_path)
+    [rec] = records(spark.read.parquet(wide_path), cols_to_analyze=names,
+                    config=TableOneConfig(cat_cells_limit=100))
+    assert (rec.route, rec.rows) == ("cells", 13)
+    assert rec.size_estimate <= rec.threshold and rec.cells == 40 * 2 + 2
+

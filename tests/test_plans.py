@@ -6,12 +6,13 @@ test stays green."""
 
 from __future__ import annotations
 
-import contextlib
 import time
 
 import pytest
 
 from pyspark.sql import functions as F
+
+from conftest import cells_route
 
 from tableone_pyspark_spark.operators import relational as rel
 from tableone_pyspark_spark.operators import sampling
@@ -26,22 +27,9 @@ def lineitem(spark):
     return spark.read.parquet(f"{SF}/lineitem.parquet")
 
 
-@contextlib.contextmanager
-def _no_broadcast(spark):
-    """Inputs above the broadcast threshold take the cells route: a
-    threshold of -1 puts every input there."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
-def test_sufficient_stats_scan_pruning(spark, lineitem, monkeypatch):
+def test_sufficient_stats_scan_pruning(lineitem, monkeypatch):
     """The engine's one cell aggregation, the route of inputs above the
-    broadcast threshold: the frame it collects reads ONE parquet scan,
+    rows route's gate: the frame it collects reads ONE parquet scan,
     pruned to the analyzed + strat columns, and shuffles once, by hash,
     with the partial aggregate below that exchange (the melt compresses
     map-side before anything moves)."""
@@ -57,7 +45,7 @@ def test_sufficient_stats_scan_pruning(spark, lineitem, monkeypatch):
         return to_arrow(self, *args, **kwargs)
 
     monkeypatch.setattr(type(lineitem), "toArrow", spy)
-    with _no_broadcast(spark):
+    with cells_route():
         tableone(
             lineitem, col_to_strat="l_returnflag",
             cols_to_analyze=["l_linestatus", "l_quantity", "l_discount"],
@@ -79,15 +67,26 @@ def test_sufficient_stats_scan_pruning(spark, lineitem, monkeypatch):
     assert "partial_count" not in plan[:exchange], plan
 
 
-def test_sufficient_stats_rows_route_one_job(spark, lineitem, monkeypatch):
-    """An input whose pruned projection is broadcast-sized comes to the
-    driver once as rows: one Arrow collect of ONE parquet scan, pruned
-    to the analyzed + strat columns, with no exchange, in exactly one
-    Spark job. The jobs run in the caller's thread, so the caller's job
-    group attributes them; a job run afterwards under a second group is
-    the control that the tracker has seen them all."""
+@pytest.mark.parametrize("files", [1, 4])
+def test_sufficient_stats_rows_route_one_job(spark, monkeypatch, tmp_path, files):
+    """An input whose pruned projection is under the rows route's gate
+    comes to the driver once as rows: one Arrow collect of ONE parquet
+    scan, pruned to the analyzed + strat columns, with no exchange, in
+    exactly one Spark job — also when the scan has several partitions
+    (4 files), which one task reads in turn. The jobs run in the
+    caller's thread, so the caller's job group attributes them; a job
+    run afterwards under a second group is the control that the
+    tracker has seen them all."""
+    import pyarrow.parquet as pq
+
     from tableone_pyspark_spark import tableone
 
+    table = pq.read_table(f"{SF}/lineitem.parquet")
+    step = -(-table.num_rows // files)
+    for i in range(files):
+        pq.write_table(table.slice(i * step, step), str(tmp_path / f"part{i}.parquet"))
+    lineitem = spark.read.parquet(str(tmp_path))
+    assert lineitem.rdd.getNumPartitions() == files
     collected = []
     to_arrow = type(lineitem).toArrow
 
@@ -99,13 +98,13 @@ def test_sufficient_stats_rows_route_one_job(spark, lineitem, monkeypatch):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     try:
-        sc.setJobGroup("tableone-rows", "one broadcast-sized tableone call")
+        sc.setJobGroup(f"tableone-rows-{files}", "one tableone call under the rows gate")
         tableone(
             lineitem, col_to_strat="l_returnflag",
             cols_to_analyze=["l_linestatus", "l_quantity", "l_discount"],
             p_values=True,
         )
-        sc.setJobGroup("tableone-rows-control", "a job that must show up")
+        sc.setJobGroup(f"tableone-rows-{files}-control", "a job that must show up")
         spark.range(10).selectExpr("sum(id)").collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -119,10 +118,11 @@ def test_sufficient_stats_rows_route_one_job(spark, lineitem, monkeypatch):
     assert plan.count("FileScan") == 1, plan
     assert "Exchange" not in plan, plan
     deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup("tableone-rows-control"):
+    while not tracker.getJobIdsForGroup(f"tableone-rows-{files}-control"):
         assert time.monotonic() < deadline, "control job never reached the tracker"
         time.sleep(0.05)
-    assert len(tracker.getJobIdsForGroup("tableone-rows")) == 1
+    [job] = tracker.getJobIdsForGroup(f"tableone-rows-{files}")
+    assert [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(job).stageIds] == [1]
 
 
 def test_tableone_call_runs_at_most_three_spark_jobs(spark, lineitem):
