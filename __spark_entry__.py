@@ -445,13 +445,11 @@ def _weighted_quantiles_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tableone_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table 1 over lineitem ⋈ orders ⋈ customer."""
-    from tableone_pyspark_spark.operators.relational import analysis_table
-
-    at = analysis_table(
-        _load(spark, sf_dir, "lineitem"),
-        _load(spark, sf_dir, "orders"),
-        _load(spark, sf_dir, "customer"),
+    """Table 1 over lineitem ⋈ orders ⋈ customer: the fact-fact join
+    shuffles on o_orderkey; the customer dimension is broadcast."""
+    li, o, c = (_load(spark, sf_dir, t) for t in ("lineitem", "orders", "customer"))
+    at = li.join(o, li["l_orderkey"] == o["o_orderkey"]).join(
+        F.broadcast(c), o["o_custkey"] == c["c_custkey"]
     )
     return _round6(
         tableone(

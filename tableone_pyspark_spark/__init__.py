@@ -2,8 +2,9 @@
 
 A from-scratch, Spark-first re-implementation of the capabilities of
 ``charlesfcoombsiv/tableone_pyspark`` (reference at /root/reference,
-``tableone_pyspark.py``), extended with large-scale data-pipeline
-operators (dedup, similarity search, text analysis, streaming).
+``tableone_pyspark.py``): the batch Table 1 and ``streaming_tableone``.
+The other modules (``functions/``, ``operators/``, most of ``sources/``
+and ``streaming/``) are not on the Table 1 path and are being deleted.
 
 Public API:
     tableone(df, col_to_strat="", cols_to_analyze=[...], beautify=False,

@@ -27,8 +27,11 @@ Spark jobs and 1 input-scanning stage. Every count, moment and quartile
 is computed from those cells on the driver. The output table (a few
 hundred rows at most) is then built on the driver as one Arrow table and
 returned as a ``LocalTableScan`` DataFrame: collecting it runs no Spark
-job. At 100 TB the heavy lifting is exactly that one bounded shuffle —
-nothing else scales with data size. Contrast: the reference
+job. What grows with the input: the scan on every route; the one
+shuffle of the cells route, which carries distinct-value cells, not
+rows; and, past ``cat_cells_limit``, the spread route's range shuffle of
+the continuous cells and its two ``mapInArrow`` passes over them.
+Contrast: the reference
 scans the input ~16× per continuous variable (:325-437) and pulls
 whole columns to the driver for p-values (:453, :500).
 """

@@ -209,18 +209,6 @@ def _ranked(xs: np.ndarray, cum: np.ndarray, interpolated: bool) -> tuple:
     )
 
 
-def _quartiles(x: np.ndarray, w: np.ndarray, interpolated: bool) -> tuple:
-    """The exact-quartile kernel: quartiles of one group of cells, the
-    distinct values ``x`` with their Σw ``w`` (a count when unweighted),
-    in any order. Integral weights equal numpy's linear percentile on the
-    row-replicated values.
-
-    With integral weights every partial sum is exact in double, so the
-    result does not depend on how the cells were split or ordered."""
-    order = np.argsort(x, kind="stable")
-    return _ranked(x[order], _cum(w[order]), interpolated)
-
-
 def _summary(xs: np.ndarray, w: np.ndarray) -> tuple:
     """(Σw, min, max, mean, M2) of one group of x-sorted cells. NaN sorts
     last, so it is the max, as in Spark. The mean is Σwx/Σw, summed as

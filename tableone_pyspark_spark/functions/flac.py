@@ -1,7 +1,7 @@
 """Pure-Python FLAC codec (RFC 9639 / xiph.org spec) — the lossless
 compressed-audio sibling of ``functions/wav.py``, and the codec-track
 answer to the "compressed formats remain honest stubs" boundary: FLAC
-is lossless, so — exactly like GIF/PNG on the image side — decoded
+is lossless, so — exactly like PNG on the image side — decoded
 samples admit byte-exact oracles and round-trip pins.
 
 Decoder coverage (the full subset real encoders emit):

@@ -1,5 +1,5 @@
 """Pure-Python WAV (RIFF/WAVE) codec — the audio sibling of
-``functions/png.py`` / ``jpeg.py`` / ``gif.py``.
+``functions/png.py``.
 
 WAV is a chunked container over raw PCM, fully expressible with
 stdlib struct + numpy: the sample rate comes from the ``fmt `` chunk,

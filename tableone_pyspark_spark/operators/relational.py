@@ -21,18 +21,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def analysis_table(
-    lineitem: DataFrame, orders: DataFrame, customer: DataFrame
-) -> DataFrame:
-    """customer ⋈ orders ⋈ lineitem analysis view (BASELINE.md's B
-    workload input): the fact-fact join shuffles on o_orderkey; the
-    customer dimension is broadcast."""
-    return (
-        lineitem.join(orders, lineitem["l_orderkey"] == orders["o_orderkey"])
-        .join(F.broadcast(customer), orders["o_custkey"] == customer["c_custkey"])
-    )
-
-
 def revenue_by_nation(
     lineitem: DataFrame,
     orders: DataFrame,

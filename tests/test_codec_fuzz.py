@@ -14,10 +14,9 @@ import random
 import numpy as np
 import pytest
 
-from tableone_pyspark_spark.functions import flac, gif, jpeg, mp3, png, wav
+from tableone_pyspark_spark.functions import flac, mp3, png, wav
 
 _PIX = [[(i * 7 + j * 13) % 256 for j in range(8)] for i in range(6)]
-_IDX = np.array(_PIX, dtype=np.uint8) % 4
 _PAL = np.array(
     [[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], dtype=np.uint8
 )
@@ -25,17 +24,6 @@ _AUDIO = np.array([0, 100, -100, 2000] * 50, dtype=np.int32)
 
 
 def _fixtures():
-    g = np.array(
-        [[(i * 7 + j * 13) % 256 for j in range(20)] for i in range(18)],
-        dtype=np.uint8,
-    )
-    rgb3 = np.stack([g, (g * 2) % 256, (g * 3) % 256], axis=-1).astype(
-        np.uint8
-    )
-    frames = [
-        (np.zeros((4, 4), dtype=np.uint8), 0, 0, 1, 5, None),
-        (np.ones((4, 4), dtype=np.uint8), 0, 0, 0, 5, None),
-    ]
     return {
         "png": (png.encode_png(_PIX), png.decode_png),
         "png_pal": (
@@ -44,16 +32,8 @@ def _fixtures():
             ),
             png.decode_png,
         ),
-        "gif": (gif.encode_gif(_IDX, _PAL), gif.decode_gif),
-        "gif_anim": (
-            gif.encode_gif_animation(frames, _PAL[:2], 4, 4),
-            gif.decode_gif,
-        ),
         "wav": (wav.encode_wav(_AUDIO, 8000), wav.decode_wav),
         "flac": (flac.encode_flac(_AUDIO, 8000), flac.decode_flac),
-        "jpeg": (jpeg.encode_jpeg_gray(_PIX), jpeg.decode_jpeg),
-        "jpeg_prog": (jpeg.encode_jpeg_progressive(g), jpeg.decode_jpeg),
-        "jpeg_rgb": (jpeg.encode_jpeg_rgb(rgb3), jpeg.decode_jpeg),
         "mp3": (mp3.encode_mp3_headers(6), mp3.mp3_metadata),
     }
 

@@ -14,6 +14,9 @@ from tableone_pyspark_spark import tableone
 
 from conftest import rows_by_index
 
+#: every tableone call here runs on both routes and must agree (conftest)
+pytestmark = pytest.mark.usefixtures("both_routes")
+
 
 def test_empty_dataframe(spark):
     df = spark.createDataFrame([], "c string, x double")

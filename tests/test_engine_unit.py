@@ -13,6 +13,9 @@ from tableone_pyspark_spark import tableone
 
 from conftest import approx, cells_route, rows_by_index
 
+#: every tableone call here runs on both routes and must agree (conftest)
+pytestmark = pytest.mark.usefixtures("both_routes")
+
 
 # ---------------------------------------------------------------------------
 # unstratified
@@ -911,6 +914,7 @@ def _edge_table():
     })
 
 
+@pytest.mark.one_route
 @pytest.mark.parametrize("stratified", [True, False], ids=["strat", "nostrat"])
 @pytest.mark.parametrize("weighted", [False, True], ids=["unweighted", "weighted"])
 @pytest.mark.parametrize("mode", ["data", "interpolated"])
@@ -948,6 +952,7 @@ def test_rows_route_equals_cells_route(spark, caplog, mode, weighted, stratified
     assert recs[0][1] == recs[1][1] > 0 and recs[2][1] == recs[3][1] == 0
 
 
+@pytest.mark.one_route
 def test_collect_sufficient_reports_its_route(spark, caplog, tmp_path):
     """Every call logs one DEBUG record naming its route (rows, cells or
     spread), Spark's size estimate of the projection, the rows route's

@@ -7,12 +7,17 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
+
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(ROOT / "scripts"))
 
 import __spark_entry__ as entry
 import check_oracles
+
+#: every tableone call here runs on both routes and must agree (conftest)
+pytestmark = pytest.mark.usefixtures("both_routes")
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -1,5 +1,5 @@
 """FLAC codec pins (functions/flac.py) — the lossless-audio analog of
-the GIF/PNG test strategy: exact round trips at every bit depth and
+the PNG test strategy: exact round trips at every bit depth and
 stereo mode, hand-built bitstreams for the decoder-only paths our
 encoder never emits (LPC, wasted bits, Rice partitions, escape codes,
 variable blocking, follow-on header forms), a truncation sweep at
@@ -377,7 +377,7 @@ def test_md5_mismatch_detected():
 
 
 # ---------------------------------------------------------------------------
-# property: random signals round trip (the GIF-LZW strategy)
+# property: random signals round trip
 # ---------------------------------------------------------------------------
 
 from hypothesis import HealthCheck, given, settings

@@ -1,10 +1,10 @@
 """The Table 1 system's import closure, and every package import resolving.
 
-Importing the batch API, the CLI, ``streaming_tableone``, the test-data
-generators and ``operators.relational`` (``tableone_joined``) loads
-exactly these package modules. A module-level import of any other
-family from the Table 1 path grows the set and fails here, so deleting
-a family that no Table 1 path reaches leaves this test unchanged.
+Importing the batch API, the CLI, ``streaming_tableone`` and the
+test-data generators loads exactly these package modules; no Table 1
+path reaches ``operators/``. A module-level import of any other family
+from the Table 1 path grows the set and fails here, so deleting a family
+that no Table 1 path reaches leaves this test unchanged.
 
 Many package imports are lazy (inside a function), so a deletion that
 misses one fails only when something calls that function. The static
@@ -27,7 +27,6 @@ ENTRY_POINTS = [
     "tableone_pyspark_spark.__main__",
     "tableone_pyspark_spark.streaming.stream_stats",
     "tableone_pyspark_spark.sources.testdata",
-    "tableone_pyspark_spark.operators.relational",
 ]
 
 CLOSURE = {
@@ -40,8 +39,6 @@ CLOSURE = {
     "tableone_pyspark_spark.core.sanitize",
     "tableone_pyspark_spark.core.special",
     "tableone_pyspark_spark.core.sufficient",
-    "tableone_pyspark_spark.operators",
-    "tableone_pyspark_spark.operators.relational",
     "tableone_pyspark_spark.sources",
     "tableone_pyspark_spark.sources.testdata",
     "tableone_pyspark_spark.streaming",

@@ -30,6 +30,9 @@ from tableone_pyspark_spark import TableOneConfig, tableone
 
 from conftest import rows_by_index
 
+#: every tableone call here runs on both routes and must agree (conftest)
+pytestmark = pytest.mark.usefixtures("both_routes")
+
 NAN, INF = float("nan"), float("inf")
 STATS = ((0.1, "n"), (0.2, "min"), (0.3, "max"), (0.4, "mean"), (0.5, "stddev"))
 BIG = 2**53

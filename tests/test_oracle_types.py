@@ -27,6 +27,9 @@ sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entry
 
+#: every tableone call here runs on both routes and must agree (conftest)
+pytestmark = pytest.mark.usefixtures("both_routes")
+
 SF_DIR = "/root/testdata/sf0.001"
 
 TABLES = ["customer", "supplier", "orders", "lineitem", "events"]

@@ -197,8 +197,8 @@ wq_rows = st.lists(
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=wq_rows)
 def test_weighted_quantiles_match_numpy_reference(spark, rows):
-    """The weighted exact quartile (core/sufficient.py _quartiles on
-    the distinct-value cells) must equal the direct definition
+    """The weighted exact quartile (core/sufficient.py _ranked on
+    the x-sorted distinct-value cells) must equal the direct definition
     min{x : cumΣw >= p·Σw} computed by numpy over the same weighted
     multiset — per strat AND globally. Weights are integral or dyadic
     so every partial sum is exact in double (no rounding-boundary
@@ -283,17 +283,19 @@ kernel_cells = st.lists(
 @settings(max_examples=200, deadline=None)
 @given(cells=kernel_cells, interpolated=st.booleans())
 def test_quartile_kernel_matches_loop_reference(cells, interpolated):
-    """_quartiles (numpy sort + cumsum + searchsorted) returns exactly
-    what the rank loop returns on the same cells — same sort order and
-    the same running-sum order, so even fractional weights agree bit
-    for bit."""
+    """The driver kernel collect_sufficient runs — a stable sort by x,
+    then _ranked over the running Σw (cumsum + searchsorted) — returns
+    exactly what the rank loop returns on the same cells: same sort
+    order and the same running-sum order, so even fractional weights
+    agree bit for bit."""
     import numpy as np
 
-    from tableone_pyspark_spark.core.sufficient import _quartiles
+    from tableone_pyspark_spark.core.sufficient import _cum, _ranked
 
     x = np.array([c[0] for c in cells])
     w = np.array([c[1] for c in cells])
-    got = _quartiles(x, w, interpolated)
+    order = np.argsort(x, kind="stable")
+    got = _ranked(x[order], _cum(w[order]), interpolated)
     assert repr(got) == repr(_loop_quartiles(cells, interpolated))
 
 
@@ -350,7 +352,9 @@ def test_partitioned_kernel_matches_driver_kernel(cells, cuts, interpolated):
         key: tuple(S._blend([picked[r] for r in rids], f) for rids, f in qs)
         for key, qs in blends.items()
     }
-    want = {key: S._quartiles(xg, wg, interpolated) for key, xg, wg in S._groups(table, True)}
+    want = {
+        key: S._ranked(xg, S._cum(wg), interpolated) for key, xg, wg in S._groups(table, True)
+    }
     assert repr(sorted(got.items(), key=str)) == repr(sorted(want.items(), key=str))
 
 
