@@ -13,7 +13,8 @@ between the routes; each line printed is one input:
     {"rows": ..., "files": ..., "estimate": <bytes>, "rows_s": ..., "cells_s": ...}
 
 with the median seconds per call. ``ROWS_ROUTE_BYTES`` sits where the
-rows route stops winning on the several-file inputs.
+rows route stops winning on the several-file inputs, or, where it wins
+at every size, near the largest input the value bound admits.
 
     python scripts/route_crossover.py --rows 150000 300000 --files 1 4 --reps 7
 """

@@ -19,8 +19,10 @@ Design (vs. reference):
     count, moment and exact quartile from them on the driver. A small
     projection (size estimate at most ``core.sufficient.ROWS_ROUTE_BYTES``)
     comes to the driver once as Arrow rows, read by one task, bounded
-    by ``cat_cells_limit``, and is grouped there: the ``perfbench``
-    ``cohort_wide`` call runs 1 Spark job and no shuffle. A larger one
+    by ``cat_cells_limit``, and is grouped there, each continuous
+    variable once, on a pool of driver threads that runs numpy only:
+    the ``perfbench`` ``cohort_wide`` call runs 1 Spark job and no
+    shuffle. A larger one
     runs one Spark aggregation (one melt of every analyzed variable and
     the strat counts, compressed to cells by one shuffle) and collects
     only the bounded cells: 2 Spark jobs with 1 input-scanning stage

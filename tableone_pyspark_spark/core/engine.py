@@ -20,14 +20,16 @@ one pass over a pruned projection of the input and reduces it to
 distinct-value cells (see core/sufficient.py). A small projection (Spark's
 size estimate of it is at most ``core.sufficient.ROWS_ROUTE_BYTES``) is
 collected once as Arrow rows, read by one task, and grouped on the
-driver: 1 Spark job, no shuffle — the ``perfbench`` ``cohort_wide``
-call. A larger one is melted into cells by one
+driver, each continuous variable once, on a pool of driver threads
+that runs numpy only: 1 Spark job, no shuffle — the ``perfbench``
+``cohort_wide`` call. A larger one is melted into cells by one
 map-side-combined shuffle and the cells are collected once as Arrow: 2
-Spark jobs and 1 input-scanning stage. Every count, moment and quartile
-is computed from those cells on the driver. The output table (a few
-hundred rows at most) is then built on the driver as one Arrow table and
-returned as a ``LocalTableScan`` DataFrame: collecting it runs no Spark
-job. What grows with the input: the scan on every route; the one
+Spark jobs and 1 input-scanning stage; the same kernel groups each
+variable's cells on the same pool. Every count, moment and quartile is
+computed on the driver, and every Spark job runs in the caller's
+thread. The output table (a few hundred rows at most) is then built on
+the driver as one Arrow table and returned as a ``LocalTableScan``
+DataFrame: collecting it runs no Spark job. What grows with the input: the scan on every route; the one
 shuffle of the cells route, which carries distinct-value cells, not
 rows; and, past ``cat_cells_limit``, the spread route's range shuffle of
 the continuous cells and its two ``mapInArrow`` passes over them.

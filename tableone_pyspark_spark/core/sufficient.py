@@ -15,20 +15,24 @@ with Σw (a count when unweighted):
                  counts, the total, and the sanitization-collision check
                  (a cleaned strat value with more than one raw value)
 
-Two routes build the same cells, chosen by Spark's own size estimate of
+Two routes reach the same cells, chosen by Spark's own size estimate of
 the pruned, filtered projection (the optimized plan's ``sizeInBytes``,
 read without running a job) against the engine's ``ROWS_ROUTE_BYTES``:
 
     rows   the estimate is at most ``ROWS_ROUTE_BYTES``: the projection
            comes back once as Arrow, read by one task (``coalesce(1)``,
            so no exchange however many partitions the input has), and
-           the cells are grouped on the driver (:func:`_driver_cells`) as
-           Spark groups them — -0.0 is 0.0, every NaN is one value, a
-           null strat value is a stratum. One Spark job, one task, no
-           shuffle. The rows it brings back are bounded twice: at most
-           ``cat_cells_limit`` of them, and at most as many values
-           (rows × projected columns) as ``cat_cells_limit`` cells of 5
-           columns hold.
+           is grouped on the driver as Spark groups it — -0.0 is 0.0,
+           every NaN is one value, a null strat value is a stratum. The
+           categorical and strat-count cells are tallied
+           (:func:`_driver_cells`); each continuous column goes straight
+           to the grouping kernel, so its cells are never built as a
+           table. One Spark job, one task, no shuffle. The rows it
+           brings back are bounded twice: at most ``cat_cells_limit`` of
+           them, and at most as many values (rows × projected columns)
+           as ``cat_cells_limit`` cells of 5 columns hold; their cells,
+           the continuous ones included, must fit under
+           ``cat_cells_limit`` too, or the job groups them.
     cells  otherwise (no estimate on Spark Connect; an RDD-backed input,
            whose estimate is ``Long.MaxValue``), or when the rows or
            their cells pass those bounds: one ``stack`` melts the
@@ -42,32 +46,43 @@ read without running a job) against the engine's ``ROWS_ROUTE_BYTES``:
 The strat value enters raw and is cleaned on the driver, once per
 distinct value (:func:`sanitize_value`). Each call logs one DEBUG record
 naming its route (rows, cells or spread), the size estimate, the
-threshold and the rows or cells it collected.
+threshold, the rows or cells it collected, the seconds spent in the
+collects (``collect_s``) and in the driver's grouping and kernel
+(``group_s``), and the kernel's thread count (``threads``).
 
-Every continuous statistic comes from one numpy pass over the cells on
-the driver, weighted and unweighted alike (:func:`_groups`): sort once
-by (var, x, strat), NaN last as Spark orders doubles; a var's run is its
-global group and each stratum's cells are a stable subsequence of that
-run. Per group, n = Σw, min and max are the run's ends, the mean is
-Σwx/Σw, the variance is Σw(x − mean)²/(Σw − 1) by the corrected
-two-pass sum (:func:`_summary`), so a large common offset does not
-cancel it away, and the quartiles are picked from the running Σw (:func:`_ranked`):
-``quantile_disc`` in "data" mode, the DuckDB ``quantile_cont`` blend in
-"interpolated" mode. Global order statistics are not mergeable from
-per-group results, which is why the global group is ranked from the
-concatenation of its per-strat cells.
+Every continuous statistic comes from one grouping kernel
+(:func:`_grouped`), run once per variable, weighted and unweighted
+alike: over the variable's rows on the rows route, over its cells on
+the cells route, over its cells in one range partition on the spread
+route. It ranks the distinct values once (NaN last, as Spark orders
+doubles) and tallies the distinct (value, raw strat value) keys, so the
+cells sort by (x, stratum, raw value) however the rows arrived: together
+they are the variable's global group, and each stratum's cells, a
+subsequence still in x order, are its group. Per group, n = Σw, min and
+max are the group's ends, the mean is Σwx/Σw, the variance is
+Σw(x − mean)²/(Σw − 1) by the corrected two-pass sum (:func:`_summary`),
+so a large common offset does not cancel it away, and the quartiles are
+picked from the running Σw (:func:`_ranked`): ``quantile_disc`` in
+"data" mode, the DuckDB ``quantile_cont`` blend in "interpolated" mode.
+Global order statistics are not mergeable from per-group results, which
+is why the global group is ranked from all of the variable's cells. On
+the driver the variables run on a thread pool, one thread per variable
+and at most one per CPU (:func:`_workers`): numpy's sorts release the
+GIL. The pool runs numpy only; every Spark job stays in the caller's
+thread.
 
 Past ``cat_cells_limit`` (the spread route) the categorical and count
 cells are still collected under the guard (a ValueError when they
 exceed it), and the continuous cells stay distributed
-(:func:`run_spread`): they are
-range-partitioned by (var, x); one ``mapInArrow`` pass summarizes every
-(partition, var, strat) with the same numpy function (Σw, min, max,
-mean, M2), the driver merges the partitions with Chan et al.'s pairwise
-update and places each quartile target in one partition; a second
-``mapInArrow`` pass picks the targets there with the driver kernel's
-target, pick and blend helpers. Memory is O(distinct values per group)
-on the driver, O(distinct values per partition) on an executor.
+(:func:`run_spread`): they are range-partitioned by (var, x); one
+``mapInArrow`` pass groups each partition's cells with the same kernel
+and summarizes every (partition, var, strat) (Σw, min, max, mean, M2),
+the driver merges the partitions with Chan et al.'s pairwise update and
+places each quartile target in one partition; a second ``mapInArrow``
+pass groups them again and picks the targets there with the driver
+kernel's target, pick and blend helpers. Memory is O(distinct values
+per group) on the driver, O(distinct values per partition) on an
+executor.
 
 Weighted mode (``weight_col``): weights are FREQUENCY weights — the
 results are defined to equal the unweighted results on a row-replicated
@@ -83,7 +98,10 @@ from __future__ import annotations
 
 import logging
 import math
+import os
+import time
 import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial, reduce
 
@@ -101,13 +119,18 @@ WEIGHT = "__t1_w__"
 QUARTILES = (0.25, 0.5, 0.75)
 #: the rows route's gate: the largest projection, by Spark's size
 #: estimate of its optimized plan, that comes to the driver as rows.
-#: The rows route groups on one driver thread, the cells job in one
-#: task per input partition, so the gate is where the rows route stops
-#: winning on a parallel scan. Measured with ``scripts/route_crossover.py``
-#: (lineitem, 9 columns, local[4] on a 4-vCPU host): over 4 files it won
-#: up to 5.1 MB, tied at 6.1 MB and lost from 8.8 MB (by 17% at 17 MB);
-#: over one file (one scan task) it won by a third up to 16 MB.
-ROWS_ROUTE_BYTES = 6 * 1024 * 1024
+#: Measured with ``scripts/route_crossover.py`` (lineitem, 9 columns,
+#: local[4] on a 4-vCPU host), each continuous variable grouped on a
+#: driver thread of its own: the rows route beat the cells job at every
+#: size from 150k to 1M rows, by 59-67% over one file (one scan task)
+#: and by 10-41% over 4 files (1M rows, 17.3 MB: 1.56 vs 2.50 s), so
+#: the gate no longer marks a crossover. It bounds the probe instead:
+#: past about 500k rows (9.5 MB over 4 files) a lineitem-shaped input
+#: holds more rows than the value bound admits at the default
+#: ``cat_cells_limit``, and a larger input's probe, read by one task,
+#: would only be discarded. The gate sits just above the 600k-row,
+#: 4-file input (11.4 MB).
+ROWS_ROUTE_BYTES = 12 * 1024 * 1024
 #: the columns of one cell (var, x, s, strat, Σw): the rows route
 #: brings back no more values than ``cat_cells_limit`` cells hold
 _CELL_COLUMNS = 5
@@ -257,51 +280,148 @@ def _cont_stat(summary: tuple, quarts: tuple, weighted: bool) -> ContStat:
     )
 
 
-def _groups(cells: pa.Table, stratified: bool):
-    """Yield ``((var position, strat), x, w)`` for every (var, strat)
-    group of ``cells`` and, when stratified, every var's global
-    ``(var, None)`` group — the concatenation of its per-strat cells.
-    ``x`` ascends (NaN last) and ``w`` is float. ``cells[STRAT]`` holds
-    raw strat values; a stratum is their cleaned value
-    (:func:`sanitize_value`).
+def _runs(ids: np.ndarray):
+    """(start, stop) of every run of equal values in ``ids``."""
+    if not len(ids):
+        return ()
+    cuts = np.flatnonzero(ids[1:] != ids[:-1]) + 1
+    return zip(np.r_[0, cuts], np.r_[cuts, len(ids)])
 
-    One sort by (var, x, strat) orders everything: a var's run is its
-    global group, and a stable sort by (var, strat) on top keeps each
-    stratum's cells in x order. The key is unique per cell (unless two
-    raw values clean alike), so the order, and every sum over it, does
-    not depend on the order the cells arrived in."""
-    n = cells.num_rows
-    if n == 0:
-        return
-    vi = cells["t1_var"].to_numpy().astype(np.int64)
-    x = cells["t1_x"].to_numpy()
-    w = cells["sw"].to_numpy().astype(np.float64)
-    if stratified:
-        # the strata are the cleaned raw values, in name order
-        d = pc.dictionary_encode(cells[STRAT].combine_chunks(), null_encoding="encode")
-        names = [sanitize_value(r) for r in d.dictionary.to_pylist()]
-        snames = sorted(set(names))
-        rank = {s: i for i, s in enumerate(snames)}
-        si = np.array([rank[s] for s in names], np.int64)[d.indices.to_numpy()]
-        order = np.lexsort((si, x, vi))
-    else:
-        si, snames = np.zeros(n, np.int64), [None]
-        order = np.lexsort((x, vi))
-    x, w, vi, si = x[order], w[order], vi[order], si[order]
 
-    def runs(ids):
-        cuts = np.flatnonzero(np.diff(ids)) + 1
-        return zip(np.r_[0, cuts], np.r_[cuts, n])
+@dataclass(frozen=True)
+class _Strata:
+    """The strata of a raw strat column. ``raw`` holds its distinct raw
+    values ordered by (cleaned value, raw value), with null a value of
+    its own; a row's ``code`` is its raw value's position there, and
+    ``rank[code]`` the position of its cleaned value, its stratum, in
+    ``names`` (name order). Sorting by code sorts by (stratum, raw
+    value), whatever order the rows arrived in."""
 
-    if stratified:
-        gid = vi * len(snames) + si
-        sub = np.argsort(gid, kind="stable")
-        xg, wg, gid = x[sub], w[sub], gid[sub]
-        for a, b in runs(gid):
-            v, s = divmod(int(gid[a]), len(snames))
-            yield (v, snames[s]), xg[a:b], wg[a:b]
-    for a, b in runs(vi):
-        yield (int(vi[a]), None), x[a:b], w[a:b]
+    code: np.ndarray
+    raw: pa.Array
+    rank: np.ndarray
+    names: list
+
+
+def _strata(col: pa.ChunkedArray) -> _Strata:
+    """The :class:`_Strata` of raw strat values, each distinct value
+    cleaned once (:func:`sanitize_value`)."""
+    d = pc.dictionary_encode(col.combine_chunks(), null_encoding="encode")
+    raw = d.dictionary.cast(pa.string())
+    values = raw.to_pylist()
+    clean = [sanitize_value(r) for r in values]
+    order = sorted(range(len(values)), key=lambda j: (clean[j], values[j] is not None, values[j] or ""))
+    names = sorted(set(clean))
+    rank = {s: i for i, s in enumerate(names)}
+    pos = np.empty(len(order), np.int64)
+    pos[order] = np.arange(len(order))
+    return _Strata(
+        code=pos[d.indices.to_numpy()],
+        raw=raw.take(pa.array(order, pa.int64())),
+        # the smallest integer type: numpy sorts it stably by radix
+        rank=np.array([rank[clean[j]] for j in order], np.min_scalar_type(max(len(names) - 1, 0))),
+        names=names,
+    )
+
+
+def _tally(key: np.ndarray, w: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
+    """The distinct values of the integer ``key`` and, per value, its Σw
+    (a count when ``w`` is None)."""
+    if w is None:
+        return np.unique(key, return_counts=True)
+    uk, inv = np.unique(key, return_inverse=True)
+    return uk, np.bincount(inv, weights=w)
+
+
+def _grouped(x: np.ndarray, code: np.ndarray | None, w: np.ndarray | None, strata: _Strata | None):
+    """The grouping kernel of every continuous statistic, for one
+    variable: its values ``x`` (nulls dropped) with their strat
+    ``code`` and weight ``w`` (None: unstratified; a count each).
+
+    Groups as Spark groups doubles: -0.0 is 0.0 and every NaN is one
+    value, sorted last. One pass ranks the distinct values; the cells
+    are then the distinct (value rank, code) keys, which sort by (x,
+    stratum, raw strat value), each with its Σw summed in arrival order.
+    Fed cells that are already distinct, it keeps them all. Returns the
+    number of cells and the groups ``(strat, xs, Σw)``, ``xs``
+    ascending and Σw float: each stratum's, a subsequence of the cells
+    in x order, and then the variable's global group (strat None), all
+    of them. The key orders the cells however the values arrived, so
+    every sum over a group does too."""
+    if not len(x):
+        return 0, []
+    values, xi = np.unique(x + 0.0, return_inverse=True)
+    k = 1 if code is None else len(strata.raw)
+    cells, sw = _tally(xi if code is None else xi * k + code, w)
+    xs, sw = values[cells // k], sw.astype(np.float64)
+    groups = []
+    if code is not None:
+        rank = strata.rank[cells % k]
+        sub = np.argsort(rank, kind="stable")
+        for a, b in _runs(rank[sub]):
+            cut = sub[a:b]
+            groups.append((strata.names[rank[cut[0]]], xs[cut], sw[cut]))
+    groups.append((None, xs, sw))
+    return len(xs), groups
+
+
+def _by_var(cells: pa.Table, strata: _Strata | None) -> dict[int, tuple]:
+    """Each var's ``(x, strat code, Σw)`` in a table of cells."""
+    vi = cells["t1_var"].to_numpy()
+    order = np.argsort(vi, kind="stable")
+    vi = vi[order]
+    x = cells["t1_x"].to_numpy()[order]
+    w = cells["sw"].to_numpy().astype(np.float64)[order]
+    code = None if strata is None else strata.code[order]
+    return {
+        int(vi[a]): (x[a:b], None if code is None else code[a:b], w[a:b])
+        for a, b in _runs(vi)
+    }
+
+
+def _cells_groups(cells: pa.Table, stratified: bool):
+    """Yield ``((var position, strat), xs, Σw)`` for every group of a
+    table of cells: :func:`_grouped` on each var's cells."""
+    strata = _strata(cells[STRAT]) if stratified else None
+    for v, (x, code, w) in _by_var(cells, strata).items():
+        for s, xs, sw in _grouped(x, code, w, strata)[1]:
+            yield (v, s), xs, sw
+
+
+def _workers(n_vars: int) -> int:
+    """The driver threads the continuous kernel runs on: one per
+    variable, at most one per CPU this process may run on."""
+    try:
+        cpus = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity outside Linux
+        cpus = os.cpu_count() or 1
+    return min(n_vars, cpus)
+
+
+def _cont_stats(
+    n_cont: int, values, strata: _Strata | None, interpolated: bool, weighted: bool
+) -> tuple[int, dict, int]:
+    """Every continuous statistic on the driver: :func:`_grouped`,
+    :func:`_summary` and :func:`_ranked` over ``values(i)``, the
+    ``(x, strat code, w)`` of variable ``i``, one variable per task of a
+    thread pool. The pool runs numpy only (its sorts release the GIL);
+    Spark jobs stay in the caller's thread. Returns the number of
+    distinct continuous cells, ``{(var position, strat): ContStat}`` and
+    the pool's size."""
+
+    def one(i: int):
+        n, groups = _grouped(*values(i), strata)
+        return n, [
+            ((i, s), _cont_stat(_summary(xs, sw), _ranked(xs, _cum(sw), interpolated), weighted))
+            for s, xs, sw in groups
+        ]
+
+    threads = _workers(n_cont)
+    if not threads:
+        return 0, {}, 0
+    with ThreadPoolExecutor(threads) as pool:
+        done = list(pool.map(one, range(n_cont)))
+    return sum(n for n, _ in done), dict(kv for _, kvs in done for kv in kvs), threads
 
 
 def _partition_summaries(stratified: bool, batches):
@@ -313,7 +433,7 @@ def _partition_summaries(stratified: bool, batches):
         return
     cells = pa.Table.from_batches(batches)
     pid = cells["pid"][0].as_py()
-    rows = [(pid, v, s, *_summary(x, w)) for (v, s), x, w in _groups(cells, stratified)]
+    rows = [(pid, v, s, *_summary(x, w)) for (v, s), x, w in _cells_groups(cells, stratified)]
     types = [pa.int32(), pa.int32(), pa.string()] + [pa.float64()] * 5
     yield pa.RecordBatch.from_arrays(
         [pa.array(col, t) for col, t in zip(zip(*rows), types)],
@@ -370,7 +490,7 @@ def _partition_picks(requests: dict, stratified: bool, interpolated: bool, batch
         return
     cells = pa.Table.from_batches(batches)
     rids, vals = [], []
-    for key, xs, w in _groups(cells, stratified):
+    for key, xs, w in _cells_groups(cells, stratified):
         if key in wanted:
             offset, part_w, picks = wanted[key]
             cum = _cum(w, offset)
@@ -440,72 +560,51 @@ def _size_estimate(proj: DataFrame) -> int | None:
     return int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def _tally(key: np.ndarray, w: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
-    """The distinct values of the integer ``key`` and, per value, its Σw
-    (a count when ``w`` is None)."""
-    uk, inv = np.unique(key, return_inverse=True)
-    return uk, np.bincount(inv) if w is None else np.bincount(inv, weights=w)
-
-
-def _x_cells(x: np.ndarray, si: np.ndarray, w: np.ndarray | None) -> tuple:
-    """The distinct (x, strat code) cells of one continuous variable and
-    their Σw, grouped as Spark groups doubles: -0.0 is 0.0 and every NaN
-    is one value."""
-    if not len(x):
-        return x, si, np.zeros(0, np.int64 if w is None else np.float64)
-    x = x + 0.0
-    order = np.lexsort((si, x))
-    x, si = x[order], si[order]
-    nan = np.isnan(x)
-    new = np.r_[True, (si[1:] != si[:-1]) | ((x[1:] != x[:-1]) & ~(nan[1:] & nan[:-1]))]
-    starts = np.flatnonzero(new)
-    sw = np.diff(np.r_[starts, len(x)]) if w is None else np.add.reduceat(w[order], starts)
-    return x[starts], si[starts], sw
-
-
-def _driver_cells(
-    rows: pa.Table, n_cont: int, n_cat: int, stratified: bool, weighted: bool
-) -> pa.Table:
-    """The cells the melt/``groupBy`` job returns, built on the driver
-    from the collected projection ``rows``: the same columns, types and
-    cells, in another order."""
-    n = rows.num_rows
-    if stratified:
-        d = pc.dictionary_encode(rows[STRAT].combine_chunks(), null_encoding="encode")
-        sdict, si = d.dictionary.cast(pa.string()), d.indices.to_numpy().astype(np.int64)
-        k = len(sdict)
+def _driver_cells(rows: pa.Table, n_cont: int, n_cat: int, strata: _Strata | None,
+                  w: np.ndarray | None) -> pa.Table:
+    """The categorical and strat-count cells the melt/``groupBy`` job
+    returns, built on the driver from the collected projection ``rows``:
+    the same cells, in another order, without the x column they leave
+    null. ``w`` is the rows' weights (None: unweighted). The continuous
+    variables go to :func:`_cont_stats` instead."""
+    if strata is None:
+        si, k = np.zeros(rows.num_rows, np.int64), 1
     else:
-        sdict, si, k = None, np.zeros(n, np.int64), 1
-    w = rows[WEIGHT].to_numpy() if weighted else None
-    cols: dict[str, list] = {"t1_var": [], "t1_x": [], "t1_s": [], STRAT: [], "sw": []}
-    if not stratified:
+        si, k = strata.code, len(strata.raw)
+    cols: dict[str, list] = {"t1_var": [], "t1_s": [], STRAT: [], "sw": []}
+    if strata is None:
         del cols[STRAT]
 
-    def add(var: int, x, s, strat: np.ndarray, sw: np.ndarray) -> None:
+    def add(var: int, s, strat: np.ndarray, sw: np.ndarray) -> None:
         m = len(sw)
         cols["t1_var"].append(pa.array(np.full(m, var, np.int32)))
-        cols["t1_x"].append(pa.nulls(m, pa.float64()) if x is None else pa.array(x, pa.float64()))
         cols["t1_s"].append(pa.nulls(m, pa.string()) if s is None else s)
-        if stratified:
-            cols[STRAT].append(sdict.take(pa.array(strat)))
-        cols["sw"].append(pa.array(sw, pa.float64() if weighted else pa.int64()))
+        if strata is not None:
+            cols[STRAT].append(strata.raw.take(pa.array(strat)))
+        cols["sw"].append(pa.array(sw, pa.int64() if w is None else pa.float64()))
 
-    for i in range(n_cont):
-        col = rows[f"__t1_{i}"]
-        if col.null_count:
-            valid = pc.is_valid(col).to_numpy(zero_copy_only=False)
-            x, si_v, w_v = pc.drop_null(col).to_numpy(), si[valid], None if w is None else w[valid]
-        else:
-            x, si_v, w_v = col.to_numpy(), si, w
-        xs, ss, sw = _x_cells(x, si_v, w_v)
-        add(i, xs, None, ss, sw)
     for j in range(n_cat):
         d = pc.dictionary_encode(rows[f"__t1_{n_cont + j}"].combine_chunks())
         uk, sw = _tally(d.indices.to_numpy().astype(np.int64) * k + si, w)
-        add(n_cont + j, None, d.dictionary.cast(pa.string()).take(pa.array(uk // k)), uk % k, sw)
+        add(n_cont + j, d.dictionary.cast(pa.string()).take(pa.array(uk // k)), uk % k, sw)
     uk, sw = _tally(si, w)
-    add(n_cont + n_cat, None, None, uk, sw)
+    add(n_cont + n_cat, None, uk, sw)
     return pa.table({name: pa.concat_arrays(arrays) for name, arrays in cols.items()})
+
+
+def _column(rows: pa.Table, strata: _Strata | None, w: np.ndarray | None, i: int) -> tuple:
+    """Continuous variable ``i`` of the collected projection ``rows``:
+    its non-null values with their strat codes and weights."""
+    col = rows[f"__t1_{i}"]
+    code = None if strata is None else strata.code
+    if not col.null_count:
+        return col.to_numpy(), code, w
+    valid = pc.is_valid(col).to_numpy(zero_copy_only=False)
+    return (
+        pc.drop_null(col).to_numpy(),
+        None if code is None else code[valid],
+        None if w is None else w[valid],
+    )
 
 
 def collect_sufficient(
@@ -562,29 +661,50 @@ def collect_sufficient(
 
     # ---- the one collect, guarded by cat_cells_limit --------------------
     # a small projection comes to the driver as rows, read by one task,
-    # and is grouped there; anything else, or a rows probe that
-    # overflows the guard, is grouped by the job
+    # and is grouped there; anything else, or rows whose cells overflow
+    # the guard, is grouped by the job
     estimate = _size_estimate(proj)
     row_cap = min(cat_cells_limit, _CELL_COLUMNS * cat_cells_limit // len(proj_cols))
-    n_rows = cells = None
+    n_rows = stats = None
+    collect_s = group_s = 0.0
     if estimate is not None and estimate <= ROWS_ROUTE_BYTES:
+        t = time.perf_counter()
         rows = proj.coalesce(1).limit(row_cap + 1).toArrow()
-        n_rows = rows.num_rows
+        collect_s, n_rows = time.perf_counter() - t, rows.num_rows
         if n_rows <= row_cap:
-            cells = _driver_cells(rows, n_cont, len(cat_vars), stratified, weighted)
+            t = time.perf_counter()
+            strata = _strata(rows[STRAT]) if stratified else None
+            w = rows[WEIGHT].to_numpy() if weighted else None
+            side = _driver_cells(rows, n_cont, len(cat_vars), strata, w)
+            n_cells, stats, threads = _cont_stats(
+                n_cont, partial(_column, rows, strata, w), strata, interpolated, weighted
+            )
+            n_cells += side.num_rows
+            group_s = time.perf_counter() - t
     route = "rows"
-    if cells is None or cells.num_rows > cat_cells_limit:
-        route, cells = "cells", g.limit(cat_cells_limit + 1).toArrow()
-    spread = cells.num_rows > cat_cells_limit
-    if spread:
-        route = "spread"
-        side = g.where(F.col("t1_var") >= n_cont).limit(cat_cells_limit + 1).toArrow()
-        cont = None
-    else:
+    if stats is None or n_cells > cat_cells_limit:
+        t = time.perf_counter()
+        cells = g.limit(cat_cells_limit + 1).toArrow()
+        route, n_cells, stats, threads = "cells", cells.num_rows, {}, 0
+        if n_cells > cat_cells_limit:
+            route = "spread"
+            side = g.where(F.col("t1_var") >= n_cont).limit(cat_cells_limit + 1).toArrow()
+            n_cells = side.num_rows
+        collect_s += time.perf_counter() - t
+    if route == "cells":
+        t = time.perf_counter()
         is_cont = pc.less(cells["t1_var"], n_cont)
         side, cont = cells.filter(pc.invert(is_cont)), cells.filter(is_cont)
+        strata = _strata(cont[STRAT]) if stratified else None
+        by_var = _by_var(cont, strata)
+        _n, stats, threads = _cont_stats(
+            n_cont, lambda i: by_var.get(i, (np.zeros(0), None, None)), strata,
+            interpolated, weighted,
+        )
+        group_s += time.perf_counter() - t
     record = {"route": route, "size_estimate": estimate, "threshold": ROWS_ROUTE_BYTES,
-              "rows": n_rows, "cells": side.num_rows if spread else cells.num_rows}
+              "rows": n_rows, "cells": n_cells, "collect_s": collect_s, "group_s": group_s,
+              "threads": threads}
     log.debug(
         "collect_sufficient " + " ".join(f"{k}=%s" for k in record), *record.values(),
         extra=record,
@@ -647,17 +767,10 @@ def collect_sufficient(
             stacklevel=3,
         )
 
-    # ---- every continuous statistic -------------------------------------
-    if not cont_vars:
-        stats = {}
-    elif spread:
+    # ---- past the guard, every continuous statistic stays distributed --
+    if route == "spread" and cont_vars:
         cont_cells = g.where(F.col("t1_var") < n_cont).drop("t1_s")
         stats = run_spread(cont_cells, stratified, interpolated, weighted)
-    else:
-        stats = {
-            key: _cont_stat(_summary(xs, w), _ranked(xs, _cum(w), interpolated), weighted)
-            for key, xs, w in _groups(cont, stratified)
-        }
     # an all-NULL (var, strat) group has no cells
     groups = [None, *out.strat_counts]
     for i, v in enumerate(cont_vars):

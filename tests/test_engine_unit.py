@@ -3,15 +3,18 @@ patients fixture (reference testing.py:18-29; contract SURVEY §1.2)."""
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import math
+import os
+import sys
 import warnings
 
 import pytest
 
 from tableone_pyspark_spark import tableone
 
-from conftest import approx, cells_route, rows_by_index
+from conftest import _sufficient_repr, approx, cells_route, rows_by_index
 
 #: every tableone call here runs on both routes and must agree (conftest)
 pytestmark = pytest.mark.usefixtures("both_routes")
@@ -961,7 +964,11 @@ def test_collect_sufficient_reports_its_route(spark, caplog, tmp_path):
     estimate is Long.MaxValue) take cells; past cat_cells_limit the rows
     probe overflows and the call takes spread, also when the rows fit
     but their cells do not; a wide input under the gate whose rows hold
-    more values than cat_cells_limit cells takes cells."""
+    more values than cat_cells_limit cells takes cells. The record also
+    times the collect (collect_s) and the driver's grouping and kernel
+    (group_s), and names the kernel's thread pool: one thread per
+    continuous variable, at most one per CPU, none when the continuous
+    cells stay distributed."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -983,10 +990,12 @@ def test_collect_sufficient_reports_its_route(spark, caplog, tmp_path):
         assert (rec.route, rec.threshold, rec.rows) == ("rows", ROWS_ROUTE_BYTES, 200)
         assert 0 < rec.size_estimate <= ROWS_ROUTE_BYTES and rec.cells > 0
         assert "route=rows" in rec.getMessage()
+        assert rec.threads == 1 and rec.collect_s > 0 and rec.group_s > 0
     with cells_route():
         [rec] = records(spark.read.parquet(path))
     assert (rec.route, rec.threshold, rec.rows) == ("cells", -1, None)
     assert rec.size_estimate > 0
+    assert rec.threads == 1 and rec.collect_s > 0 and rec.group_s > 0
     rdd = spark.createDataFrame(_edge_table().to_pylist(), "s string, x double, c string")
     [rec] = records(rdd)
     assert (rec.route, rec.rows) == ("cells", None)
@@ -997,10 +1006,14 @@ def test_collect_sufficient_reports_its_route(spark, caplog, tmp_path):
     ))
     [rec] = records(spread, cols_to_analyze=["x"], config=limit)
     assert (rec.route, rec.rows) == ("spread", 11)
+    assert (rec.threads, rec.group_s) == (0, 0.0) and rec.collect_s > 0
     few = pa.table({"a": [float(i) for i in range(8)], "b": [float(-i) for i in range(8)]})
     [rec] = records(spark.createDataFrame(few), col_to_strat="",
                     cols_to_analyze=["a", "b"], config=limit)
     assert (rec.route, rec.rows) == ("spread", 8)
+    # the rows fit but their cells do not: grouped on the driver, then
+    # handed to the job
+    assert rec.threads == 0 and rec.group_s > 0
     # a wide input of repeated values is small as parquet, yet its rows
     # hold far more values than its cells: the probe stops at the rows
     # that hold limit cells' worth of values (5 columns per cell), here
@@ -1013,4 +1026,45 @@ def test_collect_sufficient_reports_its_route(spark, caplog, tmp_path):
                     config=TableOneConfig(cat_cells_limit=100))
     assert (rec.route, rec.rows) == ("cells", 13)
     assert rec.size_estimate <= rec.threshold and rec.cells == 40 * 2 + 2
+    assert rec.threads == min(40, len(os.sched_getaffinity(0)))
+
+
+def test_kernel_pool_size_does_not_change_the_statistics(spark, caplog, monkeypatch):
+    """The continuous variables are grouped on a pool of driver threads.
+    Forced to one thread, the pool returns the same statistics, repr for
+    repr, on both routes, weighted and unweighted, in both quantile
+    modes: five continuous variables with nulls, NaN, ±inf and -0.0,
+    and null strat values. The pooled calls switch threads every
+    microsecond, so that workers sharing any state they write would
+    show it."""
+    from tableone_pyspark_spark.core import sufficient
+
+    caplog.set_level(logging.DEBUG, logger=_SUFFICIENT_LOG)
+    df = spark.createDataFrame(_edge_table())
+    cont = ["x", "z", "d", "big", "nul"]
+
+    def collect(**kw):
+        caplog.clear()
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")
+            out = sufficient.collect_sufficient(df, "s", ["c"], cont, **kw)
+        [rec] = [r for r in caplog.records if r.name == _SUFFICIENT_LOG]
+        return _sufficient_repr(out), rec.threads
+
+    for weight_col in (None, "w"):
+        for mode in ("data", "interpolated"):
+            kw = dict(weight_col=weight_col, quantile_mode=mode)
+            for route in (contextlib.nullcontext, cells_route):
+                with route():
+                    switch = sys.getswitchinterval()
+                    sys.setswitchinterval(1e-6)
+                    try:
+                        pooled, threads = collect(**kw)
+                    finally:
+                        sys.setswitchinterval(switch)
+                    with monkeypatch.context() as mp:
+                        mp.setattr(sufficient, "_workers", lambda n: min(n, 1))
+                        serial, one = collect(**kw)
+                assert (threads, one) == (min(5, len(os.sched_getaffinity(0))), 1)
+                assert serial == pooled
 

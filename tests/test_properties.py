@@ -352,9 +352,9 @@ def test_partitioned_kernel_matches_driver_kernel(cells, cuts, interpolated):
         key: tuple(S._blend([picked[r] for r in rids], f) for rids, f in qs)
         for key, qs in blends.items()
     }
-    want = {
-        key: S._ranked(xg, S._cum(wg), interpolated) for key, xg, wg in S._groups(table, True)
-    }
+    strata = S._strata(table[S.STRAT])
+    _n, groups = S._grouped(x, strata.code, table["sw"].to_numpy(), strata)
+    want = {(0, s): S._ranked(xg, S._cum(wg), interpolated) for s, xg, wg in groups}
     assert repr(sorted(got.items(), key=str)) == repr(sorted(want.items(), key=str))
 
 
